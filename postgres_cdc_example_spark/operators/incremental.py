@@ -11,9 +11,9 @@ This operator's cost is O(|changes| + |touched keys| + |groups|), never
 O(|state|):
 
 1. project the TOUCHED KEYS from the change batch (distinct on key);
-2. left-semi join state to touched keys — with the bucket-partitioned state
-   store (``streaming/bucket_state.py``) this prunes to the changed buckets,
-   so even the state-side read is proportional to the delta;
+2. left-semi join state to touched keys — on a key-partitioned table
+   format (Delta/Iceberg with file-level key stats) this prunes to the
+   changed files, so even the state-side read is proportional to the delta;
 3. apply the change batch to that slice only (per-key CDC semantics are
    closed under restriction to a key subset — :mod:`cdc_apply`'s fold is
    per-key, so applying to the slice equals slicing the applied whole);

@@ -106,6 +106,7 @@ from postgres_cdc_example_spark.sources.changelog import (
     flatten_changes,
     split_corrupt,
 )
+from postgres_cdc_example_spark.streaming.pipeline import start_change_stream
 from postgres_cdc_example_spark.streaming.state import VersionedStateStore
 
 # the declared document schema on the wire (doc_id is the key)
@@ -630,21 +631,14 @@ class StreamingCurationPipeline:
             df.unpersist()
 
     def start(self, available_now: bool = True) -> StreamingQuery:
-        lines = (
-            self.spark.readStream.format("text")
-            .option("maxFilesPerTrigger", 16)
-            .load(self.source_dir)
+        return start_change_stream(
+            self.spark,
+            self.source_dir,
+            self.checkpoint_dir,
+            self._apply_batch,
+            "2 seconds",
+            available_now,
         )
-        writer = (
-            lines.writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime="2 seconds")
-        return writer.start()
 
     def totals(self) -> DataFrame:
         return self.totals_store.read()

@@ -26,17 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from postgres_cdc_example_spark.operators.cdc_apply import apply_changes
 from postgres_cdc_example_spark.operators.incremental import agg_snapshot, maintain_agg
-from postgres_cdc_example_spark.schemas import PERSON_SCHEMA
-from postgres_cdc_example_spark.sources.changelog import (
-    decode_change_lines,
-    flatten_person_changes,
-    split_corrupt,
-)
+from postgres_cdc_example_spark.streaming.pipeline import CdcPipeline
 from postgres_cdc_example_spark.streaming.state import VersionedStateStore
 
 AGG_SCHEMA = StructType(
@@ -59,9 +52,11 @@ def _score() -> Column:  # lazy: Column creation needs a live session
     return F.col("score").cast("long")
 
 
-class StreamingAggView:
+class StreamingAggView(CdcPipeline):
     """person change-lines → state table + continuously-maintained
-    ``(name, n_rows, sum_cents=Σscore)`` aggregate."""
+    ``(name, n_rows, sum_cents=Σscore)`` aggregate. The stream, decode,
+    dead-letter count and replay guard are :class:`CdcPipeline`'s; this
+    class only adds the aggregate commit ahead of the state commit."""
 
     def __init__(
         self,
@@ -71,33 +66,22 @@ class StreamingAggView:
         checkpoint_dir: str,
         group_col: str = "name",
     ):
-        self.spark = spark
-        self.source_dir = source_dir
-        self.checkpoint_dir = checkpoint_dir
+        super().__init__(spark, source_dir, store_root + "/state", checkpoint_dir)
         self.group_col = group_col
-        self.state_store = VersionedStateStore(spark, store_root + "/state", PERSON_SCHEMA)
         self.agg_store = VersionedStateStore(spark, store_root + "/agg", AGG_SCHEMA)
 
-    def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        valid, _dead = split_corrupt(decode_change_lines(batch_df))
-        changes = flatten_person_changes(valid)
-        v_next = batch_id + 1
-        # replay guard (see CdcPipeline._apply_batch): the agg store commits
-        # BEFORE the state store, so state at v_next implies both are done —
-        # re-running would read-and-overwrite the same version directory.
-        state_v = self.state_store.latest_version()
-        if state_v is not None and state_v >= v_next:
-            return
-        state = self.state_store.read()
+    def _commit(self, state: DataFrame, changes: DataFrame, version: int) -> None:
+        # The state replay guard already ran, so only the aggregate can be
+        # ahead here (crash between the two commits): it then skips.
         agg_v = self.agg_store.latest_version()
         if agg_v is None:
-            # seed from current state (empty on a fresh pipeline; the
-            # backfilled snapshot when attach() followed a bulk copy)
+            # seed from the current state (empty on a fresh pipeline; the
+            # snapshot when backfill() ran before the stream)
             self.agg_store.commit(
-                agg_snapshot(state, self.group_col, _score()), version=batch_id
+                agg_snapshot(state, self.group_col, _score()), version=version - 1
             )
-            agg_v = batch_id
-        if agg_v < v_next:
+            agg_v = version - 1
+        if agg_v < version:
             new_agg = maintain_agg(
                 self.agg_store.read(),
                 state,
@@ -107,29 +91,8 @@ class StreamingAggView:
                 key="id",
                 **_APPLY_KW,
             )
-            self.agg_store.commit(new_agg, version=v_next)
-        new_state = apply_changes(state, changes, key="id", **_APPLY_KW)
-        self.state_store.commit(new_state.select(*state.columns), version=v_next)
-
-    def start(self, available_now: bool = True) -> StreamingQuery:
-        lines = (
-            self.spark.readStream.format("text")
-            .option("maxFilesPerTrigger", 16)
-            .load(self.source_dir)
-        )
-        writer = (
-            lines.writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime="2 seconds")
-        return writer.start()
+            self.agg_store.commit(new_agg, version=version)
+        super()._commit(state, changes, version)
 
     def view(self) -> DataFrame:
         return self.agg_store.read()
-
-    def state(self) -> DataFrame:
-        return self.state_store.read()

@@ -28,6 +28,7 @@ consumption, T2 — deliberate divergence documented in SURVEY.md §7.4).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from postgres_cdc_example_spark.operators.cdc_apply import apply_changes
@@ -39,6 +40,35 @@ from postgres_cdc_example_spark.sources.changelog import (
 )
 from postgres_cdc_example_spark.sources.snapshot import snapshot_copy
 from postgres_cdc_example_spark.streaming.state import VersionedStateStore
+
+
+def start_change_stream(
+    spark: SparkSession,
+    source_dir: str,
+    checkpoint_dir: str,
+    apply_batch,
+    trigger_interval: str,
+    available_now: bool,
+) -> StreamingQuery:
+    """The one change-line stream: JSON lines from ``source_dir`` →
+    ``foreachBatch(apply_batch)`` with offsets checkpointed in
+    ``checkpoint_dir``. ``available_now=True`` drains the backlog and stops;
+    otherwise it fires every ``trigger_interval``."""
+    lines = (
+        spark.readStream.format("text")
+        .option("maxFilesPerTrigger", 16)  # T8 backpressure
+        .load(source_dir)
+    )
+    writer = (
+        lines.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=trigger_interval)
+    return writer.start()
 
 
 class CdcPipeline:
@@ -61,25 +91,13 @@ class CdcPipeline:
         checkpoint_dir: str,
         predicate: Column | None = None,
         trigger_interval: str = "2 seconds",
-        bucketed: bool = False,
-        n_buckets: int = 64,
     ):
         self.spark = spark
         self.source_dir = source_dir
         self.checkpoint_dir = checkpoint_dir
         self.predicate = predicate
         self.trigger_interval = trigger_interval
-        if bucketed:
-            # scale path: O(changed buckets) per batch instead of O(state)
-            from postgres_cdc_example_spark.streaming.bucket_state import (
-                BucketedStateStore,
-            )
-
-            self.store = BucketedStateStore(
-                spark, state_root, PERSON_SCHEMA, n_buckets=n_buckets
-            )
-        else:
-            self.store = VersionedStateStore(spark, state_root, PERSON_SCHEMA)
+        self.store = VersionedStateStore(spark, state_root, PERSON_SCHEMA)
         self.dead_letter_count = 0  # observability counter (T7)
 
     # --- T3: snapshot + stream handoff ------------------------------------
@@ -93,17 +111,24 @@ class CdcPipeline:
         if self.predicate is not None:
             snap = snap.filter(self.predicate)
         merged = snapshot_copy(self.store.read(), snap)
-        if hasattr(self.store, "commit_full"):
-            self.store.commit_full(merged)
-        else:
-            self.store.commit(merged, version=0)
+        self.store.commit(merged, version=0)
 
     # --- the per-micro-batch apply (P3/J1-J4/T5) ---------------------------
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        decoded = decode_change_lines(batch_df)
-        valid, dead = split_corrupt(decoded)
-        ndead = dead.count()
-        self.dead_letter_count += ndead  # reference logs & skips (T7)
+        # version = batch_id + 1 (0 is the backfill). A crash between commit
+        # and checkpoint ack replays this batch: without the guard the replay
+        # would read v{batch_id+1} and overwrite the same directory — Spark
+        # refuses ("Cannot overwrite a path that is also being read from")
+        # and the pipeline wedges. An already-committed version makes the
+        # replay a no-op, which is exactly the exactly-once contract (T2).
+        # The guard runs first, so a replay runs no job and counts no dead
+        # letters twice.
+        version = batch_id + 1
+        latest = self.store.latest_version()
+        if latest is not None and latest >= version:
+            return
+        valid, dead = split_corrupt(decode_change_lines(batch_df))
+        self.dead_letter_count += dead.count()  # reference logs & skips (T7)
         changes = flatten_person_changes(valid)
         if self.predicate is not None:
             # Publication row filter on the event's new image, with
@@ -114,8 +139,6 @@ class CdcPipeline:
             # is applied as an upsert I (the old image may have failed the
             # filter, so the key can be absent — plain U would no-op).
             # Deletes carry no image and always replicate.
-            from pyspark.sql import functions as F
-
             a = F.col("action")
             passes = F.coalesce(self.predicate, F.lit(False))
             changes = changes.withColumn(
@@ -124,41 +147,24 @@ class CdcPipeline:
                 .when(a == "U", F.lit("I"))
                 .otherwise(a),
             ).filter((F.col("action") == "D") | passes)
-        if hasattr(self.store, "apply_and_commit"):
-            # incremental path: read + rewrite only the changed buckets;
-            # replay after crash re-applies idempotently (merge semantics)
-            self.store.apply_and_commit(changes)
-            return
-        # version = batch_id + 1 (0 is the backfill). A crash between commit
-        # and checkpoint ack replays this batch: without the guard the replay
-        # would read v{batch_id+1} and overwrite the same directory — Spark
-        # refuses ("Cannot overwrite a path that is also being read from")
-        # and the pipeline wedges. An already-committed version makes the
-        # replay a no-op, which is exactly the exactly-once contract (T2).
-        target = batch_id + 1
-        latest = self.store.latest_version()
-        if latest is not None and latest >= target:
-            return
-        state = self.store.read()
+        self._commit(self.store.read(), changes, version)
+
+    def _commit(self, state: DataFrame, changes: DataFrame, version: int) -> None:
+        """Apply one batch's filtered changes to ``state`` and commit the
+        result as ``version``. Subclasses that keep derived stores commit
+        them first, then call this."""
         new_state = apply_changes(state, changes)
-        self.store.commit(new_state.select(*state.columns), version=target)
+        self.store.commit(new_state.select(*state.columns), version=version)
 
     def start(self, available_now: bool = False) -> StreamingQuery:
-        lines = (
-            self.spark.readStream.format("text")
-            .option("maxFilesPerTrigger", 16)  # T8 backpressure
-            .load(self.source_dir)
+        return start_change_stream(
+            self.spark,
+            self.source_dir,
+            self.checkpoint_dir,
+            self._apply_batch,
+            self.trigger_interval,
+            available_now,
         )
-        writer = (
-            lines.writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime=self.trigger_interval)
-        return writer.start()
 
     def state(self) -> DataFrame:
         return self.store.read()

@@ -50,7 +50,11 @@ class VersionedStateStore:
     def read(self) -> DataFrame:
         v = self.latest_version()
         if v is None:
-            return self.spark.createDataFrame([], self.schema)
+            # no partitions, so reading it starts no Python workers
+            # (createDataFrame([]) parallelises an empty list into tasks)
+            return self.spark.createDataFrame(
+                self.spark.sparkContext.emptyRDD(), self.schema
+            )
         return self.spark.read.schema(self.schema).parquet(
             os.path.join(self.root, f"v{v:08d}")
         )

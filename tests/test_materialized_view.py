@@ -42,8 +42,10 @@ def test_streaming_agg_view_tracks_state(spark, tmp_path):
         person_change_json(1, "I", row=row(1, "alice", 10)),
         person_change_json(2, "I", row=row(2, "alice", 20)),
         person_change_json(3, "I", row=row(3, "bob", 5)),
+        "NOT JSON",  # dead letter: counted, and leaves both stores alone
     ])
     _drain(view)
+    assert view.dead_letter_count == 1
     _assert_view_matches_recompute(view)
     agg = {r.name: (r.n_rows, r.sum_cents) for r in view.view().collect()}
     assert agg == {"alice": (2, 30), "bob": (1, 5)}
@@ -91,7 +93,7 @@ def test_agg_commit_precedes_state_commit(spark, tmp_path):
     ])
     _drain(view)
     assert (view.agg_store.latest_version() or 0) >= (
-        view.state_store.latest_version() or 0
+        view.store.latest_version() or 0
     )
 
 

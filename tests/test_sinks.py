@@ -73,6 +73,18 @@ def test_state_store_vacuum_keeps_latest(spark, tmp_path):
     assert store.vacuum(keep_last=2) == []  # idempotent
 
 
+def test_empty_state_store_read_has_no_partitions(spark, tmp_path):
+    """A fresh store's read() is the empty person table with no partitions,
+    so counting or joining it (the first backfill does) runs no tasks."""
+    from postgres_cdc_example_spark.schemas import PERSON_SCHEMA
+    from postgres_cdc_example_spark.streaming.state import VersionedStateStore
+
+    empty = VersionedStateStore(spark, str(tmp_path / "st"), PERSON_SCHEMA).read()
+    assert empty.schema == PERSON_SCHEMA
+    assert empty.rdd.getNumPartitions() == 0
+    assert empty.count() == 0
+
+
 def test_compact_parquet_reduces_file_count(spark, sf_dir, tmp_path):
     from postgres_cdc_example_spark.sinks.corpus import compact_parquet
 
