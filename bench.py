@@ -438,87 +438,31 @@ def _sigterm_handler(signum, frame):  # pragma: no cover - timing-dependent
     os._exit(124)
 
 
-def _build_layers(spark) -> dict[str, float]:
-    """Materialize the shared persisted layers once, returning per-layer
-    build seconds (see the methodology comment in main())."""
-    from postgres_cdc_example_spark.queries.extensions import (
-        _doc_bands,
-        _doc_gram_df,
-        _doc_ngrams,
-        _pca_fit,
-        _simhash_cand,
-        _trained_centroids,
-        _trained_pq,
-        _trained_pq_retrained,
-        _trained_pq_stale,
-    )
-    from postgres_cdc_example_spark.queries.cdc import _drifted_wire_lines
-    from postgres_cdc_example_spark.queries.llmdata import (
-        _doc_grams8,
-        _doc_occurrences,
-        _doc_winnow_fps,
-    )
+# Trained inside their timed queries (ann_ivfpq_topk, quality_classifier_apply)
+# since they were added, so the headline's timed scope keeps their training.
+TRAIN_IN_QUERY = ("ivfpq", "quality_weights")
 
-    layer_builds = [
-        # r10+: the drift audit's synthetic WAL segment (to_json encode over
-        # events) — consumed by cdc_schema_drift_audit and the streaming
-        # gate's batch twin; the decode itself stays inside the timed query.
-        ("drift_wire_lines", lambda: _drifted_wire_lines(spark, SF_DIR).count()),
-        ("doc_ngrams", lambda: _doc_ngrams(spark, SF_DIR).count()),
-        # r13: df-annotated shingle rows — the inverted-index family's df
-        # aggregate + join-back, formerly re-derived inline per invocation
-        # by the symmetric-Jaccard / containment / prefix-filter /
-        # recall-audit queries (guide §2.2).
-        ("doc_gram_df", lambda: _doc_gram_df(spark, SF_DIR).count()),
-        ("doc_occurrences", lambda: _doc_occurrences(spark, SF_DIR).count()),
-        ("doc_bands", lambda: _doc_bands(spark, SF_DIR).count()),
-        ("doc_grams8", lambda: _doc_grams8(spark, SF_DIR).count()),
-        ("doc_winnow_fps", lambda: _doc_winnow_fps(spark, SF_DIR).count()),
-        # r12: the simhash band-collision pair table, formerly a leaked
-        # in-query persist whose CacheManager plan-match silently served
-        # the second best-of-2 sample from the first sample's cache (the
-        # --full-vs-headline 2x gap's largest term). Now a governed memo
-        # layer; its build cost is THIS line item, and both passes see the
-        # same warm steady state.
-        ("simhash_cand", lambda: _simhash_cand(spark, SF_DIR).count()),
-        ("kmeans_centroids", lambda: _trained_centroids(spark, SF_DIR)),
-        ("pca_fit", lambda: _pca_fit(spark, SF_DIR)),
-        ("pq_trio", lambda: _trained_pq(spark, SF_DIR)),
-        ("pq_stale_memo_hit", lambda: _trained_pq_stale(spark, SF_DIR)),
-        ("pq_retrained_memo_hit", lambda: _trained_pq_retrained(spark, SF_DIR)),
-    ]
+
+def _build_layers(spark, sf_dir: str = SF_DIR) -> dict[str, float]:
+    """Materialize every registered shared layer (except TRAIN_IN_QUERY)
+    once, each after its deps, returning per-layer build seconds (see the
+    methodology comment in main())."""
+    from pyspark.sql import DataFrame
+
+    from postgres_cdc_example_spark.layers import in_dep_order
+    from postgres_cdc_example_spark.queries import _load_all
+
+    _load_all()  # each query module registers its layers on import
     layer_times: dict[str, float] = {}
-    for lname, build in layer_builds:
+    for lay in in_dep_order():
+        if lay.name in TRAIN_IN_QUERY:
+            continue
         t0 = time.perf_counter()
-        build()
-        layer_times[lname] = round(time.perf_counter() - t0, 3)
+        val = lay(spark, sf_dir)
+        if isinstance(val, DataFrame):
+            val.count()
+        layer_times[lay.name] = round(time.perf_counter() - t0, 3)
     return layer_times
-
-
-def _clear_layer_memos() -> None:
-    """Forget every memoized shared layer (unpersisting cached frames) so
-    ``_build_layers`` can re-measure a steady-state build. Only used on a
-    layer-budget breach (see main): the next ``memo_get`` rebuilds each
-    layer through the exact same code path."""
-    from postgres_cdc_example_spark.queries import (
-        cdc as _cdc,
-        extensions as _ext,
-        llmdata as _llm,
-    )
-
-    for mod in (_cdc, _ext, _llm):
-        for attr in dir(mod):
-            if not attr.endswith("_SHARE"):
-                continue
-            memo = getattr(mod, attr)
-            if not isinstance(memo, dict):
-                continue
-            for val in memo.values():
-                try:
-                    val.unpersist()  # DataFrame layers; driver values lack it
-                except Exception:
-                    pass
-            memo.clear()
 
 
 def full_registry_pass() -> None:
@@ -617,6 +561,7 @@ def full_registry_pass() -> None:
 
 def main() -> None:
     from postgres_cdc_example_spark import queries as q
+    from postgres_cdc_example_spark.layers import clear_layers
     from postgres_cdc_example_spark.session import get_spark
 
     signal.signal(signal.SIGTERM, _sigterm_handler)
@@ -647,9 +592,9 @@ def main() -> None:
     # r8+: per-layer timings go to the detail artifact so a layer-induced
     # build regression bisects from BENCH_DETAIL_last.json instead of a
     # diagnosis session. r9+: the three PQ trainings fuse into ONE
-    # shared-layer pass (extensions._ensure_pq_trio); the stale/retrained
-    # getters appear as ~0 s memo hits so the map proves the sharing.
-    # r10+: the layer list lives in _build_layers (shared with --full).
+    # shared layer (extensions._pq_trio), one line item in the map.
+    # The layer set comes from the registry (layers.LAYERS) via
+    # _build_layers (shared with --full).
     layer_times = _build_layers(spark)
     layer_build = round(sum(layer_times.values()), 3)
     if layer_build > LAYER_BUILD_BUDGET_SEC:
@@ -658,12 +603,12 @@ def main() -> None:
         # immediately-following run on the same box measured 12.5 s —
         # first-run cold state (page cache / JIT warm-up), not a layer
         # regression, yet it failed the exit code and emptied PERF's
-        # per-query block. Re-measure ONCE from cleared memos before
+        # per-query block. Re-measure ONCE from cleared layers before
         # judging: a real layer regression reproduces warm; a cold-start
         # artifact does not. Both numbers go into the artifact
         # (layer_build_cold_sec keeps the cold-start story visible).
         cold_build = layer_build
-        _clear_layer_memos()
+        clear_layers()
         layer_times = _build_layers(spark)
         layer_build = round(sum(layer_times.values()), 3)
         _RUN_STATE["layer_build_cold"] = cold_build

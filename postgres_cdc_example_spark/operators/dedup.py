@@ -489,7 +489,7 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_df: int = MAX_DOC_FREQ,
     shingles: DataFrame | None = None,
-    kept: DataFrame | None = None,
+    gram_df: DataFrame | None = None,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard pairs via an inverted-index self-join.
 
@@ -499,20 +499,17 @@ def ngram_jaccard_pairs(
     Sizes and intersections are computed over the *filtered* universe so
     Jaccard stays internally consistent.
 
-    ``kept``: optionally pass the df-filtered shingle rows directly (e.g.
-    a persisted df-annotated layer already cut at ``max_df``) — skips the
-    in-plan df aggregate + join-back, the same share-the-derived-table
-    pattern as ``shingles``. Caller contract: ``kept`` must equal
-    ``shingles`` filtered to grams in <= ``max_df`` docs.
+    ``gram_df``: optionally pass the df-annotated shingle rows
+    ``(id, g, df)`` directly (e.g. a persisted layer) — skips the in-plan
+    df aggregate + join-back, the same share-the-derived-table pattern as
+    ``shingles``. The ``max_df`` cutoff applies on either path.
     """
-    if kept is None:
+    if gram_df is None:
         ex = (
             shingles if shingles is not None else ngram_rows(df, text_col, id_col)
         )
-        rare = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df")).filter(
-            F.col("df") <= max_df
-        )
-        kept = ex.join(rare.select("g"), "g")
+        gram_df = ex.join(ex.groupBy("g").agg(F.count(F.lit(1)).alias("df")), "g")
+    kept = gram_df.filter(F.col("df") <= max_df).select(id_col, "g")
     sizes = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = kept.select(F.col(id_col).alias("doc_a"), F.col("g").alias("ga"))
     b = kept.select(F.col(id_col).alias("doc_b"), F.col("g").alias("gb"))

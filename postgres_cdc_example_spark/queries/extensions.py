@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from postgres_cdc_example_spark.memo import memo_get
+from postgres_cdc_example_spark.layers import layer
 from postgres_cdc_example_spark.operators import (
     dedup,
     hints,
@@ -448,22 +448,15 @@ def _minhash_oracle() -> str:
     """
 
 
-_NGRAM_SHARE: dict[tuple[str, str], DataFrame] = {}
-
-
+@layer("doc_ngrams")
 def _doc_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted word-3-gram shingle rows for ``documents``, shared across
     every shingle-consuming dedup query in a session (minhash pairs,
     clusters, exact-Jaccard). The explode+distinct that produces them is the
     measured floor of the whole dedup bench family; computing it once per
     (session, sf_dir) instead of ~8× (4 consumers inside the minhash plan ×
-    3 queries) is the single biggest dedup speedup. Keyed by applicationId
-    so a restarted session never sees another session's unpersisted plan."""
-    return memo_get(
-        _NGRAM_SHARE,
-        (spark.sparkContext.applicationId, sf_dir),
-        lambda: dedup.ngram_rows(load_table(spark, "documents", sf_dir)).persist(),
-    )
+    3 queries) is the single biggest dedup speedup."""
+    return dedup.ngram_rows(load_table(spark, "documents", sf_dir)).persist()
 
 
 # NOTE (r13, measured, rejected): a persisted ``_minhash_cand`` candidate
@@ -477,9 +470,7 @@ def _doc_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reads. Reverted; the checkpoint inside minhash_lsh_pairs stays the shape.
 
 
-_GRAM_DF_SHARE: dict[tuple[str, str], DataFrame] = {}
-
-
+@layer("doc_gram_df", deps=("doc_ngrams",))
 def _doc_gram_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted document-frequency-annotated shingle rows
     ``(doc_id, g, df)`` — the ``_doc_ngrams`` rows joined once to the
@@ -494,21 +485,12 @@ def _doc_gram_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     their own cutoffs (``df <= MAX_DOC_FREQ`` or none), so the layer stays
     policy-free; it caches an AGGREGATION-join, not a projection (the
     r12 "cache aggregations, not projections" rule)."""
-    def build() -> DataFrame:
-        sh = _doc_ngrams(spark, sf_dir)
-        df_ = sh.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-        return sh.join(df_, "g").persist()
-
-    return memo_get(
-        _GRAM_DF_SHARE,
-        (spark.sparkContext.applicationId, sf_dir),
-        build,
-    )
+    sh = _doc_ngrams(spark, sf_dir)
+    df_ = sh.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+    return sh.join(df_, "g").persist()
 
 
-_BANDS_SHARE: dict[tuple[str, str], DataFrame] = {}
-
-
+@layer("doc_bands", deps=("doc_ngrams",))
 def _doc_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted LSH band table (4 small rows per doc), shared across every
     band consumer in a session — pair discovery, clusters, the leakage
@@ -517,15 +499,11 @@ def _doc_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-executed by each of ~6 consumers per bench run; like ``_doc_ngrams``
     it is a materialized index table in a real deployment (built once per
     ingest batch, read by everything downstream)."""
-    return memo_get(
-        _BANDS_SHARE,
-        (spark.sparkContext.applicationId, sf_dir),
-        lambda: dedup.minhash_bands(
-            dedup.minhash_signatures(
-                _doc_ngrams(spark, sf_dir).withColumnRenamed("g", "s")
-            )
-        ).persist(),
-    )
+    return dedup.minhash_bands(
+        dedup.minhash_signatures(
+            _doc_ngrams(spark, sf_dir).withColumnRenamed("g", "s")
+        )
+    ).persist()
 
 
 @register("dedup_minhash_lsh", oracle=_minhash_oracle())
@@ -650,11 +628,8 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = dedup.ngram_jaccard_pairs(
         load_table(spark, "documents", sf_dir),
         threshold=0.2,
-        shingles=sh,
         # r13: df-annotated layer replaces the in-plan df agg + join-back
-        kept=_doc_gram_df(spark, sf_dir)
-        .filter(F.col("df") <= dedup.MAX_DOC_FREQ)
-        .select("doc_id", "g"),
+        gram_df=_doc_gram_df(spark, sf_dir),
     )
     cand = dedup.lsh_candidate_pairs(
         sh.withColumnRenamed("g", "s"), bands=_doc_bands(spark, sf_dir)
@@ -1389,10 +1364,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate + join-back (one gram-keyed shuffle pair per invocation)
     return dedup.ngram_jaccard_pairs(
         load_table(spark, "documents", sf_dir),
-        shingles=_doc_ngrams(spark, sf_dir),
-        kept=_doc_gram_df(spark, sf_dir)
-        .filter(F.col("df") <= dedup.MAX_DOC_FREQ)
-        .select("doc_id", "g"),
+        gram_df=_doc_gram_df(spark, sf_dir),
     )
 
 
@@ -1679,23 +1651,15 @@ def _kmeans_oracle(k: int = 8, iterations: int = 3) -> str:
     )
 
 
-_KMEANS_SHARE: dict[tuple[str, str], list[tuple[int, list[float]]]] = {}
-
-
+@layer("kmeans_centroids")
 def _trained_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]]:
-    """Session-memoized k-means training (same bounded-memo pattern as
-    ``_doc_ngrams``): the 3-iteration Lloyd loop runs ONCE per (session,
-    sf_dir) and both ``kmeans_centroids`` and ``ann_ivf_kmeans_topk`` reuse
-    the trained model — the production train-once/serve-many shape. The
-    memoized value is a plain k×dim driver list (no persisted DataFrame to
-    unpersist on eviction). Training is fully deterministic, so memoization
-    cannot change any result."""
-    return memo_get(
-        _KMEANS_SHARE,
-        (spark.sparkContext.applicationId, sf_dir),
-        lambda: similarity.train_kmeans(load_table(spark, "embeddings", sf_dir)),
-        unpersist=False,
-    )
+    """Session-memoized k-means training: the 3-iteration Lloyd loop runs
+    ONCE per (session, sf_dir) and both ``kmeans_centroids`` and
+    ``ann_ivf_kmeans_topk`` reuse the trained model — the production
+    train-once/serve-many shape. The value is a plain k×dim driver list.
+    Training is fully deterministic, so memoization cannot change any
+    result."""
+    return similarity.train_kmeans(load_table(spark, "embeddings", sf_dir))
 
 
 @register("kmeans_centroids", oracle=_kmeans_oracle())
@@ -3485,10 +3449,6 @@ def covariance_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PCA_POWER_STEPS = 3  # unrolled power-iteration steps (the k-means/BPE loop skeleton)
 
-# memoized driver-side PCA fit per (applicationId, sf_dir): (mu, v1, v2) —
-# bounded 3x64 ints, the same driver-value memo class as trained centroids
-_PCA_FIT_SHARE: dict[tuple[str, str], tuple] = {}
-
 
 def _pca_base_ctes() -> list[str]:
     """Shared oracle chain: exact covariance cells, the mirrored full
@@ -3627,71 +3587,64 @@ def _tdiv(a: int, b: int) -> int:
     return q if (a >= 0) == (b >= 0) else -q
 
 
+@layer("pca_fit")
 def _pca_fit(spark: SparkSession, sf_dir: str) -> tuple:
-    """Driver-side eigen fit, memoized per (applicationId, sf_dir):
-    collects the exact covariance cells and mean sums (bounded: 2080 + 64
-    rows), then runs the unrolled iterations in exact Python-int
-    arithmetic — v1 by plain power steps, v2 by per-step Gram-Schmidt
-    deflation against v1 with toward-zero integer division. Returns
+    """Driver-side eigen fit (3x64 ints of driver state): collects the
+    exact covariance cells and mean sums (bounded: 2080 + 64 rows), then
+    runs the unrolled iterations in exact Python-int arithmetic — v1 by
+    plain power steps, v2 by per-step Gram-Schmidt deflation against v1
+    with toward-zero integer division. Returns
     (mu, v1, v2) micro-grid lists, or () on an empty corpus."""
     import math
 
-    def build() -> tuple:
-        cov_rows = embedding_covariance(spark, sf_dir).collect()
-        if not cov_rows:
-            return ()
-        n = int(cov_rows[0]["n_vectors"])
-        cmat = [[0] * COV_DIM for _ in range(COV_DIM)]
-        for r in cov_rows:
-            cmat[r["i"]][r["j"]] = int(r["cov_pico"])
-            cmat[r["j"]][r["i"]] = int(r["cov_pico"])
-        srows = (
-            load_table(spark, "embeddings", sf_dir)
-            .select(_micro_vec().alias("v"))
-            .select(
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(0, {COV_DIM - 1}),"
-                        " i -> struct(i AS i, v[i] AS x))"
-                    )
-                ).alias("u")
-            )
-            .groupBy(F.col("u.i").alias("i"))
-            .agg(F.sum(F.col("u.x").cast("decimal(38,0)")).alias("s"))
-            .collect()
+    cov_rows = embedding_covariance(spark, sf_dir).collect()
+    if not cov_rows:
+        return ()
+    n = int(cov_rows[0]["n_vectors"])
+    cmat = [[0] * COV_DIM for _ in range(COV_DIM)]
+    for r in cov_rows:
+        cmat[r["i"]][r["j"]] = int(r["cov_pico"])
+        cmat[r["j"]][r["i"]] = int(r["cov_pico"])
+    srows = (
+        load_table(spark, "embeddings", sf_dir)
+        .select(_micro_vec().alias("v"))
+        .select(
+            F.explode(
+                F.expr(
+                    f"transform(sequence(0, {COV_DIM - 1}),"
+                    " i -> struct(i AS i, v[i] AS x))"
+                )
+            ).alias("u")
         )
-        mu = [0] * COV_DIM
-        for r in srows:
-            mu[int(r["i"])] = math.floor(float(r["s"]) / n)
-
-        v1 = [1_000_000] * COV_DIM
-        for _ in range(PCA_POWER_STEPS):
-            w = [
-                sum(cmat[i][j] * v1[j] for j in range(COV_DIM))  # exact ints
-                for i in range(COV_DIM)
-            ]
-            mx = max(max(abs(x) for x in w), 1)
-            v1 = [math.floor(float(x) * 1_000_000.0 / float(mx)) for x in w]
-
-        q = sum(x * x for x in v1)
-        v2 = [1_000_000 if d % 2 == 0 else -1_000_000 for d in range(COV_DIM)]
-        for _ in range(PCA_POWER_STEPS):
-            w = [
-                sum(cmat[i][j] * v2[j] for j in range(COV_DIM))
-                for i in range(COV_DIM)
-            ]
-            dd = sum(w[i] * v1[i] for i in range(COV_DIM))
-            w = [w[i] - _tdiv(dd * v1[i], q) for i in range(COV_DIM)]
-            mx = max(max(abs(x) for x in w), 1)
-            v2 = [math.floor(float(x) * 1_000_000.0 / float(mx)) for x in w]
-        return (mu, v1, v2)
-
-    return memo_get(
-        _PCA_FIT_SHARE,
-        (spark.sparkContext.applicationId, sf_dir),
-        build,
-        unpersist=False,
+        .groupBy(F.col("u.i").alias("i"))
+        .agg(F.sum(F.col("u.x").cast("decimal(38,0)")).alias("s"))
+        .collect()
     )
+    mu = [0] * COV_DIM
+    for r in srows:
+        mu[int(r["i"])] = math.floor(float(r["s"]) / n)
+
+    v1 = [1_000_000] * COV_DIM
+    for _ in range(PCA_POWER_STEPS):
+        w = [
+            sum(cmat[i][j] * v1[j] for j in range(COV_DIM))  # exact ints
+            for i in range(COV_DIM)
+        ]
+        mx = max(max(abs(x) for x in w), 1)
+        v1 = [math.floor(float(x) * 1_000_000.0 / float(mx)) for x in w]
+
+    q = sum(x * x for x in v1)
+    v2 = [1_000_000 if d % 2 == 0 else -1_000_000 for d in range(COV_DIM)]
+    for _ in range(PCA_POWER_STEPS):
+        w = [
+            sum(cmat[i][j] * v2[j] for j in range(COV_DIM))
+            for i in range(COV_DIM)
+        ]
+        dd = sum(w[i] * v1[i] for i in range(COV_DIM))
+        w = [w[i] - _tdiv(dd * v1[i], q) for i in range(COV_DIM)]
+        mx = max(max(abs(x) for x in w), 1)
+        v2 = [math.floor(float(x) * 1_000_000.0 / float(mx)) for x in w]
+    return (mu, v1, v2)
 
 
 def _pca_projection(direction: list[int], mu: list[int]) -> "F.Column":
@@ -3840,18 +3793,6 @@ embedding_outliers.__doc__ = embedding_outliers.__doc__.format(
 
 # --- Product Quantization (PQ) queries -----------------------------------------
 
-_PQ_SHARE: dict[tuple[str, str], list] = {}
-
-
-def _trained_pq(spark: SparkSession, sf_dir: str) -> list:
-    """Session-memoized PQ codebook (train once / encode+search many, like
-    ``_trained_centroids`` and ``_pca_fit``): M*K*D = 1024 micro ints of
-    driver state regardless of corpus size. Built by the fused trio
-    training (:func:`_ensure_pq_trio`)."""
-    _ensure_pq_trio(spark, sf_dir)
-    return _PQ_SHARE[(spark.sparkContext.applicationId, sf_dir)]
-
-
 def _pq_d2_sql(a: str, b: str, dims: int) -> str:
     return (
         f"list_sum(list_transform(generate_series(1, {dims}),"
@@ -3997,7 +3938,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan time at all. Top-{PQ_TOPK} per query by (dist, vec_id) over the
     {N_QUERIES}-query fixed sample."""
     emb = load_table(spark, "embeddings", sf_dir)
-    cb = _trained_pq(spark, sf_dir)
+    cb = _pq_trio(spark, sf_dir)["full"]
     if not cb:  # empty corpus: no codebook, no neighbors
         return _empty_ann_result(emb)
     codes = similarity.pq_encode(emb, cb)
@@ -4161,47 +4102,27 @@ STALE_MOD = 10  # vec_id % STALE_MOD == 0 -> the "arrived after training" slice
 STALE_DRIFT_MICRO = 300_000
 STALE_DRIFT_DIMS = 16  # first 16 of 64 dims (2 of 8 PQ subspaces)
 
-_STALE_PQ_SHARE: dict[tuple[str, str], list] = {}
-_RETRAIN_PQ_SHARE: dict[tuple[str, str], list] = {}
-
-
-def _trained_pq_stale(spark: SparkSession, sf_dir: str) -> list:
-    """Session-memoized FROZEN codebook: PQ trained on the base slice only
-    (vec_id % STALE_MOD != 0) — the index as it existed before the delta
-    vectors arrived. Same driver-state bound as ``_trained_pq``. Built by
-    the fused trio training (:func:`_ensure_pq_trio`)."""
-    _ensure_pq_trio(spark, sf_dir)
-    return _STALE_PQ_SHARE[(spark.sparkContext.applicationId, sf_dir)]
-
-
-def _trained_pq_retrained(spark: SparkSession, sf_dir: str) -> list:
-    """Session-memoized RETRAINED codebook: PQ trained on the full
-    corpus as it is NOW (base + drifted delta) — the counterfactual the
-    staleness audit prices the frozen index against. Built by the fused
-    trio training (:func:`_ensure_pq_trio`)."""
-    _ensure_pq_trio(spark, sf_dir)
-    return _RETRAIN_PQ_SHARE[(spark.sparkContext.applicationId, sf_dir)]
-
-
-def _ensure_pq_trio(spark: SparkSession, sf_dir: str) -> None:
-    """Train the THREE staleness-family PQ codebooks — full corpus
-    (serving), frozen base slice (pre-delta index), retrained drifted
-    corpus (the audit's counterfactual) — in ONE fused pass off a single
-    localCheckpointed subvector layer. r8 ran three independent Lloyd
-    chains (three scans + micro conversions + 3×(init + PQ_ITERS) job
-    round-trips — 10.8 s of the 21.2 s bench layer build); the chains'
-    training SETS differ, so the fusion shares jobs and the scan, never
-    rows: each chain keeps its own init and its own per-(tag, s, code)
-    sums (see ``similarity.train_pq_multi``). Deriving the frozen and
-    drifted bases from the shared layer is exact because the slice filter
+@layer("pq_trio")
+def _pq_trio(spark: SparkSession, sf_dir: str) -> dict[str, list]:
+    """Train the THREE staleness-family PQ codebooks — ``full`` corpus
+    (serving; train once / encode+search many), ``frozen`` base slice
+    (vec_id % STALE_MOD != 0: the index as it existed before the delta
+    vectors arrived), ``retrained`` drifted corpus (the corpus as it is
+    NOW, the counterfactual the staleness audit prices the frozen index
+    against) — each M*K*D = 1024 micro ints of driver state regardless
+    of corpus size, in ONE fused pass off a single localCheckpointed
+    subvector layer. r8 ran three independent Lloyd chains (three scans
+    + micro conversions + 3×(init + PQ_ITERS) job round-trips — 10.8 s
+    of the 21.2 s bench layer build); the chains' training SETS differ,
+    so the fusion shares jobs and the scan, never rows: each chain keeps
+    its own init and its own per-(tag, s, code) sums (see
+    ``similarity.train_pq_multi``). Deriving the frozen and drifted
+    bases from the shared layer is exact because the slice filter
     commutes with the per-row subvector projection, and the drift is a
-    constant-per-vector integer shift on the first STALE_DRIFT_DIMS dims —
-    a whole number of leading subspaces (asserted), so it maps to a
+    constant-per-vector integer shift on the first STALE_DRIFT_DIMS dims
+    — a whole number of leading subspaces (asserted), so it maps to a
     ``transform(+delta)`` on sv0..sv{{n}} verbatim to ``_drifted_vm``'s
     vm-level shift."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PQ_SHARE and key in _STALE_PQ_SHARE and key in _RETRAIN_PQ_SHARE:
-        return
     assert STALE_DRIFT_DIMS % similarity.PQ_D == 0, (
         "drift must cover whole subspaces for the shared-layer derivation"
     )
@@ -4224,13 +4145,10 @@ def _ensure_pq_trio(spark: SparkSession, sf_dir: str) -> None:
             for s in range(similarity.PQ_M)
         ],
     )
-    trio = similarity.train_pq_multi(
+    return similarity.train_pq_multi(
         {"full": base, "frozen": frozen, "retrained": drifted},
         checkpointed=True,
     )
-    memo_get(_PQ_SHARE, key, lambda: trio["full"], unpersist=False)
-    memo_get(_STALE_PQ_SHARE, key, lambda: trio["frozen"], unpersist=False)
-    memo_get(_RETRAIN_PQ_SHARE, key, lambda: trio["retrained"], unpersist=False)
 
 
 def _drifted_vm(emb: DataFrame) -> DataFrame:
@@ -4379,7 +4297,7 @@ def ann_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     now? Controlled comparison — same fixed {NQ}-query sample, same
     delta-slice candidate pool, same exact integer-L2 ground truth — with
     ONLY the codebook varying: 'frozen' is PQ trained on the base slice
-    (vec_id % {MOD} != 0, memoized like ``_trained_pq``), 'retrained' is
+    (vec_id % {MOD} != 0, memoized in ``_pq_trio``), 'retrained' is
     PQ trained on the full current corpus. The delta slice (% {MOD} == 0)
     models post-training arrivals WITH deterministic distribution shift —
     a per-vector ((vec_id div {MOD}) % 7) x {DRIFT}-micro offset on the
@@ -4402,8 +4320,8 @@ def ann_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cites the same PQ design as ``ann_pq_topk``
     (operators/similarity.py:612-830)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    cb_frozen = _trained_pq_stale(spark, sf_dir)
-    cb_retrained = _trained_pq_retrained(spark, sf_dir)
+    trio = _pq_trio(spark, sf_dir)
+    cb_frozen, cb_retrained = trio["frozen"], trio["retrained"]
     vmd = _drifted_vm(emb)
     empty = vmd.limit(0).select(
         F.lit("frozen").alias("codebook"),
@@ -4664,29 +4582,18 @@ def source_fertility_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF-PQ: coarse quantizer + residual product quantization
 # ---------------------------------------------------------------------------
 
-_IVFPQ_SHARE: dict[tuple[str, str], tuple] = {}
-
-
+@layer("ivfpq")
 def _trained_ivfpq(spark: SparkSession, sf_dir: str) -> tuple:
     """Session-memoized (coarse centroids, residual PQ codebook) — the
-    train-once/serve-many split, like ``_trained_pq``."""
-
-    def build():
-        emb = load_table(spark, "embeddings", sf_dir)
-        cents = similarity.coarse_centroids(emb)
-        if not cents:  # empty corpus: nothing to train on
-            return ([], [])
-        cb = similarity.train_pq_base(
-            similarity.ivfpq_residual_subvecs(emb, cents)
-        )
-        return (cents, cb)
-
-    return memo_get(
-        _IVFPQ_SHARE,
-        (spark.sparkContext.applicationId, sf_dir),
-        build,
-        unpersist=False,
+    train-once/serve-many split, like ``_pq_trio``."""
+    emb = load_table(spark, "embeddings", sf_dir)
+    cents = similarity.coarse_centroids(emb)
+    if not cents:  # empty corpus: nothing to train on
+        return ([], [])
+    cb = similarity.train_pq_base(
+        similarity.ivfpq_residual_subvecs(emb, cents)
     )
+    return (cents, cb)
 
 
 def _ivfpq_oracle() -> str:
@@ -7216,7 +7123,7 @@ def ann_pq_distortion_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainings as unrolled CTEs (`pq` prefix keeps the two Lloyd chains'
     stage names disjoint)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    cb = _trained_pq(spark, sf_dir)
+    cb = _pq_trio(spark, sf_dir)["full"]
     cents = _trained_centroids(spark, sf_dir)
     if not cb or not cents:  # empty corpus: nothing trained
         vid = F.col("vec_id").cast("long")
@@ -7422,18 +7329,15 @@ SIMHASH_CAL_FULL_H = 3  # verify EVERY pair at hamming <= this ...
 SIMHASH_CAL_SAMPLE_DIV = 16  # ... and a deterministic 1/16 sample above
 
 
-_SIMHASH_CAND_SHARE: dict[tuple[str, str], DataFrame] = {}
-
-
+@layer("simhash_cand", deps=("doc_occurrences",))
 def _simhash_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized SHARED LAYER: the deduped simhash byte-band collision pair
     table ``(doc_a, doc_b, hamming)`` (pairs agreeing on >= 2 of the 4
     bands). This is the densest intermediate of the calibration family
     (2.6M band collisions -> 282k candidate pairs at sf0.1) and exactly
     what a production simhash-dedup ingest persists between batches, so
-    it gets the same governance as the shingle/band/occurrence layers:
-    per-(appId, sf_dir) memo, FIFO-bounded, unpersisted on eviction, and
-    prebuilt untimed by bench._build_layers with its cost as a line item.
+    it is a shared layer like the shingle/band/occurrence ones, prebuilt
+    untimed by the bench with its cost as a line item.
 
     History (r11 ADVICE low + r12 --full-gap adjudication): this used to
     be a bare ``.persist()`` inside the lazily-returned query frame — the
@@ -7441,65 +7345,57 @@ def _simhash_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches canonicalized plans, the bench's second best-of-2 sample
     silently read the first sample's leaked cache: the 2.71 s headline
     number was a WARM number while the single-pass --full paid the real
-    ~5 s cold cost. The memo makes the warm semantics explicit and
+    ~5 s cold cost. The layer makes the warm semantics explicit and
     governed instead of accidental."""
+    from postgres_cdc_example_spark.queries.llmdata import _doc_occurrences
 
-    def build() -> DataFrame:
-        from postgres_cdc_example_spark.queries.llmdata import _doc_occurrences
-
-        sh = dedup.simhash_buckets(
-            load_table(spark, "documents", sf_dir),
-            tokens=_doc_occurrences(spark, sf_dir),
-        ).select("doc_id", "simhash")
-        bd = sh.select(
-            "doc_id",
-            "simhash",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).cast("long").alias("band_idx"),
-                            F.expr(
-                                f"shiftright(simhash, {8 * bi}) & 255"
-                            ).alias("band_val"),
-                        )
-                        for bi in range(SIMHASH_CAL_BANDS)
-                    ]
-                )
-            ).alias("bv"),
-        ).select("doc_id", "simhash", "bv.band_idx", "bv.band_val")
-        return (
-            bd.alias("a")
-            .join(
-                bd.alias("b"),
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_val") == F.col("b.band_val"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
+    sh = dedup.simhash_buckets(
+        load_table(spark, "documents", sf_dir),
+        tokens=_doc_occurrences(spark, sf_dir),
+    ).select("doc_id", "simhash")
+    bd = sh.select(
+        "doc_id",
+        "simhash",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(bi).cast("long").alias("band_idx"),
+                        F.expr(
+                            f"shiftright(simhash, {8 * bi}) & 255"
+                        ).alias("band_val"),
+                    )
+                    for bi in range(SIMHASH_CAL_BANDS)
+                ]
             )
-            .groupBy(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .agg(
-                F.max("a.simhash").alias("sim_a"),
-                F.max("b.simhash").alias("sim_b"),
-                F.count(F.lit(1)).alias("nb"),
-            )
-            .filter(F.col("nb") >= 2)
-            .select(
-                "doc_a",
-                "doc_b",
-                F.expr("CAST(bit_count(sim_a ^ sim_b) AS BIGINT)").alias(
-                    "hamming"
-                ),
-            )
-            .persist()
+        ).alias("bv"),
+    ).select("doc_id", "simhash", "bv.band_idx", "bv.band_val")
+    return (
+        bd.alias("a")
+        .join(
+            bd.alias("b"),
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_val") == F.col("b.band_val"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-
-    return memo_get(
-        _SIMHASH_CAND_SHARE,
-        (spark.sparkContext.applicationId, sf_dir),
-        build,
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+        )
+        .agg(
+            F.max("a.simhash").alias("sim_a"),
+            F.max("b.simhash").alias("sim_b"),
+            F.count(F.lit(1)).alias("nb"),
+        )
+        .filter(F.col("nb") >= 2)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.expr("CAST(bit_count(sim_a ^ sim_b) AS BIGINT)").alias(
+                "hamming"
+            ),
+        )
+        .persist()
     )
 
 

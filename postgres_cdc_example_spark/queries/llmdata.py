@@ -25,7 +25,7 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from postgres_cdc_example_spark.memo import memo_get
+from postgres_cdc_example_spark.layers import layer
 from postgres_cdc_example_spark.operators import bloom, dedup, hints, sampling
 from postgres_cdc_example_spark.queries import REGISTRY, register
 from postgres_cdc_example_spark.sources.tables import load_table
@@ -46,15 +46,12 @@ def _occurrences(docs: DataFrame) -> DataFrame:
     )
 
 
-_OCC_SHARE: dict[tuple[str, str], DataFrame] = {}
-
-
+@layer("doc_occurrences")
 def _doc_occurrences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted token-occurrence rows shared across the LM-statistics
-    queries (NLL, tf-idf, vocabulary) — same memo pattern as
-    ``extensions._doc_ngrams``: the explode is the family's common floor,
-    and ``text_unigram_nll`` alone consumes it twice (count pass + scoring
-    join)."""
+    queries (NLL, tf-idf, vocabulary): the explode is the family's common
+    floor, and ``text_unigram_nll`` alone consumes it twice (count pass +
+    scoring join)."""
     # NOTE (r12 optimization round): deliberately NOT scan-parallelism-
     # healed. The heal was tried and REVERTED with measurements: this
     # layer's consumers all re-aggregate by token, and tokens appear in
@@ -64,11 +61,7 @@ def _doc_occurrences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bm25/QL/source_token_* regressed 1.5-3x in the bench's stable-flag
     # compare). The single cached partition IS the efficient shape for
     # high-duplication aggregation consumers at fixture scale.
-    return memo_get(
-        _OCC_SHARE,
-        (spark.sparkContext.applicationId, sf_dir),
-        lambda: _occurrences(load_table(spark, "documents", sf_dir)).persist(),
-    )
+    return _occurrences(load_table(spark, "documents", sf_dir)).persist()
 
 
 # ---------------------------------------------------------------------------
@@ -503,46 +496,37 @@ CONTAM_NGRAM = 8  # span width for decontamination checks
 BENCH_MOD = 20  # doc_id % 20 == 0 -> the stand-in "benchmark" split
 
 
-_GRAM8_SHARE: dict[tuple[str, str], DataFrame] = {}
-
-
+@layer("doc_grams8")
 def _doc_grams8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted distinct-8-gram rows (doc_id, g) for ALL documents —
     shared by the decontamination family (exact join sweep + bloom
     prefilter), which otherwise re-derives the gram table once per side
-    per query. Same bounded-memo pattern as ``_doc_occurrences``; both
-    the benchmark split (``doc_id % BENCH_MOD == 0``) and the corpus
-    split are doc_id filters over this one table, applied after the
-    cache read."""
-
-    def build() -> DataFrame:
-        n = CONTAM_NGRAM
-        gram_cat = ", ".join(f"tk[i+{j}]" for j in range(n))
-        # NOTE (r12 optimization round): deliberately NOT scan-parallelism-
-        # healed — same reverted experiment as _doc_occurrences: gram-keyed
-        # consumers (coverage 0.53 -> 0.71 s, novelty 0.64 -> 0.81 s)
-        # re-aggregate by gram, and a multi-partition cached layer dilutes
-        # their map-side combining.
-        docs = load_table(spark, "documents", sf_dir)
-        return (
-            docs.select("doc_id", dedup.word_tokens(F.col("text")).alias("tk"))
-            .filter(F.size("tk") >= n)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.array_distinct(
-                        F.expr(
-                            f"transform(sequence(0, size(tk) - {n}),"
-                            f" i -> concat_ws(' ', {gram_cat}))"
-                        )
+    per query. Both the benchmark split (``doc_id % BENCH_MOD == 0``)
+    and the corpus split are doc_id filters over this one table, applied
+    after the cache read."""
+    n = CONTAM_NGRAM
+    gram_cat = ", ".join(f"tk[i+{j}]" for j in range(n))
+    # NOTE (r12 optimization round): deliberately NOT scan-parallelism-
+    # healed — same reverted experiment as _doc_occurrences: gram-keyed
+    # consumers (coverage 0.53 -> 0.71 s, novelty 0.64 -> 0.81 s)
+    # re-aggregate by gram, and a multi-partition cached layer dilutes
+    # their map-side combining.
+    docs = load_table(spark, "documents", sf_dir)
+    return (
+        docs.select("doc_id", dedup.word_tokens(F.col("text")).alias("tk"))
+        .filter(F.size("tk") >= n)
+        .select(
+            "doc_id",
+            F.explode(
+                F.array_distinct(
+                    F.expr(
+                        f"transform(sequence(0, size(tk) - {n}),"
+                        f" i -> concat_ws(' ', {gram_cat}))"
                     )
-                ).alias("g"),
-            )
-            .persist()
+                )
+            ).alias("g"),
         )
-
-    return memo_get(
-        _GRAM8_SHARE, (spark.sparkContext.applicationId, sf_dir), build
+        .persist()
     )
 
 
@@ -3701,32 +3685,21 @@ hybrid_recall_audit.__doc__ = hybrid_recall_audit.__doc__.format(
 
 # train-once / serve-many: the GD classifier's weights as a literal scorer
 
-_QCW_SHARE: dict = {}
-
-
+@layer("quality_weights")
 def _trained_quality_weights(spark: SparkSession, sf_dir: str) -> tuple:
     """Final-step (b, wa, wb, wc) micro weights of
-    ``quality_classifier_train``, memoized per (applicationId, sf_dir) —
-    4 ints of driver state, the ``_pca_fit``/``_trained_pq`` class."""
-
-    def build() -> tuple:
-        rows = {
-            int(r["step"]): r
-            for r in quality_classifier_train(spark, sf_dir).collect()
-        }
-        r = rows[QCT_STEPS]
-        return (
-            int(r["bias_micro"]),
-            int(r["w_stop_micro"]),
-            int(r["w_distinct_micro"]),
-            int(r["w_len_micro"]),
-        )
-
-    return memo_get(
-        _QCW_SHARE,
-        (spark.sparkContext.applicationId, sf_dir),
-        build,
-        unpersist=False,
+    ``quality_classifier_train`` — 4 ints of driver state, the
+    ``_pca_fit``/``_pq_trio`` class."""
+    rows = {
+        int(r["step"]): r
+        for r in quality_classifier_train(spark, sf_dir).collect()
+    }
+    r = rows[QCT_STEPS]
+    return (
+        int(r["bias_micro"]),
+        int(r["w_stop_micro"]),
+        int(r["w_distinct_micro"]),
+        int(r["w_len_micro"]),
     )
 
 
@@ -3803,7 +3776,7 @@ def _qca_oracle() -> str:
 @register("quality_classifier_apply", oracle=_qca_oracle())
 def quality_classifier_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INFERENCE for the trained quality classifier — the serve half of
-    the train-once/serve-many split (``_pca_fit``/``_trained_pq``
+    the train-once/serve-many split (``_pca_fit``/``_pq_trio``
     pattern): the final-step GD weights are 4 ints collected once per
     session and broadcast as LITERALS, so scoring the corpus is a
     zero-shuffle codegen projection — per doc, score_pico =
@@ -3858,63 +3831,54 @@ WIN_K = 4  # words per k-gram
 WIN_W = 4  # winnowing window (guaranteed gap <= W; density ~ 2/(W+1))
 
 
-_WINFP_SHARE: dict = {}
-
-
+@layer("doc_winnow_fps")
 def _doc_winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted winnowing layer: one row per doc with its gram-hash count
     and the selected fingerprint array (packed h*2^20+p bigints) — shared
     by ``doc_winnowing_fingerprints`` (per-doc stats) and
     ``dedup_winnowing_pairs`` (the inverted index), which otherwise both
-    pay the gram-hash + window-min selection. Same bounded-memo pattern
-    as ``_doc_grams8``; at 100 TB this is the materialized fingerprint
-    table."""
-
-    def build() -> DataFrame:
-        # NOTE (r12 optimization round): deliberately NOT scan-parallelism-
-        # healed — tried and REVERTED with measurements, like
-        # _doc_occurrences: the pair consumers explode fingerprints and
-        # re-aggregate by fingerprint hash, and a 32-partition cached
-        # layer diluted their map-side combining (dedup_winnowing_pairs
-        # 0.49 -> 1.00 s, incremental 0.64 -> 1.08 s in the bench's
-        # stable-flag compare) for a ~0.5 s one-time build saving that the
-        # untimed prebuild absorbs anyway.
-        docs = load_table(spark, "documents", sf_dir)
-        tk = dedup.word_tokens(F.col("text"))
-        K, W = WIN_K, WIN_W
-        gram = (
-            f"transform(sequence(1, size(t) - {K - 1}),"
-            f" i -> conv(substr(md5(concat_ws(' ', slice(t, i, {K}))), 1, 10),"
-            f" 16, 10) :: long)"
-        )
-        hs = F.when(F.size(F.col("t")) >= K, F.expr(gram)).otherwise(
-            F.array().cast("array<long>")
-        )
-        base = docs.select("doc_id", tk.alias("t")).select(
+    pay the gram-hash + window-min selection. At 100 TB this is the
+    materialized fingerprint table."""
+    # NOTE (r12 optimization round): deliberately NOT scan-parallelism-
+    # healed — tried and REVERTED with measurements, like
+    # _doc_occurrences: the pair consumers explode fingerprints and
+    # re-aggregate by fingerprint hash, and a 32-partition cached
+    # layer diluted their map-side combining (dedup_winnowing_pairs
+    # 0.49 -> 1.00 s, incremental 0.64 -> 1.08 s in the bench's
+    # stable-flag compare) for a ~0.5 s one-time build saving that the
+    # untimed prebuild absorbs anyway.
+    docs = load_table(spark, "documents", sf_dir)
+    tk = dedup.word_tokens(F.col("text"))
+    K, W = WIN_K, WIN_W
+    gram = (
+        f"transform(sequence(1, size(t) - {K - 1}),"
+        f" i -> conv(substr(md5(concat_ws(' ', slice(t, i, {K}))), 1, 10),"
+        f" 16, 10) :: long)"
+    )
+    hs = F.when(F.size(F.col("t")) >= K, F.expr(gram)).otherwise(
+        F.array().cast("array<long>")
+    )
+    base = docs.select("doc_id", tk.alias("t")).select(
+        "doc_id",
+        F.explode(F.array(F.struct(hs.alias("hs")))).alias("r"),
+    ).select("doc_id", F.col("r.hs").alias("hs"))
+    winsel = (
+        f"array_distinct(transform(sequence(1, size(hs) - {W - 1}),"
+        f" j -> array_min(slice(hs, j, {W})) * 1048576"
+        f" + j + array_position(slice(hs, j, {W}),"
+        f" array_min(slice(hs, j, {W}))) - 1))"
+    )
+    fps = F.when(F.size(F.col("hs")) >= W, F.expr(winsel)).otherwise(
+        F.expr("array()").cast("array<long>")
+    )
+    return (
+        base.select(
             "doc_id",
-            F.explode(F.array(F.struct(hs.alias("hs")))).alias("r"),
-        ).select("doc_id", F.col("r.hs").alias("hs"))
-        winsel = (
-            f"array_distinct(transform(sequence(1, size(hs) - {W - 1}),"
-            f" j -> array_min(slice(hs, j, {W})) * 1048576"
-            f" + j + array_position(slice(hs, j, {W}),"
-            f" array_min(slice(hs, j, {W}))) - 1))"
+            F.size("hs").cast("long").alias("n_grams"),
+            F.explode(F.array(F.struct(fps.alias("fps")))).alias("r"),
         )
-        fps = F.when(F.size(F.col("hs")) >= W, F.expr(winsel)).otherwise(
-            F.expr("array()").cast("array<long>")
-        )
-        return (
-            base.select(
-                "doc_id",
-                F.size("hs").cast("long").alias("n_grams"),
-                F.explode(F.array(F.struct(fps.alias("fps")))).alias("r"),
-            )
-            .select("doc_id", "n_grams", F.col("r.fps").alias("fps"))
-            .persist()
-        )
-
-    return memo_get(
-        _WINFP_SHARE, (spark.sparkContext.applicationId, sf_dir), build
+        .select("doc_id", "n_grams", F.col("r.fps").alias("fps"))
+        .persist()
     )
 
 

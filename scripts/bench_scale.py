@@ -251,16 +251,8 @@ def build_scale_corpus(spark, replicas: int) -> None:
 def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     subset = sys.argv[2].split(",") if len(sys.argv) > 2 else None
+    import bench
     from postgres_cdc_example_spark import queries as q
-    from postgres_cdc_example_spark.queries.extensions import (
-        _doc_bands,
-        _doc_ngrams,
-        _trained_centroids,
-    )
-    from postgres_cdc_example_spark.queries.llmdata import (
-        _doc_grams8,
-        _doc_occurrences,
-    )
     from postgres_cdc_example_spark.session import get_spark
 
     spark = get_spark(app_name="bench-scale")
@@ -277,22 +269,7 @@ def main() -> None:
 
     results = {}
     for sf_dir, tag in ((BASE, "1x"), (SCALE_DIR, f"{replicas}x")):
-        t0 = time.perf_counter()
-        _doc_ngrams(spark, sf_dir).count()
-        _doc_occurrences(spark, sf_dir).count()
-        _doc_bands(spark, sf_dir).count()
-        _doc_grams8(spark, sf_dir).count()
-        _trained_centroids(spark, sf_dir)
-        from postgres_cdc_example_spark.queries.extensions import _pca_fit
-
-        _pca_fit(spark, sf_dir)
-        from postgres_cdc_example_spark.queries.extensions import _trained_pq
-
-        _trained_pq(spark, sf_dir)
-        from postgres_cdc_example_spark.queries.llmdata import _doc_winnow_fps
-
-        _doc_winnow_fps(spark, sf_dir).count()
-        layer = time.perf_counter() - t0
+        layer = sum(bench._build_layers(spark, sf_dir).values())
         results[("_layer_build", tag)] = layer
         print(f"# layer build {tag}: {layer:.1f}s", file=sys.stderr)
         for name in queries:

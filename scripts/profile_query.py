@@ -60,7 +60,7 @@ def main() -> None:
             bench._force(registry[name](spark, "/root/testdata/sf0.001"))
         except Exception as e:
             print(f"# warmup {name} failed: {e}", file=sys.stderr)
-    bench._build_layers(spark)
+    print(f"# layers {bench._build_layers(spark)}", file=sys.stderr, flush=True)
 
     tracker = spark.sparkContext.statusTracker()
     for name in names:

@@ -56,6 +56,30 @@ def test_minhash_finds_high_jaccard_pairs(spark, sf_dir):
     assert not missed, f"LSH missed high-similarity pairs: {missed}"
 
 
+@pytest.mark.parametrize("max_df", [1, 2, dedup.MAX_DOC_FREQ])
+def test_ngram_jaccard_gram_df_applies_max_df(spark, sf_dir, max_df):
+    """The shared df-annotated layer input (``gram_df=``) must honour
+    ``max_df`` exactly like the in-plan df aggregate does."""
+    from postgres_cdc_example_spark.queries.extensions import _doc_gram_df
+
+    docs = load_table(spark, "documents", sf_dir)
+
+    def pairs(**kw):
+        return sorted(
+            tuple(r)
+            for r in dedup.ngram_jaccard_pairs(
+                docs, threshold=0.2, max_df=max_df, **kw
+            ).collect()
+        )
+
+    in_plan = pairs()
+    assert pairs(gram_df=_doc_gram_df(spark, sf_dir)) == in_plan
+    if max_df == 1:  # a gram in one doc pairs nothing
+        assert not in_plan
+    if max_df == dedup.MAX_DOC_FREQ:
+        assert in_plan, "fixture should contain planted near-duplicates"
+
+
 def test_ivf_is_subset_quality_of_brute_force(spark, sf_dir):
     """IVF probe=1 returns ranked neighbors drawn from the query's cluster;
     each returned neighbor's cosine can't exceed the brute-force rank-1."""

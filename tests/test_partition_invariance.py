@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import pytest
 
+from postgres_cdc_example_spark.layers import clear_layers
 from postgres_cdc_example_spark.queries import REGISTRY, _load_all
 
 _load_all()
@@ -26,6 +27,7 @@ INVARIANCE_QUERIES = [
     "q1_pricing_summary",  # decimal aggregate + rounding
     "cdc_apply_full",  # join/merge state machine
     "dedup_minhash_lsh",  # md5 min-agg + band join + Jaccard micro-grid
+    "dedup_ngram_jaccard",  # df-annotated gram layer + inverted-index self-join
     "text_unigram_nll",  # micro-grid log BEFORE per-doc sum
     "source_token_kl",  # micro-grid log-ratio, bigint-weighted sum
     "kmeans_centroids",  # iterative loop, nano-grid means
@@ -83,6 +85,7 @@ INVARIANCE_QUERIES = [
     "gram_novelty_curve",  # min-bucket first-occurrence attribution off the shared gram layer
     "packing_waste_curve",  # integer ceil grid x literal granularity table
     "dedup_minhash_calibration",  # signature-agreement counts + jaccard floor off shared layers
+    "dedup_simhash_calibration",  # simhash band-collision pair layer + hamming strata
     # round-12 representatives
     "event_session_gap_curve",  # user-keyed lag gap multiset vs broadcast grid
     "doc_nll_outlier_fences",  # per-source cum-histogram quartiles + doubled fences
@@ -103,52 +106,6 @@ def _canon(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _clear_shared_layers():
-    """Drop the session-memoized shingle/occurrence caches so each config
-    run re-executes the shared layer under ITS parallelism — otherwise the
-    second run would read the first run's persisted RDD and the layer's
-    own partition-(in)dependence would go untested."""
-    from postgres_cdc_example_spark.queries.extensions import (
-        _BANDS_SHARE,
-        _NGRAM_SHARE,
-        _PCA_FIT_SHARE,
-    )
-    from postgres_cdc_example_spark.queries.llmdata import (
-        _GRAM8_SHARE,
-        _OCC_SHARE,
-        _WINFP_SHARE,
-    )
-
-    # r10: the drift audit's memoized wire-line layer must also re-build
-    # under each config, or its persisted partitioning goes untested
-    from postgres_cdc_example_spark.queries.cdc import _WIRE_LINES_SHARE
-
-    for cache in (
-        _NGRAM_SHARE,
-        _OCC_SHARE,
-        _BANDS_SHARE,
-        _GRAM8_SHARE,
-        _WINFP_SHARE,
-        _WIRE_LINES_SHARE,
-    ):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-    from postgres_cdc_example_spark.queries.extensions import (
-        _PQ_SHARE,
-        _RETRAIN_PQ_SHARE,
-        _STALE_PQ_SHARE,
-    )
-
-    _PCA_FIT_SHARE.clear()  # driver-value memo: rebuild the fit per config
-    _PQ_SHARE.clear()  # same for the PQ codebook
-    _STALE_PQ_SHARE.clear()  # ...and the staleness audit's frozen codebook
-    _RETRAIN_PQ_SHARE.clear()  # ...and its retrained counterfactual
-
-
 @pytest.mark.parametrize("name", INVARIANCE_QUERIES)
 def test_result_invariant_under_parallelism(spark, sf_dir, name):
     fn = REGISTRY[name].fn
@@ -156,16 +113,19 @@ def test_result_invariant_under_parallelism(spark, sf_dir, name):
     split_prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        _clear_shared_layers()
+        # rebuild every shared layer under each config: otherwise the second
+        # run reads the first run's layers (persisted frames AND trained
+        # driver values) and their partition-(in)dependence goes untested
+        clear_layers()
         a = _canon(fn(spark, sf_dir))
         # 17 reducers AND tiny input splits (64 KiB) → different scan
         # partitioning, different merge order, different reducer count
         spark.conf.set("spark.sql.shuffle.partitions", "17")
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(64 * 1024))
-        _clear_shared_layers()
+        clear_layers()
         b = _canon(fn(spark, sf_dir))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_prev)
         spark.conf.set("spark.sql.files.maxPartitionBytes", split_prev)
-        _clear_shared_layers()
+        clear_layers()
     assert a == b, f"{name} result depends on physical parallelism"
