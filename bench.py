@@ -443,7 +443,7 @@ def _sigterm_handler(signum, frame):  # pragma: no cover - timing-dependent
 TRAIN_IN_QUERY = ("ivfpq", "quality_weights")
 
 
-def _build_layers(spark, sf_dir: str = SF_DIR) -> dict[str, float]:
+def _build_layers(spark) -> dict[str, float]:
     """Materialize every registered shared layer (except TRAIN_IN_QUERY)
     once, each after its deps, returning per-layer build seconds (see the
     methodology comment in main())."""
@@ -458,7 +458,7 @@ def _build_layers(spark, sf_dir: str = SF_DIR) -> dict[str, float]:
         if lay.name in TRAIN_IN_QUERY:
             continue
         t0 = time.perf_counter()
-        val = lay(spark, sf_dir)
+        val = lay(spark, SF_DIR)
         if isinstance(val, DataFrame):
             val.count()
         layer_times[lay.name] = round(time.perf_counter() - t0, 3)

@@ -488,7 +488,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.5,
     max_df: int = MAX_DOC_FREQ,
-    shingles: DataFrame | None = None,
     gram_df: DataFrame | None = None,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard pairs via an inverted-index self-join.
@@ -501,13 +500,11 @@ def ngram_jaccard_pairs(
 
     ``gram_df``: optionally pass the df-annotated shingle rows
     ``(id, g, df)`` directly (e.g. a persisted layer) — skips the in-plan
-    df aggregate + join-back, the same share-the-derived-table pattern as
-    ``shingles``. The ``max_df`` cutoff applies on either path.
+    n-gram extraction, df aggregate and join-back. The ``max_df`` cutoff
+    applies on either path.
     """
     if gram_df is None:
-        ex = (
-            shingles if shingles is not None else ngram_rows(df, text_col, id_col)
-        )
+        ex = ngram_rows(df, text_col, id_col)
         gram_df = ex.join(ex.groupBy("g").agg(F.count(F.lit(1)).alias("df")), "g")
     kept = gram_df.filter(F.col("df") <= max_df).select(id_col, "g")
     sizes = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))

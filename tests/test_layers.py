@@ -7,6 +7,7 @@ import pytest
 
 from postgres_cdc_example_spark import layers
 from postgres_cdc_example_spark.layers import LAYERS, clear_layers, in_dep_order, layer
+from postgres_cdc_example_spark.queries import _load_all
 
 
 @pytest.fixture
@@ -104,6 +105,7 @@ def test_clear_layers_empties_every_layer(spark, scratch_layers):
 
 
 def test_layer_never_built_before_its_deps(spark, scratch_layers):
+    _load_all()  # the real layers' deps live in several modules: all registered
     built = []
 
     # registered reader-first: registration order is module import order,
