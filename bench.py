@@ -445,16 +445,17 @@ TRAIN_IN_QUERY = ("ivfpq", "quality_weights")
 
 def _build_layers(spark) -> dict[str, float]:
     """Materialize every registered shared layer (except TRAIN_IN_QUERY)
-    once, each after its deps, returning per-layer build seconds (see the
-    methodology comment in main())."""
+    once, in registration order (each layer registers after the layers it
+    reads), returning per-layer build seconds (see the methodology comment
+    in main())."""
     from pyspark.sql import DataFrame
 
-    from postgres_cdc_example_spark.layers import in_dep_order
+    from postgres_cdc_example_spark.layers import LAYERS
     from postgres_cdc_example_spark.queries import _load_all
 
     _load_all()  # each query module registers its layers on import
     layer_times: dict[str, float] = {}
-    for lay in in_dep_order():
+    for lay in LAYERS.values():
         if lay.name in TRAIN_IN_QUERY:
             continue
         t0 = time.perf_counter()

@@ -36,11 +36,8 @@ def _release(val: Any) -> None:
 class Layer:
     """A memoized ``fn(spark, sf_dir)`` builder; call it like the builder."""
 
-    def __init__(
-        self, name: str, build: Callable[[SparkSession, str], Any], deps: tuple[str, ...]
-    ) -> None:
+    def __init__(self, name: str, build: Callable[[SparkSession, str], Any]) -> None:
         self.name = name
-        self.deps = deps
         self._build = build
         self._memo: dict[tuple[str, str], Any] = {}
         functools.update_wrapper(self, build)
@@ -63,32 +60,17 @@ class Layer:
 LAYERS: dict[str, Layer] = {}
 
 
-def layer(name: str, deps: tuple[str, ...] = ()) -> Callable[[Callable], Layer]:
-    """Register ``fn(spark, sf_dir)`` as the shared layer ``name``.
-    ``deps`` names the layers the builder reads."""
+def layer(name: str) -> Callable[[Callable], Layer]:
+    """Register ``fn(spark, sf_dir)`` as the shared layer ``name``. A
+    builder that reads another layer must register after it (same module,
+    later in the file, or a module that imports it), so walking ``LAYERS``
+    in order never builds a layer inside another's build."""
 
     def wrap(build: Callable[[SparkSession, str], Any]) -> Layer:
-        LAYERS[name] = Layer(name, build, deps)
+        LAYERS[name] = Layer(name, build)
         return LAYERS[name]
 
     return wrap
-
-
-def in_dep_order() -> list[Layer]:
-    """Registered layers, each after its ``deps``, so a prebuild that
-    times layers one by one never charges a dependency's build to its
-    reader."""
-    order: list[str] = []
-
-    def visit(name: str) -> None:
-        if name not in order:
-            for dep in LAYERS[name].deps:
-                visit(dep)
-            order.append(name)
-
-    for name in LAYERS:
-        visit(name)
-    return [LAYERS[n] for n in order]
 
 
 def clear_layers() -> None:

@@ -57,31 +57,25 @@ def long_array_sql(vals) -> Column:
     return F.expr("array(" + ",".join(f"{int(x)}L" for x in vals) + ")")
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def dot(a: Column, b: Column) -> Column:
     """In-order elementwise-product sum — deterministic double summation.
 
-    The higher-order ``zip_with``+``aggregate`` fold is the DEFAULT and the
-    measured winner: although the lambdas run on the interpreted expression
-    path, the fold walks the two ArrayData buffers in one tight loop, while
-    the "codegen-friendly" unrolled ``0.0 + a[0]*b[0] + …`` projection
-    (``dim`` set) pays a bounds-checked, null-checked ``GetArrayItem`` per
-    element — measured 3–6× SLOWER at every scale tried (sf0.1 brute-force
-    scorer 0.5 s vs 1.3 s; 10× corpus 0.54 s vs 1.71 s; 50× corpus / 1M
-    scored pairs 0.8 s vs 4.7 s — `scripts/bench_dot.py`, idle machine,
-    value-identical outputs asserted; the execution gap GROWS with rows, so
-    this is per-row cost, not plan overhead). The ~10× interpreted-vs-
-    codegen penalty `operators/dedup.py:21-28` measured for minhash does
-    not transfer: that shape interpreted a lambda per md5 call, this one
-    amortizes one lambda dispatch over a primitive-array walk. The unrolled
-    form is retained (``dim`` set) only as the measured alternative."""
-    if dim is None:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-    out: Column = F.lit(0.0)
-    for i in range(dim):
-        out = out + a[i] * b[i]
-    return out
+    The higher-order ``zip_with``+``aggregate`` fold is the measured winner:
+    although the lambdas run on the interpreted expression path, the fold
+    walks the two ArrayData buffers in one tight loop, while the
+    "codegen-friendly" unrolled ``0.0 + a[0]*b[0] + …`` projection pays a
+    bounds-checked, null-checked ``GetArrayItem`` per element — measured
+    3–6× SLOWER at every scale tried (sf0.1 brute-force scorer 0.5 s vs
+    1.3 s; 10× corpus 0.54 s vs 1.71 s; 50× corpus / 1M scored pairs 0.8 s
+    vs 4.7 s — idle machine, value-identical outputs asserted; the
+    execution gap GROWS with rows, so this is per-row cost, not plan
+    overhead). The ~10× interpreted-vs-codegen penalty
+    `operators/dedup.py:21-28` measured for minhash does not transfer: that
+    shape interpreted a lambda per md5 call, this one amortizes one lambda
+    dispatch over a primitive-array walk."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
 
 
 def norm(v: Column) -> Column:
@@ -718,17 +712,6 @@ def micro_vec(vec: Column) -> Column:
     )
 
 
-def _sub_d2(sv: Column, cv: Column) -> Column:
-    """Exact squared L2 between two micro subvector columns: zip_with fold
-    (the measured-fast interpreted path), int64 throughout (|diff| <= 2e6
-    -> diff^2 <= 4e12, x PQ_D -> ~3e13)."""
-    return F.aggregate(
-        F.zip_with(sv, cv, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _subvec(vm: Column, s: int) -> Column:
     return F.slice(vm, s * PQ_D + 1, PQ_D)
 
@@ -796,24 +779,6 @@ def _tdiv_int(a: int, b: int) -> int:
     return q if (a >= 0) == (b >= 0) else -q
 
 
-def train_pq(emb: DataFrame) -> list[list[list[int]]]:
-    """PQ codebook training over raw subvectors (see ``train_pq_base``)."""
-    return train_pq_base(_with_subvecs(emb))
-
-
-def train_pq_base(base: DataFrame) -> list[list[list[int]]]:
-    """PQ codebook training, the distributed/driver split: per iteration,
-    ONE corpus-wide aggregate computes per-(subspace, code) dimension sums
-    and counts (DECIMAL(38,0) — exact at any corpus size) and the driver
-    closes the integer means (sum toward-zero-div count, so centroids STAY
-    on the micro grid); assignment re-broadcasts the <= M*K*D-int codebook
-    as literals. Init = the PQ_K lowest-vec_id subvectors (deterministic);
-    a code that loses all members keeps its previous codeword. ``base``
-    carries (vec_id, sv0..sv{M-1}) — raw subvectors for plain PQ,
-    coarse-residual subvectors for IVF-PQ."""
-    return train_pq_multi({"_": base})["_"]
-
-
 def train_pq_multi(
     bases: dict[str, DataFrame], checkpointed: bool = False
 ) -> dict[str, list[list[list[int]]]]:
@@ -826,8 +791,18 @@ def train_pq_multi(
     per-(subspace, code) sums group by a chain tag, so no row of one chain
     ever influences another's centroids — the fusion only shares the job
     round-trips and (via ``checkpointed=True``, when the caller already
-    localCheckpointed a common parent) the input scan. Chains whose base
-    is empty yield ``[]`` exactly like ``train_pq_base`` did."""
+    localCheckpointed a common parent) the input scan. A chain whose base
+    is empty yields ``[]``.
+
+    Each chain is the distributed/driver split of PQ codebook training:
+    per iteration, ONE corpus-wide aggregate computes per-(subspace, code)
+    dimension sums and counts (DECIMAL(38,0) — exact at any corpus size)
+    and the driver closes the integer means (sum toward-zero-div count, so
+    centroids STAY on the micro grid); assignment re-broadcasts the
+    <= M*K*D-int codebook as literals. Init = the PQ_K lowest-vec_id
+    subvectors (deterministic); a code that loses all members keeps its
+    previous codeword. Each base carries (vec_id, sv0..sv{M-1}) — raw
+    subvectors for plain PQ, coarse-residual subvectors for IVF-PQ."""
     prepared = {
         tag: (b if checkpointed else b.localCheckpoint(eager=False))
         for tag, b in bases.items()

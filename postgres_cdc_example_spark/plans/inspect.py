@@ -27,29 +27,3 @@ def has_exchange(df: DataFrame) -> bool:
     markers are stripped first — reuse isn't an extra shuffle.)"""
     return "Exchange" in explain_str(df).replace("ReusedExchange", "")
 
-
-def uses_python_eval(df: DataFrame) -> bool:
-    """True when rows leave the JVM for Python evaluation (the 10-100× slow
-    path) — row-at-a-time UDFs, Arrow UDF batches, or pandas map stages."""
-    plan = explain_str(df)
-    return any(
-        marker in plan for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")
-    )
-
-
-def scan_read_schema(df: DataFrame) -> list[str]:
-    """The ReadSchema lines of every file scan — what actually gets read;
-    a projection narrower than the table proves column pruning."""
-    return [
-        line.strip()
-        for line in explain_str(df).splitlines()
-        if "ReadSchema" in line
-    ]
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    return [
-        line.strip()
-        for line in explain_str(df).splitlines()
-        if "PushedFilters" in line or "PartitionFilters" in line
-    ]

@@ -470,7 +470,7 @@ def _doc_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reads. Reverted; the checkpoint inside minhash_lsh_pairs stays the shape.
 
 
-@layer("doc_gram_df", deps=("doc_ngrams",))
+@layer("doc_gram_df")
 def _doc_gram_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted document-frequency-annotated shingle rows
     ``(doc_id, g, df)`` — the ``_doc_ngrams`` rows joined once to the
@@ -490,7 +490,7 @@ def _doc_gram_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sh.join(df_, "g").persist()
 
 
-@layer("doc_bands", deps=("doc_ngrams",))
+@layer("doc_bands")
 def _doc_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted LSH band table (4 small rows per doc), shared across every
     band consumer in a session — pair discovery, clusters, the leakage
@@ -4590,9 +4590,9 @@ def _trained_ivfpq(spark: SparkSession, sf_dir: str) -> tuple:
     cents = similarity.coarse_centroids(emb)
     if not cents:  # empty corpus: nothing to train on
         return ([], [])
-    cb = similarity.train_pq_base(
-        similarity.ivfpq_residual_subvecs(emb, cents)
-    )
+    cb = similarity.train_pq_multi(
+        {"residual": similarity.ivfpq_residual_subvecs(emb, cents)}
+    )["residual"]
     return (cents, cb)
 
 
@@ -5677,7 +5677,7 @@ def dedup_graph_shape_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, "documents", sf_dir),
             shingles=_doc_ngrams(spark, sf_dir),
             bands=_doc_bands(spark, sf_dir),
-            )
+        )
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
@@ -6411,7 +6411,7 @@ def dedup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, "documents", sf_dir),
             shingles=sh,
             bands=_doc_bands(spark, sf_dir),
-            )
+        )
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
@@ -6654,7 +6654,7 @@ def split_kfold_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 load_table(spark, "documents", sf_dir),
                 shingles=_doc_ngrams(spark, sf_dir),
                 bands=_doc_bands(spark, sf_dir),
-                    )
+            )
         )
         .select("doc_id", "component")
     )
@@ -7329,76 +7329,6 @@ SIMHASH_CAL_FULL_H = 3  # verify EVERY pair at hamming <= this ...
 SIMHASH_CAL_SAMPLE_DIV = 16  # ... and a deterministic 1/16 sample above
 
 
-@layer("simhash_cand", deps=("doc_occurrences",))
-def _simhash_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized SHARED LAYER: the deduped simhash byte-band collision pair
-    table ``(doc_a, doc_b, hamming)`` (pairs agreeing on >= 2 of the 4
-    bands). This is the densest intermediate of the calibration family
-    (2.6M band collisions -> 282k candidate pairs at sf0.1) and exactly
-    what a production simhash-dedup ingest persists between batches, so
-    it is a shared layer like the shingle/band/occurrence ones, prebuilt
-    untimed by the bench with its cost as a line item.
-
-    History (r11 ADVICE low + r12 --full-gap adjudication): this used to
-    be a bare ``.persist()`` inside the lazily-returned query frame — the
-    blocks could never be unpersisted AND, because Spark's CacheManager
-    matches canonicalized plans, the bench's second best-of-2 sample
-    silently read the first sample's leaked cache: the 2.71 s headline
-    number was a WARM number while the single-pass --full paid the real
-    ~5 s cold cost. The layer makes the warm semantics explicit and
-    governed instead of accidental."""
-    from postgres_cdc_example_spark.queries.llmdata import _doc_occurrences
-
-    sh = dedup.simhash_buckets(
-        load_table(spark, "documents", sf_dir),
-        tokens=_doc_occurrences(spark, sf_dir),
-    ).select("doc_id", "simhash")
-    bd = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).cast("long").alias("band_idx"),
-                        F.expr(
-                            f"shiftright(simhash, {8 * bi}) & 255"
-                        ).alias("band_val"),
-                    )
-                    for bi in range(SIMHASH_CAL_BANDS)
-                ]
-            )
-        ).alias("bv"),
-    ).select("doc_id", "simhash", "bv.band_idx", "bv.band_val")
-    return (
-        bd.alias("a")
-        .join(
-            bd.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(
-            F.max("a.simhash").alias("sim_a"),
-            F.max("b.simhash").alias("sim_b"),
-            F.count(F.lit(1)).alias("nb"),
-        )
-        .filter(F.col("nb") >= 2)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr("CAST(bit_count(sim_a ^ sim_b) AS BIGINT)").alias(
-                "hamming"
-            ),
-        )
-        .persist()
-    )
-
-
 def _simhash_cal_oracle() -> str:
     sums = []
     for b in range(dedup.SIMHASH_BITS):
@@ -7506,6 +7436,8 @@ def dedup_simhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-keyed self-join + pair rollup (collision volume ∝ Σ bucket²,
     near-linear on diverse corpora — dense here by construction), keyed
     exact-Jaccard on the bounded verified stratum, ≤ 33-row output."""
+    from postgres_cdc_example_spark.queries.llmdata import _simhash_cand
+
     cand = _simhash_cand(spark, sf_dir)
     picked = cand.filter(
         F.expr(

@@ -61,10 +61,7 @@ def get_spark(
         # operators that expand rows (shingling, explodes) repartition
         # explicitly before the expansion so parallelism never depends on
         # input split count.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(128 * 1024 * 1024)),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # events.ts is parquet TIMESTAMP(NANOS) which Spark can't decode
         # natively — read as long ns, normalized to timestamp_ntz in
         # sources.tables.load_table (micros, matching DuckDB's truncation).

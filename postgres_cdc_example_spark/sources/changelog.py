@@ -22,7 +22,7 @@ SURVEY.md §7.4 hard part 2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -47,12 +47,17 @@ def decode_change_lines(lines: DataFrame, value_col: str = "value") -> DataFrame
     )
 
 
+def is_valid_change() -> Column:
+    """True for a decoded line that carries a change event."""
+    # from_json yields a null struct only when the whole line is unparseable;
+    # a parseable line always has a non-null action.
+    return F.col("change").isNotNull() & F.col("change.action").isNotNull()
+
+
 def split_corrupt(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(valid, dead_letter) — the reference logs and skips; we keep a
     dead-letter frame so nothing is silently dropped (T7)."""
-    # from_json yields a null struct only when the whole line is unparseable;
-    # a parseable line always has a non-null action.
-    ok = F.col("change").isNotNull() & F.col("change.action").isNotNull()
+    ok = is_valid_change()
     return decoded.filter(ok), decoded.filter(~ok)
 
 

@@ -54,8 +54,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     return {n: load_table(spark, n, sf_dir) for n in names}
 
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every fixture table as a temp view for spark.sql queries."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

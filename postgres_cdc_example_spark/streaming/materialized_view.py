@@ -82,6 +82,9 @@ class StreamingAggView(CdcPipeline):
             )
             agg_v = version - 1
         if agg_v < version:
+            # led by agg_store.read(), so this write is not in the batch's
+            # session and leaves the dead-letter Observation to the state
+            # commit below
             new_agg = maintain_agg(
                 self.agg_store.read(),
                 state,

@@ -12,7 +12,8 @@ Spark shape::
     backfill batch (snapshot_copy)            # T3 snapshot+stream handoff
     readStream (JSON lines)                   # S5 — file source in tests,
                                               #      Kafka/Debezium in prod
-      → decode_change_lines / split_corrupt   # S6 + T7 dead-letter
+      → decode_change_lines                   # S6 + T7 dead letters,
+                                              #      counted by an Observation
       → flatten_person_changes                # P2/P7
       → filter(predicate)                     # P4 publication row filter
       → foreachBatch: apply_changes + commit  # P3/J1-J4/T5, versioned state
@@ -27,7 +28,7 @@ consumption, T2 — deliberate divergence documented in SURVEY.md §7.4).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -36,7 +37,7 @@ from postgres_cdc_example_spark.schemas import PERSON_SCHEMA
 from postgres_cdc_example_spark.sources.changelog import (
     decode_change_lines,
     flatten_person_changes,
-    split_corrupt,
+    is_valid_change,
 )
 from postgres_cdc_example_spark.sources.snapshot import snapshot_copy
 from postgres_cdc_example_spark.streaming.state import VersionedStateStore
@@ -127,9 +128,19 @@ class CdcPipeline:
         latest = self.store.latest_version()
         if latest is not None and latest >= version:
             return
-        valid, dead = split_corrupt(decode_change_lines(batch_df))
-        self.dead_letter_count += dead.count()  # reference logs & skips (T7)
-        changes = flatten_person_changes(valid)
+        # Dead letters (the reference logs & skips them, T7) are counted by
+        # an Observation on the decoded batch, filled in by the state commit,
+        # so the commit is the batch's only read and numInputRows equals the
+        # lines read. An Observation fires only for an action run in the
+        # batch frame's session: apply_changes puts the changes side on the
+        # left of its join, so the commit's frame is in that session (a
+        # write led by a frame from the outer session would leave
+        # ``obs.get`` blocked forever).
+        obs = Observation()
+        decoded = decode_change_lines(batch_df).observe(
+            obs, F.count_if(~is_valid_change()).alias("dead")
+        )
+        changes = flatten_person_changes(decoded.filter(is_valid_change()))
         if self.predicate is not None:
             # Publication row filter on the event's new image, with
             # Postgres's filter-crossing UPDATE transform (UPDATE docs,
@@ -148,6 +159,7 @@ class CdcPipeline:
                 .otherwise(a),
             ).filter((F.col("action") == "D") | passes)
         self._commit(self.store.read(), changes, version)
+        self.dead_letter_count += obs.get["dead"]
 
     def _commit(self, state: DataFrame, changes: DataFrame, version: int) -> None:
         """Apply one batch's filtered changes to ``state`` and commit the

@@ -1,12 +1,13 @@
 """Shared-layer registry: memo hits, per-sf_dir keys, the FIFO bound with
-DataFrame-only unpersist, clear_layers(), and deps-first prebuild order."""
+DataFrame-only unpersist, clear_layers(), and a registration order in which
+no real layer is built inside another's build."""
 
 from __future__ import annotations
 
 import pytest
 
 from postgres_cdc_example_spark import layers
-from postgres_cdc_example_spark.layers import LAYERS, clear_layers, in_dep_order, layer
+from postgres_cdc_example_spark.layers import LAYERS, clear_layers, layer
 from postgres_cdc_example_spark.queries import _load_all
 
 
@@ -104,29 +105,29 @@ def test_clear_layers_empties_every_layer(spark, scratch_layers):
     assert calls == ["df", "list", "df", "list"]
 
 
-def test_layer_never_built_before_its_deps(spark, scratch_layers):
-    _load_all()  # the real layers' deps live in several modules: all registered
-    built = []
+def test_registry_order_never_nests_builds(spark, sf_dir, monkeypatch):
+    """Walking LAYERS in order (as the bench prebuild does) builds each
+    layer's inputs before it, so no build runs inside another and each
+    layer's build time is its own."""
+    _load_all()  # the real layers live in several modules: all registered
+    clear_layers()
+    stack: list[str] = []
+    nested: list[tuple[str, str]] = []
 
-    # registered reader-first: registration order is module import order,
-    # which does not follow the deps (simhash_cand in extensions reads
-    # doc_occurrences in llmdata)
-    @layer("t_reader", deps=("t_mid",))
-    def reader(spark, sf_dir):
-        built.append("t_reader")
-        return []
+    def recording(name, build):
+        def run(spark, sf_dir):
+            if stack:
+                nested.append((stack[-1], name))
+            stack.append(name)
+            try:
+                return build(spark, sf_dir)
+            finally:
+                stack.pop()
 
-    @layer("t_mid", deps=("t_base",))
-    def mid(spark, sf_dir):
-        built.append("t_mid")
-        return []
+        return run
 
-    @layer("t_base")
-    def base(spark, sf_dir):
-        built.append("t_base")
-        return []
-
-    for lay in in_dep_order():
-        if lay.name.startswith("t_"):
-            lay(spark, "a")
-    assert built == ["t_base", "t_mid", "t_reader"]
+    for lay in LAYERS.values():
+        monkeypatch.setattr(lay, "_build", recording(lay.name, lay._build))
+    for lay in LAYERS.values():
+        lay(spark, sf_dir)
+    assert nested == []
