@@ -115,9 +115,6 @@ def apply_changes(
         *( [F.col(created_col).alias("__s_created")] if created_col else [] ),
     )
 
-    # The changes side leads: the result then belongs to the changes' session,
-    # which CdcPipeline's dead-letter Observation needs (a foreachBatch
-    # frame's session is not the one its state store reads with).
     joined = summary.join(st, summary[key] == st["__sk"], "full_outer")
 
     in_state = F.coalesce(F.col("__in_state"), F.lit(False))

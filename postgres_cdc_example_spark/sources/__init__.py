@@ -1,3 +1,3 @@
-from postgres_cdc_example_spark.sources.tables import load_table, load_tables
+from postgres_cdc_example_spark.sources.tables import load_table
 
-__all__ = ["load_table", "load_tables"]
+__all__ = ["load_table"]

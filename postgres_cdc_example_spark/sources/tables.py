@@ -12,8 +12,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from postgres_cdc_example_spark.schemas import FIXTURE_TABLES
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -47,10 +45,4 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
             F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
         )
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str | None = None, names: tuple[str, ...] = FIXTURE_TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, n, sf_dir) for n in names}
 

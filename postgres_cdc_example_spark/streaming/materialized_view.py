@@ -10,16 +10,19 @@ O(|changes| + touched keys), never O(state), so a 100 TB state table costs
 the same per tick as a 100 MB one.
 
 Crash consistency (exactly-once, both stores versioned at ``batch_id + 1``):
-the aggregate commits BEFORE the state store, so at any crash point
+a batch writes the state's change directory, commits the aggregate, then
+flips the state's ``_LATEST``, so at any crash point
 
-- agg @ v+1, state @ v   → replay: agg skips (version check), state
-  re-applies (idempotent fold) — both land at v+1;
+- agg @ v+1, state @ v   → replay: the change directory is rewritten, agg
+  skips (version check), state publishes — both land at v+1;
 - agg @ v,   state @ v   → replay recomputes the delta from the untouched
   pre-state — correct by construction.
 
 State can therefore never be AHEAD of the aggregate, which is the one
 ordering that would poison the delta (a pre-state slice that already
 contains the batch yields a zero delta, silently freezing the view).
+The aggregate reads the batch back from the change directory just written,
+so the stream reads each micro-batch once.
 """
 
 from __future__ import annotations
@@ -56,7 +59,8 @@ class StreamingAggView(CdcPipeline):
     """person change-lines → state table + continuously-maintained
     ``(name, n_rows, sum_cents=Σscore)`` aggregate. The stream, decode,
     dead-letter count and replay guard are :class:`CdcPipeline`'s; this
-    class only adds the aggregate commit ahead of the state commit."""
+    class only adds the aggregate commit between writing the state's change
+    rows and publishing them."""
 
     def __init__(
         self,
@@ -70,32 +74,31 @@ class StreamingAggView(CdcPipeline):
         self.group_col = group_col
         self.agg_store = VersionedStateStore(spark, store_root + "/agg", AGG_SCHEMA)
 
-    def _commit(self, state: DataFrame, changes: DataFrame, version: int) -> None:
+    def _commit(self, changes: DataFrame, version: int) -> None:
         # The state replay guard already ran, so only the aggregate can be
-        # ahead here (crash between the two commits): it then skips.
+        # ahead here (crash between the aggregate commit and the publish):
+        # it then skips.
+        self.store.write_changes(changes, version)
         agg_v = self.agg_store.latest_version()
-        if agg_v is None:
-            # seed from the current state (empty on a fresh pipeline; the
-            # snapshot when backfill() ran before the stream)
-            self.agg_store.commit(
-                agg_snapshot(state, self.group_col, _score()), version=version - 1
-            )
-            agg_v = version - 1
-        if agg_v < version:
-            # led by agg_store.read(), so this write is not in the batch's
-            # session and leaves the dead-letter Observation to the state
-            # commit below
+        if agg_v is None or agg_v < version:
+            state = self.store.read()  # the pre-state, at version - 1
+            if agg_v is None:
+                # seed from the current state (empty on a fresh pipeline; the
+                # snapshot when backfill() ran before the stream)
+                self.agg_store.commit(
+                    agg_snapshot(state, self.group_col, _score()), version=version - 1
+                )
             new_agg = maintain_agg(
                 self.agg_store.read(),
                 state,
-                changes,
+                self.store.read_changes(version),
                 group_col=self.group_col,
                 cents=_score(),
                 key="id",
                 **_APPLY_KW,
             )
             self.agg_store.commit(new_agg, version=version)
-        super()._commit(state, changes, version)
+        self.store.publish(version)
 
     def view(self) -> DataFrame:
         return self.agg_store.read()

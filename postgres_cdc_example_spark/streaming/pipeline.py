@@ -15,8 +15,10 @@ Spark shape::
       → decode_change_lines                   # S6 + T7 dead letters,
                                               #      counted by an Observation
       → flatten_person_changes                # P2/P7
-      → filter(predicate)                     # P4 publication row filter
-      → foreachBatch: apply_changes + commit  # P3/J1-J4/T5, versioned state
+      → filter(predicate)                     # P4 publication row filter,
+                                              #      I/U/D rows observed
+      → foreachBatch: write the change rows   # P3/J1-J4/T5, merge-on-read
+                                              #      state, O(batch) commit
     checkpointLocation                        # S7 — the "replication slot":
                                               # offset tracking, drop dir =
                                               # drop slot
@@ -32,15 +34,13 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from postgres_cdc_example_spark.operators.cdc_apply import apply_changes
-from postgres_cdc_example_spark.schemas import PERSON_SCHEMA
 from postgres_cdc_example_spark.sources.changelog import (
     decode_change_lines,
     flatten_person_changes,
     is_valid_change,
 )
 from postgres_cdc_example_spark.sources.snapshot import snapshot_copy
-from postgres_cdc_example_spark.streaming.state import VersionedStateStore
+from postgres_cdc_example_spark.streaming.state import MergeOnReadStateStore
 
 
 def start_change_stream(
@@ -98,49 +98,49 @@ class CdcPipeline:
         self.checkpoint_dir = checkpoint_dir
         self.predicate = predicate
         self.trigger_interval = trigger_interval
-        self.store = VersionedStateStore(spark, state_root, PERSON_SCHEMA)
-        self.dead_letter_count = 0  # observability counter (T7)
+        self.store = MergeOnReadStateStore(spark, state_root)
+        # Observability counters (T7), summed over committed batches: dead
+        # letters, and change rows written per action after the row filter.
+        self.dead_letter_count = 0
+        self.rows_written = {"I": 0, "U": 0, "D": 0}
+        self.last_batch: dict[str, int] = {}  # the newest batch's counts
 
     # --- T3: snapshot + stream handoff ------------------------------------
     def backfill(self, source_snapshot: DataFrame) -> None:
         """Initial copy (Phase B, ``replicator/main.go:95-140``): filtered
-        insert-if-absent into state version 0.  Like the reference (slot
+        insert-if-absent into the base at version 0.  Like the reference (slot
         created *before* copy), the stream's checkpoint starts at offset 0,
         so events concurrent with the copy are replayed and deduped by the
         idempotent apply."""
         snap = source_snapshot
         if self.predicate is not None:
             snap = snap.filter(self.predicate)
-        merged = snapshot_copy(self.store.read(), snap)
-        self.store.commit(merged, version=0)
+        self.store.write_base(snapshot_copy(self.store.read(), snap), version=0)
+        self.store.publish(0)
 
     # --- the per-micro-batch apply (P3/J1-J4/T5) ---------------------------
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # version = batch_id + 1 (0 is the backfill). A crash between commit
-        # and checkpoint ack replays this batch: without the guard the replay
-        # would read v{batch_id+1} and overwrite the same directory — Spark
-        # refuses ("Cannot overwrite a path that is also being read from")
-        # and the pipeline wedges. An already-committed version makes the
-        # replay a no-op, which is exactly the exactly-once contract (T2).
-        # The guard runs first, so a replay runs no job and counts no dead
-        # letters twice.
+        # and checkpoint ack replays this batch; an already-committed version
+        # makes the replay a no-op, which is exactly the exactly-once
+        # contract (T2). The guard runs first, so a replay runs no job and
+        # counts nothing twice.
         version = batch_id + 1
         latest = self.store.latest_version()
         if latest is not None and latest >= version:
             return
-        # Dead letters (the reference logs & skips them, T7) are counted by
-        # an Observation on the decoded batch, filled in by the state commit,
-        # so the commit is the batch's only read and numInputRows equals the
+        # Dead letters (the reference logs & skips them, T7) and the I/U/D
+        # rows written are counted by Observations filled in by the write of
+        # the change rows, the batch's only read, so numInputRows equals the
         # lines read. An Observation fires only for an action run in the
-        # batch frame's session: apply_changes puts the changes side on the
-        # left of its join, so the commit's frame is in that session (a
-        # write led by a frame from the outer session would leave
-        # ``obs.get`` blocked forever).
-        obs = Observation()
+        # batch frame's session, which that write is (a write led by a frame
+        # from the outer session would leave ``obs.get`` blocked forever).
+        dead_obs, rows_obs = Observation(), Observation()
         decoded = decode_change_lines(batch_df).observe(
-            obs, F.count_if(~is_valid_change()).alias("dead")
+            dead_obs, F.count_if(~is_valid_change()).alias("dead")
         )
         changes = flatten_person_changes(decoded.filter(is_valid_change()))
+        a = F.col("action")
         if self.predicate is not None:
             # Publication row filter on the event's new image, with
             # Postgres's filter-crossing UPDATE transform (UPDATE docs,
@@ -150,23 +150,25 @@ class CdcPipeline:
             # is applied as an upsert I (the old image may have failed the
             # filter, so the key can be absent — plain U would no-op).
             # Deletes carry no image and always replicate.
-            a = F.col("action")
             passes = F.coalesce(self.predicate, F.lit(False))
             changes = changes.withColumn(
                 "action",
                 F.when((a == "U") & ~passes, F.lit("D"))
                 .when(a == "U", F.lit("I"))
                 .otherwise(a),
-            ).filter((F.col("action") == "D") | passes)
-        self._commit(self.store.read(), changes, version)
-        self.dead_letter_count += obs.get["dead"]
+            ).filter((a == "D") | passes)
+        changes = changes.observe(
+            rows_obs, *[F.count_if(a == k).alias(k) for k in self.rows_written]
+        )
+        self._commit(changes, version)
+        self.last_batch = {**rows_obs.get, "dead": dead_obs.get["dead"]}
+        for k in self.rows_written:
+            self.rows_written[k] += self.last_batch[k]
+        self.dead_letter_count += self.last_batch["dead"]
 
-    def _commit(self, state: DataFrame, changes: DataFrame, version: int) -> None:
-        """Apply one batch's filtered changes to ``state`` and commit the
-        result as ``version``. Subclasses that keep derived stores commit
-        them first, then call this."""
-        new_state = apply_changes(state, changes)
-        self.store.commit(new_state.select(*state.columns), version=version)
+    def _commit(self, changes: DataFrame, version: int) -> None:
+        """Commit one batch's filtered change rows as ``version``."""
+        self.store.commit(changes, version=version)
 
     def start(self, available_now: bool = False) -> StreamingQuery:
         return start_change_stream(

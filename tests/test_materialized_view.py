@@ -116,3 +116,39 @@ def test_replayed_view_batch_is_noop(spark, tmp_path):
     assert sorted(map(tuple, view.view().collect())) == agg1
     assert sorted(map(tuple, view.state().collect())) == st1
     _assert_view_matches_recompute(view)
+
+
+def test_view_reads_each_batch_once(spark, tmp_path):
+    """The aggregate reads the batch back from the state's change directory,
+    so summed numInputRows equals the lines written (3× at the parent)."""
+    import time
+
+    from postgres_cdc_example_spark.streaming.monitor import ProgressListener
+
+    listener = ProgressListener()
+    spark.streams.addListener(listener)
+    try:
+        src = str(tmp_path / "changes")
+        view = StreamingAggView(
+            spark,
+            source_dir=src,
+            store_root=str(tmp_path / "mv"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+        write_lines(src, "b0.jsonl", [
+            person_change_json(1, "I", row=row(1, "alice", 10)),
+            person_change_json(2, "I", row=row(2, "bob", 20)),
+            person_change_json(3, "U", row=row(1, "bob", 11), identity={"id": 1}),
+            "NOT JSON",
+        ])
+        _drain(view)
+        for _ in range(75):  # listener callbacks are async
+            if sum(p["numInputRows"] for p in listener.progress) >= 4:
+                break
+            time.sleep(0.2)
+        time.sleep(0.5)  # a late callback would push the sum past 4
+        assert sum(p["numInputRows"] for p in listener.progress) == 4
+        assert view.dead_letter_count == 1
+        _assert_view_matches_recompute(view)
+    finally:
+        spark.streams.removeListener(listener)

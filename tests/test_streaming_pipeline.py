@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from postgres_cdc_example_spark.operators.cdc_apply import apply_changes
@@ -387,3 +388,89 @@ def test_bucketed_pipeline_matches_full_rewrite(spark, tmp_path):
     full = apply_changes(snapshot, flatten_person_changes(valid))
     assert bucketed == sorted(map(tuple, full.select(*snapshot.columns).collect()))
     assert {r[0] for r in bucketed} == {1, 3, 4, 5, 30}
+
+
+def test_batch_apply_counts(spark, tmp_path):
+    """Per-batch I/U/D rows written and dead letters come from the commit's
+    Observations (no extra job), per batch and summed."""
+    pipe = CdcPipeline(
+        spark,
+        source_dir=str(tmp_path / "changes"),
+        state_root=str(tmp_path / "state"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    pipe.backfill(person_batch(spark, 3, seed=7))
+    lines = [
+        person_change_json(1, "I", row=row(40, "a", 4)),
+        person_change_json(2, "I", row=row(41, "b", 5)),
+        person_change_json(3, "U", row=row(1, "c", 6), identity={"id": 1}),
+        person_change_json(4, "D", identity={"id": 2}),
+        person_change_json(5, "I", table="audit", row=row(99, "x", 1)),  # other table
+        "NOT JSON",
+        "{also not json",
+    ]
+    pipe._apply_batch(spark.createDataFrame([(x,) for x in lines], "value string"), 0)
+    assert pipe.last_batch == {"I": 2, "U": 1, "D": 1, "dead": 2}
+    second = [person_change_json(6, "D", identity={"id": 40}), "NOT JSON"]
+    pipe._apply_batch(spark.createDataFrame([(x,) for x in second], "value string"), 1)
+    assert pipe.last_batch == {"I": 0, "U": 0, "D": 1, "dead": 1}
+    assert pipe.rows_written == {"I": 2, "U": 1, "D": 2}
+    assert pipe.dead_letter_count == 3
+    assert {r["id"] for r in pipe.state().collect()} == {1, 3, 41}
+
+
+def test_crash_before_latest_flip_replays_to_same_state(spark, tmp_path, monkeypatch):
+    """A crash while writing the batch's change rows, or after writing them
+    but before ``_LATEST`` flips, leaves the state at the old version; the
+    replayed batch then lands on the same state as an uncrashed run.
+    Flipping ``_LATEST`` before the change rows are written would let the
+    replay guard skip a batch whose rows were never written."""
+    from pyspark.sql import DataFrameWriter
+
+    snapshot = person_batch(spark, 3, seed=7)
+    lines = [
+        person_change_json(1, "I", row=row(40, "n", 4)),
+        person_change_json(2, "U", row=row(1, "u", 6), identity={"id": 1}),
+        person_change_json(3, "D", identity={"id": 2}),
+    ]
+    batch = spark.createDataFrame([(x,) for x in lines], "value string")
+    valid, _ = split_corrupt(decode_change_lines(batch))
+    expected = sorted(map(tuple, apply_changes(snapshot, flatten_person_changes(valid))
+                          .select(*snapshot.columns).collect()))
+    real_write = DataFrameWriter.parquet
+
+    def torn_write(self, path, *args, **kwargs):
+        if os.path.basename(path).startswith("c"):
+            os.makedirs(path, exist_ok=True)
+            with open(os.path.join(path, "part-00000.parquet"), "w") as f:
+                f.write("torn")
+            raise OSError("crash")
+        return real_write(self, path, *args, **kwargs)
+
+    for crash in ("during the change write", "before the flip"):
+        pipe = CdcPipeline(
+            spark,
+            source_dir=str(tmp_path / "changes"),
+            state_root=str(tmp_path / crash.replace(" ", "_")),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+        pipe.backfill(snapshot)
+        with monkeypatch.context() as m:
+            if crash == "during the change write":
+                m.setattr(DataFrameWriter, "parquet", torn_write)
+            else:
+                store_flip = pipe.store._flip
+
+                def flip(path, value, store_flip=store_flip):
+                    if path.endswith("_LATEST") and value == "1":
+                        raise OSError("crash")
+                    store_flip(path, value)
+
+                m.setattr(pipe.store, "_flip", flip)
+            with pytest.raises(OSError, match="crash"):
+                pipe._apply_batch(batch, batch_id=0)
+        assert pipe.store.latest_version() == 0, crash
+        assert sorted(map(tuple, pipe.state().collect())) == sorted(map(tuple, snapshot.collect()))
+        pipe._apply_batch(batch, batch_id=0)  # the replay
+        assert pipe.store.latest_version() == 1, crash
+        assert sorted(map(tuple, pipe.state().collect())) == expected, crash
