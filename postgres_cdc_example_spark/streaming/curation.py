@@ -11,12 +11,12 @@ stage must run AT INGEST with cross-batch state, not as a nightly
 rescan. Stages, in order, each delegating to the registered member:
 
 1. **good-rows-only ingest** — :func:`changelog.decode_change_lines` +
-   :func:`changelog.split_corrupt`: malformed lines route to the
+   :func:`changelog.is_valid_change`: malformed lines route to the
    dead-letter count instead of crashing or null-filling (T7).
-2. **schema-drift gate** — :func:`changelog.drift_split`: events whose
-   wire column set diverges from the declared document schema route to
-   the drift dead-letter (count + signature kept observable) instead of
-   flowing on with silently dropped fields.
+2. **schema-drift gate** — :func:`changelog.with_drift_signature` (the
+   per-row half of ``drift_split``): events whose wire column set
+   diverges from the declared document schema route to the drift
+   dead-letter count instead of flowing on with silently dropped fields.
 3. **content dedup-at-ingest** — the batch ``dedup_exact`` keeper rule
    (min doc_id per ``md5(normalized(text))``) applied incrementally:
    within-batch keepers anti-join the cumulative seen-hash state, so
@@ -60,28 +60,25 @@ rescan. Stages, in order, each delegating to the registered member:
    the online analogue, and the restart test pins stream ≡ batch on
    exactly those formulas.
 
-Crash consistency follows the :class:`streaming.materialized_view`
-discipline — every store versions at ``batch_id + 1`` with per-store
-replay guards, and commit order runs DEPENDENTS-FIRST (totals → pairs →
-bands → mixture → packs → quota → seen): each store's delta derives only
-from stores committed AFTER it (the quota delta derives from quota
-pre-state and from ``novel``, which derives from the later-committed
-``seen``; the mixture/packs deltas derive from the ADMITTED set, which
-derives from quota pre-state, so they commit before quota), so at
-any crash point a replayed batch recomputes its deltas from untouched
-pre-state and version checks skip the stores already written. The one ordering that would corrupt (a pre-state that already
-contains the batch, yielding an empty delta) is impossible by
-construction.
+Crash consistency: every table lives in ONE :class:`VersionedStateStore`
+versioned at ``batch_id + 1``. A batch reads all of its pre-state at the
+committed version, writes every table of the next version and only then
+flips the store's one ``_LATEST``; a replay guard at the top skips a
+version already committed. A crash before the flip leaves the previous
+version current (the partial directory is invisible), so the replay
+recomputes every delta from untouched pre-state and overwrites it.
 
 Scale shape: state lives in versioned PARQUET tables, not executor
 memory — the ``applyInPandasWithState`` twins bound per-key state
 because the state store is memory-resident; this pipeline's
 seen-hash / band tables are materialized index tables (exactly what a
 100 TB deployment keeps beside the corpus), joined per batch with
-keyed equi-joins whose cost is O(|batch| + touched keys), never
-O(state). Driver materialization per batch is a handful of scalar counts
-(one per stage) — the bounded-metadata policy every engine collect
-site follows.
+keyed equi-joins. Each commit rewrites every table in full, so a batch
+costs O(state): ``seen``, ``bands`` and ``pairs`` grow with the corpus
+(append-only per-version deltas would make the commit O(batch)).
+Retention keeps two versions on disk. Driver materialization per batch
+is a handful of scalar counts (one per stage) — the bounded-metadata
+policy every engine collect site follows.
 """
 
 from __future__ import annotations
@@ -102,9 +99,9 @@ from postgres_cdc_example_spark.operators.dedup import (
 )
 from postgres_cdc_example_spark.sources.changelog import (
     decode_change_lines,
-    drift_split,
     flatten_changes,
-    split_corrupt,
+    is_valid_change,
+    with_drift_signature,
 )
 from postgres_cdc_example_spark.streaming.pipeline import start_change_stream
 from postgres_cdc_example_spark.streaming.state import VersionedStateStore
@@ -198,6 +195,44 @@ QUALITY_GATE = 0.5  # the batch capstone's PIPE_QUALITY_GATE, same scale
 QUOTA_TOKENS = 1024  # the batch source_quota_admission budget, same scale
 
 
+# the pipeline's state: one versioned store, all tables committed together
+TABLES = {
+    "seen": SEEN_SCHEMA,
+    "bands": BANDS_SCHEMA,
+    "pairs": PAIRS_SCHEMA,
+    "quota": QUOTA_SCHEMA,
+    "mixture": MIX_SCHEMA,
+    "packs": PACKS_SCHEMA,
+    "totals": TOTALS_SCHEMA,
+}
+
+
+def _count_tokens(df: DataFrame) -> tuple[int, int]:
+    """(rows, Σ n_toks) of ``df`` in one job."""
+    row = df.agg(
+        F.count(F.lit(1)).cast("long"),
+        F.coalesce(F.sum("n_toks"), F.lit(0)).cast("long"),
+    ).collect()[0]
+    return int(row[0]), int(row[1])
+
+
+def _fold(prev: DataFrame, delta: DataFrame, maxes: tuple[str, ...] = ()) -> DataFrame:
+    """Per-key state ``prev`` ⟗ the batch's ``delta`` (same columns, key
+    first): each column is the sum of the two sides, or their greatest for
+    the ``maxes`` columns; a side missing for a key counts as 0 (-1 for a
+    max)."""
+    key, *cols = prev.columns
+    out = []
+    for c in cols:
+        p, d = F.col(f"p.{c}"), F.col(f"d.{c}")
+        if c in maxes:
+            v = F.greatest(F.coalesce(p, F.lit(-1)), F.coalesce(d, F.lit(-1)))
+        else:
+            v = F.coalesce(p, F.lit(0)) + F.coalesce(d, F.lit(0))
+        out.append(v.cast("long").alias(c))
+    return prev.alias("p").join(delta.alias("d"), key, "full").select(key, *out)
+
+
 class StreamingCurationPipeline:
     """document change-lines file drop → dedup/near-dup state tables +
     continuously-maintained per-stage curation totals."""
@@ -219,40 +254,32 @@ class StreamingCurationPipeline:
         # zero words has no set bits, so gram_hit is identically false)
         self.decontam_bitmap_words = decontam_bitmap_words
         self.quota_tokens = quota_tokens
-        self.totals_store = VersionedStateStore(
-            spark, store_root + "/totals", TOTALS_SCHEMA
-        )
-        self.pairs_store = VersionedStateStore(
-            spark, store_root + "/pairs", PAIRS_SCHEMA
-        )
-        self.bands_store = VersionedStateStore(
-            spark, store_root + "/bands", BANDS_SCHEMA
-        )
-        self.quota_store = VersionedStateStore(
-            spark, store_root + "/quota", QUOTA_SCHEMA
-        )
-        self.mixture_store = VersionedStateStore(
-            spark, store_root + "/mixture", MIX_SCHEMA
-        )
-        self.packs_store = VersionedStateStore(
-            spark, store_root + "/packs", PACKS_SCHEMA
-        )
-        self.seen_store = VersionedStateStore(
-            spark, store_root + "/seen", SEEN_SCHEMA
-        )
+        self.store = VersionedStateStore(spark, store_root, TABLES)
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         v_next = batch_id + 1
-        # replay guard: `seen` commits LAST, so seen at v_next implies the
-        # whole batch landed — a foreachBatch redelivery is a no-op.
-        seen_v = self.seen_store.latest_version()
-        if seen_v is not None and seen_v >= v_next:
+        # replay guard: every table commits in one version, so a committed
+        # v_next means the whole batch landed — a redelivery is a no-op
+        latest = self.store.latest_version()
+        if latest is not None and latest >= v_next:
             return
+        read = self.store.read
 
         # --- stages 1+2: decode, corruption + drift dead-letters ----------
-        decoded = decode_change_lines(batch_df).persist()
-        valid, corrupt = split_corrupt(decoded)
-        clean, drifted = drift_split(valid, "documents", DOC_DECLARED)
+        # one signature pass over every line; its one aggregate counts the
+        # lines, the undecodable ones and the drifted ones
+        ok = is_valid_change()
+        drifted = (F.col("unknown_cols") != "") | (F.col("missing_cols") != "")
+        sig = with_drift_signature(
+            decode_change_lines(batch_df), "documents", DOC_DECLARED
+        ).persist()
+        n_lines, n_corrupt, n_drifted = (
+            int(x)
+            for x in sig.agg(
+                F.count(F.lit(1)), F.count_if(~ok), F.count_if(ok & drifted)
+            ).collect()[0]
+        )
+        clean = sig.filter(ok & ~drifted).drop("unknown_cols", "missing_cols")
         docs = (
             flatten_changes(
                 clean, "documents", DOC_COLUMNS, key="doc_id", key_type="long"
@@ -265,14 +292,7 @@ class StreamingCurationPipeline:
             )
             .persist()
         )
-        n_lines = decoded.count()
-        n_corrupt = corrupt.count()
-        n_drifted = drifted.count()
-        row = docs.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.coalesce(F.sum("n_toks"), F.lit(0)).cast("long").alias("t"),
-        ).collect()[0]
-        n_clean, tok_clean = int(row.n), int(row.t)
+        n_clean, tok_clean = _count_tokens(docs)
 
         # --- stage 3: content dedup-at-ingest (batch keeper rule) ---------
         hashed = docs.select(
@@ -289,15 +309,11 @@ class StreamingCurationPipeline:
             )
             .select("content_hash", "keeper_id", "n_toks")
         )
-        seen_prev = self.seen_store.read()
+        seen_prev = read("seen")
         novel = batch_keepers.join(
             seen_prev.select("content_hash"), "content_hash", "left_anti"
         ).persist()
-        row = novel.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.coalesce(F.sum("n_toks"), F.lit(0)).cast("long").alias("t"),
-        ).collect()[0]
-        n_novel, tok_novel = int(row.n), int(row.t)
+        n_novel, tok_novel = _count_tokens(novel)
 
         # --- stages 6-8: decontam gate -> quality gate -> quota gate ------
         # (the batch capstone's survivor chain, each stage the registered
@@ -317,11 +333,7 @@ class StreamingCurationPipeline:
             ).persist()
         else:
             decon = novel_text.persist()
-        row = decon.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.coalesce(F.sum("n_toks"), F.lit(0)).cast("long").alias("t"),
-        ).collect()[0]
-        n_decon, tok_decon = int(row.n), int(row.t)
+        n_decon, tok_decon = _count_tokens(decon)
 
         qual_docs = (
             decon.join(
@@ -331,11 +343,7 @@ class StreamingCurationPipeline:
             .select("doc_id", "source", "n_toks")
             .persist()
         )
-        row = qual_docs.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.coalesce(F.sum("n_toks"), F.lit(0)).cast("long").alias("t"),
-        ).collect()[0]
-        n_qual, tok_qual = int(row.n), int(row.t)
+        n_qual, tok_qual = _count_tokens(qual_docs)
 
         # quota: global per-source cumsum == prev committed cumulative +
         # within-batch cumsum in doc_id order; a doc is admitted iff its
@@ -345,18 +353,17 @@ class StreamingCurationPipeline:
         # tokens, exactly like the batch window ranges over every row.
         from pyspark.sql import Window
 
-        quota_prev = (
-            self.quota_store.read()
-            .withColumnRenamed("cum_tokens", "prev_cum")
-            .withColumnRenamed("max_doc_id", "prev_max_doc_id")
-            .withColumnRenamed("order_violations", "prev_violations")
-        )
+        quota_prev = read("quota")
         wq = (
             Window.partitionBy("source")
             .orderBy("doc_id")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        quota_eval = qual_docs.join(quota_prev, "source", "left").select(
+        quota_eval = qual_docs.join(
+            quota_prev.select("source", F.col("cum_tokens").alias("prev_cum")),
+            "source",
+            "left",
+        ).select(
             "source",
             "doc_id",
             "n_toks",
@@ -368,61 +375,30 @@ class StreamingCurationPipeline:
         admitted = quota_eval.filter(
             F.col("cum_tokens") <= self.quota_tokens
         ).persist()
-        row = admitted.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.coalesce(F.sum("n_toks"), F.lit(0)).cast("long").alias("t"),
-        ).collect()[0]
-        n_admit, tok_admit = int(row.n), int(row.t)
+        n_admit, tok_admit = _count_tokens(admitted)
         # per-source batch rollup + the ordering sentinel: a doc at or
         # below the committed high-water doc_id would be admitted against
         # the wrong cumulative, so it is COUNTED (state + property), never
         # silently folded in as if ordered.
         batch_src = (
             qual_docs.join(
-                quota_prev.select("source", "prev_max_doc_id"),
+                quota_prev.select(
+                    "source", F.col("max_doc_id").alias("prev_max_doc_id")
+                ),
                 "source",
                 "left",
             )
             .groupBy("source")
             .agg(
-                F.sum("n_toks").cast("long").alias("add_toks"),
-                F.max("doc_id").cast("long").alias("batch_max_doc_id"),
-                F.sum(
-                    F.when(
-                        F.col("doc_id")
-                        <= F.coalesce(F.col("prev_max_doc_id"), F.lit(-1)),
-                        1,
-                    ).otherwise(0)
-                )
-                .cast("long")
-                .alias("batch_violations"),
+                F.sum("n_toks").alias("cum_tokens"),
+                F.max("doc_id").alias("max_doc_id"),
+                F.count_if(
+                    F.col("doc_id")
+                    <= F.coalesce(F.col("prev_max_doc_id"), F.lit(-1))
+                ).alias("order_violations"),
             )
         )
-        quota_next = (
-            quota_prev.join(batch_src, "source", "full")
-            .select(
-                "source",
-                (
-                    F.coalesce(F.col("prev_cum"), F.lit(0))
-                    + F.coalesce(F.col("add_toks"), F.lit(0))
-                )
-                .cast("long")
-                .alias("cum_tokens"),
-                F.greatest(
-                    F.coalesce(F.col("prev_max_doc_id"), F.lit(-1)),
-                    F.coalesce(F.col("batch_max_doc_id"), F.lit(-1)),
-                )
-                .cast("long")
-                .alias("max_doc_id"),
-                (
-                    F.coalesce(F.col("prev_violations"), F.lit(0))
-                    + F.coalesce(F.col("batch_violations"), F.lit(0))
-                )
-                .cast("long")
-                .alias("order_violations"),
-            )
-            .persist()
-        )
+        quota_next = _fold(quota_prev, batch_src, maxes=("max_doc_id",)).persist()
         n_viol = quota_next.agg(
             F.coalesce(F.sum("order_violations"), F.lit(0))
         ).collect()[0][0]
@@ -435,43 +411,12 @@ class StreamingCurationPipeline:
             )
 
         # --- stage 9: planning snapshot state (mixture + pack plan) -------
-        # deltas derive from `admitted` (quota PRE-state), so both stores
-        # commit BEFORE quota in the dependents-first order
-        mix_prev = (
-            self.mixture_store.read()
-            .withColumnRenamed("n_docs", "prev_docs")
-            .withColumnRenamed("tokens", "prev_toks")
-        )
         mix_add = admitted.groupBy("source").agg(
-            F.count(F.lit(1)).cast("long").alias("add_docs"),
-            F.sum("n_toks").cast("long").alias("add_toks"),
+            F.count(F.lit(1)).alias("n_docs"), F.sum("n_toks").alias("tokens")
         )
-        mixture_next = (
-            mix_prev.join(mix_add, "source", "full")
-            .select(
-                "source",
-                (
-                    F.coalesce(F.col("prev_docs"), F.lit(0))
-                    + F.coalesce(F.col("add_docs"), F.lit(0))
-                )
-                .cast("long")
-                .alias("n_docs"),
-                (
-                    F.coalesce(F.col("prev_toks"), F.lit(0))
-                    + F.coalesce(F.col("add_toks"), F.lit(0))
-                )
-                .cast("long")
-                .alias("tokens"),
-            )
-            .persist()
-        )
+        mixture_next = _fold(read("mixture"), mix_add)
 
-        packs_prev = (
-            self.packs_store.read()
-            .withColumnRenamed("cum_tokens", "prev_cum")
-            .withColumnRenamed("n_packs", "prev_packs")
-            .withColumnRenamed("last_pack_id", "prev_last")
-        )
+        packs_prev = read("packs")
         wpk = (
             Window.partitionBy("bucket")
             .orderBy("doc_id")
@@ -486,7 +431,11 @@ class StreamingCurationPipeline:
                 ).alias("bucket"),
             )
             .join(
-                packs_prev.select("bucket", "prev_cum", "prev_last"),
+                packs_prev.select(
+                    "bucket",
+                    F.col("cum_tokens").alias("prev_cum"),
+                    F.col("last_pack_id").alias("prev_last"),
+                ),
                 "bucket",
                 "left",
             )
@@ -507,8 +456,7 @@ class StreamingCurationPipeline:
             )
         )
         pk_add = batch_pk.groupBy("bucket").agg(
-            F.sum("n_toks").cast("long").alias("add_toks"),
-            F.max("pack_id").cast("long").alias("max_pack"),
+            F.sum("n_toks").alias("cum_tokens"),
             # packs newly OPENED this batch: distinct pack ids minus the
             # one continuing the bucket's previously-open pack (pack ids
             # are monotone in doc_id, so only the minimum can coincide)
@@ -518,35 +466,10 @@ class StreamingCurationPipeline:
                     F.when(F.col("pack_id") == F.col("prev_last"), 1)
                     .otherwise(0)
                 )
-            )
-            .cast("long")
-            .alias("new_packs"),
+            ).alias("n_packs"),
+            F.max("pack_id").alias("last_pack_id"),
         )
-        packs_next = (
-            packs_prev.join(pk_add, "bucket", "full")
-            .select(
-                "bucket",
-                (
-                    F.coalesce(F.col("prev_cum"), F.lit(0))
-                    + F.coalesce(F.col("add_toks"), F.lit(0))
-                )
-                .cast("long")
-                .alias("cum_tokens"),
-                (
-                    F.coalesce(F.col("prev_packs"), F.lit(0))
-                    + F.coalesce(F.col("new_packs"), F.lit(0))
-                )
-                .cast("long")
-                .alias("n_packs"),
-                F.greatest(
-                    F.coalesce(F.col("prev_last"), F.lit(-1)),
-                    F.coalesce(F.col("max_pack"), F.lit(-1)),
-                )
-                .cast("long")
-                .alias("last_pack_id"),
-            )
-            .persist()
-        )
+        packs_next = _fold(packs_prev, pk_add, maxes=("last_pack_id",))
 
         # --- stage 4: near-dup candidates over the novel survivors --------
         novel_docs = novel.select(F.col("keeper_id").alias("doc_id")).join(
@@ -561,7 +484,7 @@ class StreamingCurationPipeline:
             )
             .persist()
         )
-        bands_prev = self.bands_store.read()
+        bands_prev = read("bands")
         cross = bands_new.alias("n").join(
             bands_prev.alias("o"), ["band_idx", "band_key"]
         ).select(
@@ -574,7 +497,7 @@ class StreamingCurationPipeline:
             F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
         )
         pairs_next = (
-            self.pairs_store.read()
+            read("pairs")
             .unionByName(cross)
             .unionByName(within)
             .distinct()
@@ -585,7 +508,7 @@ class StreamingCurationPipeline:
         # --- stage 5: fold totals (additive stages + absolute pair count) -
         prev = {
             int(r.stage_no): (int(r.n_units), int(r.total_tokens))
-            for r in self.totals_store.read().collect()
+            for r in read("totals").collect()
         }
         add = {
             0: (n_lines, 0),
@@ -605,29 +528,22 @@ class StreamingCurationPipeline:
                 pn, pt = prev.get(no, (0, 0))
                 an, at = add[no]
                 rows.append((no, name, pn + an, pt + at))
-        totals_next = self.spark.createDataFrame(rows, TOTALS_SCHEMA)
 
-        # --- commits, dependents-first, each guarded per store ------------
-        if (self.totals_store.latest_version() or -1) < v_next:
-            self.totals_store.commit(totals_next, version=v_next)
-        if (self.pairs_store.latest_version() or -1) < v_next:
-            self.pairs_store.commit(pairs_next, version=v_next)
-        if (self.bands_store.latest_version() or -1) < v_next:
-            self.bands_store.commit(
-                self.bands_store.read().unionByName(bands_new), version=v_next
-            )
-        if (self.mixture_store.latest_version() or -1) < v_next:
-            self.mixture_store.commit(mixture_next, version=v_next)
-        if (self.packs_store.latest_version() or -1) < v_next:
-            self.packs_store.commit(packs_next, version=v_next)
-        if (self.quota_store.latest_version() or -1) < v_next:
-            self.quota_store.commit(quota_next, version=v_next)
-        self.seen_store.commit(
-            seen_prev.unionByName(novel), version=v_next
+        # --- one commit: every table at v_next, then the one pointer flip -
+        self.store.commit(
+            {
+                "seen": seen_prev.unionByName(novel),
+                "bands": bands_prev.unionByName(bands_new),
+                "pairs": pairs_next,
+                "quota": quota_next,
+                "mixture": mixture_next,
+                "packs": packs_next,
+                "totals": self.spark.createDataFrame(rows, TOTALS_SCHEMA),
+            },
+            version=v_next,
         )
-        for df in (quota_next, mixture_next, packs_next, admitted,
-                   qual_docs, decon, pairs_next, bands_new,
-                   novel, docs, decoded):
+        for df in (quota_next, admitted, qual_docs, decon, pairs_next,
+                   bands_new, novel, docs, sig):
             df.unpersist()
 
     def start(self, available_now: bool = True) -> StreamingQuery:
@@ -641,22 +557,22 @@ class StreamingCurationPipeline:
         )
 
     def totals(self) -> DataFrame:
-        return self.totals_store.read()
+        return self.store.read("totals")
 
     def survivors(self) -> DataFrame:
-        return self.seen_store.read()
+        return self.store.read("seen")
 
     def candidate_pairs(self) -> DataFrame:
-        return self.pairs_store.read()
+        return self.store.read("pairs")
 
     def quota_state(self) -> DataFrame:
-        return self.quota_store.read()
+        return self.store.read("quota")
 
     def mixture_state(self) -> DataFrame:
-        return self.mixture_store.read()
+        return self.store.read("mixture")
 
     def packs_state(self) -> DataFrame:
-        return self.packs_store.read()
+        return self.store.read("packs")
 
     def planning_snapshot(self) -> DataFrame:
         """The per-batch PLANNING table (r11 verdict #5): one row per
@@ -668,7 +584,7 @@ class StreamingCurationPipeline:
         semantics: n_units = Σ per-bucket open packs, total_tokens =
         Σ admitted tokens). Derived entirely from the two bounded state
         tables, so the snapshot is restart-equivalent by construction."""
-        mix = self.mixture_store.read().filter(F.col("tokens") > 0)
+        mix = self.mixture_state().filter(F.col("tokens") > 0)
         per = mix.withColumn(
             "w",
             F.floor(
@@ -701,7 +617,7 @@ class StreamingCurationPipeline:
             .cast("long")
             .alias("keep_ratio_micro"),
         )
-        packing = self.packs_store.read().agg(
+        packing = self.packs_state().agg(
             F.lit("packing").alias("kind"),
             F.lit("packs").alias("unit"),
             F.coalesce(F.sum("n_packs"), F.lit(0))
@@ -721,7 +637,7 @@ class StreamingCurationPipeline:
         the ascending-doc_id assumption the batch-equality proof rests on
         was violated and the affected sources' cumulatives are suspect."""
         row = (
-            self.quota_store.read()
+            self.quota_state()
             .agg(F.coalesce(F.sum("order_violations"), F.lit(0)))
             .collect()[0]
         )

@@ -72,7 +72,9 @@ class StreamingAggView(CdcPipeline):
     ):
         super().__init__(spark, source_dir, store_root + "/state", checkpoint_dir)
         self.group_col = group_col
-        self.agg_store = VersionedStateStore(spark, store_root + "/agg", AGG_SCHEMA)
+        self.agg_store = VersionedStateStore(
+            spark, store_root + "/agg", {"agg": AGG_SCHEMA}
+        )
 
     def _commit(self, changes: DataFrame, version: int) -> None:
         # The state replay guard already ran, so only the aggregate can be
@@ -86,10 +88,11 @@ class StreamingAggView(CdcPipeline):
                 # seed from the current state (empty on a fresh pipeline; the
                 # snapshot when backfill() ran before the stream)
                 self.agg_store.commit(
-                    agg_snapshot(state, self.group_col, _score()), version=version - 1
+                    {"agg": agg_snapshot(state, self.group_col, _score())},
+                    version=version - 1,
                 )
             new_agg = maintain_agg(
-                self.agg_store.read(),
+                self.agg_store.read("agg"),
                 state,
                 self.store.read_changes(version),
                 group_col=self.group_col,
@@ -97,8 +100,8 @@ class StreamingAggView(CdcPipeline):
                 key="id",
                 **_APPLY_KW,
             )
-            self.agg_store.commit(new_agg, version=version)
+            self.agg_store.commit({"agg": new_agg}, version=version)
         self.store.publish(version)
 
     def view(self) -> DataFrame:
-        return self.agg_store.read()
+        return self.agg_store.read("agg")

@@ -8,12 +8,13 @@ Lake/Iceberg implement for real. At 100 TB the documented production path is
 Delta ``MERGE INTO`` with partitioned overwrite (SURVEY.md §7.4 hard part 1);
 these stores keep the engine self-contained for tests and small deployments.
 
-:class:`VersionedStateStore` writes the full state at every version (the
-aggregate and curation stores, which hold no I/U/D log)::
+:class:`VersionedStateStore` writes the full state at every version, as one
+or more named tables committed together (the curation pipeline's seven
+tables, the aggregate view's one)::
 
     root/
-      v00000000/  part-*.parquet     (full state at version 0)
-      v00000001/  ...
+      v00000006/  seen/ bands/ ...   (previous version, kept for readers)
+      v00000007/  seen/ bands/ ...   (every table at version 7)
       _LATEST                        (text file: committed version number)
 
 :class:`MergeOnReadStateStore` holds the CDC state as a base plus one change
@@ -37,7 +38,9 @@ Commit order: write the data directory fully, then flip the pointer
 (``_LATEST``, or ``_BASE`` for a compaction) — readers never see a partial
 version. Idempotent per version: re-committing a version (foreachBatch replay
 after a crash) overwrites the same directory, keeping exactly-once state
-semantics (T2).
+semantics (T2). Retention keeps one previous generation (the previous version,
+or the previous base and its change directories), so a reader that resolved
+its frame before a commit still finds every file it lists.
 """
 
 from __future__ import annotations
@@ -57,78 +60,84 @@ from postgres_cdc_example_spark.schemas import FLAT_CHANGE_SCHEMA, PERSON_SCHEMA
 COMPACT_EVERY = 8
 
 
+def _flip(path: str, value: str) -> None:
+    """Atomically replace the pointer file ``path`` with ``value``."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(value)
+    os.replace(tmp, path)
+
+
+def _pointer(path: str) -> list[int]:
+    """The version numbers in the pointer file ``path``; [] if it is absent."""
+    try:
+        with open(path) as f:
+            return [int(x) for x in f.read().split()]
+    except (FileNotFoundError, ValueError):
+        return []
+
+
+def _latest(root: str) -> int | None:
+    vs = _pointer(os.path.join(root, "_LATEST"))
+    return vs[0] if vs else None
+
+
+def _versions(root: str, prefix: str) -> list[int]:
+    return sorted(
+        int(n[1:]) for n in os.listdir(root) if n[:1] == prefix and n[1:].isdigit()
+    )
+
+
+def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
+    # no partitions, so reading it starts no Python workers
+    # (createDataFrame([]) parallelises an empty list into tasks)
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
 class VersionedStateStore:
-    def __init__(self, spark: SparkSession, root: str, schema: StructType):
+    """Named full-state tables (``schemas``: name → schema) committed
+    together: ``commit({name: df, ...}, version)`` writes every table under
+    ``vNNNNNNNN/`` and then flips the one ``_LATEST``; ``read(name)`` reads
+    that table at ``_LATEST``."""
+
+    def __init__(self, spark: SparkSession, root: str, schemas: dict[str, StructType]):
         self.spark = spark
         self.root = root
-        self.schema = schema
+        self.schemas = schemas
         os.makedirs(root, exist_ok=True)
 
-    def _latest_path(self) -> str:
-        return os.path.join(self.root, "_LATEST")
-
-    def _flip(self, path: str, value: str) -> None:
-        """Atomically replace the pointer file ``path`` with ``value``."""
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(value)
-        os.replace(tmp, path)
-
-    def _empty(self, schema: StructType) -> DataFrame:
-        # no partitions, so reading it starts no Python workers
-        # (createDataFrame([]) parallelises an empty list into tasks)
-        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema)
+    def _dir(self, version: int) -> str:
+        return os.path.join(self.root, f"v{version:08d}")
 
     def latest_version(self) -> int | None:
-        try:
-            with open(self._latest_path()) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return None
+        return _latest(self.root)
 
-    def read(self) -> DataFrame:
+    def read(self, table: str) -> DataFrame:
         v = self.latest_version()
         if v is None:
-            return self._empty(self.schema)
-        return self.spark.read.schema(self.schema).parquet(
-            os.path.join(self.root, f"v{v:08d}")
+            return _empty(self.spark, self.schemas[table])
+        return self.spark.read.schema(self.schemas[table]).parquet(
+            os.path.join(self._dir(v), table)
         )
 
-    def commit(self, df: DataFrame, version: int) -> None:
-        """Write version dir, then atomically advance _LATEST (write-ahead
-        then pointer-flip).  Replays of the same version are harmless."""
-        df.write.mode("overwrite").parquet(os.path.join(self.root, f"v{version:08d}"))
-        self._flip(self._latest_path(), str(version))
-
-    def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Retention: drop committed version directories older than the
-        newest ``keep_last``. Never touches the latest (readers resolve it
-        via _LATEST, which is left alone) and never removes versions AHEAD
-        of _LATEST (a concurrent commit's write-ahead data). Returns the
-        removed version numbers.
-
-        Each version of this store is a full state snapshot, so retention is
-        what keeps it O(keep_last × state) instead of O(history × state) —
-        the same job Delta's VACUUM does after its log compaction.
-        """
-        latest = self.latest_version()
-        if latest is None:
-            return []
-        removed = []
-        for name in sorted(os.listdir(self.root)):
-            if not name.startswith("v"):
-                continue
-            try:
-                v = int(name[1:])
-            except ValueError:
-                continue
-            if v <= latest - keep_last:
-                shutil.rmtree(os.path.join(self.root, name))
-                removed.append(v)
-        return removed
+    def commit(self, tables: dict[str, DataFrame], version: int) -> None:
+        """Write every table of ``version``, then flip ``_LATEST`` to it. A
+        crash before the flip leaves the previous version current; the replay
+        overwrites the partial directory. Then drops the versions older than
+        the previous one (never one ahead of ``_LATEST``)."""
+        for name in self.schemas:  # a missing table raises before the flip
+            tables[name].write.mode("overwrite").parquet(
+                os.path.join(self._dir(version), name)
+            )
+        prev = self.latest_version()
+        _flip(os.path.join(self.root, "_LATEST"), str(version))
+        keep = version if prev is None else min(prev, version)
+        for v in _versions(self.root, "v"):
+            if v < keep:
+                shutil.rmtree(self._dir(v))
 
 
-class MergeOnReadStateStore(VersionedStateStore):
+class MergeOnReadStateStore:
     """The person CDC state as a base plus per-version change directories.
 
     ``commit(changes, version)`` writes only the batch's flat change rows
@@ -139,7 +148,9 @@ class MergeOnReadStateStore(VersionedStateStore):
     """
 
     def __init__(self, spark: SparkSession, root: str):
-        super().__init__(spark, root, PERSON_SCHEMA)
+        self.spark = spark
+        self.root = root
+        os.makedirs(root, exist_ok=True)
 
     def _dir(self, prefix: str, version: int) -> str:
         return os.path.join(self.root, f"{prefix}{version:08d}")
@@ -149,30 +160,24 @@ class MergeOnReadStateStore(VersionedStateStore):
 
     def _bases(self) -> tuple[int | None, int | None]:
         """(current base, previous base) from ``_BASE``."""
-        try:
-            with open(self._base_path()) as f:
-                vs = [int(x) for x in f.read().split()]
-        except (FileNotFoundError, ValueError):
-            return None, None
-        return vs[0], (vs[1] if len(vs) > 1 else None)
+        cur, prev = (_pointer(self._base_path()) + [None, None])[:2]
+        return cur, prev
 
-    def _versions(self, prefix: str) -> list[int]:
-        return sorted(
-            int(n[1:]) for n in os.listdir(self.root) if n[:1] == prefix and n[1:].isdigit()
-        )
+    def latest_version(self) -> int | None:
+        return _latest(self.root)
 
     def _merged(self, base: int | None, upto: int) -> DataFrame:
         state = (
-            self._empty(self.schema)
+            _empty(self.spark, PERSON_SCHEMA)
             if base is None
-            else self.spark.read.schema(self.schema).parquet(self._dir("v", base))
+            else self.spark.read.schema(PERSON_SCHEMA).parquet(self._dir("v", base))
         )
         after = -1 if base is None else base
-        paths = [self._dir("c", v) for v in self._versions("c") if after < v <= upto]
+        paths = [self._dir("c", v) for v in _versions(self.root, "c") if after < v <= upto]
         if not paths:
             return state
         changes = self.spark.read.schema(FLAT_CHANGE_SCHEMA).parquet(*paths)
-        return apply_changes(state, changes).select(*self.schema.names)
+        return apply_changes(state, changes).select(*PERSON_SCHEMA.names)
 
     def read(self) -> DataFrame:
         # _BASE before _LATEST: a base is published only after _LATEST has
@@ -180,7 +185,7 @@ class MergeOnReadStateStore(VersionedStateStore):
         base, _ = self._bases()
         latest = self.latest_version()
         if latest is None:
-            return self._empty(self.schema)
+            return _empty(self.spark, PERSON_SCHEMA)
         return self._merged(base, latest)
 
     def read_changes(self, version: int) -> DataFrame:
@@ -194,7 +199,7 @@ class MergeOnReadStateStore(VersionedStateStore):
         df.write.mode("overwrite").parquet(self._dir("v", version))
         cur, _ = self._bases()
         prev = "" if cur is None or cur == version else f" {cur}"
-        self._flip(self._base_path(), f"{version}{prev}")
+        _flip(self._base_path(), f"{version}{prev}")
 
     def write_changes(self, changes: DataFrame, version: int) -> None:
         """First half of a commit: write ``version``'s change rows (the
@@ -208,7 +213,7 @@ class MergeOnReadStateStore(VersionedStateStore):
         compact if ``COMPACT_EVERY`` versions have passed the base. A crash
         during compaction leaves ``_BASE`` on the old base; the next
         publish compacts again."""
-        self._flip(self._latest_path(), str(version))
+        _flip(os.path.join(self.root, "_LATEST"), str(version))
         base, _ = self._bases()
         if version - (base or 0) >= COMPACT_EVERY:
             self.write_base(self._merged(base, version), version)
@@ -231,8 +236,8 @@ class MergeOnReadStateStore(VersionedStateStore):
             return []
         keep = cur if prev is None else prev
         removed = [
-            f"v{v:08d}" for v in self._versions("v") if v < cur and v != prev
-        ] + [f"c{v:08d}" for v in self._versions("c") if v <= keep]
+            f"v{v:08d}" for v in _versions(self.root, "v") if v < cur and v != prev
+        ] + [f"c{v:08d}" for v in _versions(self.root, "c") if v <= keep]
         for name in removed:
             shutil.rmtree(os.path.join(self.root, name))
         return removed

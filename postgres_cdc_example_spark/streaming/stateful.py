@@ -522,84 +522,6 @@ def neardup_candidates_stream(
     )
 
 
-# --- transformWithStateInPandas (the Spark 4 stateful API) ---------------------
-
-
-def running_totals_stream(events: DataFrame) -> DataFrame:
-    """Per-user running totals via ``transformWithStateInPandas`` — the
-    Spark 4 successor to applyInPandasWithState: typed state handles
-    (ValueState/ListState/MapState), optional timers, and state that
-    composes across multiple variables. Here one ValueState per user carries
-    (n_events, total_cents) across micro-batches AND restarts (RocksDB
-    state store in the checkpoint); each batch emits the updated totals for
-    the users it touched — the continuously-current per-key counter the
-    reference's monitor polls for with full-table COUNT(*)s
-    (pubsub/main.go:159-169), at O(touched keys) per tick.
-
-    Exact integer cents (as everywhere) so restarts/replays can't drift."""
-    try:  # the TWS protocol needs protobuf, absent in this container —
-        # gate like the multimodal codecs (same pattern as decode_image)
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf (not in "
-            "this environment); use sessionize_stream/applyInPandasWithState"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("cents", LongType())]
-    )
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_cents", LongType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, cents = (self._agg.get() or (0, 0)) if self._agg.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                import numpy as np
-
-                # floor(x*100 + 0.5): the repo's half-up integer-cents
-                # convention (astype truncates toward zero, mis-rounding
-                # negatives: -0.01 -> 0 instead of -1)
-                cents += int(np.floor(pdf["value"] * 100 + 0.5).astype("int64").sum())
-            self._agg.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotals(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 # --- bounded-state heavy hitters (space-saving top-k) --------------------------
 
 HH_CAPACITY = 32  # tracked entries per key group (the memory bound)
@@ -1165,7 +1087,7 @@ def _qh_group(key, pdfs, state: GroupState):
     """Fold a batch of bucket ids into the day's count vector. Addition is
     commutative and associative, so any batch slicing or arrival order
     yields the same vector (NOT idempotent — counters need the file
-    source's exactly-once replay, same contract as running_totals_stream);
+    source's exactly-once replay);
     emits the updated day snapshot each batch (monitoring-style).
 
     Rows whose bucket falls OUTSIDE [0, QH_STREAM_BUCKETS) — a value below
@@ -1450,8 +1372,8 @@ def _ivf_assign_group(key, pdfs, state: GroupState):
     """Fold a batch of per-vector drift_micro values into the cluster's
     (count, drift-sum) pair. Addition is commutative and associative, so
     any batch slicing or arrival order yields the same totals (NOT
-    idempotent — counters lean on the file source's exactly-once replay,
-    the running_totals_stream contract); emits the updated cluster
+    idempotent — counters lean on the file source's exactly-once
+    replay); emits the updated cluster
     snapshot each batch (monitoring-style)."""
     (cid,) = key
     n, sdrift = (

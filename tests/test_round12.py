@@ -1,114 +1,10 @@
-"""Round-12 fixes: the quota gate's doc_id ordering sentinel (r11 ADVICE
-low — the stream/batch quota equality silently assumed ascending arrival)
-and companions for the round's other changes."""
+"""Round-12 fixes: planted-arm and member-consistency pins for the
+round's analytics queries and CDC detectors (the curation-stream tests
+live in test_curation.py)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
-
-from postgres_cdc_example_spark.sources.tables import load_table
-
-
-def _quality_passing_docs(spark, sf_dir, n=8):
-    """Fixture docs that survive the capstone's quality gate, one source,
-    sorted by doc_id — the raw material for ordered/out-of-order drops."""
-    from postgres_cdc_example_spark.operators.text import quality_score
-    from postgres_cdc_example_spark.streaming.curation import QUALITY_GATE
-
-    docs = load_table(spark, "documents", sf_dir)
-    src = docs.groupBy("source").count().orderBy(F.desc("count")).first().source
-    qd = (
-        docs.filter(F.col("source") == src)
-        .join(quality_score(docs).select("doc_id", "quality"), "doc_id")
-        .filter(F.col("quality") >= QUALITY_GATE)
-        .orderBy("doc_id")
-        .limit(n)
-        .collect()
-    )
-    assert len(qd) >= 6, "fixture must supply enough quality-passing docs"
-    return qd
-
-
-def _lines(docs, seq0=0):
-    from postgres_cdc_example_spark.streaming.curation import (
-        document_change_json,
-    )
-
-    out = []
-    for i, r in enumerate(docs):
-        out.append(
-            document_change_json(
-                seq0 + i + 1,
-                {
-                    "doc_id": r.doc_id,
-                    "text": r.text,
-                    "lang": r.lang,
-                    "source": r.source,
-                    "n_chars": r.n_chars,
-                },
-            )
-        )
-    return out
-
-
-def _drain(spark, src, store, ckpt):
-    from postgres_cdc_example_spark.streaming.curation import (
-        StreamingCurationPipeline,
-    )
-
-    p = StreamingCurationPipeline(
-        spark, src, store, ckpt, decontam_bitmap_words=None,
-        quota_tokens=10**9,
-    )
-    q = p.start(available_now=True)
-    q.awaitTermination()
-    return p
-
-
-def test_quota_gate_ordering_sentinel_both_arms(spark, sf_dir, tmp_path):
-    """NEGATIVE arm: ascending doc_id batches leave order_violations == 0
-    and max_doc_id at the true high-water mark. POSITIVE arm: a later
-    batch delivering a LOWER doc_id for a committed source is counted in
-    the versioned quota state (and via quota_order_violations()) instead
-    of silently diverging from the batch source_quota_admission rule the
-    stream claims equality with."""
-    qd = _quality_passing_docs(spark, sf_dir)
-    lo, hi = qd[: len(qd) // 2], qd[len(qd) // 2 :]
-
-    # ---- in-order: lo ids then hi ids -> zero violations ----------------
-    src = str(tmp_path / "ord_src"); os.makedirs(src)
-    store, ckpt = str(tmp_path / "ord_store"), str(tmp_path / "ord_ckpt")
-    with open(os.path.join(src, "c1.txt"), "w") as f:
-        f.write("\n".join(_lines(lo)))
-    _drain(spark, src, store, ckpt)
-    with open(os.path.join(src, "c2.txt"), "w") as f:
-        f.write("\n".join(_lines(hi, seq0=100)))
-    pipe = _drain(spark, src, store, ckpt)
-    assert pipe.quota_order_violations() == 0
-    state = {r.source: r for r in pipe.quota_state().collect()}
-    srcname = lo[0].source
-    assert state[srcname].max_doc_id == max(r.doc_id for r in qd)
-    assert state[srcname].order_violations == 0
-
-    # ---- out-of-order: hi ids committed first, then lo ids --------------
-    src2 = str(tmp_path / "ooo_src"); os.makedirs(src2)
-    store2, ckpt2 = str(tmp_path / "ooo_store"), str(tmp_path / "ooo_ckpt")
-    with open(os.path.join(src2, "c1.txt"), "w") as f:
-        f.write("\n".join(_lines(hi)))
-    _drain(spark, src2, store2, ckpt2)
-    with open(os.path.join(src2, "c2.txt"), "w") as f:
-        f.write("\n".join(_lines(lo, seq0=100)))
-    pipe2 = _drain(spark, src2, store2, ckpt2)
-    # every lo doc arrived below the committed high-water mark
-    assert pipe2.quota_order_violations() == len(lo)
-    st2 = {r.source: r for r in pipe2.quota_state().collect()}
-    assert st2[srcname].order_violations == len(lo)
-    # high-water mark never regresses
-    assert st2[srcname].max_doc_id == max(r.doc_id for r in qd)
-    # cumulative tokens still fold additively (count, don't corrupt)
-    assert st2[srcname].cum_tokens == state[srcname].cum_tokens
 
 
 def test_erasure_roundtrip_planted_lifecycle_and_detector_fires(
@@ -195,148 +91,6 @@ def test_erasure_roundtrip_planted_lifecycle_and_detector_fires(
     )
     leaked = ch.join(F.broadcast(purg), "id", "left_semi").count()
     assert leaked == 3  # the detector sees key 1's rows when not purged
-
-
-def test_plan_pack_budget_synced_with_batch_capstone():
-    """The streaming planning snapshot duplicates the batch capstone's
-    pack budget literal to avoid an import cycle — pin them equal."""
-    from postgres_cdc_example_spark.queries.windows import PIPE_PACK_TOKENS
-    from postgres_cdc_example_spark.streaming.curation import (
-        PLAN_PACK_TOKENS,
-    )
-
-    assert PLAN_PACK_TOKENS == PIPE_PACK_TOKENS
-
-
-def test_planning_snapshot_restart_equivalent_to_batch(
-    spark, sf_dir, tmp_path
-):
-    """r11 verdict #5: the streaming capstone's planning snapshot
-    (per-source mixture shares + temperature keep-ratios + bucketed
-    next-fit pack plan) over two file drops WITH a pipeline restart
-    between them must equal the batch formulas computed over the same
-    admitted corpus: a pure-Python integer/IEEE mirror for shares and
-    the pack plan, and the REGISTERED mixture_temperature_resample
-    member (run on a mini documents table of exactly the admitted docs)
-    for the keep-ratio — proving the bounded state loses nothing across
-    the restart and the stream's plan is the batch plan."""
-    import hashlib
-    import math
-
-    from postgres_cdc_example_spark.operators import dedup
-    from postgres_cdc_example_spark.queries import REGISTRY
-    from postgres_cdc_example_spark.streaming.curation import (
-        PLAN_PACK_TOKENS,
-    )
-    from tests.test_round11 import _mini, _stage_single_parquet
-    import postgres_cdc_example_spark.queries as q
-
-    q.queries()
-    from postgres_cdc_example_spark.operators.text import quality_score
-    from postgres_cdc_example_spark.streaming.curation import QUALITY_GATE
-
-    # quality-passing docs from EVERY source (mixture needs >= 2 sources)
-    docs_t = load_table(spark, "documents", sf_dir)
-    qd = (
-        docs_t.join(quality_score(docs_t).select("doc_id", "quality"),
-                    "doc_id")
-        .filter(F.col("quality") >= QUALITY_GATE)
-        .select(
-            "doc_id", "text", "lang", "source", "n_chars",
-            F.size(dedup.word_tokens(F.col("text"))).cast("long")
-            .alias("n_toks"),
-        )
-        .orderBy("doc_id")
-        .limit(40)
-        .collect()
-    )
-    assert len({r.source for r in qd}) >= 2
-
-    budget = 150  # binds per source on this slice (~43-token docs)
-    src = str(tmp_path / "plan_src"); os.makedirs(src)
-    store, ckpt = str(tmp_path / "plan_store"), str(tmp_path / "plan_ckpt")
-    half = len(qd) // 2
-    with open(os.path.join(src, "c1.txt"), "w") as f:
-        f.write("\n".join(_lines(qd[:half])))
-    from postgres_cdc_example_spark.streaming.curation import (
-        StreamingCurationPipeline,
-    )
-
-    def drain():
-        p = StreamingCurationPipeline(
-            spark, src, store, ckpt, decontam_bitmap_words=None,
-            quota_tokens=budget,
-        )
-        qq = p.start(available_now=True)
-        qq.awaitTermination()
-        return p
-
-    drain()
-    with open(os.path.join(src, "c2.txt"), "w") as f:
-        f.write("\n".join(_lines(qd[half:], seq0=100)))
-    pipe = drain()  # RESTART: fresh pipeline object, same stores
-
-    # ---- batch mirror over the same corpus ------------------------------
-    cum: dict[str, int] = {}
-    admitted = []
-    for r in qd:  # already in ascending doc_id order
-        c = cum.get(r.source, 0) + r.n_toks
-        cum[r.source] = c
-        if c <= budget:
-            admitted.append(r)
-    assert admitted and len(admitted) < len(qd), "budget must bind"
-    mix: dict[str, tuple[int, int]] = {}
-    for r in admitted:
-        n, t = mix.get(r.source, (0, 0))
-        mix[r.source] = (n + 1, t + r.n_toks)
-    tot_t = sum(t for _, t in mix.values())
-    ws = sum(math.floor(math.sqrt(float(t)) * 1e6) for _, t in mix.values())
-    expect = {}
-    for s, (n, t) in mix.items():
-        w = math.floor(math.sqrt(float(t)) * 1e6)
-        keep = min(
-            1_000_000,
-            math.floor((float(tot_t) * float(w)) * 1e6 / (float(ws) * float(t))),
-        )
-        expect[s] = (n, t, t * 1_000_000 // tot_t, keep)
-    # bucketed next-fit pack plan, the capstone stage-7 formulas
-    packs: dict[str, list[int]] = {}
-    bcum: dict[str, int] = {}
-    for r in admitted:
-        b = hashlib.md5(str(r.doc_id).encode()).hexdigest()[0]
-        c0 = bcum.get(b, 0)
-        pid = (c0) // PLAN_PACK_TOKENS
-        packs.setdefault(b, [])
-        if pid not in packs[b]:
-            packs[b].append(pid)
-        bcum[b] = c0 + r.n_toks
-    n_packs = sum(len(v) for v in packs.values())
-
-    snap = {r.unit: r for r in pipe.planning_snapshot().collect()}
-    for s, (n, t, share, keep) in expect.items():
-        row = snap[s]
-        assert (row.n_units, row.total_tokens) == (n, t), s
-        assert row.share_micro == share, s
-        assert row.keep_ratio_micro == keep, s
-    pk = snap["packs"]
-    assert pk.n_units == n_packs
-    assert pk.total_tokens == sum(t for _, t in mix.values())
-
-    # ---- the REGISTERED batch member agrees on the keep-ratio ----------
-    mini = _mini(sf_dir, tmp_path, "sf_plan_mini")
-    adm_df = spark.createDataFrame(
-        [(r.doc_id, r.text, r.lang, r.source, r.n_chars) for r in admitted],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    _stage_single_parquet(adm_df, tmp_path, mini, "documents", "plan_st")
-    member = REGISTRY["mixture_temperature_resample"].fn(spark, str(mini))
-    ratios = {
-        r.source: r.keep_ratio_micro
-        for r in member.select("source", "keep_ratio_micro").distinct()
-        .collect()
-    }
-    for s, (_, _, _, keep) in expect.items():
-        assert ratios[s] == keep, s
 
 
 def test_session_gap_curve_monotone_and_member_consistent(spark, sf_dir):

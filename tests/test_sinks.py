@@ -58,19 +58,23 @@ def test_files_are_sorted_within_partitions(spark, sf_dir, tmp_path):
 
 
 def test_state_store_vacuum_keeps_latest(spark, tmp_path):
+    """Retention: every commit drops the versions older than the previous
+    one, so the store holds at most 2 version directories, and a frame
+    resolved before a commit still collects after it."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from postgres_cdc_example_spark.streaming.state import VersionedStateStore
 
     schema = StructType([StructField("id", LongType(), True)])
-    store = VersionedStateStore(spark, str(tmp_path / "st"), schema)
-    for v in range(5):
-        store.commit(spark.range(v + 1).select(F.col("id")), version=v)
-    assert store.latest_version() == 4
-    removed = store.vacuum(keep_last=2)
-    assert removed == [0, 1, 2]
-    assert store.read().count() == 5  # latest version untouched
-    assert store.vacuum(keep_last=2) == []  # idempotent
+    store = VersionedStateStore(spark, str(tmp_path / "st"), {"t": schema})
+    for v in range(6):
+        before = store.read("t")  # resolved at version v - 1
+        store.commit({"t": spark.range(v + 1).select(F.col("id"))}, version=v)
+        assert before.count() == v  # its files survive the commit
+        dirs = sorted(n for n in os.listdir(tmp_path / "st") if n[0] == "v")
+        assert dirs == [f"v{u:08d}" for u in range(max(v - 1, 0), v + 1)]
+    assert store.latest_version() == 5
+    assert store.read("t").count() == 6
 
 
 def test_empty_state_store_read_has_no_partitions(spark, tmp_path):
@@ -79,7 +83,9 @@ def test_empty_state_store_read_has_no_partitions(spark, tmp_path):
     from postgres_cdc_example_spark.schemas import PERSON_SCHEMA
     from postgres_cdc_example_spark.streaming.state import VersionedStateStore
 
-    empty = VersionedStateStore(spark, str(tmp_path / "st"), PERSON_SCHEMA).read()
+    empty = VersionedStateStore(
+        spark, str(tmp_path / "st"), {"person": PERSON_SCHEMA}
+    ).read("person")
     assert empty.schema == PERSON_SCHEMA
     assert empty.rdd.getNumPartitions() == 0
     assert empty.count() == 0

@@ -166,78 +166,6 @@ def test_late_event_beyond_watermark_is_dropped(spark, tmp_path):
     )
 
 
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """transformWithStateInPandas: per-user totals accumulate across
-    micro-batches and RESTARTS (state in the checkpoint's RocksDB store),
-    exactly matching a batch recompute after each drain. SKIPS where the
-    TWS protocol's protobuf dependency is absent (this container) — the
-    operator raises NotImplementedError there by design."""
-    import datetime as dt
-
-    import pytest
-
-    from postgres_cdc_example_spark.streaming.stateful import running_totals_stream
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        df = spark.createDataFrame(
-            [], "event_id long, ts timestamp_ntz, user_id long, value double"
-        )
-        with pytest.raises(NotImplementedError):
-            running_totals_stream(df)
-        pytest.skip("google.protobuf absent: TWS gated, gate verified")
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        schema = "event_id long, ts timestamp_ntz, user_id long, value double"
-        src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-
-        def rows(batch, ids):
-            return [
-                (i, dt.datetime(2024, 1, 1, batch, i % 60), i % 3, float(i))
-                for i in ids
-            ]
-
-        first = spark.createDataFrame(rows(1, range(10)), schema)
-        first.coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema(first.schema).parquet(src)
-        emitted: list = []
-
-        def drain():
-            q = (
-                running_totals_stream(stream)
-                .writeStream.foreachBatch(lambda bdf, _b: emitted.extend(bdf.collect()))
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        drain()
-        latest = {r.user_id: (r.n_events, r.total_cents) for r in emitted}
-        assert latest == {
-            0: (4, 1800), 1: (3, 1200), 2: (3, 1500)
-        }  # ids 0..9 mod 3; cents = sum(i)*100
-
-        # restart with a second file: totals must CONTINUE, not reset
-        spark.createDataFrame(rows(2, range(10, 16)), schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        emitted.clear()
-        drain()
-        latest = {r.user_id: (r.n_events, r.total_cents) for r in emitted}
-        assert latest[0] == (6, 1800 + 2400)   # +12, +15
-        assert latest[1] == (5, 1200 + 2300)   # +10, +13
-        assert latest[2] == (5, 1500 + 2500)   # +11, +14
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_heavy_hitters_stream_exact_under_capacity(spark, sf_dir, tmp_path):
     """Fixture user cardinality fits the space-saving capacity, so the final
     snapshot must equal the exact batch top-10 per event type — run across
@@ -1271,317 +1199,6 @@ def test_schema_drift_stream_matches_batch_audit_across_restart(
     assert (
         schema_drift_audit(clean, "person", declared).count() == 0
     )
-
-
-def test_curation_pipeline_matches_batch_members_across_restart(
-    spark, sf_dir, tmp_path
-):
-    """The STREAMING curation capstone (r9 verdict #2; gates folded in for
-    r10 verdict #2): one foreachBatch pipeline chains good-rows-only
-    ingest -> schema-drift gate -> content dedup-at-ingest -> near-dup
-    candidate detection -> decontamination bloom gate -> quality gate ->
-    per-source token-quota gate -> per-stage totals in versioned keyed
-    state, each stage delegating to the registered member fns. Restarting
-    mid-stream (second file drop under the same checkpoint + stores) must
-    leave final totals, the survivor set, and the candidate-pair set
-    EXACTLY equal to the batch members composed over the same wire lines —
-    nothing lost, nothing double-counted, no stage recomputing another
-    stage's work."""
-    import os
-
-    from postgres_cdc_example_spark.operators import bloom, dedup
-    from postgres_cdc_example_spark.sources.changelog import (
-        decode_change_lines,
-        drift_split,
-        flatten_changes,
-        split_corrupt,
-    )
-    from postgres_cdc_example_spark.streaming.curation import (
-        DOC_COLUMNS,
-        DOC_DECLARED,
-        StreamingCurationPipeline,
-        document_change_json,
-    )
-    from postgres_cdc_example_spark.streaming.gates import (
-        decontamination_gate,
-        gram8_array,
-    )
-
-    docs = sorted(
-        load_table(spark, "documents", sf_dir).collect(), key=lambda r: r.doc_id
-    )[:120]
-    lines: list[str] = []
-    seq = 0
-    for r in docs:
-        seq += 1
-        row = {
-            "doc_id": r.doc_id,
-            "text": r.text,
-            "lang": r.lang,
-            "source": r.source,
-            "n_chars": r.n_chars,
-        }
-        extra = (
-            {"crawl_url": f"https://example.com/{r.doc_id}"}
-            if r.doc_id % 23 == 0
-            else None
-        )
-        omit = (
-            ("lang",) if (r.doc_id % 29 == 0 and r.doc_id % 23 != 0) else ()
-        )
-        lines.append(document_change_json(seq, row, extra=extra, omit=omit))
-    # planted EXACT duplicates (later ids, same text -> swallowed at ingest)
-    for i, r in enumerate(docs[5:10]):
-        seq += 1
-        lines.append(
-            document_change_json(
-                seq,
-                {
-                    "doc_id": 900000 + i,
-                    "text": r.text,
-                    "lang": r.lang,
-                    "source": "dup",
-                    "n_chars": r.n_chars,
-                },
-            )
-        )
-    # planted NEAR-duplicate (one word substituted -> band collision pair)
-    base = docs[12]
-    words = base.text.split()
-    words[len(words) // 2] = "substituted"
-    seq += 1
-    lines.append(
-        document_change_json(
-            seq,
-            {
-                "doc_id": 910000,
-                "text": " ".join(words),
-                "lang": base.lang,
-                "source": "near",
-                "n_chars": base.n_chars,
-            },
-        )
-    )
-    # malformed lines (good-rows-only ingest must dead-letter, not crash)
-    garbage = ["{not json", "[]", "totally plain text"]
-    all_lines = lines[:60] + garbage[:2] + lines[60:] + garbage[2:]
-
-    src, ckpt = str(tmp_path / "cur_src"), str(tmp_path / "cur_ckpt")
-    store = str(tmp_path / "cur_store")
-    os.makedirs(src)
-
-    # frozen benchmark bitmap: the grams of ONE corpus doc (docs[3] plays
-    # the held-out benchmark) — its stream twin must fall at the decontam
-    # gate; bloom false positives may drop more, identically in the batch
-    # composition below (same gate fn, same bitmap)
-    bench_grams = spark.createDataFrame(
-        [(docs[3].text,)], "text string"
-    ).select(F.explode(gram8_array(F.col("text"))).alias("g"))
-    bitmap = bloom.bitmap_from_grams(bench_grams)
-    budget = 300  # binds per source on this 120-doc slice (~6k quality tokens)
-
-    def drain():
-        p = StreamingCurationPipeline(
-            spark, src, store, ckpt,
-            decontam_bitmap_words=bitmap, quota_tokens=budget,
-        )
-        q = p.start(available_now=True)
-        q.awaitTermination()
-        return p
-
-    half = len(all_lines) // 2
-    with open(os.path.join(src, "chunk1.txt"), "w") as f:
-        f.write("\n".join(all_lines[:half]))
-    drain()
-    with open(os.path.join(src, "chunk2.txt"), "w") as f:
-        f.write("\n".join(all_lines[half:]))
-    pipe = drain()  # fresh pipeline object, same checkpoint + stores
-
-    # --- batch members composed over the SAME lines ----------------------
-    ldf = spark.createDataFrame([(ln,) for ln in all_lines], "value string")
-    decoded = decode_change_lines(ldf)
-    valid, corrupt = split_corrupt(decoded)
-    clean, drifted = drift_split(valid, "documents", DOC_DECLARED)
-    bdocs = flatten_changes(
-        clean, "documents", DOC_COLUMNS, key="doc_id", key_type="long"
-    ).select(
-        "doc_id",
-        "text",
-        F.size(dedup.word_tokens(F.col("text"))).cast("long").alias("n_toks"),
-    )
-    hashed = bdocs.select(
-        "doc_id", F.md5(dedup.normalized(F.col("text"))).alias("h"), "n_toks"
-    )
-    keepers = (
-        hashed.groupBy("h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .join(hashed.select("doc_id", "n_toks"), "doc_id")
-    )
-    want_keepers = {
-        (r.h, r.doc_id, r.n_toks) for r in keepers.collect()
-    }
-    bands = dedup.minhash_bands(
-        dedup.minhash_signatures(
-            dedup.shingle_rows(
-                keepers.select("doc_id").join(bdocs, "doc_id").select("doc_id", "text")
-            )
-        )
-    )
-    want_pairs = {
-        (r.doc_a, r.doc_b)
-        for r in bands.alias("x")
-        .join(bands.alias("y"), ["band_idx", "band_key"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .distinct()
-        .collect()
-    }
-    n_corrupt = corrupt.count()
-    n_drifted = drifted.count()
-    brow = bdocs.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("n_toks").alias("t")
-    ).collect()[0]
-    krow = keepers.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("n_toks").alias("t")
-    ).collect()[0]
-
-    got = {int(r.stage_no): r for r in pipe.totals().collect()}
-    assert set(got) == {0, 1, 2, 3, 4, 5, 6, 7, 8}
-    assert got[0].n_units == len(all_lines)
-    assert got[1].n_units == n_corrupt == len(garbage)
-    assert got[2].n_units == n_drifted
-    assert (got[3].n_units, got[3].total_tokens) == (int(brow.n), int(brow.t))
-    assert (got[4].n_units, got[4].total_tokens) == (int(krow.n), int(krow.t))
-    assert got[5].n_units == len(want_pairs)
-
-    # survivor set and candidate-pair set equal the batch members' exactly
-    assert {
-        (r.content_hash, r.keeper_id, r.n_toks)
-        for r in pipe.survivors().collect()
-    } == want_keepers
-    assert {
-        (r.doc_a, r.doc_b) for r in pipe.candidate_pairs().collect()
-    } == want_pairs
-
-    # stages 6-8: decontam gate -> quality gate -> quota rule, each the
-    # registered member composed over the keeper corpus
-    from postgres_cdc_example_spark.operators.text import quality_score
-    from postgres_cdc_example_spark.streaming.curation import QUALITY_GATE
-
-    kdocs = keepers.select("doc_id", "n_toks").join(
-        bdocs.select("doc_id", "text"), "doc_id"
-    )
-    # source column: re-derive from the decoded lines like the pipeline
-    ksrc = flatten_changes(
-        clean, "documents", DOC_COLUMNS, key="doc_id", key_type="long"
-    ).select("doc_id", "source")
-    dgate = decontamination_gate(kdocs, bitmap)
-    drow = dgate.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("n_toks").alias("t")
-    ).collect()[0]
-    assert (got[6].n_units, got[6].total_tokens) == (int(drow.n), int(drow.t))
-    assert got[6].n_units < got[4].n_units, "planted benchmark doc must fall"
-
-    qdocs = (
-        dgate.join(quality_score(dgate).select("doc_id", "quality"), "doc_id")
-        .filter(F.col("quality") >= QUALITY_GATE)
-        .select("doc_id", "n_toks")
-    )
-    qrow = qdocs.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("n_toks").alias("t")
-    ).collect()[0]
-    assert (got[7].n_units, got[7].total_tokens) == (int(qrow.n), int(qrow.t))
-    assert 0 < got[7].n_units <= got[6].n_units, "gate must bind, not erase"
-
-    # quota: the batch source_quota_admission rule (global per-source
-    # cumsum in doc_id order, admitted iff cum <= budget) over the
-    # quality survivors of the WHOLE replay
-    wq = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    adm = (
-        qdocs.join(ksrc, "doc_id")
-        .select("source", "doc_id", "n_toks", F.sum("n_toks").over(wq).alias("cum"))
-        .filter(F.col("cum") <= budget)
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_toks").alias("t"))
-        .collect()[0]
-    )
-    assert (got[8].n_units, got[8].total_tokens) == (int(adm.n), int(adm.t))
-    assert 0 < got[8].n_units < got[7].n_units, "quota must bind, not erase"
-
-    # and the quota STATE equals the batch per-source input-token totals
-    want_state = {
-        (r.source, r.t)
-        for r in qdocs.join(ksrc, "doc_id")
-        .groupBy("source")
-        .agg(F.sum("n_toks").cast("long").alias("t"))
-        .collect()
-    }
-    assert {
-        (r.source, r.cum_tokens) for r in pipe.quota_state().collect()
-    } == want_state
-
-    # non-vacuous: every stage actually exercised
-    assert n_drifted > 0, "drift injection must dead-letter some events"
-    assert got[4].n_units < got[3].n_units, "planted dups must be swallowed"
-    assert (base.doc_id, 910000) in want_pairs, "planted near-dup pair"
-
-
-def test_curation_pipeline_partial_commit_replay_heals(spark, sf_dir, tmp_path):
-    """Crash-consistency pin for the capstone's dependents-first commit
-    order: simulate a crash AFTER totals/pairs/bands committed but BEFORE
-    `seen` (the worst allowed interleaving — every other is a prefix of
-    it), then replay the same batch. The per-store version guards must
-    skip the committed stores, `seen` must recompute its delta from the
-    untouched pre-state and land identically, and nothing double-counts."""
-    import os
-
-    from postgres_cdc_example_spark.streaming.curation import (
-        StreamingCurationPipeline,
-        document_change_json,
-    )
-
-    docs = sorted(
-        load_table(spark, "documents", sf_dir).collect(), key=lambda r: r.doc_id
-    )[:20]
-    lines = [
-        document_change_json(
-            i + 1,
-            {
-                "doc_id": r.doc_id,
-                "text": r.text,
-                "lang": r.lang,
-                "source": r.source,
-                "n_chars": r.n_chars,
-            },
-        )
-        for i, r in enumerate(docs)
-    ]
-    store = str(tmp_path / "pc_store")
-    pipe = StreamingCurationPipeline(
-        spark, str(tmp_path / "unused_src"), store, str(tmp_path / "unused_ckpt")
-    )
-    bdf = spark.createDataFrame([(ln,) for ln in lines], "value string")
-    pipe._apply_batch(bdf, 0)
-    totals_before = sorted(tuple(r) for r in pipe.totals().collect())
-    seen_before = sorted(tuple(r) for r in pipe.survivors().collect())
-
-    # crash simulation: roll `seen` back to "never committed"
-    os.remove(os.path.join(store, "seen", "_LATEST"))
-    assert pipe.seen_store.latest_version() is None
-    pipe._apply_batch(bdf, 0)  # foreachBatch redelivery of the same batch
-
-    assert sorted(tuple(r) for r in pipe.totals().collect()) == totals_before
-    assert sorted(tuple(r) for r in pipe.survivors().collect()) == seen_before
-    assert pipe.seen_store.latest_version() == 1
-
-    # and a clean full redelivery (all stores committed) is a pure no-op
-    pipe._apply_batch(bdf, 0)
-    assert sorted(tuple(r) for r in pipe.totals().collect()) == totals_before
 
 
 def test_ivf_assign_stream_matches_batch_bucketing_across_restart(

@@ -317,8 +317,8 @@ def test_multi_table_stream_routes_to_separate_stores(spark, tmp_path):
         StructField("what", StringType(), True),
     ])
     stores = {
-        "person": VersionedStateStore(spark, str(tmp_path / "p"), person_schema),
-        "audit": VersionedStateStore(spark, str(tmp_path / "a"), audit_schema),
+        "person": VersionedStateStore(spark, str(tmp_path / "p"), {"person": person_schema}),
+        "audit": VersionedStateStore(spark, str(tmp_path / "a"), {"audit": audit_schema}),
     }
     tables = {
         "person": {"name": "string", "score": "long"},
@@ -329,12 +329,12 @@ def test_multi_table_stream_routes_to_separate_stores(spark, tmp_path):
         valid, _ = split_corrupt(decode_change_lines(batch_df))
         valid = valid.persist()  # shared decode: parse JSON once for all tables
         for t, changes in route_changes(valid, tables).items():
-            st = stores[t].read()
+            st = stores[t].read(t)
             new = apply_changes(
                 st, changes, key="id", seq="seq", action="action",
                 value_cols=list(tables[t]), created_col=None,
             )
-            stores[t].commit(new.select(*st.columns), version=batch_id + 1)
+            stores[t].commit({t: new.select(*st.columns)}, version=batch_id + 1)
         valid.unpersist()
 
     write_lines(src, "b0.jsonl", [
@@ -351,9 +351,9 @@ def test_multi_table_stream_routes_to_separate_stores(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    person = {(r.id, r.name, r.score) for r in stores["person"].read().collect()}
+    person = {(r.id, r.name, r.score) for r in stores["person"].read("person").collect()}
     assert person == {(1, "a2", 6)}
-    assert stores["audit"].read().count() == 0  # insert then delete
+    assert stores["audit"].read("audit").count() == 0  # insert then delete
 
 
 def test_bucketed_pipeline_matches_full_rewrite(spark, tmp_path):
@@ -427,6 +427,8 @@ def test_crash_before_latest_flip_replays_to_same_state(spark, tmp_path, monkeyp
     replay guard skip a batch whose rows were never written."""
     from pyspark.sql import DataFrameWriter
 
+    from postgres_cdc_example_spark.streaming import state as state_mod
+
     snapshot = person_batch(spark, 3, seed=7)
     lines = [
         person_change_json(1, "I", row=row(40, "n", 4)),
@@ -459,14 +461,14 @@ def test_crash_before_latest_flip_replays_to_same_state(spark, tmp_path, monkeyp
             if crash == "during the change write":
                 m.setattr(DataFrameWriter, "parquet", torn_write)
             else:
-                store_flip = pipe.store._flip
+                store_flip = state_mod._flip
 
                 def flip(path, value, store_flip=store_flip):
                     if path.endswith("_LATEST") and value == "1":
                         raise OSError("crash")
                     store_flip(path, value)
 
-                m.setattr(pipe.store, "_flip", flip)
+                m.setattr(state_mod, "_flip", flip)
             with pytest.raises(OSError, match="crash"):
                 pipe._apply_batch(batch, batch_id=0)
         assert pipe.store.latest_version() == 0, crash
