@@ -39,8 +39,6 @@ no extension points); these are the SURVEY.md §7.2-step-7 extension ops.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -393,11 +391,12 @@ def connected_components(
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component"))
 
 
-def _hex_nibble(h: Column, pos: int) -> Column:
-    """Value 0..15 of hex char ``pos`` (1-based) — ascii arithmetic, no
-    lookup tables, so the same expression runs in any SQL engine."""
-    c = F.ascii(F.substring(h, pos, 1))
-    return c - 48 - F.when(c >= 97, 39).otherwise(0)
+def _hex_nibble(h: str, pos: int) -> str:
+    """SQL for the value 0..15 of hex char ``pos`` (1-based) of ``h`` —
+    ascii arithmetic, no lookup tables, so the same expression runs in any
+    SQL engine."""
+    c = f"ascii(substring({h}, {pos}, 1))"
+    return f"({c} - 48 - CASE WHEN {c} >= 97 THEN 39 ELSE 0 END)"
 
 
 def simhash_buckets(
@@ -431,24 +430,22 @@ def simhash_buckets(
     # 1.20 s for this per-row form — and a 5× blowup (6.4 s in the full
     # bench) when the planner picked a shuffle join on the 31-value key
     # (extreme skew). The md5+nibble arithmetic is codegen-fused off the
-    # cached occurrence scan and is NOT the bottleneck; kept as is.
-    h = F.md5("tok")
-    sums = []
-    for b in range(SIMHASH_BITS):
-        nib = _hex_nibble(h, b // 4 + 1)
-        bit = F.floor(nib / F.lit(2 ** (b % 4))) % 2
-        sums.append(F.sum(bit * 2 - 1).alias(f"s{b}"))
+    # cached occurrence scan and is NOT the bottleneck; kept as is. The
+    # fold is written as SQL strings: built from Column calls, the same
+    # expressions took 1,606 py4j round trips and ~170 ms per build, against
+    # 99 and ~9 ms (4-core box, call-site capture off).
+    sums = [
+        F.expr(
+            f"sum(floor({_hex_nibble('md5(tok)', b // 4 + 1)} / {2 ** (b % 4)})"
+            f" % 2 * 2 - 1) AS s{b}"
+        )
+        for b in range(SIMHASH_BITS)
+    ]
     agg = toks.groupBy(id_col).agg(*sums)
-    simhash = reduce(
-        lambda x, y: x + y,
-        [
-            F.when(F.col(f"s{b}") >= 0, F.lit(1 << b).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            for b in range(SIMHASH_BITS)
-        ],
+    simhash = " + ".join(
+        f"CASE WHEN s{b} >= 0 THEN {1 << b}L ELSE 0L END" for b in range(SIMHASH_BITS)
     )
-    hashed = agg.select(F.col(id_col), simhash.alias("simhash"))
+    hashed = agg.select(F.col(id_col), F.expr(f"{simhash} AS simhash"))
     return hashed.withColumn(
         "n_bucket", F.count(F.lit(1)).over(Window.partitionBy("simhash"))
     )

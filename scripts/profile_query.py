@@ -5,10 +5,12 @@ For each named query: build the shared layers (untimed, as bench.py does),
 warm at sf0.001, then at $SPARK_GRAFT_SF_DIR measure best-of-N wall time
 split into DATAFRAME BUILD (python construction), PLANNING (analysis +
 optimization + physical planning, forced via executedPlan) and EXECUTION
-(noop sink), plus the number of Spark jobs each execution triggers (driver
-actions inside a query function — collect/count for literals — show up
-here as extra jobs serialized before the final one). Optionally dumps
-.explain("formatted") to plans/r12/<name>_<tag>.txt.
+(noop sink). It counts Spark jobs in two parts: ``build_jobs`` are the jobs
+the query function runs while it builds the DataFrame (schema inference on
+an uncached read, driver actions such as collect/count for literals or an
+eager localCheckpoint), ``exec_jobs`` those the execution runs. The job
+counters are read after the listener bus drains, outside the timed phases.
+Optionally dumps .explain("formatted") to plans/r12/<name>_<tag>.txt.
 
 Usage:
   python scripts/profile_query.py [--plans TAG] [--n N] name [name ...]
@@ -63,31 +65,40 @@ def main() -> None:
     print(f"# layers {bench._build_layers(spark)}", file=sys.stderr, flush=True)
 
     tracker = spark.sparkContext.statusTracker()
+    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def job_ids() -> set[int]:
+        listener_bus.waitUntilEmpty()  # the tracker is fed by the bus
+        return set(tracker.getJobIdsForGroup(None))
+
     for name in names:
         spark.sparkContext.setJobDescription(f"profile:{name}")
         best = None
         for run in range(n_runs):
+            jobs_start = job_ids()
             t0 = time.perf_counter()
             df = registry[name](spark, SF_DIR)
+            build = time.perf_counter() - t0
+            jobs_built = job_ids()
             t1 = time.perf_counter()
-            jobs_before = tracker.getJobIdsForGroup(None)
             # force full planning without execution
             df._jdf.queryExecution().executedPlan()
             t2 = time.perf_counter()
             bench._force(df)
             t3 = time.perf_counter()
-            jobs_after = tracker.getJobIdsForGroup(None)
+            jobs_end = job_ids()
             row = {
-                "build": t1 - t0,
+                "build": build,
                 "plan": t2 - t1,
                 "exec": t3 - t2,
-                "total": t3 - t0,
-                "jobs": len(set(jobs_after) - set(jobs_before)),
+                "total": build + t3 - t1,
+                "build_jobs": len(jobs_built - jobs_start),
+                "exec_jobs": len(jobs_end - jobs_built),
             }
             print(
                 f"# {name} run{run}: build={row['build']:.3f} plan={row['plan']:.3f}"
                 f" exec={row['exec']:.3f} total={row['total']:.3f}"
-                f" jobs={row['jobs']}",
+                f" build_jobs={row['build_jobs']} exec_jobs={row['exec_jobs']}",
                 flush=True,
             )
             if best is None or row["total"] < best["total"]:
@@ -95,7 +106,8 @@ def main() -> None:
         print(
             f"{name}: best total={best['total']:.3f}"
             f" (build={best['build']:.3f} plan={best['plan']:.3f}"
-            f" exec={best['exec']:.3f} jobs={best['jobs']})",
+            f" exec={best['exec']:.3f} build_jobs={best['build_jobs']}"
+            f" exec_jobs={best['exec_jobs']})",
             flush=True,
         )
         if plans_tag:
