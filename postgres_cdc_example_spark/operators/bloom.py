@@ -42,13 +42,13 @@ def words_from_positions(positions) -> list[int]:
     return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
 
 
-def bitmap_from_grams(grams: DataFrame, col: str = "g") -> list[int]:
-    """Collect the distinct bloom positions of ``grams[col]`` (bounded by M
+def bitmap_from_grams(grams: DataFrame) -> list[int]:
+    """Collect the distinct bloom positions of ``grams.g`` (bounded by M
     rows BY CONSTRUCTION) and fold them into the literal-array shape."""
     prows = (
         grams.select(
             F.explode(
-                F.array(*[position(k, F.col(col)) for k in range(BLOOM_K)])
+                F.array(*[position(k, F.col("g")) for k in range(BLOOM_K)])
             ).alias("pos")
         )
         .distinct()

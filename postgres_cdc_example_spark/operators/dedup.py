@@ -60,6 +60,7 @@ def normalized(text: Column) -> Column:
 
 
 def word_tokens(text: Column) -> Column:
+    """Whitespace tokenization with empty-token filtering."""
     return F.filter(F.split(F.trim(F.lower(text)), r"\s+"), lambda t: t != "")
 
 
@@ -79,64 +80,65 @@ def _spread(df: DataFrame, key: str) -> DataFrame:
     return df.repartition(target, F.col(key))
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup via hash-groupBy: one shuffle on the content hash (near
     uniform — md5 — so never skewed). ``keeper_id`` = min id of the group,
     i.e. deterministic `dropDuplicates` with an auditable survivor choice."""
     return (
-        df.select(F.md5(normalized(F.col(text_col))).alias("content_hash"), F.col(id_col))
+        df.select(F.md5(normalized(F.col("text"))).alias("content_hash"), F.col("doc_id"))
         .groupBy("content_hash")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
         )
     )
 
 
-def shingle_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = SHINGLE_CHARS
-) -> DataFrame:
-    """Distinct k-char shingles as ROWS ``(id, s)`` — the codegen-friendly
-    layout every minhash stage consumes. One narrow explode (no shuffle) +
-    one distinct (shuffle with map-side partial agg)."""
-    normed = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col), normalized(F.col(text_col)).alias("nm")
+def shingle_rows(df: DataFrame) -> DataFrame:
+    """Distinct ``SHINGLE_CHARS``-char shingles as ROWS ``(id, s)`` — the
+    codegen-friendly layout every minhash stage consumes. One narrow explode
+    (no shuffle) + one distinct (shuffle with map-side partial agg)."""
+    normed = _spread(df.select(F.col("doc_id"), F.col("text")), "doc_id").select(
+        F.col("doc_id"), normalized(F.col("text")).alias("nm")
     )
-    n_sh = F.greatest(F.length("nm") - (k - 1), F.lit(1))
+    n_sh = F.greatest(F.length("nm") - (SHINGLE_CHARS - 1), F.lit(1))
     return (
         normed.select(
-            F.col(id_col), F.col("nm"), F.explode(F.sequence(F.lit(1), n_sh)).alias("i")
+            F.col("doc_id"), F.col("nm"), F.explode(F.sequence(F.lit(1), n_sh)).alias("i")
         )
-        .select(F.col(id_col), F.col("nm").substr(F.col("i"), F.lit(k)).alias("s"))
+        .select(
+            F.col("doc_id"), F.col("nm").substr(F.col("i"), F.lit(SHINGLE_CHARS)).alias("s")
+        )
         .distinct()
     )
 
 
-def minhash_signatures(
-    sh: DataFrame, id_col: str = "doc_id", k: int = NUM_HASHES
-) -> DataFrame:
-    """k min-hashes per doc: min over shingle rows of md5 salted with the
-    hash index. 16 md5 projections per row stay inside whole-stage codegen;
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """``NUM_HASHES`` min-hashes per doc: min over shingle rows of md5 salted
+    with the hash index. 16 md5 projections per row stay inside whole-stage codegen;
     the min-aggregate combines map-side, so the shuffle carries one 16-hash
     row per doc per input partition. Salted-md5 stands in for k independent
     permutations; min over lowercase hex is portable to any engine."""
     hashed = sh.select(
-        F.col(id_col),
-        *[F.md5(F.concat(F.lit(f"{i}:"), F.col("s"))).alias(f"h{i}") for i in range(k)],
+        F.col("doc_id"),
+        *[
+            F.md5(F.concat(F.lit(f"{i}:"), F.col("s"))).alias(f"h{i}")
+            for i in range(NUM_HASHES)
+        ],
     )
-    return hashed.groupBy(id_col).agg(
-        *[F.min(f"h{i}").alias(f"mh{i}") for i in range(k)]
+    return hashed.groupBy("doc_id").agg(
+        *[F.min(f"h{i}").alias(f"mh{i}") for i in range(NUM_HASHES)]
     )
 
 
-def minhash_bands(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def minhash_bands(sig: DataFrame) -> DataFrame:
     """LSH band keys from a minhash signature table: ``NUM_BANDS`` small
     rows per doc, ``band_key`` = md5 over the band's hash slice. The band
     table is what both same-set pair discovery and delta-vs-corpus
     incremental dedup join on."""
     rows = NUM_HASHES // NUM_BANDS
     return sig.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array(
                 *[
@@ -152,12 +154,10 @@ def minhash_bands(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 ]
             )
         ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_key")
+    ).select("doc_id", "band.band_idx", "band.band_key")
 
 
-def lsh_candidate_pairs(
-    sh: DataFrame, id_col: str = "doc_id", bands: DataFrame | None = None
-) -> DataFrame:
+def lsh_candidate_pairs(sh: DataFrame, bands: DataFrame | None = None) -> DataFrame:
     """Band-collision candidate pairs (the LSH *discovery* stage, before
     exact verification): minhash the shingle rows, explode band keys, and
     self-join on ``(band_idx, band_key)`` — only true bucket collisions
@@ -168,12 +168,16 @@ def lsh_candidate_pairs(
     layer's dominant cost and is shared by every LSH consumer in a
     session (the same reuse argument as the ``shingles`` parameter)."""
     if bands is None:
-        bands = minhash_bands(minhash_signatures(sh, id_col), id_col)
+        bands = minhash_bands(minhash_signatures(sh))
     ba = bands.select(
-        F.col(id_col).alias("doc_a"), F.col("band_idx").alias("bi"), F.col("band_key").alias("bk")
+        F.col("doc_id").alias("doc_a"),
+        F.col("band_idx").alias("bi"),
+        F.col("band_key").alias("bk"),
     )
     bb = bands.select(
-        F.col(id_col).alias("doc_b"), F.col("band_idx").alias("bi2"), F.col("band_key").alias("bk2")
+        F.col("doc_id").alias("doc_b"),
+        F.col("band_idx").alias("bi2"),
+        F.col("band_key").alias("bk2"),
     )
     return (
         ba.join(
@@ -189,8 +193,6 @@ def lsh_candidate_pairs(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.5,
     shingles: DataFrame | None = None,
     bands: DataFrame | None = None,
@@ -219,9 +221,9 @@ def minhash_lsh_pairs(
     sh = (
         shingles
         if shingles is not None
-        else ngram_rows(df, text_col, id_col)
+        else ngram_rows(df)
     ).withColumnRenamed("g", "s")
-    cand = lsh_candidate_pairs(sh, id_col, bands=bands)
+    cand = lsh_candidate_pairs(sh, bands=bands)
     if not cand.isStreaming:
         cand = cand.localCheckpoint(eager=False)
 
@@ -252,19 +254,19 @@ def minhash_lsh_pairs(
     # measured 0.43 -> 0.82 s on dedup_minhash_lsh — the checkpoint is
     # the only shape whose id-set derivation costs no re-execution.
     cand_ids = (
-        cand.select(F.col("doc_a").alias(id_col))
-        .unionByName(cand.select(F.col("doc_b").alias(id_col)))
+        cand.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
     arrs = (
-        sh.join(cand_ids, id_col, "left_semi")
-        .groupBy(id_col)
+        sh.join(cand_ids, "doc_id", "left_semi")
+        .groupBy("doc_id")
         .agg(F.collect_list("s").alias("ss"), F.count(F.lit(1)).alias("sz"))
     )
     scored = (
         cand.join(
             arrs.select(
-                F.col(id_col).alias("doc_a"),
+                F.col("doc_id").alias("doc_a"),
                 F.col("ss").alias("ss_a"),
                 F.col("sz").alias("size_a"),
             ),
@@ -272,7 +274,7 @@ def minhash_lsh_pairs(
         )
         .join(
             arrs.select(
-                F.col(id_col).alias("doc_b"),
+                F.col("doc_id").alias("doc_b"),
                 F.col("ss").alias("ss_b"),
                 F.col("sz").alias("size_b"),
             ),
@@ -301,11 +303,7 @@ DRIVER_CC_THRESHOLD = 100_000  # pairs; below this, union-find on the driver
 
 
 def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 25,
-    driver_threshold: int = DRIVER_CC_THRESHOLD,
+    pairs: DataFrame, driver_threshold: int = DRIVER_CC_THRESHOLD
 ) -> DataFrame:
     """Group near-dup PAIRS into duplicate CLUSTERS: connected components by
     min-label propagation. Returns ``(doc_id, component)`` where ``component``
@@ -324,7 +322,7 @@ def connected_components(
     # below reads it twice, the size/label joins more — without this the
     # upstream pair-discovery pipeline (e.g. the whole MinHash+LSH plan)
     # re-executes per branch
-    pairs = pairs.select(a_col, b_col).localCheckpoint()
+    pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
     n_pairs = pairs.count()
     if n_pairs <= driver_threshold:
         # LSH shrinks the pair graph by orders of magnitude, so the common
@@ -353,11 +351,11 @@ def connected_components(
                 parent[hi] = lo
         rows = [(x, find(x)) for x in parent]
         return pairs.sparkSession.createDataFrame(
-            rows, f"doc_id {pairs.schema[a_col].dataType.simpleString()}, "
-                  f"component {pairs.schema[a_col].dataType.simpleString()}"
+            rows, f"doc_id {pairs.schema['doc_a'].dataType.simpleString()}, "
+                  f"component {pairs.schema['doc_a'].dataType.simpleString()}"
         )
-    fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    rev = pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    rev = pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     edges = fwd.union(rev).persist()
     # localCheckpoint (not persist) each round: iterative self-reference
     # otherwise DOUBLES the logical plan per iteration — by round ~10 the
@@ -369,7 +367,7 @@ def connected_components(
         .select("id", F.col("id").alias("label"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(25):
         neighbor = edges.join(
             labels.withColumnRenamed("id", "src"), "src"
         ).select(F.col("dst").alias("id"), "label")
@@ -399,12 +397,7 @@ def _hex_nibble(h: str, pos: int) -> str:
     return f"({c} - 48 - CASE WHEN {c} >= 97 THEN 39 ELSE 0 END)"
 
 
-def simhash_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    tokens: DataFrame | None = None,
-) -> DataFrame:
+def simhash_buckets(df: DataFrame, tokens: DataFrame | None = None) -> DataFrame:
     """32-bit SimHash per doc + bucket size (docs sharing the hash).
 
     Frequency-weighted: every token occurrence votes ±1 on each bit of its
@@ -419,8 +412,8 @@ def simhash_buckets(
     toks = (
         tokens
         if tokens is not None
-        else _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-            F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("tok")
+        else _spread(df.select(F.col("doc_id"), F.col("text")), "doc_id").select(
+            F.col("doc_id"), F.explode(word_tokens(F.col("text"))).alias("tok")
         )
     )
     # NOTE (r13, measured, rejected): hashing once per DISTINCT token into
@@ -441,23 +434,23 @@ def simhash_buckets(
         )
         for b in range(SIMHASH_BITS)
     ]
-    agg = toks.groupBy(id_col).agg(*sums)
+    agg = toks.groupBy("doc_id").agg(*sums)
     simhash = " + ".join(
         f"CASE WHEN s{b} >= 0 THEN {1 << b}L ELSE 0L END" for b in range(SIMHASH_BITS)
     )
-    hashed = agg.select(F.col(id_col), F.expr(f"{simhash} AS simhash"))
+    hashed = agg.select(F.col("doc_id"), F.expr(f"{simhash} AS simhash"))
     return hashed.withColumn(
         "n_bucket", F.count(F.lit(1)).over(Window.partitionBy("simhash"))
     )
 
 
 def ngram_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = NGRAM_WORDS
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Distinct word n-grams as ROWS ``(id, g)`` via posexplode + lead()
     windows — fully codegen (no array lambdas). Tail rule matches the
-    list-index oracle: a document shorter than ``n`` tokens yields exactly
-    one short gram (its whole token sequence). A ZERO-token document
+    list-index oracle: a document shorter than ``NGRAM_WORDS`` tokens yields
+    exactly one short gram (its whole token sequence). A ZERO-token document
     (empty/whitespace-only) yields no rows at all and therefore never
     enters the minhash/Jaccard universe — deliberate: Jaccard over empty
     sets is 0/0, and empty-content duplicates are exactly what
@@ -469,11 +462,11 @@ def ngram_rows(
     leads = toks.select(
         F.col(id_col),
         F.col("pos"),
-        *[F.lead("tok", j).over(w).alias(f"t{j}") for j in range(n)],
+        *[F.lead("tok", j).over(w).alias(f"t{j}") for j in range(NGRAM_WORDS)],
     )
-    gram = F.concat_ws(" ", *[F.col(f"t{j}") for j in range(n)])
+    gram = F.concat_ws(" ", *[F.col(f"t{j}") for j in range(NGRAM_WORDS)])
     return (
-        leads.filter(F.col(f"t{n - 1}").isNotNull() | (F.col("pos") == 0))
+        leads.filter(F.col(f"t{NGRAM_WORDS - 1}").isNotNull() | (F.col("pos") == 0))
         .select(F.col(id_col), gram.alias("g"))
         .distinct()
     )
@@ -529,57 +522,46 @@ SUBSTR_RUN_TOKENS = 20  # sliding-run width (tokens); see exact_substring_spans
 MAX_RUN_DF = 64  # hot-gram occurrence cutoff for the span inverted index
 
 
-def positional_gram_rows(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = SUBSTR_RUN_TOKENS,
-) -> DataFrame:
+def positional_gram_rows(df: DataFrame) -> DataFrame:
     """POSITIONAL word n-grams ``(id, pos, g)`` — unlike :func:`ngram_rows`
     these are NOT distinct and carry the 1-based token offset, because
     exact-substring dedup needs every occurrence at its position so adjacent
     matches can merge into maximal spans. Only complete windows are emitted
-    (a doc shorter than ``n`` tokens yields no rows — there is no run of
-    length ``n`` to share). One explode, zero shuffles: the gram is a
+    (a doc shorter than ``SUBSTR_RUN_TOKENS`` tokens yields no rows — there
+    is no run of that length to share). One explode, zero shuffles: the gram is a
     ``slice``+``concat_ws`` projection over the token array (plain array
     built-ins, not higher-order lambdas — stays codegen), avoiding the
     doc_id-window shuffle the lead() formulation would add."""
-    toks = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col), word_tokens(F.col(text_col)).alias("tk")
+    toks = _spread(df.select(F.col("doc_id"), F.col("text")), "doc_id").select(
+        F.col("doc_id"), word_tokens(F.col("text")).alias("tk")
     )
-    n_grams = F.size("tk") - (n - 1)
+    n_grams = F.size("tk") - (SUBSTR_RUN_TOKENS - 1)
     return (
-        toks.filter(F.size("tk") >= n)
+        toks.filter(F.size("tk") >= SUBSTR_RUN_TOKENS)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("tk"),
             F.explode(F.sequence(F.lit(1), n_grams)).alias("pos"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("pos").cast("long").alias("pos"),
-            F.concat_ws(" ", F.slice(F.col("tk"), F.col("pos").cast("int"), n)).alias("g"),
+            F.concat_ws(
+                " ", F.slice(F.col("tk"), F.col("pos").cast("int"), SUBSTR_RUN_TOKENS)
+            ).alias("g"),
         )
     )
 
 
-def exact_substring_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = SUBSTR_RUN_TOKENS,
-    max_df: int = MAX_RUN_DF,
-    grams: DataFrame | None = None,
-    delta_min_id: int | None = None,
-) -> DataFrame:
+def exact_substring_spans(df: DataFrame, delta_min_id: int | None = None) -> DataFrame:
     """Exact-substring dedup (the suffix-array family, relationally): maximal
-    shared token runs of >= ``n`` tokens per doc pair — the standard
+    shared token runs of >= ``SUBSTR_RUN_TOKENS`` tokens per doc pair — the standard
     complement to document-level MinHash (near-identical docs are caught by
     LSH; long verbatim passages inside otherwise-different docs are caught
     here, the shape suffix-array dedup targets on web corpora).
 
     Relational formulation instead of a distributed suffix array: sliding
-    positional ``n``-grams -> hot-gram cutoff (grams occurring > ``max_df``
+    positional n-grams -> hot-gram cutoff (grams occurring > ``MAX_RUN_DF``
     times are boilerplate — dropped before the self-join, killing the
     quadratic hot-key blowup exactly like :func:`ngram_jaccard_pairs`) ->
     inverted-index equi-join on the gram (shuffle keyed on gram text — never
@@ -587,14 +569,11 @@ def exact_substring_spans(
     consecutive ``pa`` belong to one maximal run, grouped by the classic
     ``pos - row_number()`` gaps-and-islands key. Returns one row per maximal
     span: ``(doc_a, doc_b, a_start, b_start, run_tokens)`` with
-    ``run_tokens = n_grams_in_run + n - 1``.
+    ``run_tokens = n_grams_in_run + SUBSTR_RUN_TOKENS - 1``.
 
-    ``n`` = 20 here (fixture docs are 10-100 tokens); production web-corpus
-    runs use ~50-token windows — the plan is width-independent.
-
-    ``grams`` lets callers pass a precomputed (persisted) positional-gram
-    layer — the same share-the-derived-table pattern as
-    ``minhash_lsh_pairs(shingles=...)``.
+    ``SUBSTR_RUN_TOKENS`` = 20 here (fixture docs are 10-100 tokens);
+    production web-corpus runs use ~50-token windows — the plan is
+    width-independent.
 
     ``delta_min_id`` is the INCREMENTAL arm: only pairs whose doc_b (the
     later document) has id >= the threshold are produced — the per-batch
@@ -609,21 +588,21 @@ def exact_substring_spans(
     filtered to doc_b >= threshold — no drift between the batch and
     incremental answers.
     """
-    g = grams if grams is not None else positional_gram_rows(df, text_col, id_col, n)
+    g = positional_gram_rows(df)
     rare = g.groupBy("g").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= max_df
+        F.col("df") <= MAX_RUN_DF
     )
     kept = g.join(rare.select("g"), "g")
     a = kept.select(
-        F.col(id_col).alias("doc_a"), F.col("pos").alias("pa"), F.col("g").alias("ga")
+        F.col("doc_id").alias("doc_a"), F.col("pos").alias("pa"), F.col("g").alias("ga")
     )
     b_src = (
-        kept.filter(F.col(id_col) >= delta_min_id)
+        kept.filter(F.col("doc_id") >= delta_min_id)
         if delta_min_id is not None
         else kept
     )
     b = b_src.select(
-        F.col(id_col).alias("doc_b"), F.col("pos").alias("pb"), F.col("g").alias("gb")
+        F.col("doc_id").alias("doc_b"), F.col("pos").alias("pb"), F.col("g").alias("gb")
     )
     m = a.join(
         b, (F.col("ga") == F.col("gb")) & (F.col("doc_a") < F.col("doc_b"))
@@ -642,21 +621,14 @@ def exact_substring_spans(
             "doc_b",
             "a_start",
             "b_start",
-            (F.col("n_grams") + F.lit(n - 1)).alias("run_tokens"),
+            (F.col("n_grams") + F.lit(SUBSTR_RUN_TOKENS - 1)).alias("run_tokens"),
         )
     )
 
 
-def substring_removal(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = SUBSTR_RUN_TOKENS,
-    max_df: int = MAX_RUN_DF,
-    grams: DataFrame | None = None,
-) -> DataFrame:
+def substring_removal(df: DataFrame) -> DataFrame:
     """The transformation the suffix-array dedup family actually ships:
-    remove every duplicated >= ``n``-token span from the LATER document
+    remove every duplicated >= ``SUBSTR_RUN_TOKENS``-token span from the LATER document
     (higher id) in one pass, keeping the first occurrence intact — per-doc
     audit columns (token counts before/after, spans hit) plus the md5 of
     the cleaned token stream so the rewrite itself is oracle-checkable.
@@ -668,7 +640,7 @@ def substring_removal(
     (no cascade): a doc's spans are computed against the ORIGINAL corpus,
     matching the oracle exactly; production reruns the pass to fixpoint if
     desired. All joins are keyed on (doc_id, pos) — never doc x doc."""
-    spans = exact_substring_spans(df, text_col, id_col, n, max_df, grams=grams)
+    spans = exact_substring_spans(df)
     # r13 (guide §5): the span table feeds TWO consumers below (covered
     # positions and the per-doc span count) — without the checkpoint the
     # whole gram/self-join/island pipeline executes twice per run. Spans
@@ -678,17 +650,17 @@ def substring_removal(
     if not spans.isStreaming:
         spans = spans.localCheckpoint(eager=False)
     covered = spans.select(
-        F.col("doc_b").alias(id_col),
+        F.col("doc_b").alias("doc_id"),
         F.explode(
             F.sequence(F.col("b_start"), F.col("b_start") + F.col("run_tokens") - 1)
         ).alias("pos"),
     ).distinct()
-    toks = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col),
-        F.posexplode(word_tokens(F.col(text_col))).alias("pos0", "tok"),
-    ).select(id_col, (F.col("pos0") + 1).cast("long").alias("pos"), "tok")
-    survivors = toks.join(covered, [id_col, "pos"], "left_anti")
-    cleaned = survivors.groupBy(id_col).agg(
+    toks = _spread(df.select(F.col("doc_id"), F.col("text")), "doc_id").select(
+        F.col("doc_id"),
+        F.posexplode(word_tokens(F.col("text"))).alias("pos0", "tok"),
+    ).select("doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "tok")
+    survivors = toks.join(covered, ["doc_id", "pos"], "left_anti")
+    cleaned = survivors.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens_after"),
         F.md5(
             F.concat_ws(
@@ -700,19 +672,19 @@ def substring_removal(
             )
         ).alias("cleaned_hash"),
     )
-    n_spans = spans.groupBy(F.col("doc_b").alias(id_col)).agg(
+    n_spans = spans.groupBy(F.col("doc_b").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("n_spans")
     )
     base = df.select(
-        F.col(id_col),
-        F.size(word_tokens(F.col(text_col))).cast("long").alias("n_tokens_before"),
+        F.col("doc_id"),
+        F.size(word_tokens(F.col("text"))).cast("long").alias("n_tokens_before"),
     )
     empty_hash = F.md5(F.lit(""))
     return (
-        base.join(cleaned, id_col, "left")
-        .join(n_spans, id_col, "left")
+        base.join(cleaned, "doc_id", "left")
+        .join(n_spans, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "n_tokens_before",
             F.coalesce(F.col("n_tokens_after"), F.lit(0)).cast("long").alias(
                 "n_tokens_after"
@@ -730,8 +702,6 @@ def substring_removal(
 def minhash_lsh_pairs_between(
     delta_sh: DataFrame,
     corpus_sh: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
     broadcast_max_rows: int | None = hints.BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Incremental (delta-vs-corpus) near-dup discovery — the production
@@ -745,7 +715,7 @@ def minhash_lsh_pairs_between(
     enumerated — per-batch cost is O(delta bands + collisions), independent
     of corpus pair count. Returns
     ``(new_id, corpus_id, common, size_new, size_corpus, jac_micro)`` at
-    ``jac_micro >= threshold``.
+    ``jac_micro >= 500_000``.
 
     At 100 TB the corpus band table is the thing you PERSIST between
     batches (bucketed by band_key); each ingest batch then runs this join
@@ -753,11 +723,11 @@ def minhash_lsh_pairs_between(
     """
     ds = delta_sh.withColumnRenamed("g", "s")
     cs = corpus_sh.withColumnRenamed("g", "s")
-    db = minhash_bands(minhash_signatures(ds, id_col), id_col).select(
-        F.col(id_col).alias("new_id"), "band_idx", "band_key"
+    db = minhash_bands(minhash_signatures(ds)).select(
+        F.col("doc_id").alias("new_id"), "band_idx", "band_key"
     )
-    cb = minhash_bands(minhash_signatures(cs, id_col), id_col).select(
-        F.col(id_col).alias("corpus_id"), "band_idx", "band_key"
+    cb = minhash_bands(minhash_signatures(cs)).select(
+        F.col("doc_id").alias("corpus_id"), "band_idx", "band_key"
     )
     # Two-stage gate evidence (band rows = NUM_BANDS × delta docs):
     # 1. cheap: an early-exit LIMIT probe of raw shingle rows — docs ≤
@@ -774,7 +744,7 @@ def minhash_lsh_pairs_between(
         if n_sh <= cap:
             bound = n_sh * NUM_BANDS  # rows ≥ docs ⇒ bound ≥ band rows
         else:
-            bound = ds.select(id_col).distinct().count() * NUM_BANDS
+            bound = ds.select("doc_id").distinct().count() * NUM_BANDS
     else:
         bound = None
     cand = (
@@ -783,10 +753,10 @@ def minhash_lsh_pairs_between(
         .select("new_id", "corpus_id")
         .distinct()
     )
-    size_d = ds.groupBy(id_col).agg(F.count(F.lit(1)).alias("size_new"))
-    size_c = cs.groupBy(id_col).agg(F.count(F.lit(1)).alias("size_corpus"))
-    da = ds.select(F.col(id_col).alias("new_id"), F.col("s").alias("s_a"))
-    ca = cs.select(F.col(id_col).alias("corpus_id2"), F.col("s").alias("s_b"))
+    size_d = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("size_new"))
+    size_c = cs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("size_corpus"))
+    da = ds.select(F.col("doc_id").alias("new_id"), F.col("s").alias("s_a"))
+    ca = cs.select(F.col("doc_id").alias("corpus_id2"), F.col("s").alias("s_b"))
     common = (
         cand.join(da, "new_id")
         .join(
@@ -804,15 +774,15 @@ def minhash_lsh_pairs_between(
     ).cast("long")
     return (
         common.join(
-            size_d.select(F.col(id_col).alias("new_id"), "size_new"), "new_id"
+            size_d.select(F.col("doc_id").alias("new_id"), "size_new"), "new_id"
         )
         .join(
-            size_c.select(F.col(id_col).alias("corpus_id"), "size_corpus"),
+            size_c.select(F.col("doc_id").alias("corpus_id"), "size_corpus"),
             "corpus_id",
         )
         .select(
             "new_id", "corpus_id", "common", "size_new", "size_corpus",
             jac_micro.alias("jac_micro"),
         )
-        .filter(F.col("jac_micro") >= int(threshold * 1_000_000))
+        .filter(F.col("jac_micro") >= 500_000)
     )

@@ -251,12 +251,12 @@ def decode_wav(payload: bytes) -> tuple[list[int], int]:
     return samples, rate
 
 
-def encode_wav_pcm16(samples: Sequence[int], rate: int, channels: int = 1) -> bytes:
+def encode_wav_pcm16(samples: Sequence[int], rate: int) -> bytes:
     """PCM-16 WAV encoder via the ``wave`` module — the writer half of the
     audio round-trip in ``multimodal_decoded_parity``."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
-        w.setnchannels(channels)
+        w.setnchannels(1)
         w.setsampwidth(2)
         w.setframerate(rate)
         w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
@@ -295,13 +295,13 @@ def decode_audio(payload: bytes) -> Any:
     return _sf.read(io.BytesIO(payload))
 
 
-def with_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def with_payload(df: DataFrame) -> DataFrame:
     """Stand-in media ingest: utf-8 bytes of the text as the opaque payload
     plus typed metadata. (Real pipelines read the bytes from object storage;
     the column layout and everything downstream is identical.)"""
     return df.select(
-        F.col(id_col),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        F.col("doc_id"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.lit("text/plain").alias("mime"),
     )
 
@@ -488,13 +488,11 @@ def average_hash_decoded(df: DataFrame) -> DataFrame:
     return df.mapInPandas(_hash, schema=AHASH_SCHEMA)
 
 
-def phash_neardup_pairs(
-    hashed: DataFrame, max_hamming: int = PHASH_MAX_HAMMING
-) -> DataFrame:
+def phash_neardup_pairs(hashed: DataFrame) -> DataFrame:
     """Image near-dup pairs from an aHash table, SimHash-style banded: the
     64-bit hash splits into 4 × 16-bit bands; docs sharing ANY band become
     candidates (equi-join on ``(band_idx, band_val)`` — a pair at Hamming
-    ≤ ``max_hamming`` ≤ 15 differs in ≤ 15 bits, which cannot touch all 4
+    ≤ ``PHASH_MAX_HAMMING`` ≤ 15 differs in ≤ 15 bits, which cannot touch all 4
     bands, so banding loses nothing up to that radius: recall is exact, not
     approximate). Verification = popcount of the XOR, pure codegen. The
     candidate join shuffles on the band key — doc×doc never materializes."""
@@ -550,7 +548,7 @@ def phash_neardup_pairs(
         cand.join(pa, "doc_a")
         .join(pb, "doc_b")
         .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
     )
 
 

@@ -65,27 +65,25 @@ def keep_by_hash_ratio(df: DataFrame, key_col: str, ratio_micro_col: str) -> Dat
     return df.filter(h * F.lit(1_000_000) < F.col(ratio_micro_col) * F.lit(HASH_SPACE))
 
 
-def quantize_int8(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization with reconstruction-error
     audit columns (worst-case abs error in nano units — integer output so
     oracles compare exactly)."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    d = df.select(F.col(id_col), v.alias("v")).select(
-        id_col,
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    d = df.select(F.col("vec_id"), v.alias("v")).select(
+        "vec_id",
         "v",
         (F.array_max(F.transform("v", lambda x: F.abs(x))) / F.lit(127.0)).alias("scale"),
     )
     q = F.transform(
         "v", lambda x: F.round(x / F.col("scale")).cast("int")
     )
-    d = d.select(F.col(id_col), "v", "scale", q.alias("q"))
+    d = d.select(F.col("vec_id"), "v", "scale", q.alias("q"))
     err = F.array_max(
         F.zip_with("v", "q", lambda x, qi: F.abs(x - qi * F.col("scale")))
     )
     return d.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.floor(F.col("scale") * F.lit(1e9)).cast("long").alias("scale_nano"),
         F.element_at("q", 1).alias("q_first"),
         F.aggregate("q", F.lit(0).cast("long"), lambda acc, x: acc + F.abs(x)).alias(

@@ -91,21 +91,15 @@ def cosine_rounded(va: Column, na: Column, vb: Column, nb: Column) -> Column:
     return F.round(dot(va, vb) / (na * nb), 6)
 
 
-def brute_force_topk(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-) -> DataFrame:
+def brute_force_topk(df: DataFrame) -> DataFrame:
     """Exact cosine top-k: tiny query side broadcast against the full table,
     per-query ranking window (shuffle keyed on q_id — never a global sort)."""
-    base = _normed(df, id_col, vec_col)
-    q = base.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    base = _normed(df, "vec_id", "embedding")
+    q = base.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
     c = base.select(
-        F.col(id_col).alias("nbr_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
+        F.col("vec_id").alias("nbr_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
     )
     scored = (
         F.broadcast(q)
@@ -121,67 +115,53 @@ def brute_force_topk(
     w = Window.partitionBy("q_id").orderBy(F.col("cos_r").desc(), F.col("nbr_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("q_id", "nbr_id", "rank", "cos_r")
     )
 
 
-def ivf_assign(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = N_CENTROIDS,
-) -> DataFrame:
+def ivf_assign(df: DataFrame) -> DataFrame:
     """Assign every vector to its max-cosine centroid (ties → lowest centroid
-    id). Centroids here are the first ``n_centroids`` vectors — a
+    id). Centroids here are the first ``N_CENTROIDS`` vectors — a
     deterministic stand-in for k-means, which would drop in unchanged (the
     assignment plan is identical; only the centroid table differs)."""
-    base = _normed(df, id_col, vec_col)
-    cent = base.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
+    base = _normed(df, "vec_id", "embedding")
+    cent = base.filter(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
     )
     scored = base.crossJoin(F.broadcast(cent)).select(
-        F.col(id_col),
+        F.col("vec_id"),
         "v",
         "nrm",
         "cid",
         cosine_rounded(F.col("v"), F.col("nrm"), F.col("cv"), F.col("cn")).alias("ccos"),
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("ccos").desc(), F.col("cid"))
+    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cid"))
     return (
         scored.withColumn("r", F.row_number().over(w))
         .filter(F.col("r") == 1)
-        .select(F.col(id_col), "v", "nrm", F.col("cid").alias("cluster_id"))
+        .select(F.col("vec_id"), "v", "nrm", F.col("cid").alias("cluster_id"))
     )
 
 
-def ivf_topk(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-    n_centroids: int = N_CENTROIDS,
-) -> DataFrame:
+def ivf_topk(df: DataFrame) -> DataFrame:
     """IVF ANN, probe=1: search only the query's own cluster. The candidate
     join shuffles on ``cluster_id`` — per-bucket work, never all-pairs."""
-    assigned = ivf_assign(df, id_col, vec_col, n_centroids)
-    return _cluster_search(assigned, id_col, k, n_queries)
+    assigned = ivf_assign(df)
+    return _cluster_search(assigned)
 
 
-def _cluster_search(
-    assigned: DataFrame, id_col: str, k: int, n_queries: int
-) -> DataFrame:
+def _cluster_search(assigned: DataFrame) -> DataFrame:
     """Shared IVF search phase: per-query top-k within the query's own
     cluster (equi-join on cluster_id, query side broadcast)."""
-    q = assigned.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"),
+    q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"),
         F.col("v").alias("qv"),
         F.col("nrm").alias("qn"),
         "cluster_id",
     )
     c = assigned.select(
-        F.col(id_col).alias("nbr_id"),
+        F.col("vec_id").alias("nbr_id"),
         F.col("v").alias("cv"),
         F.col("nrm").alias("cn"),
         F.col("cluster_id").alias("c_cluster"),
@@ -205,17 +185,13 @@ def _cluster_search(
     w = Window.partitionBy("q_id").orderBy(F.col("cos_r").desc(), F.col("nbr_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("q_id", "cluster_id", "nbr_id", "rank", "cos_r")
     )
 
 
 def ivf_topk_learned(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = TOP_K,
-    n_queries: int = N_QUERIES,
     cent_rows: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """IVF ANN over LEARNED centroids: :func:`train_kmeans` trains the
@@ -229,13 +205,13 @@ def ivf_topk_learned(
     session and reuse — the production shape; without it every invocation
     re-runs the 3-iteration Lloyd loop (~7 Spark jobs)."""
     if cent_rows is None:
-        cent_rows = train_kmeans(df, id_col, vec_col)
+        cent_rows = train_kmeans(df)
     rounded = rounded_centroids(df.sparkSession, cent_rows)
-    base = _normed(df, id_col, vec_col)
+    base = _normed(df, "vec_id", "embedding")
     assigned = base.select(
-        F.col(id_col), "v", "nrm", assign_to_literal_centroids(rounded)
+        F.col("vec_id"), "v", "nrm", assign_to_literal_centroids(rounded)
     )
-    return _cluster_search(assigned, id_col, k, n_queries)
+    return _cluster_search(assigned)
 
 
 def rounded_centroids(
@@ -295,14 +271,7 @@ def hyperplane_bucket(v: Column, weights: list[list[float]]) -> Column:
     return out
 
 
-def hyperplane_topk_multiprobe(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-    n_planes: int = N_PLANES,
-) -> DataFrame:
+def hyperplane_topk_multiprobe(df: DataFrame) -> DataFrame:
     """Multi-probe sign-LSH ANN: each query also searches every bucket at
     Hamming distance 1 from its own (flip one sign bit → ``bucket XOR
     (1<<j)``), because the nearest misses are exactly the vectors that
@@ -311,17 +280,17 @@ def hyperplane_topk_multiprobe(
     probe is unchanged, and recall typically jumps several-fold over
     single-probe at the same plane count. The corpus side is never
     re-hashed or re-shuffled."""
-    base = _normed(df, id_col, vec_col)
-    w = hyperplane_weights(n_planes)
+    base = _normed(df, "vec_id", "embedding")
+    w = hyperplane_weights()
     sig = base.withColumn("bucket", hyperplane_bucket(F.col("v"), w))
     probes = F.array(
         F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)],
+        *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(N_PLANES)],
     )
     q = (
-        sig.filter(F.col(id_col) < n_queries)
+        sig.filter(F.col("vec_id") < N_QUERIES)
         .select(
-            F.col(id_col).alias("q_id"),
+            F.col("vec_id").alias("q_id"),
             F.col("v").alias("qv"),
             F.col("nrm").alias("qn"),
             F.col("bucket").alias("home_bucket"),
@@ -329,7 +298,7 @@ def hyperplane_topk_multiprobe(
         )
     )
     c = sig.select(
-        F.col(id_col).alias("nbr_id"),
+        F.col("vec_id").alias("nbr_id"),
         F.col("v").alias("cv"),
         F.col("nrm").alias("cn"),
         F.col("bucket").alias("c_bucket"),
@@ -353,18 +322,12 @@ def hyperplane_topk_multiprobe(
     w_rank = Window.partitionBy("q_id").orderBy(F.col("cos_r").desc(), F.col("nbr_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("q_id", "bucket", "nbr_id", "rank", "cos_r")
     )
 
 
-def hyperplane_topk(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-) -> DataFrame:
+def hyperplane_topk(df: DataFrame) -> DataFrame:
     """Sign-LSH ANN: rank only candidates in the query's hyperplane bucket.
 
     Unlike IVF there is no centroid table to learn or broadcast — the bucket
@@ -373,17 +336,17 @@ def hyperplane_topk(
     keeps the tiny query side broadcast). More buckets (planes) trade recall
     for candidate-set size; multi-probe = also search buckets at Hamming
     distance 1, which adds a small explode, not a rescan."""
-    base = _normed(df, id_col, vec_col)
+    base = _normed(df, "vec_id", "embedding")
     w = hyperplane_weights()
     sig = base.withColumn("bucket", hyperplane_bucket(F.col("v"), w))
-    q = sig.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"),
+    q = sig.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"),
         F.col("v").alias("qv"),
         F.col("nrm").alias("qn"),
         "bucket",
     )
     c = sig.select(
-        F.col(id_col).alias("nbr_id"),
+        F.col("vec_id").alias("nbr_id"),
         F.col("v").alias("cv"),
         F.col("nrm").alias("cn"),
         F.col("bucket").alias("c_bucket"),
@@ -407,7 +370,7 @@ def hyperplane_topk(
     w_rank = Window.partitionBy("q_id").orderBy(F.col("cos_r").desc(), F.col("nbr_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("q_id", "bucket", "nbr_id", "rank", "cos_r")
     )
 
@@ -448,10 +411,7 @@ def _best_literal_centroid(cent_rows: list[tuple[int, list[float]]]) -> Column:
 
 
 def ivf_assign_projection(
-    df: DataFrame,
-    cent_rows: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    df: DataFrame, cent_rows: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """STATELESS argmax-cosine assignment against frozen (rounded) literal
     centroids, plus the per-vector drift evidence: ``ccos_micro`` (round-6
@@ -461,10 +421,10 @@ def ivf_assign_projection(
     frame (pure projection, no shuffle, no state) — the ingest-path twin
     of the assignment stage inside :func:`ivf_topk_learned`, which is the
     equality the streaming test pins."""
-    base = _normed(df, id_col, vec_col)
+    base = _normed(df, "vec_id", "embedding")
     best = _best_literal_centroid(cent_rows)
     return base.select(
-        F.col(id_col),
+        F.col("vec_id"),
         (-best["n"]).cast("int").alias("cluster_id"),
         F.floor(best["c"] * 1_000_000 + F.lit(0.5))
         .cast("long")
@@ -472,13 +432,7 @@ def ivf_assign_projection(
     ).withColumn("drift_micro", F.lit(1_000_000) - F.col("ccos_micro"))
 
 
-def train_kmeans(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-) -> list[tuple[int, list[float]]]:
+def train_kmeans(df: DataFrame) -> list[tuple[int, list[float]]]:
     """The Lloyd training loop alone: returns the final UNROUNDED centroids
     as driver-side ``(cluster_id, vector)`` rows (k×dim — genuinely small).
 
@@ -492,16 +446,18 @@ def train_kmeans(
     ``queries/extensions._kmeans_cte``). Separated from
     :func:`kmeans_centroids` so a session can train once and share the
     result between the centroid query and learned-IVF search."""
-    base = _normed(df, id_col, vec_col).select(F.col(id_col).alias("_vid"), "v", "nrm")
+    base = _normed(df, "vec_id", "embedding").select(
+        F.col("vec_id").alias("_vid"), "v", "nrm"
+    )
     # materialize once, lineage-truncated: the training loop re-reads base
     # every iteration plus init — localCheckpoint (same pattern as
     # dedup.connected_components) turns the repeated scan+norm
     # recomputations into one, and is GC'd with the returned frame
     base = base.localCheckpoint(eager=True)
     cent_rows = [
-        (i, r.v) for i, r in enumerate(base.orderBy("_vid").limit(k).collect())
+        (i, r.v) for i, r in enumerate(base.orderBy("_vid").limit(N_CENTROIDS).collect())
     ]
-    for _ in range(iterations):
+    for _ in range(3):
         assigned = base.select("v", assign_to_literal_centroids(cent_rows))
         # Exact order-independent mean: sum integer nano-units (bigint — no
         # float summation-order drift), divide once in double. Both factors
@@ -529,12 +485,7 @@ def train_kmeans(
 
 
 def kmeans_centroids(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    cent_rows: list[tuple[int, list[float]]] | None = None,
+    df: DataFrame, cent_rows: list[tuple[int, list[float]]] | None = None
 ) -> DataFrame:
     """Lloyd's k-means over DataFrames — the iterative-algorithm shape.
     Training lives in :func:`train_kmeans`; this builds the reportable
@@ -542,8 +493,8 @@ def kmeans_centroids(
     an already-trained model (one assignment projection + a k-keyed groupBy
     instead of the full loop)."""
     if cent_rows is None:
-        cent_rows = train_kmeans(df, id_col, vec_col, k, iterations)
-    base = _normed(df, id_col, vec_col)
+        cent_rows = train_kmeans(df)
+    base = _normed(df, "vec_id", "embedding")
     final = df.sparkSession.createDataFrame(
         cent_rows, "cluster_id int, centroid array<double>"
     )
@@ -559,13 +510,8 @@ def kmeans_centroids(
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.45,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (cos_r ≥ threshold, on the
+def embedding_near_dup_pairs(df: DataFrame) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (cos_r ≥ 0.45, on the
     6-dp-rounded value so the cut is engine-stable).
 
     This is the *exact* all-pairs variant — O(N²/2) — correct at fixture
@@ -580,12 +526,12 @@ def embedding_near_dup_pairs(
     cosine evaluations ran in a single task (measured 32 s at sf0.1; ~1 s
     after — caught by the r10 full-registry timing pass). The one-time
     shuffle moves N thin rows, nothing at pair scale."""
-    base = _normed(df, id_col, vec_col)
+    base = _normed(df, "vec_id", "embedding")
     a = base.select(
-        F.col(id_col).alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
+        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
     ).repartition(df.sparkSession.sparkContext.defaultParallelism)
     b = base.select(
-        F.col(id_col).alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
+        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
     )
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
@@ -596,22 +542,19 @@ def embedding_near_dup_pairs(
                 "cos_r"
             ),
         )
-        .filter(F.col("cos_r") >= threshold)
+        .filter(F.col("cos_r") >= 0.45)
     )
 
 
 def semantic_dedup_flags(
     df: DataFrame,
     cent_rows: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.45,
     a_min_id: int | None = None,
 ) -> DataFrame:
     """Cluster-scoped semantic dedup (the SemDeDup shape): assign every
     vector to its nearest trained centroid, then compare pairs ONLY within a
     cluster — a vector is dropped when a lower-id vector in the same cluster
-    has round-6 cosine ≥ ``threshold``.
+    has round-6 cosine ≥ 0.45.
 
     Semantics are deliberately relational, not sequential-greedy: the drop
     test is against every lower-id cluster member (kept or not), so the
@@ -636,8 +579,8 @@ def semantic_dedup_flags(
     is by construction the full run filtered to the delta."""
     from postgres_cdc_example_spark.operators import hints
 
-    base = _normed(df, id_col, vec_col).select(
-        F.col(id_col), "v", "nrm", assign_to_literal_centroids(cent_rows)
+    base = _normed(df, "vec_id", "embedding").select(
+        F.col("vec_id"), "v", "nrm", assign_to_literal_centroids(cent_rows)
     )
     # r12 optimization (guide §2.3/§3.1): the cluster-keyed pair join was
     # a sort-merge join shuffling BOTH sides' 64-double vectors — ~250k
@@ -650,17 +593,17 @@ def semantic_dedup_flags(
     # degrades to the same sort-merge join as before — never an OOM.
     a_src = hints.heal_scan_parallelism(base)
     a_base = (
-        a_src if a_min_id is None else a_src.filter(F.col(id_col) >= a_min_id)
+        a_src if a_min_id is None else a_src.filter(F.col("vec_id") >= a_min_id)
     )
     a = a_base.select(
-        F.col(id_col).alias("vec_a"),
+        F.col("vec_id").alias("vec_a"),
         "cluster_id",
         F.col("v").alias("va"),
         F.col("nrm").alias("na"),
     )
     b = hints.broadcast_if_small(
         base.select(
-            F.col(id_col).alias("vec_b"),
+            F.col("vec_id").alias("vec_b"),
             "cluster_id",
             F.col("v").alias("vb"),
             F.col("nrm").alias("nb"),
@@ -676,15 +619,15 @@ def semantic_dedup_flags(
                 "cos_r"
             ),
         )
-        .filter(F.col("cos_r") >= threshold)
+        .filter(F.col("cos_r") >= 0.45)
         .groupBy("vec_a")
         .agg(F.min("vec_b").alias("dup_of"), F.max("cos_r").alias("dup_cos"))
     )
     return (
-        a_base.select(F.col(id_col), "cluster_id")
-        .join(drops, F.col(id_col) == drops["vec_a"], "left")
+        a_base.select(F.col("vec_id"), "cluster_id")
+        .join(drops, F.col("vec_id") == drops["vec_a"], "left")
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             "cluster_id",
             F.col("vec_a").isNull().alias("is_kept"),
             "dup_of",

@@ -35,7 +35,6 @@ def salted_agg(
     key_col: str,
     salt_source: str,
     aggs: dict[str, Column],
-    n_salts: int = DEFAULT_SALTS,
 ) -> DataFrame:
     """Two-stage aggregation over a hot key.
 
@@ -44,7 +43,7 @@ def salted_agg(
     sums — for avg, aggregate sum+count and divide afterwards).
     """
     partial = (
-        df.withColumn("_salt", F.pmod(F.col(salt_source), F.lit(n_salts)))
+        df.withColumn("_salt", F.pmod(F.col(salt_source), F.lit(DEFAULT_SALTS)))
         .groupBy(key_col, "_salt")
         .agg(*[c.alias(f"_p_{name}") for name, c in aggs.items()])
     )
@@ -58,15 +57,14 @@ def salted_join(
     small: DataFrame,
     key: str,
     salt_source: str,
-    n_salts: int = DEFAULT_SALTS,
 ) -> DataFrame:
     """Equi-join where ``skewed``'s join key is hot: scatter the skewed side
-    across ``n_salts`` sub-keys and replicate ``small`` to match, so the
-    shuffle spreads each hot key over ``n_salts`` partitions."""
+    across ``DEFAULT_SALTS`` sub-keys and replicate ``small`` to match, so the
+    shuffle spreads each hot key over ``DEFAULT_SALTS`` partitions."""
     fact = skewed.withColumn(
-        "_salt", F.pmod(F.col(salt_source), F.lit(n_salts))
+        "_salt", F.pmod(F.col(salt_source), F.lit(DEFAULT_SALTS))
     )
     dim = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(DEFAULT_SALTS - 1)))
     )
     return fact.join(dim, [key, "_salt"]).drop("_salt")

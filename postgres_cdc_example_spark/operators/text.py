@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from postgres_cdc_example_spark.operators.dedup import word_tokens
+
 # marker phrases per language — deliberately tiny and deterministic; real
 # deployments would swap in a trained n-gram profile, the *plan shape* is
 # identical (pure column expressions, no UDF)
@@ -39,19 +41,14 @@ def occurrence_count(text: Column, phrase: str) -> Column:
     ).cast("int")
 
 
-def tokens(text: Column) -> Column:
-    """Whitespace tokenization with empty-token filtering."""
-    return F.filter(F.split(F.trim(F.lower(text)), r"\s+"), lambda t: t != "")
-
-
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Token counting: whitespace tokens + a BPE-ish subword estimate
     (4 chars/token heuristic over non-space mass) + char stats."""
-    t = F.col(text_col)
-    toks = tokens(t)
+    t = F.col("text")
+    toks = word_tokens(t)
     nonspace = F.length(F.regexp_replace(t, r"\s+", ""))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).alias("n_tokens"),
         F.length(t).alias("n_chars_measured"),
         nonspace.alias("n_nonspace_chars"),
@@ -60,12 +57,12 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Quality scoring: length score, punctuation ratio, stopword ratio,
     mean word length — the standard cheap pre-filters for LLM corpus prep,
     combined into one 0..1 score."""
-    t = F.col(text_col)
-    toks = tokens(t)
+    t = F.col("text")
+    toks = word_tokens(t)
     n_tok = F.greatest(F.size(toks), F.lit(1))
     punct = F.length(t) - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
     punct_ratio = punct / F.greatest(F.length(t), F.lit(1))
@@ -80,7 +77,7 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
         + 0.1 * F.least(stop_hits / F.lit(5.0), F.lit(1.0))
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.length(t).alias("n_chars_measured"),
         F.round(punct_ratio, 6).alias("punct_ratio"),
         F.round(distinct_ratio, 6).alias("distinct_token_ratio"),
@@ -89,11 +86,11 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Language ID by marker-phrase counting with deterministic tie-break
     (en > de > fr > es).  Counts are plain column arithmetic → pushdown-safe
     and oracle-portable."""
-    padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
+    padded = F.concat(F.lit(" "), F.lower(F.col("text")), F.lit(" "))
     counts = {
         lang: sum(
             (occurrence_count(padded, m) for m in markers[1:]),
@@ -109,7 +106,7 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
         .otherwise("es")
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         en.alias("hits_en"),
         de.alias("hits_de"),
         fr.alias("hits_fr"),
@@ -118,21 +115,19 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     )
 
 
-def fingerprint(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", shingle: int = 8
-) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprinting: md5 of whitespace-normalized text plus
     rolling-window (shingle) extremal hashes — min/max md5 over all
-    ``shingle``-char windows, an order-invariant locality signature."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
-    d = df.select(F.col(id_col), norm.alias("__norm"))
-    n_sh = F.greatest(F.length("__norm") - (shingle - 1), F.lit(1))
+    8-char windows, an order-invariant locality signature."""
+    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
+    d = df.select(F.col("doc_id"), norm.alias("__norm"))
+    n_sh = F.greatest(F.length("__norm") - 7, F.lit(1))
     shingles = F.transform(
         F.sequence(F.lit(1), n_sh),
-        lambda i: F.md5(F.col("__norm").substr(i, F.lit(shingle))),
+        lambda i: F.md5(F.col("__norm").substr(i, F.lit(8))),
     )
     return d.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5("__norm").alias("content_hash"),
         F.array_min(shingles).alias("min_shingle_hash"),
         F.array_max(shingles).alias("max_shingle_hash"),

@@ -89,29 +89,32 @@ def cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- J1-J4/P3/T5: full I/U/D apply with created_at preservation -----------------
-_APPLY_ORACLE = f"""
-    WITH state AS ({_STATE_SQL}),
-    changes AS ({_CHANGES_SQL}),
-    summary AS (
+def _apply_fold_sql(state_src: str, p: str) -> str:
+    """The reference apply fold as a parametrizable CTE chain: applies
+    the (already-defined) ``changes`` CTE onto ``state_src``, with every
+    intermediate CTE prefixed by ``p`` so the fold can nest."""
+    return f"""
+    {p}summary AS (
         SELECT id,
                max(CASE WHEN action = 'D' THEN seq END) AS d_max,
                max(CASE WHEN action IN ('I','U') THEN seq END) AS iu_last
         FROM changes GROUP BY id
     ),
-    ifirst AS (
+    {p}ifirst AS (
         SELECT c.id, min(c.seq) AS i_first
-        FROM changes c JOIN summary s ON c.id = s.id
+        FROM changes c JOIN {p}summary s ON c.id = s.id
         WHERE c.action = 'I' AND c.seq > COALESCE(s.d_max, -1)
         GROUP BY c.id
     ),
-    lastvals AS (
+    {p}lastvals AS (
         SELECT c.id, c.status, c.amount
-        FROM changes c JOIN summary s ON c.id = s.id AND c.seq = s.iu_last
+        FROM changes c JOIN {p}summary s ON c.id = s.id AND c.seq = s.iu_last
     ),
-    created AS (
+    {p}created AS (
         SELECT c.id, c.created_at
-        FROM changes c JOIN ifirst f ON c.id = f.id AND c.seq = f.i_first
-    )
+        FROM changes c JOIN {p}ifirst f ON c.id = f.id AND c.seq = f.i_first
+    ),
+    {p}applied AS (
     SELECT COALESCE(s.id, st.id) AS id,
            CASE WHEN s.id IS NULL THEN st.status
                 WHEN lv.id IS NOT NULL THEN lv.status
@@ -122,14 +125,23 @@ _APPLY_ORACLE = f"""
            CASE WHEN s.id IS NULL THEN st.created_at
                 WHEN s.d_max IS NULL AND st.id IS NOT NULL THEN st.created_at
                 ELSE cr.created_at END AS created_at
-    FROM summary s
-    FULL OUTER JOIN state st ON s.id = st.id
-    LEFT JOIN lastvals lv ON s.id = lv.id
-    LEFT JOIN ifirst f ON s.id = f.id
-    LEFT JOIN created cr ON s.id = cr.id
+    FROM {p}summary s
+    FULL OUTER JOIN {state_src} st ON s.id = st.id
+    LEFT JOIN {p}lastvals lv ON s.id = lv.id
+    LEFT JOIN {p}ifirst f ON s.id = f.id
+    LEFT JOIN {p}created cr ON s.id = cr.id
     WHERE (s.id IS NULL AND st.id IS NOT NULL)
        OR (s.id IS NOT NULL
-           AND ((s.d_max IS NULL AND st.id IS NOT NULL) OR f.i_first IS NOT NULL))
+           AND ((s.d_max IS NULL AND st.id IS NOT NULL)
+                OR f.i_first IS NOT NULL))
+    )"""
+
+
+_APPLY_ORACLE = f"""
+    WITH state AS ({_STATE_SQL}),
+    changes AS ({_CHANGES_SQL}),
+    {_apply_fold_sql("state", "")[5:]}
+    SELECT id, status, amount, created_at FROM applied
     """
 
 
@@ -914,54 +926,6 @@ def cdc_erasure_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # apply idempotence audit (r12 — T2 delivery semantics as a batch query)
 # ---------------------------------------------------------------------------
-
-
-def _apply_fold_sql(state_src: str, p: str) -> str:
-    """The reference apply fold as a parametrizable CTE chain: applies
-    the (already-defined) ``changes`` CTE onto ``state_src``, with every
-    intermediate CTE prefixed by ``p`` so the fold can nest."""
-    return f"""
-    {p}summary AS (
-        SELECT id,
-               max(CASE WHEN action = 'D' THEN seq END) AS d_max,
-               max(CASE WHEN action IN ('I','U') THEN seq END) AS iu_last
-        FROM changes GROUP BY id
-    ),
-    {p}ifirst AS (
-        SELECT c.id, min(c.seq) AS i_first
-        FROM changes c JOIN {p}summary s ON c.id = s.id
-        WHERE c.action = 'I' AND c.seq > COALESCE(s.d_max, -1)
-        GROUP BY c.id
-    ),
-    {p}lastvals AS (
-        SELECT c.id, c.status, c.amount
-        FROM changes c JOIN {p}summary s ON c.id = s.id AND c.seq = s.iu_last
-    ),
-    {p}created AS (
-        SELECT c.id, c.created_at
-        FROM changes c JOIN {p}ifirst f ON c.id = f.id AND c.seq = f.i_first
-    ),
-    {p}applied AS (
-    SELECT COALESCE(s.id, st.id) AS id,
-           CASE WHEN s.id IS NULL THEN st.status
-                WHEN lv.id IS NOT NULL THEN lv.status
-                ELSE st.status END AS status,
-           CASE WHEN s.id IS NULL THEN st.amount
-                WHEN lv.id IS NOT NULL THEN lv.amount
-                ELSE st.amount END AS amount,
-           CASE WHEN s.id IS NULL THEN st.created_at
-                WHEN s.d_max IS NULL AND st.id IS NOT NULL THEN st.created_at
-                ELSE cr.created_at END AS created_at
-    FROM {p}summary s
-    FULL OUTER JOIN {state_src} st ON s.id = st.id
-    LEFT JOIN {p}lastvals lv ON s.id = lv.id
-    LEFT JOIN {p}ifirst f ON s.id = f.id
-    LEFT JOIN {p}created cr ON s.id = cr.id
-    WHERE (s.id IS NULL AND st.id IS NOT NULL)
-       OR (s.id IS NOT NULL
-           AND ((s.d_max IS NULL AND st.id IS NOT NULL)
-                OR f.i_first IS NOT NULL))
-    )"""
 
 
 @register(

@@ -4545,7 +4545,7 @@ def source_fertility_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact and weight long docs correctly. Null-safe on empty strata via
     nullif (Spark div and DuckDB // both propagate NULL)."""
     docs = load_table(spark, "documents", sf_dir)
-    tk = text.tokens(F.col("text"))
+    tk = dedup.word_tokens(F.col("text"))
     t = docs.select(
         "source",
         "lang",

@@ -33,14 +33,13 @@ def write_curated(
     partition_by: Sequence[str] = ("source",),
     sort_by: Sequence[str] = ("doc_id",),
     max_records_per_file: int = 1_000_000,
-    mode: str = "overwrite",
 ) -> None:
     (
         df.repartition(*[df[c] for c in partition_by])
         .sortWithinPartitions(*sort_by)
         .write.partitionBy(*partition_by)
         .option("maxRecordsPerFile", max_records_per_file)
-        .mode(mode)
+        .mode("overwrite")
         .parquet(path)
     )
 

@@ -22,15 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def save_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int = 16, sort: bool = True
+    df: DataFrame, table: str, key: str, n_buckets: int = 16
 ) -> None:
     """Persist ``df`` as a parquet table bucketed (and bucket-sorted) on
     ``key``. Pays one shuffle now so joins/aggregations on ``key`` never
     shuffle again."""
     writer = df.write.format("parquet").mode("overwrite").bucketBy(n_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table)
+    writer.sortBy(key).saveAsTable(table)
 
 
 def bucketed_join(spark: SparkSession, left: str, right: str, key: str) -> DataFrame:

@@ -34,7 +34,7 @@ WIRE_SCHEMA = StructType(
 )
 
 
-def decode_change_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
+def decode_change_lines(lines: DataFrame) -> DataFrame:
     """Decode raw JSON lines into typed change events.
 
     Returns all input rows with a ``change`` struct column; malformed lines
@@ -43,7 +43,7 @@ def decode_change_lines(lines: DataFrame, value_col: str = "value") -> DataFrame
     streaming DataFrames.
     """
     return lines.withColumn(
-        "change", F.from_json(F.col(value_col).cast("string"), WIRE_SCHEMA)
+        "change", F.from_json(F.col("value").cast("string"), WIRE_SCHEMA)
     )
 
 
@@ -106,7 +106,7 @@ def flatten_changes(
 
 
 def route_changes(
-    decoded: DataFrame, tables: dict[str, dict[str, str]], key: str = "id"
+    decoded: DataFrame, tables: dict[str, dict[str, str]]
 ) -> dict[str, DataFrame]:
     """Fan one decoded change stream out to per-table flat change logs (the
     multi-table generalization the reference hard-codes away). Each entry is
@@ -114,13 +114,13 @@ def route_changes(
     persist the batch once and every table's filter reads the cached decode
     instead of re-parsing JSON per table."""
     return {
-        t: flatten_changes(decoded, t, cols, key=key) for t, cols in tables.items()
+        t: flatten_changes(decoded, t, cols) for t, cols in tables.items()
     }
 
 
-def flatten_person_changes(decoded: DataFrame, table: str = "person") -> DataFrame:
+def flatten_person_changes(decoded: DataFrame) -> DataFrame:
     """The reference's single table, via the generic flatten."""
-    return flatten_changes(decoded, table, PERSON_COLUMNS)
+    return flatten_changes(decoded, "person", PERSON_COLUMNS)
 
 
 def schema_drift_audit(
@@ -233,7 +233,6 @@ def person_change_json(
     row: dict | None = None,
     identity: dict | None = None,
     table: str = "person",
-    ts: str | None = None,
 ) -> str:
     """Serialize one wal2json-v2-shaped line (test/data-gen helper)."""
     import json
@@ -254,7 +253,7 @@ def person_change_json(
     payload: dict = {
         "seq": seq,
         "action": action,
-        "timestamp": ts,
+        "timestamp": None,
         "schema": "public",
         "table": table,
     }

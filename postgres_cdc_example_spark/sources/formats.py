@@ -143,7 +143,6 @@ def read_with_rejects(
     path: str,
     fmt: str,
     schema: T.StructType | str,
-    options: dict[str, str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(good, rejects) for a text-format read: good rows carry the declared
     columns; rejects carry the raw malformed line for quarantine/replay —
@@ -158,8 +157,7 @@ def read_with_rejects(
     with_corrupt = T.StructType(
         list(base.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
     )
-    opts = dict(options or {})
-    opts["columnNameOfCorruptRecord"] = CORRUPT_COL
+    opts = {"columnNameOfCorruptRecord": CORRUPT_COL}
     df = read_table(spark, path, fmt, with_corrupt, opts)
     # The guard keeps both branches legal under ANY downstream projection:
     # without it, column pruning on e.g. good.count() reduces the scan's
@@ -236,19 +234,15 @@ def write_table(
     df: DataFrame,
     path: str,
     fmt: str,
-    mode: str = "overwrite",
-    options: dict[str, str] | None = None,
 ) -> None:
     """Write ``df`` as ``fmt`` with the same lossless CSV dialect the
     reader declares (quote-escaped, so free text with commas/quotes/
     newlines round-trips)."""
     if fmt not in _FORMATS:
         raise ValueError(f"unsupported format: {fmt!r} (one of {sorted(_FORMATS)})")
-    writer = df.write.format(fmt).mode(mode)
+    writer = df.write.format(fmt).mode("overwrite")
     if fmt == "csv":
         for k, v in _CSV_OPTS.items():
             if k != "multiLine":  # reader-only option
                 writer = writer.option(k, v)
-    for k, v in (options or {}).items():
-        writer = writer.option(k, v)
     writer.save(path)

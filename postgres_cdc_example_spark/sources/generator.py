@@ -77,7 +77,7 @@ def person_batch(
     )
 
 
-def person_stream(spark: SparkSession, rows_per_second: int = 1, seed: int = 42) -> DataFrame:
+def person_stream(spark: SparkSession) -> DataFrame:
     """Streaming person rows on the rate source (1 row/s default, matching
     ``time.NewTicker(1 * time.Second)`` at ``writer/main.go:52``).
 
@@ -86,9 +86,9 @@ def person_stream(spark: SparkSession, rows_per_second: int = 1, seed: int = 42)
     ``CURRENT_TIMESTAMP``, ``writer/main.go:40``).
     """
     rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
+        "rowsPerSecond", 1
     ).load()
-    cols = _person_columns("value", seed)
+    cols = _person_columns("value", 42)
     return rate.select(
         (F.col("value") + 1).alias("id"),
         cols[1],  # name

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def snapshot_copy(target: DataFrame, source: DataFrame, key: str = "id") -> DataFrame:
+def snapshot_copy(target: DataFrame, source: DataFrame) -> DataFrame:
     """Insert-if-absent: target ∪ (source ⟕anti target) on the key
     (``ON CONFLICT DO NOTHING``, ``replicator/main.go:118-122``).
 
@@ -23,14 +23,14 @@ def snapshot_copy(target: DataFrame, source: DataFrame, key: str = "id") -> Data
     snapshot, so concurrent CDC updates applied before the copy lands are
     preserved.
     """
-    fresh = source.join(target.select(key), key, "left_anti")
+    fresh = source.join(target.select("id"), "id", "left_anti")
     return target.unionByName(fresh)
 
 
-def max_id_watermark(df: DataFrame, key: str = "id") -> tuple[int, int]:
+def max_id_watermark(df: DataFrame) -> tuple[int, int]:
     """``SELECT COALESCE(MAX(id), 0)`` → (max_id, next_id)
     (``replicator/main.go:142-150``).  The RESTART is engine state the caller
     keeps (Spark has no transactional sequences — SURVEY.md §7.4 hard part 3).
     """
-    row = df.agg(F.coalesce(F.max(key), F.lit(0)).alias("m")).collect()[0]
+    row = df.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).collect()[0]
     return int(row["m"]), int(row["m"]) + 1

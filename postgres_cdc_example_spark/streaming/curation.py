@@ -647,7 +647,6 @@ class StreamingCurationPipeline:
 def document_change_json(
     seq: int,
     row: dict,
-    action: str = "I",
     extra: dict | None = None,
     omit: tuple[str, ...] = (),
 ) -> str:
@@ -676,7 +675,7 @@ def document_change_json(
     return json.dumps(
         {
             "seq": seq,
-            "action": action,
+            "action": "I",
             "timestamp": None,
             "schema": "public",
             "table": "documents",

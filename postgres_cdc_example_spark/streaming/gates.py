@@ -25,19 +25,19 @@ from postgres_cdc_example_spark.operators import bloom
 from postgres_cdc_example_spark.operators.dedup import word_tokens
 
 
-def gram8_array(text_col: Column, n: int = 8) -> Column:
+def gram8_array(text_col: Column) -> Column:
     """Per-row 8-gram array as a pure projection (streaming-legal: no
     window, no distinct) — same gram universe as the batch ``_doc_grams8``
-    layer for docs with >= n tokens; shorter docs yield no grams, which
-    matches the batch layer's ``len(tk) >= n`` guard. Duplicate grams are
+    layer for docs with >= 8 tokens; shorter docs yield no grams, which
+    matches the batch layer's ``len(tk) >= 8`` guard. Duplicate grams are
     harmless under the EXISTS membership test."""
     tk = word_tokens(text_col)
     m = F.size(tk)
     full = F.transform(
-        F.sequence(F.lit(1), m - F.lit(n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(tk, i, n)),
+        F.sequence(F.lit(1), m - F.lit(7)),
+        lambda i: F.concat_ws(" ", F.slice(tk, i, 8)),
     )
-    return F.when(m >= n, full).otherwise(F.array().cast("array<string>"))
+    return F.when(m >= 8, full).otherwise(F.array().cast("array<string>"))
 
 
 def benchmark_bitmap(spark: SparkSession, sf_dir: str) -> list[int]:
@@ -56,16 +56,14 @@ def benchmark_bitmap(spark: SparkSession, sf_dir: str) -> list[int]:
     return bloom.bitmap_from_grams(bench)
 
 
-def decontamination_gate(
-    docs: DataFrame, bitmap_words: list[int], text_col: str = "text"
-) -> DataFrame:
+def decontamination_gate(docs: DataFrame, bitmap_words: list[int]) -> DataFrame:
     """Admit only documents with ZERO bloom-candidate 8-grams — the
     stateless broadcast filter stage of an ingest pipeline (compose before
     ``content_dedup_stream``/sinks). Pure per-row codegen: gram explosion,
     salted-md5 positions, and the bit tests all run inside one projection +
     filter; no state store, no shuffle, no Python."""
     hit_any = F.exists(
-        gram8_array(F.col(text_col)),
+        gram8_array(F.col("text")),
         lambda g: bloom.gram_hit(bitmap_words, g),
     )
     return docs.filter(~hit_any)

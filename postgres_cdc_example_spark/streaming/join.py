@@ -39,8 +39,6 @@ def interval_join(
     left_ts: str,
     right_ts: str,
     max_delay: str = "10 minutes",
-    watermark: str = "10 minutes",
-    how: str = "inner",
 ) -> DataFrame:
     """Join each ``right`` row to the ``left`` rows of the same ``key``
     whose event time falls within ``(right_ts - max_delay, right_ts]`` —
@@ -51,15 +49,15 @@ def interval_join(
     columns should be disjointly named (rename before calling, as with any
     self-ish join).
 
-    ``watermark`` bounds BOTH sides' lateness; together with the interval
-    it fixes the state-store retention Spark computes per side.
+    The 10-minute watermark bounds BOTH sides' lateness; together with the
+    interval it fixes the state-store retention Spark computes per side.
     """
-    l = left.withWatermark(left_ts, watermark)
-    r = right.withWatermark(right_ts, watermark)
+    l = left.withWatermark(left_ts, "10 minutes")
+    r = right.withWatermark(right_ts, "10 minutes")
     cond = (
         (l[key] == r[key])
         & (l[left_ts] > r[right_ts] - F.expr(f"INTERVAL {max_delay}"))
         & (l[left_ts] <= r[right_ts])
     )
     # drop the duplicate key column from the left side after the join
-    return l.join(r, cond, how).drop(l[key])
+    return l.join(r, cond, "inner").drop(l[key])

@@ -68,10 +68,8 @@ class StreamingAggView(CdcPipeline):
         source_dir: str,
         store_root: str,
         checkpoint_dir: str,
-        group_col: str = "name",
     ):
         super().__init__(spark, source_dir, store_root + "/state", checkpoint_dir)
-        self.group_col = group_col
         self.agg_store = VersionedStateStore(
             spark, store_root + "/agg", {"agg": AGG_SCHEMA}
         )
@@ -88,14 +86,14 @@ class StreamingAggView(CdcPipeline):
                 # seed from the current state (empty on a fresh pipeline; the
                 # snapshot when backfill() ran before the stream)
                 self.agg_store.commit(
-                    {"agg": agg_snapshot(state, self.group_col, _score())},
+                    {"agg": agg_snapshot(state, "name", _score())},
                     version=version - 1,
                 )
             new_agg = maintain_agg(
                 self.agg_store.read("agg"),
                 state,
                 self.store.read_changes(version),
-                group_col=self.group_col,
+                group_col="name",
                 cents=_score(),
                 key="id",
                 **_APPLY_KW,

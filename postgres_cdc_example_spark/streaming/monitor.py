@@ -36,13 +36,15 @@ def sync_check(source: DataFrame, target: DataFrame, predicate: Column | None) -
     )
 
 
-def replication_lag_seconds(target: DataFrame, ts_col: str, now_expr: Column | None = None) -> DataFrame:
+def replication_lag_seconds(target: DataFrame, ts_col: str) -> DataFrame:
     """``EXTRACT(EPOCH FROM now() - pg_last_xact_replay_timestamp())::int``
     (``pubsub/main.go:202-208``): processing-time minus max applied event
     time."""
-    now = now_expr if now_expr is not None else F.current_timestamp()
     return target.agg(
-        (F.unix_timestamp(now) - F.unix_timestamp(F.max(ts_col).cast("timestamp")))
+        (
+            F.unix_timestamp(F.current_timestamp())
+            - F.unix_timestamp(F.max(ts_col).cast("timestamp"))
+        )
         .cast("int")
         .alias("lag_seconds")
     )
