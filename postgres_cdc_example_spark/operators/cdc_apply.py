@@ -62,27 +62,24 @@ def compact_changes(
 def apply_changes(
     state: DataFrame,
     changes: DataFrame,
-    key: str = "id",
-    seq: str = "seq",
-    action: str = "action",
     value_cols: list[str] | None = None,
     created_col: str | None = "created_at",
 ) -> DataFrame:
     """Apply a flat I/U/D change log to a state DataFrame; returns new state.
 
-    ``changes`` columns: key, seq, action ("I"/"U"/"D"), value columns, and
-    (optionally) ``created_col`` carried on insert events.
-    ``state`` columns: key, value columns, optional ``created_col``.
+    ``changes`` columns: ``id``, ``seq``, ``action`` ("I"/"U"/"D"), value
+    columns, and (optionally) ``created_col`` carried on insert events.
+    ``state`` columns: ``id``, value columns, optional ``created_col``.
     """
     if value_cols is None:
-        reserved = {key, seq, action, created_col}
+        reserved = {"id", "seq", "action", created_col}
         value_cols = [c for c in changes.columns if c not in reserved]
 
-    k, s, a = F.col(key), F.col(seq), F.col(action)
+    k, s, a = F.col("id"), F.col("seq"), F.col("action")
     is_iu = a.isin("I", "U")
 
     # One hash-exchange on `key`; the groupBy below reuses its partitioning.
-    w = Window.partitionBy(key)
+    w = Window.partitionBy("id")
     ev = (
         changes.withColumn("__d_max", F.max(F.when(a == "D", s)).over(w))
         .withColumn("__iu_last", F.max(F.when(is_iu, s)).over(w))
@@ -106,7 +103,7 @@ def apply_changes(
         aggs.append(
             F.max(F.when(s == F.col("__i_first"), F.col(created_col))).alias("__created_new")
         )
-    summary = ev.groupBy(key).agg(*aggs)
+    summary = ev.groupBy("id").agg(*aggs)
 
     st = state.select(
         k.alias("__sk"),
@@ -115,17 +112,17 @@ def apply_changes(
         *( [F.col(created_col).alias("__s_created")] if created_col else [] ),
     )
 
-    joined = summary.join(st, summary[key] == st["__sk"], "full_outer")
+    joined = summary.join(st, summary["id"] == st["__sk"], "full_outer")
 
     in_state = F.coalesce(F.col("__in_state"), F.lit(False))
-    has_summary = F.col(key).isNotNull()
+    has_summary = F.col("id").isNotNull()
     exists_final = F.when(
         ~has_summary, in_state  # untouched state row
     ).otherwise(
         (F.col("__d_max").isNull() & in_state) | F.col("__i_first").isNotNull()
     )
 
-    out_key = F.coalesce(F.col(key), F.col("__sk")).alias(key)
+    out_key = F.coalesce(F.col("id"), F.col("__sk")).alias("id")
     out_vals = [
         F.when(
             has_summary & F.col("__vals").isNotNull(), F.col("__vals")[c]
@@ -171,12 +168,7 @@ def align_to_schema(df: DataFrame, target: "StructType") -> DataFrame:
 
 
 def scd2_history(
-    changes: DataFrame,
-    key: str = "id",
-    seq: str = "seq",
-    action: str = "action",
-    value_cols: list[str] | None = None,
-    state_keys: DataFrame | None = None,
+    changes: DataFrame, state_keys: DataFrame | None = None
 ) -> DataFrame:
     """SCD Type-2 view of a change log: instead of overwriting state (the
     reference's semantics), KEEP every version with its validity interval —
@@ -198,47 +190,46 @@ def scd2_history(
     open at end-of-log; the current set provably equals ``apply_changes``
     output values (tests/test_cdc_apply.py reconciliation).
     """
-    if value_cols is None:
-        value_cols = [c for c in changes.columns if c not in {key, seq, action}]
+    value_cols = ["status", "amount"]
     ch = changes
     if state_keys is not None:
         ch = ch.join(
-            F.broadcast(state_keys.select(F.col(key)).distinct().withColumn(
+            F.broadcast(state_keys.select(F.col("id")).distinct().withColumn(
                 "__in_state", F.lit(True)
             )),
-            key,
+            "id",
             "left",
         ).withColumn("__in_state", F.coalesce(F.col("__in_state"), F.lit(False)))
     else:
         ch = ch.withColumn("__in_state", F.lit(False))
-    w_order = Window.partitionBy(key).orderBy(seq)
+    w_order = Window.partitionBy("id").orderBy("seq")
     # the most recent I/D at-or-before each event; for the event itself a U
     # contributes null, so a U row sees the PRIOR boundary
     boundary = F.last(
-        F.when(F.col(action).isin("I", "D"), F.col(action)), ignorenulls=True
+        F.when(F.col("action").isin("I", "D"), F.col("action")), ignorenulls=True
     ).over(w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     # for a U row the inclusive-window boundary equals the PRIOR boundary
     # (U contributes null), so: alive iff last prior boundary is I, or no
     # boundary yet and the key was in the snapshot
     alive_for_u = (boundary == "I") | (boundary.isNull() & F.col("__in_state"))
-    opens = (F.col(action) == "I") | ((F.col(action) == "U") & alive_for_u)
+    opens = (F.col("action") == "I") | ((F.col("action") == "U") & alive_for_u)
     # a D is effective (closes something) iff the row was alive: its
     # boundary-before is I, or no boundary and the key was in the snapshot
     prior_boundary = F.last(
-        F.when(F.col(action).isin("I", "D"), F.col(action)), ignorenulls=True
+        F.when(F.col("action").isin("I", "D"), F.col("action")), ignorenulls=True
     ).over(w_order.rowsBetween(Window.unboundedPreceding, -1))
-    d_effective = (F.col(action) == "D") & (
+    d_effective = (F.col("action") == "D") & (
         (prior_boundary == "I") | (prior_boundary.isNull() & F.col("__in_state"))
     )
     marked = ch.select(
-        F.col(key), F.col(seq), F.col(action), *value_cols,
+        F.col("id"), F.col("seq"), F.col("action"), *value_cols,
         opens.alias("__opens"), d_effective.alias("__closes"),
     ).filter(F.col("__opens") | F.col("__closes"))
-    w_eff = Window.partitionBy(key).orderBy(seq)
-    v = marked.withColumn("__next_seq", F.lead(seq).over(w_eff))
+    w_eff = Window.partitionBy("id").orderBy("seq")
+    v = marked.withColumn("__next_seq", F.lead("seq").over(w_eff))
     return v.filter(F.col("__opens")).select(
-        F.col(key),
-        F.col(seq).alias("version_seq"),
+        F.col("id"),
+        F.col("seq").alias("version_seq"),
         *value_cols,
         F.col("__next_seq").alias("valid_to_seq"),
         F.col("__next_seq").isNull().alias("is_current"),

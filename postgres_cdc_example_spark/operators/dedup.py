@@ -444,10 +444,8 @@ def simhash_buckets(df: DataFrame, tokens: DataFrame | None = None) -> DataFrame
     )
 
 
-def ngram_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Distinct word n-grams as ROWS ``(id, g)`` via posexplode + lead()
+def ngram_rows(df: DataFrame) -> DataFrame:
+    """Distinct word n-grams as ROWS ``(doc_id, g)`` via posexplode + lead()
     windows — fully codegen (no array lambdas). Tail rule matches the
     list-index oracle: a document shorter than ``NGRAM_WORDS`` tokens yields
     exactly one short gram (its whole token sequence). A ZERO-token document
@@ -455,27 +453,25 @@ def ngram_rows(
     enters the minhash/Jaccard universe — deliberate: Jaccard over empty
     sets is 0/0, and empty-content duplicates are exactly what
     :func:`exact_dedup`'s normalized content hash already groups."""
-    toks = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
-        F.col(id_col), F.posexplode(word_tokens(F.col(text_col))).alias("pos", "tok")
+    toks = _spread(df.select(F.col("doc_id"), F.col("text")), "doc_id").select(
+        F.col("doc_id"), F.posexplode(word_tokens(F.col("text"))).alias("pos", "tok")
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     leads = toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("pos"),
         *[F.lead("tok", j).over(w).alias(f"t{j}") for j in range(NGRAM_WORDS)],
     )
     gram = F.concat_ws(" ", *[F.col(f"t{j}") for j in range(NGRAM_WORDS)])
     return (
         leads.filter(F.col(f"t{NGRAM_WORDS - 1}").isNotNull() | (F.col("pos") == 0))
-        .select(F.col(id_col), gram.alias("g"))
+        .select(F.col("doc_id"), gram.alias("g"))
         .distinct()
     )
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.5,
     max_df: int = MAX_DOC_FREQ,
     gram_df: DataFrame | None = None,
@@ -489,17 +485,17 @@ def ngram_jaccard_pairs(
     Jaccard stays internally consistent.
 
     ``gram_df``: optionally pass the df-annotated shingle rows
-    ``(id, g, df)`` directly (e.g. a persisted layer) — skips the in-plan
+    ``(doc_id, g, df)`` directly (e.g. a persisted layer) — skips the in-plan
     n-gram extraction, df aggregate and join-back. The ``max_df`` cutoff
     applies on either path.
     """
     if gram_df is None:
-        ex = ngram_rows(df, text_col, id_col)
+        ex = ngram_rows(df)
         gram_df = ex.join(ex.groupBy("g").agg(F.count(F.lit(1)).alias("df")), "g")
-    kept = gram_df.filter(F.col("df") <= max_df).select(id_col, "g")
-    sizes = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = kept.select(F.col(id_col).alias("doc_a"), F.col("g").alias("ga"))
-    b = kept.select(F.col(id_col).alias("doc_b"), F.col("g").alias("gb"))
+    kept = gram_df.filter(F.col("df") <= max_df).select("doc_id", "g")
+    sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    a = kept.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("ga"))
+    b = kept.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("gb"))
     pairs = (
         a.join(b, (F.col("ga") == F.col("gb")) & (F.col("doc_a") < F.col("doc_b")))
         .groupBy("doc_a", "doc_b")
@@ -511,8 +507,8 @@ def ngram_jaccard_pairs(
         * F.lit(1000000.0)
     ).cast("long")
     return (
-        pairs.join(sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("size_a")), "doc_a")
-        .join(sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("size_b")), "doc_b")
+        pairs.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("size_a")), "doc_a")
+        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("size_b")), "doc_b")
         .select("doc_a", "doc_b", "common", "size_a", "size_b", jac_micro.alias("jac_micro"))
         .filter(F.col("jac_micro") >= int(threshold * 1_000_000))
     )

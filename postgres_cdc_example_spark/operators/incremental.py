@@ -54,15 +54,14 @@ def maintain_agg(
     changes: DataFrame,
     group_col: str,
     cents: Column,
-    key: str = "id",
     **apply_kwargs,
 ) -> DataFrame:
     """Advance ``prev_agg`` (= ``agg_snapshot`` of ``state``) across a change
     batch without rescanning state. Returns the new aggregate; ``state`` is
     only read for the touched-key slice."""
-    touched = changes.select(key).distinct()
-    pre = state.join(touched, key, "left_semi")
-    post = apply_changes(pre, changes, key=key, **apply_kwargs)
+    touched = changes.select("id").distinct()
+    pre = state.join(touched, "id", "left_semi")
+    post = apply_changes(pre, changes, **apply_kwargs)
     neg = (
         pre.groupBy(group_col)
         .agg(

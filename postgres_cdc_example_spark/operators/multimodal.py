@@ -342,18 +342,18 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_payload(df: DataFrame, scale: float = 0.5) -> DataFrame:
+def resize_payload(df: DataFrame) -> DataFrame:
     """Resize plumbing: binary IN → binary OUT through an Arrow-batched
     ``mapInPandas`` stage — the shape a real image-resize (decode → PIL
     thumbnail → re-encode) runs in at scale, where the transformed bytes
     continue down the pipeline columnar instead of detouring through the
     driver or a filesystem. Codec-less stand-in: keep the leading
-    ``ceil(n_bytes × scale)`` bytes (deterministic, size-contracted like a
+    ``ceil(n_bytes × 0.5)`` bytes (deterministic, size-contracted like a
     real downscale); swap ``_shrink`` for the PIL path when the codec
     library exists (see :func:`decode_image`'s gating pattern)."""
 
     def _shrink(payload: bytes) -> bytes:
-        return payload[: max(math.ceil(len(payload) * scale), 1)]
+        return payload[: max(math.ceil(len(payload) * 0.5), 1)]
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -437,17 +437,17 @@ def _as_decoded(img: Any) -> DecodedImage:
     return DecodedImage(rgba.width, rgba.height, "RGBA", list(rgba.getdata()))
 
 
-def _resize_luma_area(luma: list[int], w: int, h: int, tw: int, th: int) -> list[int]:
-    """Integer area-average downsample to ``tw×th``: target cell (i,j)
-    averages the source box [i·h//th, (i+1)·h//th) × [j·w//tw, (j+1)·w//tw)
+def _resize_luma_area(luma: list[int], w: int, h: int) -> list[int]:
+    """Integer area-average downsample to 8×8: target cell (i,j)
+    averages the source box [i·h//8, (i+1)·h//8) × [j·w//8, (j+1)·w//8)
     with floor division — deterministic, backend-free, no float rounding.
-    (Half-open boxes tile the source exactly when th|h and tw|w; otherwise
+    (Half-open boxes tile the source exactly when 8|h and 8|w; otherwise
     they partition it to within one row/column, fine for a fingerprint.)"""
     out = []
-    for i in range(th):
-        y0, y1 = (i * h) // th, max(((i + 1) * h) // th, (i * h) // th + 1)
-        for j in range(tw):
-            x0, x1 = (j * w) // tw, max(((j + 1) * w) // tw, (j * w) // tw + 1)
+    for i in range(8):
+        y0, y1 = (i * h) // 8, max(((i + 1) * h) // 8, (i * h) // 8 + 1)
+        for j in range(8):
+            x0, x1 = (j * w) // 8, max(((j + 1) * w) // 8, (j * w) // 8 + 1)
             total = sum(
                 luma[y * w + x] for y in range(y0, min(y1, h)) for x in range(x0, min(x1, w))
             )
@@ -463,7 +463,7 @@ def decoded_ahash(payload: bytes) -> tuple[int, int]:
     img = _as_decoded(decode_image(payload))
     luma = img.luma()
     if img.size != (8, 8):
-        luma = _resize_luma_area(luma, img.width, img.height, 8, 8)
+        luma = _resize_luma_area(luma, img.width, img.height)
     return _ahash(luma)
 
 

@@ -26,28 +26,21 @@ def ts_micros(ts: Column) -> Column:
     return F.unix_micros(ts.cast("timestamp"))
 
 
-def bucketed_range_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_us: str,
-    right_us: str,
-    radius_us: int,
-) -> DataFrame:
-    """Inner-join rows whose integer-microsecond keys differ by at most
-    ``radius_us``. Column sets must be disjoint (rename before calling).
-    Returns left columns + right columns for every matching pair."""
+def bucketed_range_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Inner-join rows whose integer-microsecond keys ``left.e_us`` and
+    ``right.c_us`` differ by at most 1_800_000_000 (30 minutes). Column sets
+    must be disjoint (rename before calling). Returns left columns + right
+    columns for every matching pair."""
     # integer division (`div`), not float division + floor: epoch micros sit
     # near 2^50 where double quotients can land a boundary row in the wrong
     # bucket
-    b = F.expr(f"{left_us} div {radius_us}L")
+    b = F.expr("e_us div 1800000000L")
     probes = left.withColumn(
         "__bucket", F.explode(F.array(b - 1, b, b + 1))
     )
-    keyed = right.withColumn(
-        "__bucket", F.expr(f"{right_us} div {radius_us}L")
-    )
+    keyed = right.withColumn("__bucket", F.expr("c_us div 1800000000L"))
     return (
         probes.join(keyed, "__bucket")
-        .filter(F.abs(F.col(left_us) - F.col(right_us)) <= radius_us)
+        .filter(F.abs(F.col("e_us") - F.col("c_us")) <= 1_800_000_000)
         .drop("__bucket")
     )

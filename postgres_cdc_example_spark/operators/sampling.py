@@ -30,39 +30,37 @@ def hash_bucket(key: Column) -> Column:
     return F.substring(F.md5(key.cast("string")), 1, 2)
 
 
-def hash_sample(df: DataFrame, key_col: str, threshold: str = "1a") -> DataFrame:
-    """Keep rows whose hash bucket sorts below ``threshold`` (hex prefix:
-    '1a' → 26/256 ≈ 10.2%). Deterministic, partitioning-independent,
+def hash_sample(df: DataFrame) -> DataFrame:
+    """Keep rows whose ``doc_id`` hash bucket sorts below the hex prefix
+    '1a' (26/256 ≈ 10.2%). Deterministic, partitioning-independent,
     engine-portable."""
-    return df.filter(hash_bucket(F.col(key_col)) < threshold)
+    return df.filter(hash_bucket(F.col("doc_id")) < "1a")
 
 
-def stratified_sample(
-    df: DataFrame, key_col: str, stratum_col: str, rates: dict[str, str], default: str = "00"
-) -> DataFrame:
-    """Per-stratum hash thresholds (hex-prefix strings). ``default`` '00'
-    drops unlisted strata; 'ff'-ish keeps nearly everything."""
-    thr = F.lit(default)
-    for stratum, t in sorted(rates.items()):
-        thr = F.when(F.col(stratum_col) == stratum, F.lit(t)).otherwise(thr)
-    return df.filter(hash_bucket(F.col(key_col)) < thr)
+def stratified_sample(df: DataFrame) -> DataFrame:
+    """Per-``source`` hash thresholds (hex-prefix strings): '80' (≈50%) for
+    the curated sources src0 and src1, '1a' (≈10%) for every other."""
+    thr = F.lit("1a")
+    for stratum in ("src0", "src1"):
+        thr = F.when(F.col("source") == stratum, F.lit("80")).otherwise(thr)
+    return df.filter(hash_bucket(F.col("doc_id")) < thr)
 
 
 HASH_SPACE = 4294967296  # 2^32 — the md5-prefix hash space
 
 
-def keep_by_hash_ratio(df: DataFrame, key_col: str, ratio_micro_col: str) -> DataFrame:
+def keep_by_hash_ratio(df: DataFrame) -> DataFrame:
     """Graded deterministic sampling: keep rows whose 32-bit md5 prefix of
-    the stable key falls below ``ratio_micro/1e6`` of the hash space —
-    generalizes :func:`hash_sample`'s 256-step hex-prefix thresholds to
-    micro-resolution per-row ratios (the ratio can come from a joined
+    the stable key ``doc_id`` falls below ``keep_ratio_micro/1e6`` of the
+    hash space — generalizes :func:`hash_sample`'s 256-step hex-prefix
+    thresholds to micro-resolution per-row ratios (the ratio can come from a joined
     column, e.g. a per-source temperature weight). The comparison is pure
     int64 arithmetic (``hash·1e6 < ratio_micro·2^32``, both ≤ 4.3e15), so
     it is exact, partition-independent, and bit-identical across engines."""
-    h = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10).cast(
+    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
         "long"
     )
-    return df.filter(h * F.lit(1_000_000) < F.col(ratio_micro_col) * F.lit(HASH_SPACE))
+    return df.filter(h * F.lit(1_000_000) < F.col("keep_ratio_micro") * F.lit(HASH_SPACE))
 
 
 def quantize_int8(df: DataFrame) -> DataFrame:
@@ -93,21 +91,19 @@ def quantize_int8(df: DataFrame) -> DataFrame:
     )
 
 
-def quota_sample(
-    df: DataFrame, key_col: str, stratum_col: str, n_per_stratum: int
-) -> DataFrame:
-    """Exactly ``min(n, |stratum|)`` rows per stratum, chosen by hash rank —
-    the balanced-dataset builder. Unlike rate-based sampling the quota is a
-    COUNT, so small strata are kept whole while huge ones are capped; unlike
-    ``rand()`` ordering the hash rank is reproducible across runs, engines,
-    and partitionings. One window shuffle on the stratum; ties broken by the
+def quota_sample(df: DataFrame) -> DataFrame:
+    """Exactly ``min(40, |source|)`` rows per ``source``, chosen by the hash
+    rank of ``doc_id`` — the balanced-dataset builder. Unlike rate-based
+    sampling the quota is a COUNT, so small strata are kept whole while huge
+    ones are capped; unlike ``rand()`` ordering the hash rank is reproducible
+    across runs, engines, and partitionings. One window shuffle on the stratum; ties broken by the
     key itself so the cut is total-ordered."""
-    w = Window.partitionBy(stratum_col).orderBy(
-        hash_bucket_full(F.col(key_col)), F.col(key_col)
+    w = Window.partitionBy("source").orderBy(
+        hash_bucket_full(F.col("doc_id")), F.col("doc_id")
     )
     return (
         df.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= n_per_stratum)
+        .filter(F.col("__rk") <= 40)
         .drop("__rk")
     )
 

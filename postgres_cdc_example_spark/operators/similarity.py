@@ -82,9 +82,9 @@ def norm(v: Column) -> Column:
     return F.sqrt(dot(v, v))
 
 
-def _normed(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    v = as_double(F.col(vec_col))
-    return df.select(F.col(id_col), v.alias("v")).withColumn("nrm", norm(F.col("v")))
+def _normed(df: DataFrame) -> DataFrame:
+    v = as_double(F.col("embedding"))
+    return df.select(F.col("vec_id"), v.alias("v")).withColumn("nrm", norm(F.col("v")))
 
 
 def cosine_rounded(va: Column, na: Column, vb: Column, nb: Column) -> Column:
@@ -94,7 +94,7 @@ def cosine_rounded(va: Column, na: Column, vb: Column, nb: Column) -> Column:
 def brute_force_topk(df: DataFrame) -> DataFrame:
     """Exact cosine top-k: tiny query side broadcast against the full table,
     per-query ranking window (shuffle keyed on q_id — never a global sort)."""
-    base = _normed(df, "vec_id", "embedding")
+    base = _normed(df)
     q = base.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
@@ -125,7 +125,7 @@ def ivf_assign(df: DataFrame) -> DataFrame:
     id). Centroids here are the first ``N_CENTROIDS`` vectors — a
     deterministic stand-in for k-means, which would drop in unchanged (the
     assignment plan is identical; only the centroid table differs)."""
-    base = _normed(df, "vec_id", "embedding")
+    base = _normed(df)
     cent = base.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
     )
@@ -207,7 +207,7 @@ def ivf_topk_learned(
     if cent_rows is None:
         cent_rows = train_kmeans(df)
     rounded = rounded_centroids(df.sparkSession, cent_rows)
-    base = _normed(df, "vec_id", "embedding")
+    base = _normed(df)
     assigned = base.select(
         F.col("vec_id"), "v", "nrm", assign_to_literal_centroids(rounded)
     )
@@ -280,7 +280,7 @@ def hyperplane_topk_multiprobe(df: DataFrame) -> DataFrame:
     probe is unchanged, and recall typically jumps several-fold over
     single-probe at the same plane count. The corpus side is never
     re-hashed or re-shuffled."""
-    base = _normed(df, "vec_id", "embedding")
+    base = _normed(df)
     w = hyperplane_weights()
     sig = base.withColumn("bucket", hyperplane_bucket(F.col("v"), w))
     probes = F.array(
@@ -336,7 +336,7 @@ def hyperplane_topk(df: DataFrame) -> DataFrame:
     keeps the tiny query side broadcast). More buckets (planes) trade recall
     for candidate-set size; multi-probe = also search buckets at Hamming
     distance 1, which adds a small explode, not a rescan."""
-    base = _normed(df, "vec_id", "embedding")
+    base = _normed(df)
     w = hyperplane_weights()
     sig = base.withColumn("bucket", hyperplane_bucket(F.col("v"), w))
     q = sig.filter(F.col("vec_id") < N_QUERIES).select(
@@ -421,7 +421,7 @@ def ivf_assign_projection(
     frame (pure projection, no shuffle, no state) — the ingest-path twin
     of the assignment stage inside :func:`ivf_topk_learned`, which is the
     equality the streaming test pins."""
-    base = _normed(df, "vec_id", "embedding")
+    base = _normed(df)
     best = _best_literal_centroid(cent_rows)
     return base.select(
         F.col("vec_id"),
@@ -446,7 +446,7 @@ def train_kmeans(df: DataFrame) -> list[tuple[int, list[float]]]:
     ``queries/extensions._kmeans_cte``). Separated from
     :func:`kmeans_centroids` so a session can train once and share the
     result between the centroid query and learned-IVF search."""
-    base = _normed(df, "vec_id", "embedding").select(
+    base = _normed(df).select(
         F.col("vec_id").alias("_vid"), "v", "nrm"
     )
     # materialize once, lineage-truncated: the training loop re-reads base
@@ -494,7 +494,7 @@ def kmeans_centroids(
     instead of the full loop)."""
     if cent_rows is None:
         cent_rows = train_kmeans(df)
-    base = _normed(df, "vec_id", "embedding")
+    base = _normed(df)
     final = df.sparkSession.createDataFrame(
         cent_rows, "cluster_id int, centroid array<double>"
     )
@@ -526,7 +526,7 @@ def embedding_near_dup_pairs(df: DataFrame) -> DataFrame:
     cosine evaluations ran in a single task (measured 32 s at sf0.1; ~1 s
     after — caught by the r10 full-registry timing pass). The one-time
     shuffle moves N thin rows, nothing at pair scale."""
-    base = _normed(df, "vec_id", "embedding")
+    base = _normed(df)
     a = base.select(
         F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
     ).repartition(df.sparkSession.sparkContext.defaultParallelism)
@@ -579,7 +579,7 @@ def semantic_dedup_flags(
     is by construction the full run filtered to the delta."""
     from postgres_cdc_example_spark.operators import hints
 
-    base = _normed(df, "vec_id", "embedding").select(
+    base = _normed(df).select(
         F.col("vec_id"), "v", "nrm", assign_to_literal_centroids(cent_rows)
     )
     # r12 optimization (guide §2.3/§3.1): the cluster-keyed pair join was
@@ -717,7 +717,8 @@ def _with_subvecs(emb: DataFrame) -> DataFrame:
 
 
 def _tdiv_int(a: int, b: int) -> int:
-    """Toward-zero integer division (DuckDB // semantics; Python // floors)."""
+    """Toward-zero integer division — DuckDB HUGEINT ``//`` / Spark ``div``
+    semantics (Python's ``//`` floors, which differs on negatives)."""
     q = abs(a) // abs(b)
     return q if (a >= 0) == (b >= 0) else -q
 
@@ -954,8 +955,8 @@ def save_ivfpq_codes(codes: DataFrame, path: str) -> None:
     codes.write.mode("overwrite").partitionBy("cid").parquet(path)
 
 
-def read_ivfpq_probe(spark, path: str, cid: int) -> DataFrame:
-    """Probe-1 read of a persisted IVF-PQ index: the ``cid`` equality
+def read_ivfpq_probe(spark, path: str) -> DataFrame:
+    """Probe-1 read of a persisted IVF-PQ index: the ``cid = 1`` equality
     lands in PartitionFilters (directory pruning), not a post-scan
     filter."""
-    return spark.read.parquet(path).filter(F.col("cid") == cid)
+    return spark.read.parquet(path).filter(F.col("cid") == 1)

@@ -30,41 +30,33 @@ from pyspark.sql import functions as F
 DEFAULT_SALTS = 32
 
 
-def salted_agg(
-    df: DataFrame,
-    key_col: str,
-    salt_source: str,
-    aggs: dict[str, Column],
-) -> DataFrame:
-    """Two-stage aggregation over a hot key.
+def salted_agg(df: DataFrame, aggs: dict[str, Column]) -> DataFrame:
+    """Two-stage aggregation over the hot key ``event_type``, salted by
+    ``event_id``.
 
     ``aggs`` maps output name → *decomposable* aggregate expression used in
     the partial stage; the final stage recombines with ``sum`` (counts and
     sums — for avg, aggregate sum+count and divide afterwards).
     """
     partial = (
-        df.withColumn("_salt", F.pmod(F.col(salt_source), F.lit(DEFAULT_SALTS)))
-        .groupBy(key_col, "_salt")
+        df.withColumn("_salt", F.pmod(F.col("event_id"), F.lit(DEFAULT_SALTS)))
+        .groupBy("event_type", "_salt")
         .agg(*[c.alias(f"_p_{name}") for name, c in aggs.items()])
     )
-    return partial.groupBy(key_col).agg(
+    return partial.groupBy("event_type").agg(
         *[F.sum(f"_p_{name}").alias(name) for name in aggs]
     )
 
 
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_source: str,
-) -> DataFrame:
-    """Equi-join where ``skewed``'s join key is hot: scatter the skewed side
-    across ``DEFAULT_SALTS`` sub-keys and replicate ``small`` to match, so the
-    shuffle spreads each hot key over ``DEFAULT_SALTS`` partitions."""
+def salted_join(skewed: DataFrame, small: DataFrame) -> DataFrame:
+    """Equi-join on ``event_type`` where ``skewed``'s key is hot: scatter the
+    skewed side by ``event_id`` across ``DEFAULT_SALTS`` sub-keys and
+    replicate ``small`` to match, so the shuffle spreads each hot key over
+    ``DEFAULT_SALTS`` partitions."""
     fact = skewed.withColumn(
-        "_salt", F.pmod(F.col(salt_source), F.lit(DEFAULT_SALTS))
+        "_salt", F.pmod(F.col("event_id"), F.lit(DEFAULT_SALTS))
     )
     dim = small.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(DEFAULT_SALTS - 1)))
     )
-    return fact.join(dim, [key, "_salt"]).drop("_salt")
+    return fact.join(dim, ["event_type", "_salt"]).drop("_salt")

@@ -155,9 +155,6 @@ def cdc_apply_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return apply_changes(
         _state(spark, sf_dir),
         _changes(spark, sf_dir),
-        key="id",
-        seq="seq",
-        action="action",
         value_cols=["status", "amount"],
         created_col="created_at",
     ).select("id", "status", "amount", "created_at")
@@ -197,9 +194,6 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         _changes(spark, sf_dir),
         group_col="status",
         cents=_cents(),
-        key="id",
-        seq="seq",
-        action="action",
         value_cols=["status", "amount"],
         created_col="created_at",
     )
@@ -246,11 +240,7 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle on the key (operators/cdc_apply.py::scd2_history)."""
     from postgres_cdc_example_spark.operators.cdc_apply import scd2_history
 
-    return scd2_history(
-        _changes(spark, sf_dir), key="id", seq="seq", action="action",
-        value_cols=["status", "amount"],
-        state_keys=_state(spark, sf_dir).select("id"),
-    )
+    return scd2_history(_changes(spark, sf_dir), state_keys=_state(spark, sf_dir).select("id"))
 
 
 # --- point-in-time (time travel) over the SCD2 history --------------------------
@@ -299,11 +289,7 @@ def cdc_state_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     out of scope here by construction (they never enter the history)."""
     from postgres_cdc_example_spark.operators.cdc_apply import scd2_history
 
-    hist = scd2_history(
-        _changes(spark, sf_dir), key="id", seq="seq", action="action",
-        value_cols=["status", "amount"],
-        state_keys=_state(spark, sf_dir).select("id"),
-    )
+    hist = scd2_history(_changes(spark, sf_dir), state_keys=_state(spark, sf_dir).select("id"))
     return hist.filter(
         (F.col("version_seq") <= _ASOF_SEQ)
         & (F.col("valid_to_seq").isNull() | (F.col("valid_to_seq") > _ASOF_SEQ))
@@ -603,9 +589,7 @@ def cdc_schema_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lines = _drifted_wire_lines(spark, sf_dir)
     decoded = decode_change_lines(lines)
-    return schema_drift_audit(
-        decoded, "person", ["id", *PERSON_COLUMNS.keys()]
-    )
+    return schema_drift_audit(decoded, ["id", *PERSON_COLUMNS.keys()])
 
 
 cdc_schema_drift_audit.__doc__ = cdc_schema_drift_audit.__doc__.replace(
@@ -971,10 +955,7 @@ def cdc_apply_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (restart from confirmed LSN) + 175-270 (per-event apply)."""
     state = _state(spark, sf_dir)
     ch = _changes(spark, sf_dir)
-    kw = dict(
-        key="id", seq="seq", action="action",
-        value_cols=["status", "amount"], created_col="created_at",
-    )
+    kw = dict(value_cols=["status", "amount"], created_col="created_at")
     # localCheckpoint (the capstone pattern): `once` feeds FOUR consumers
     # (the second fold, both exceptAll sides, its own count) and `twice`
     # three — without truncation each consumer recomputes the whole

@@ -2055,10 +2055,7 @@ def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     The salt never reaches the result, so the plain GROUP BY oracle applies."""
     ev = load_table(spark, "events", sf_dir)
     out = skew.salted_agg(
-        ev,
-        key_col="event_type",
-        salt_source="event_id",
-        aggs={"n_events": F.count(F.lit(1)), "total_value": F.sum("value")},
+        ev, aggs={"n_events": F.count(F.lit(1)), "total_value": F.sum("value")}
     )
     return out.select(
         "event_type", "n_events", F.round("total_value", 4).alias("total_value")
@@ -2091,9 +2088,7 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = ev.groupBy("event_type").agg(
         F.sum("cents").alias("type_total_cents")
     )
-    return skew.salted_join(
-        ev, stats, key="event_type", salt_source="event_id"
-    ).select("event_id", "event_type", "cents", "type_total_cents")
+    return skew.salted_join(ev, stats).select("event_id", "event_type", "cents", "type_total_cents")
 
 
 # ---------------------------------------------------------------------------
@@ -2225,9 +2220,7 @@ def sample_hash_10pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic ~10% sample via md5-prefix threshold on the stable key:
     reproducible across runs/engines/partitionings (unlike Bernoulli
     df.sample), pure per-row filter — no shuffle, pushdown-compatible."""
-    return sampling.hash_sample(
-        load_table(spark, "documents", sf_dir), "doc_id", "1a"
-    ).select("doc_id", "source")
+    return sampling.hash_sample(load_table(spark, "documents", sf_dir)).select("doc_id", "source")
 
 
 @register(
@@ -2298,13 +2291,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified rates via per-stratum hash thresholds: keep ~50% of the
     curated sources (src0/src1), ~10% of everything else."""
-    sampled = sampling.stratified_sample(
-        load_table(spark, "documents", sf_dir),
-        key_col="doc_id",
-        stratum_col="source",
-        rates={"src0": "80", "src1": "80"},
-        default="1a",
-    )
+    sampled = sampling.stratified_sample(load_table(spark, "documents", sf_dir))
     return sampled.groupBy("source").agg(F.count(F.lit(1)).alias("n_sampled"))
 
 
@@ -2498,9 +2485,7 @@ def sample_quota_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped, and the selection is identical on any engine/partitioning."""
     from postgres_cdc_example_spark.operators import sampling
 
-    return sampling.quota_sample(
-        load_table(spark, "documents", sf_dir), "doc_id", "source", 40
-    ).select("source", "doc_id")
+    return sampling.quota_sample(load_table(spark, "documents", sf_dir)).select("source", "doc_id")
 
 
 @register(
@@ -2644,10 +2629,10 @@ class _FirstFitTree:
 
 
 def _ffd_assign(
-    items: list[tuple[int, int]], cap: int
+    items: list[tuple[int, int]]
 ) -> tuple[list[tuple[int, int, int]], dict[int, int]]:
-    """Serial first-fit-decreasing over (doc_id, n_toks) sorted by
-    (n_toks desc, doc_id): each item lands in the LOWEST-indexed bin with
+    """Serial first-fit-decreasing into ``FFD_CAP``-token bins over
+    (doc_id, n_toks) sorted by (n_toks desc, doc_id): each item lands in the LOWEST-indexed bin with
     room (oversized items open their own over-full bin, like the oracle).
     Returns (doc_id, n_toks, bin_id) rows and per-bin fills."""
     tree = _FirstFitTree(len(items))
@@ -2657,7 +2642,7 @@ def _ffd_assign(
     for did, nt in items:
         ix = tree.leftmost_ge(nt)
         if ix == -1 or ix >= len(rem):
-            rem.append(cap - nt)
+            rem.append(FFD_CAP - nt)
             ix = len(rem) - 1
         else:
             rem[ix] -= nt
@@ -2667,9 +2652,9 @@ def _ffd_assign(
     return out, fill
 
 
-def _pack_harmonic(t: DataFrame, cap: int) -> DataFrame:
-    """Distributed harmonic-class packing — the >threshold arm: items of
-    size in (cap/(k+1), cap/k] pack exactly k per bin, so per-bin fill
+def _pack_harmonic(t: DataFrame) -> DataFrame:
+    """Distributed harmonic-class packing — the >threshold arm: with
+    cap = ``FFD_CAP``, items of size in (cap/(k+1), cap/k] pack exactly k per bin, so per-bin fill
     <= k * (cap div k) <= cap BY CONSTRUCTION and the whole assignment is
     a two-pass distributed rank (per-(class, n_toks) bucket windows +
     broadcast offsets from a <= cap-row histogram — the
@@ -2679,8 +2664,8 @@ def _pack_harmonic(t: DataFrame, cap: int) -> DataFrame:
     kcls = F.greatest(
         F.when(
             F.col("n_toks") > 0,
-            F.least(F.expr(f"{cap} div n_toks"), F.lit(cap)),
-        ).otherwise(F.lit(cap)),
+            F.least(F.expr(f"{FFD_CAP} div n_toks"), F.lit(FFD_CAP)),
+        ).otherwise(F.lit(FFD_CAP)),
         F.lit(1),
     ).cast("long")
     t2 = t.withColumn("kcls", kcls)
@@ -2740,12 +2725,12 @@ def _pack_documents_ffd(
     if t.count() <= driver_max:
         items = [(int(r["doc_id"]), int(r["n_toks"])) for r in t.collect()]
         items.sort(key=lambda r: (-r[1], r[0]))
-        rows, fill = _ffd_assign(items, FFD_CAP)
+        rows, fill = _ffd_assign(items)
         return spark.createDataFrame(
             [(d, nt, b, fill[b]) for d, nt, b in rows],
             "doc_id long, n_toks long, bin_id long, bin_fill long",
         )
-    return _pack_harmonic(t, FFD_CAP)
+    return _pack_harmonic(t)
 
 
 _FFD_FIT = "NULLIF(list_position(list_transform(f.bins, b -> b >= i.n_toks), true), 0)"
@@ -3580,13 +3565,6 @@ def _micro_vec() -> "F.Column":
     )
 
 
-def _tdiv(a: int, b: int) -> int:
-    """Toward-zero integer division — DuckDB HUGEINT ``//`` / Spark ``div``
-    semantics (Python's ``//`` floors, which differs on negatives)."""
-    q = abs(a) // abs(b)
-    return q if (a >= 0) == (b >= 0) else -q
-
-
 @layer("pca_fit")
 def _pca_fit(spark: SparkSession, sf_dir: str) -> tuple:
     """Driver-side eigen fit (3x64 ints of driver state): collects the
@@ -3641,7 +3619,7 @@ def _pca_fit(spark: SparkSession, sf_dir: str) -> tuple:
             for i in range(COV_DIM)
         ]
         dd = sum(w[i] * v1[i] for i in range(COV_DIM))
-        w = [w[i] - _tdiv(dd * v1[i], q) for i in range(COV_DIM)]
+        w = [w[i] - similarity._tdiv_int(dd * v1[i], q) for i in range(COV_DIM)]
         mx = max(max(abs(x) for x in w), 1)
         v2 = [math.floor(float(x) * 1_000_000.0 / float(mx)) for x in w]
     return (mu, v1, v2)
@@ -7168,7 +7146,7 @@ def ann_pq_distortion_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         sum(terms[1:], terms[0]).cast("long").alias("distortion"),
     )
     rounded = similarity.rounded_centroids(spark, cents)
-    asg = similarity._normed(emb, "vec_id", "embedding").select(
+    asg = similarity._normed(emb).select(
         "vec_id", similarity.assign_to_literal_centroids(rounded)
     )
     return (
@@ -7751,7 +7729,7 @@ def ann_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded = similarity.rounded_centroids(
         spark, _trained_centroids(spark, sf_dir)
     )
-    base = similarity._normed(emb, "vec_id", "embedding")
+    base = similarity._normed(emb)
     # repartition the corpus side (the ``embedding_near_dup_pairs``
     # lesson): the broadcast-join's streamed side is otherwise the single
     # scan partition and every interpreted cosine runs in one task
@@ -7965,7 +7943,7 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     way its derivation intends (ID converges at thousands of anchors,
     Facco §2)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    n = similarity._normed(emb, "vec_id", "embedding")
+    n = similarity._normed(emb)
     # count-gated ANCHOR sample (the 100 TB path IN CODE, not argued):
     # TwoNN is a corpus statistic — the MLE over a deterministic random
     # anchor subset against ALL candidates is the estimator working as

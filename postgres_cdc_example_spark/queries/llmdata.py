@@ -29,6 +29,7 @@ from postgres_cdc_example_spark.layers import layer
 from postgres_cdc_example_spark.operators import bloom, dedup, hints, sampling
 from postgres_cdc_example_spark.queries import REGISTRY, register
 from postgres_cdc_example_spark.sources.tables import load_table
+from postgres_cdc_example_spark.streaming.curation import QUOTA_TOKENS
 
 _TOKS = r"list_filter(regexp_split_to_array(trim(lower(text)), '\s+'), x -> x != '')"
 
@@ -600,17 +601,17 @@ def _doc_grams8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gram_sql(n: int) -> str:
-    cat = ", ".join(f"tk[i+{j}]" for j in range(n))
+def _gram_sql() -> str:
+    cat = ", ".join(f"tk[i+{j}]" for j in range(CONTAM_NGRAM))
     return f"""
     toks AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
     grams AS (
       SELECT doc_id,
              unnest(list_distinct(list_transform(
-               generate_series(1, greatest(len(tk) - {n - 1}, 1)),
+               generate_series(1, greatest(len(tk) - {CONTAM_NGRAM - 1}, 1)),
                i -> concat_ws(' ', {cat})
              ))) AS g
-      FROM toks WHERE len(tk) >= {n}
+      FROM toks WHERE len(tk) >= {CONTAM_NGRAM}
     )
     """
 
@@ -618,7 +619,7 @@ def _gram_sql(n: int) -> str:
 @register(
     "benchmark_contamination",
     oracle=f"""
-    WITH {_gram_sql(CONTAM_NGRAM)}
+    WITH {_gram_sql()}
     SELECT c.doc_id,
            count(*) AS n_matched_grams,
            count(DISTINCT b.doc_id) AS n_benchmark_docs
@@ -1616,7 +1617,7 @@ def mixture_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("keep_ratio_micro"),
     )
     return sampling.keep_by_hash_ratio(
-        docs.join(F.broadcast(ratio), "source"), "doc_id", "keep_ratio_micro"
+        docs.join(F.broadcast(ratio), "source")
     ).select("doc_id", "source", "n_toks", "keep_ratio_micro")
 
 
@@ -1978,7 +1979,7 @@ REP_TOP_TOKEN_MAX_MICRO = 300_000  # or one token > 30% of occurrences
               < {REP_DUP_MAX_MICRO}
         AND floor(t.tok_top * 1000000.0 / t.n_tokens) < {REP_TOP_TOKEN_MAX_MICRO}
     ),
-    {_gram_sql(CONTAM_NGRAM).strip().lstrip()},
+    {_gram_sql().strip().lstrip()},
     contaminated AS (
       SELECT DISTINCT c.doc_id
       FROM grams c JOIN grams b ON c.g = b.g
@@ -2949,9 +2950,6 @@ def vocab_hll_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("est").cast("long").alias("hll_estimate"),
         F.expr("abs(est - nde) * 1000000 div nde").alias("err_micro"),
     )
-
-
-QUOTA_TOKENS = 1024  # per-source token budget — bites every fixture source (totals ~1.1-1.7k)
 
 
 @register(

@@ -515,7 +515,7 @@ def errors_nearby_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     clk = ev.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("c_id"), ts_micros(F.col("ts")).alias("c_us")
     )
-    pairs = bucketed_range_join(err, clk, "e_us", "c_us", 1_800_000_000)
+    pairs = bucketed_range_join(err, clk)
     counts = pairs.groupBy("event_id").agg(F.count(F.lit(1)).alias("n"))
     return err.join(counts, "event_id", "left").select(
         "event_id",

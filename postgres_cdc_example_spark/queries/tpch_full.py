@@ -25,11 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from postgres_cdc_example_spark.queries import register
+from postgres_cdc_example_spark.queries.tpch import _rev
 from postgres_cdc_example_spark.sources.tables import load_table
-
-
-def _rev() -> Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 def _rev_cents() -> Column:

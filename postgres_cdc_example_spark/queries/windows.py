@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 
 from postgres_cdc_example_spark.queries import register
 from postgres_cdc_example_spark.sources.tables import load_table
+from postgres_cdc_example_spark.streaming.curation import PLAN_PACK_TOKENS as PIPE_PACK_TOKENS
+from postgres_cdc_example_spark.streaming.curation import QUALITY_GATE as PIPE_QUALITY_GATE
 
 SESSION_GAP = "6 hours"
 _GAP_SQL = "INTERVAL 6 HOUR"
@@ -1839,9 +1841,6 @@ def corpus_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # end-to-end curation capstone (every stage chained, composed from the registry)
 # ---------------------------------------------------------------------------
-
-PIPE_QUALITY_GATE = 0.5  # survivors need quality >= this (text_quality scale)
-PIPE_PACK_TOKENS = 2048  # pack budget, same as pack_documents
 
 
 def _pipeline_oracle() -> str:

@@ -57,12 +57,9 @@ def get_spark(
         # all 227 bench queries: 132.6 -> 127.0 s at 32 cores (-4.2%) and
         # 52.7 -> 51.8 s on the top-40 at 8 cores (-1.7%) — a win at BOTH
         # core counts (individual queries swing both ways; totals decide).
-        # Env-overridable so a memory-tight deployment can restore the
-        # sort-merge default.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # A memory-tight deployment restores the sort-merge default through
+        # extra_conf (README "Session settings").
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.filterPushdown", "true")

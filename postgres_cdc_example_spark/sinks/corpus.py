@@ -22,22 +22,15 @@ reads, the other directories.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 
 
-def write_curated(
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str] = ("source",),
-    sort_by: Sequence[str] = ("doc_id",),
-    max_records_per_file: int = 1_000_000,
-) -> None:
+def write_curated(df: DataFrame, path: str, max_records_per_file: int = 1_000_000) -> None:
+    """Write ``df`` partitioned by ``source`` and sorted by ``doc_id``."""
     (
-        df.repartition(*[df[c] for c in partition_by])
-        .sortWithinPartitions(*sort_by)
-        .write.partitionBy(*partition_by)
+        df.repartition(df["source"])
+        .sortWithinPartitions("doc_id")
+        .write.partitionBy("source")
         .option("maxRecordsPerFile", max_records_per_file)
         .mode("overwrite")
         .parquet(path)

@@ -74,7 +74,6 @@ def flatten_changes(
     table: str,
     columns: dict[str, str],
     key: str = "id",
-    key_type: str = "long",
 ) -> DataFrame:
     """Typed flat change log for ONE table (FIXTURES.md §A2 shape),
     schema-driven so any replicated table gets the same treatment:
@@ -99,7 +98,7 @@ def flatten_changes(
         F.col("change.seq").alias("seq"),
         F.col("change.action").alias("action"),
         F.coalesce(get(cols_map, key), get(ident_map, key))
-        .cast(key_type)
+        .cast("long")
         .alias(key),
         *[get(cols_map, name).cast(tp).alias(name) for name, tp in columns.items()],
     )
@@ -123,11 +122,9 @@ def flatten_person_changes(decoded: DataFrame) -> DataFrame:
     return flatten_changes(decoded, "person", PERSON_COLUMNS)
 
 
-def schema_drift_audit(
-    decoded: DataFrame, table: str, declared: list[str]
-) -> DataFrame:
-    """SCHEMA-DRIFT detector over the decoded change stream: because the
-    wire format carries columns as (name, type, value) ENTRY LISTS, an
+def schema_drift_audit(decoded: DataFrame, declared: list[str]) -> DataFrame:
+    """SCHEMA-DRIFT detector over the decoded ``person`` change stream:
+    because the wire format carries columns as (name, type, value) ENTRY LISTS, an
     upstream ``ALTER TABLE ADD COLUMN`` (or a dropped column) does not
     break :func:`decode_change_lines` — it silently adds/removes entries,
     and :func:`flatten_changes`'s declared projection silently ignores
@@ -153,7 +150,7 @@ def schema_drift_audit(
     names = F.expr("transform(change.columns, c -> c.name)")
     declared_arr = F.array(*[F.lit(c) for c in declared])
     return (
-        decoded.filter(F.col("change.table") == table)
+        decoded.filter(F.col("change.table") == "person")
         .filter(F.col("change.action") != "D")
         .select(
             F.col("change.seq").alias("seq"),

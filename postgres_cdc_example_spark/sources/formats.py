@@ -179,13 +179,12 @@ def read_with_rejects(
 def read_stream_table(
     spark: SparkSession,
     path: str,
-    fmt: str,
     schema: T.StructType | str,
     options: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Streaming twin of :func:`read_table` — the file-drop ingest shape
-    (new csv/json/parquet files land in a directory; Structured Streaming
-    tails it exactly-once via the checkpoint's file log). Same declared-
+    """Streaming twin of :func:`read_table` for csv — the file-drop ingest
+    shape (new csv files land in a directory; Structured Streaming tails it
+    exactly-once via the checkpoint's file log). Same declared-
     schema contract; a streaming read REQUIRES the schema anyway, so the
     no-inference rule costs nothing here. Same good-rows-only contract as
     :func:`read_table`: malformed lines are dropped at the reader
@@ -196,35 +195,29 @@ def read_stream_table(
     column via :func:`corrupt_schema` and split downstream (the filter
     composes with any gate — see tests/test_formats.py's streaming
     split)."""
-    if fmt not in _FORMATS:
-        raise ValueError(f"unsupported format: {fmt!r} (one of {sorted(_FORMATS)})")
     base = _schema_of(schema)
     opts = dict(options or {})
     caller_routes = (
         CORRUPT_COL in base.fieldNames() or "columnNameOfCorruptRecord" in opts
     )
-    reader = spark.readStream.format(fmt).schema(base)
-    if fmt == "csv":
-        for k, v in _CSV_OPTS.items():
-            reader = reader.option(k, v)
-    if fmt in _TEXT_FORMATS:
-        reader = reader.option("mode", "PERMISSIVE" if caller_routes else "DROPMALFORMED")
+    reader = spark.readStream.format("csv").schema(base)
+    for k, v in _CSV_OPTS.items():
+        reader = reader.option(k, v)
+    reader = reader.option("mode", "PERMISSIVE" if caller_routes else "DROPMALFORMED")
     for k, v in opts.items():
         reader = reader.option(k, v)
     df = reader.load(path)
-    if fmt in _TEXT_FORMATS and not caller_routes:
+    if not caller_routes:
         df = df.filter(_full_parse_guard(base))
     return df
 
 
-def corrupt_schema(schema: T.StructType | str) -> T.StructType:
-    """The declared schema plus the corrupt-record column — what a
+def corrupt_schema() -> T.StructType:
+    """The documents schema plus the corrupt-record column — what a
     streaming text read declares when malformed lines must be routed
     instead of dropped (pass ``columnNameOfCorruptRecord`` = CORRUPT_COL
     in options)."""
-    base = _schema_of(schema)
-    if CORRUPT_COL in base.fieldNames():
-        raise ValueError(f"schema must not already contain {CORRUPT_COL}")
+    base = _schema_of("doc_id long, text string, lang string, source string")
     return T.StructType(
         list(base.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
     )

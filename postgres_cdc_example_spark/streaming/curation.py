@@ -83,8 +83,6 @@ policy every engine collect site follows.
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -174,9 +172,7 @@ PACKS_SCHEMA = StructType(
     ]
 )
 
-# the batch capstone's pack budget (queries/windows.PIPE_PACK_TOKENS —
-# duplicated literal to avoid a streaming->queries import cycle; a sync
-# test pins the two equal)
+# the pack budget, shared with the batch capstone (queries/windows.py)
 PLAN_PACK_TOKENS = 2048
 
 STAGES = (
@@ -191,8 +187,12 @@ STAGES = (
     (8, "quota_admitted"),
 )
 
-QUALITY_GATE = 0.5  # the batch capstone's PIPE_QUALITY_GATE, same scale
-QUOTA_TOKENS = 1024  # the batch source_quota_admission budget, same scale
+# survivors need quality >= this (text_quality scale), here and in the
+# batch capstone (queries/windows.py)
+QUALITY_GATE = 0.5
+# per-source token budget, shared with the batch source_quota_admission;
+# bites every fixture source (totals ~1.1-1.7k)
+QUOTA_TOKENS = 1024
 
 
 # the pipeline's state: one versioned store, all tables committed together
@@ -281,9 +281,7 @@ class StreamingCurationPipeline:
         )
         clean = sig.filter(ok & ~drifted).drop("unknown_cols", "missing_cols")
         docs = (
-            flatten_changes(
-                clean, "documents", DOC_COLUMNS, key="doc_id", key_type="long"
-            )
+            flatten_changes(clean, "documents", DOC_COLUMNS, key="doc_id")
             .select(
                 "doc_id",
                 "text",
@@ -399,16 +397,6 @@ class StreamingCurationPipeline:
             )
         )
         quota_next = _fold(quota_prev, batch_src, maxes=("max_doc_id",)).persist()
-        n_viol = quota_next.agg(
-            F.coalesce(F.sum("order_violations"), F.lit(0))
-        ).collect()[0][0]
-        if n_viol:
-            print(
-                f"# quota gate: {n_viol} cumulative doc_id ordering"
-                " violation(s) — stream/batch quota equality is no longer"
-                " guaranteed for the affected sources",
-                file=sys.stderr,
-            )
 
         # --- stage 9: planning snapshot state (mixture + pack plan) -------
         mix_add = admitted.groupBy("source").agg(
@@ -546,14 +534,11 @@ class StreamingCurationPipeline:
                    bands_new, novel, docs, sig):
             df.unpersist()
 
-    def start(self, available_now: bool = True) -> StreamingQuery:
+    def start(self) -> StreamingQuery:
+        """Drain the change lines in ``source_dir`` and stop."""
         return start_change_stream(
-            self.spark,
-            self.source_dir,
-            self.checkpoint_dir,
-            self._apply_batch,
-            "2 seconds",
-            available_now,
+            self.spark, self.source_dir, self.checkpoint_dir, self._apply_batch,
+            "2 seconds", True,
         )
 
     def totals(self) -> DataFrame:

@@ -20,8 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def enrich_stream(stream: DataFrame, dim: DataFrame, on: list[str] | str) -> DataFrame:
-    """Join a streaming DataFrame to a static dimension (broadcast). The
-    result stays a streaming DataFrame; append-mode sinks work for inner
-    and left joins (no state is kept)."""
-    return stream.join(F.broadcast(dim), on, "inner")
+def enrich_stream(stream: DataFrame, dim: DataFrame) -> DataFrame:
+    """Join a streaming DataFrame to a static dimension (broadcast) on
+    ``parity``. The result stays a streaming DataFrame; append-mode sinks
+    work for inner and left joins (no state is kept)."""
+    return stream.join(F.broadcast(dim), "parity", "inner")

@@ -32,32 +32,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    max_delay: str = "10 minutes",
-) -> DataFrame:
-    """Join each ``right`` row to the ``left`` rows of the same ``key``
-    whose event time falls within ``(right_ts - max_delay, right_ts]`` —
-    left events lead up to each right event ("what led up to this right
-    event"). The interval is asymmetric: a left row AFTER its right row
-    never matches (pinned by ``tests/test_stream_join.py``). Both inputs
-    must be streaming DataFrames with event-time columns; all non-key
-    columns should be disjointly named (rename before calling, as with any
-    self-ish join).
+def interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Join each ``right`` (error) row to the ``left`` (click) rows of the
+    same ``user_id`` whose ``click_ts`` falls within
+    ``(error_ts - 10 minutes, error_ts]`` — left events lead up to each
+    right event ("what led up to this right event"). The interval is
+    asymmetric: a left row AFTER its right row never matches (pinned by
+    ``tests/test_stream_join.py``). Both inputs must be streaming
+    DataFrames with event-time columns; all non-key columns should be
+    disjointly named (rename before calling, as with any self-ish join).
 
     The 10-minute watermark bounds BOTH sides' lateness; together with the
     interval it fixes the state-store retention Spark computes per side.
     """
-    l = left.withWatermark(left_ts, "10 minutes")
-    r = right.withWatermark(right_ts, "10 minutes")
+    l = left.withWatermark("click_ts", "10 minutes")
+    r = right.withWatermark("error_ts", "10 minutes")
     cond = (
-        (l[key] == r[key])
-        & (l[left_ts] > r[right_ts] - F.expr(f"INTERVAL {max_delay}"))
-        & (l[left_ts] <= r[right_ts])
+        (l["user_id"] == r["user_id"])
+        & (l["click_ts"] > r["error_ts"] - F.expr("INTERVAL 10 minutes"))
+        & (l["click_ts"] <= r["error_ts"])
     )
     # drop the duplicate key column from the left side after the join
-    return l.join(r, cond, "inner").drop(l[key])
+    return l.join(r, cond, "inner").drop(l["user_id"])

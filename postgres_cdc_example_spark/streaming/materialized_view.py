@@ -43,12 +43,7 @@ AGG_SCHEMA = StructType(
     ]
 )
 
-_APPLY_KW = dict(
-    seq="seq",
-    action="action",
-    value_cols=["name", "uid", "score"],
-    created_col="created_at",
-)
+_APPLY_KW = dict(value_cols=["name", "uid", "score"], created_col="created_at")
 
 
 def _score() -> Column:  # lazy: Column creation needs a live session
@@ -95,7 +90,6 @@ class StreamingAggView(CdcPipeline):
                 self.store.read_changes(version),
                 group_col="name",
                 cents=_score(),
-                key="id",
                 **_APPLY_KW,
             )
             self.agg_store.commit({"agg": new_agg}, version=version)

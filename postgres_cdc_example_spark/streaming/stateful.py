@@ -398,44 +398,41 @@ def _gram_array(text_col):
     )
 
 
-def _make_neardup_group(cap: int):
-    def _group(key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState):
-        # key is "band_idx|band_key" — one STRING column. A composite
-        # (int, string) grouping key silently failed cross-restart state
-        # lookups (run-2 groups saw state.exists == False for keys written
-        # in run 1; single-column string keys restore fine — reproduced on
-        # Spark 4.1.2, see test_neardup_candidates_stream_matches_batch),
-        # so the band coordinates are packed into one string and unpacked
-        # here.
-        band_idx = int(key[0].split("|", 1)[0])
-        ids, saturated = (
-            (list(state.get[0]), bool(state.get[1])) if state.exists else ([], False)
+def _neardup_group(key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState):
+    # key is "band_idx|band_key" — one STRING column. A composite
+    # (int, string) grouping key silently failed cross-restart state
+    # lookups (run-2 groups saw state.exists == False for keys written
+    # in run 1; single-column string keys restore fine — reproduced on
+    # Spark 4.1.2, see test_neardup_candidates_stream_matches_batch),
+    # so the band coordinates are packed into one string and unpacked
+    # here.
+    band_idx = int(key[0].split("|", 1)[0])
+    ids, saturated = (
+        (list(state.get[0]), bool(state.get[1])) if state.exists else ([], False)
+    )
+    known = set(ids)
+    new = sorted(
+        {int(d) for pdf in pdfs for d in pdf["doc_id"]} - known
+    )
+    out_a: list[int] = []
+    out_b: list[int] = []
+    for nid in new:
+        if saturated or len(ids) >= NEARDUP_BUCKET_CAP:
+            # hot-bucket cutoff: a bucket past the cap stops producing
+            # candidates entirely (and is flagged), the streaming twin
+            # of the batch family's df cutoffs — bounded state beats
+            # quadratic emission on boilerplate collisions
+            saturated = True
+            break
+        for eid in ids:
+            out_a.append(min(eid, nid))
+            out_b.append(max(eid, nid))
+        ids.append(nid)
+    state.update((ids, saturated))
+    if out_a:
+        yield pd.DataFrame(
+            {"doc_a": out_a, "doc_b": out_b, "band_idx": band_idx}
         )
-        known = set(ids)
-        new = sorted(
-            {int(d) for pdf in pdfs for d in pdf["doc_id"]} - known
-        )
-        out_a: list[int] = []
-        out_b: list[int] = []
-        for nid in new:
-            if saturated or len(ids) >= cap:
-                # hot-bucket cutoff: a bucket past `cap` stops producing
-                # candidates entirely (and is flagged), the streaming twin
-                # of the batch family's df cutoffs — bounded state beats
-                # quadratic emission on boilerplate collisions
-                saturated = True
-                break
-            for eid in ids:
-                out_a.append(min(eid, nid))
-                out_b.append(max(eid, nid))
-            ids.append(nid)
-        state.update((ids, saturated))
-        if out_a:
-            yield pd.DataFrame(
-                {"doc_a": out_a, "doc_b": out_b, "band_idx": band_idx}
-            )
-
-    return _group
 
 
 def neardup_candidates_stream(docs: DataFrame) -> DataFrame:
@@ -501,7 +498,7 @@ def neardup_candidates_stream(docs: DataFrame) -> DataFrame:
         F.concat_ws("|", "band.band_idx", "band.band_key").alias("band"),
     )
     return banded.groupBy("band").applyInPandasWithState(
-        _make_neardup_group(NEARDUP_BUCKET_CAP),
+        _neardup_group,
         outputStructType=NEARDUP_OUTPUT_SCHEMA,
         stateStructType=NEARDUP_STATE_SCHEMA,
         outputMode="append",
@@ -685,10 +682,8 @@ def _drift_group(key, pdfs, state: GroupState):
     )
 
 
-def schema_drift_stream(
-    lines: DataFrame, table: str, declared: list[str]
-) -> DataFrame:
-    """Streaming twin of ``sources.changelog.schema_drift_audit``:
+def schema_drift_stream(lines: DataFrame, declared: list[str]) -> DataFrame:
+    """Streaming twin of ``sources.changelog.schema_drift_audit`` (table ``person``):
     production catches schema drift AT INGEST, not in a nightly batch
     audit. The REAL wire decode path (``decode_change_lines`` →
     ``with_drift_signature``) runs inside the micro-batch; drifted events
@@ -707,7 +702,7 @@ def schema_drift_stream(
         with_drift_signature,
     )
 
-    sig = with_drift_signature(decode_change_lines(lines), table, declared)
+    sig = with_drift_signature(decode_change_lines(lines), "person", declared)
     drifted = sig.filter(
         (F.col("unknown_cols") != "") | (F.col("missing_cols") != "")
     ).select(
@@ -857,57 +852,56 @@ QUOTA_OUTPUT_SCHEMA = (
 QUOTA_STATE_SCHEMA = "used long, closed boolean, hw_doc long"
 
 
-def _make_quota_group(budget: int):
-    def _group(key, pdfs, state: GroupState):
-        (source,) = key
-        used, closed, hw = (
-            (int(state.get[0]), bool(state.get[1]), int(state.get[2]))
-            if state.exists
-            else (0, False, -1)
-        )
-        batch = pd.concat(list(pdfs)).sort_values("doc_id")
-        out_doc, out_tok, out_adm, out_late = [], [], [], []
-        for did, nt in zip(batch["doc_id"], batch["n_toks"]):
-            did, nt = int(did), int(nt)
-            if did <= hw:
-                # arrived after a HIGHER doc_id was already decided: the
-                # cross-batch ordering contract is broken for this doc.
-                # Deciding it now would disagree with the batch cumsum, so
-                # it is flagged (late=True, admitted=False) and does NOT
-                # touch the quota state — a dead-letter verdict.
-                out_doc.append(did)
-                out_tok.append(nt)
-                out_adm.append(False)
-                out_late.append(True)
-                continue
-            hw = did
-            if not closed and used + nt <= budget:
-                used += nt
-                adm = True
-            else:
-                # first overflow closes the source for good — monotone
-                # cumsum makes this identical to the batch cum <= budget
-                closed = True
-                adm = False
+def _quota_group(key, pdfs, state: GroupState):
+    from postgres_cdc_example_spark.streaming.curation import QUOTA_TOKENS
+
+    (source,) = key
+    used, closed, hw = (
+        (int(state.get[0]), bool(state.get[1]), int(state.get[2]))
+        if state.exists
+        else (0, False, -1)
+    )
+    batch = pd.concat(list(pdfs)).sort_values("doc_id")
+    out_doc, out_tok, out_adm, out_late = [], [], [], []
+    for did, nt in zip(batch["doc_id"], batch["n_toks"]):
+        did, nt = int(did), int(nt)
+        if did <= hw:
+            # arrived after a HIGHER doc_id was already decided: the
+            # cross-batch ordering contract is broken for this doc.
+            # Deciding it now would disagree with the batch cumsum, so
+            # it is flagged (late=True, admitted=False) and does NOT
+            # touch the quota state — a dead-letter verdict.
             out_doc.append(did)
             out_tok.append(nt)
-            out_adm.append(adm)
-            out_late.append(False)
-        state.update((used, closed, hw))
-        yield pd.DataFrame(
-            {
-                "source": [source] * len(out_doc),
-                "doc_id": out_doc,
-                "n_toks": out_tok,
-                "admitted": out_adm,
-                "late": out_late,
-            }
-        )
+            out_adm.append(False)
+            out_late.append(True)
+            continue
+        hw = did
+        if not closed and used + nt <= QUOTA_TOKENS:
+            used += nt
+            adm = True
+        else:
+            # first overflow closes the source for good — monotone
+            # cumsum makes this identical to the batch cum <= budget
+            closed = True
+            adm = False
+        out_doc.append(did)
+        out_tok.append(nt)
+        out_adm.append(adm)
+        out_late.append(False)
+    state.update((used, closed, hw))
+    yield pd.DataFrame(
+        {
+            "source": [source] * len(out_doc),
+            "doc_id": out_doc,
+            "n_toks": out_tok,
+            "admitted": out_adm,
+            "late": out_late,
+        }
+    )
 
-    return _group
 
-
-def quota_gate_stream(docs: DataFrame, budget: int) -> DataFrame:
+def quota_gate_stream(docs: DataFrame) -> DataFrame:
     """Streaming twin of the batch ``source_quota_admission`` query: keyed
     state per source is THREE scalars (tokens admitted, closed flag,
     doc_id high-watermark) no matter the stream length — the
@@ -915,7 +909,7 @@ def quota_gate_stream(docs: DataFrame, budget: int) -> DataFrame:
     codegen projection BEFORE the stateful stage (the text never enters
     state); contract (pinned by the behavioral test): over a
     doc_id-ordered replay the admitted set equals the batch
-    ``cum_tokens <= budget`` set for every source, across a restart, and
+    ``cum_tokens <= QUOTA_TOKENS`` set for every source, across a restart, and
     a source once closed stays closed. A doc arriving at-or-below the
     high-watermark broke the ordering contract: it is emitted with
     ``late=True, admitted=False`` and leaves the quota state untouched —
@@ -929,7 +923,7 @@ def quota_gate_stream(docs: DataFrame, budget: int) -> DataFrame:
         F.size(word_tokens(F.col("text"))).cast("long").alias("n_toks"),
     )
     return prepped.groupBy("source").applyInPandasWithState(
-        _make_quota_group(budget),
+        _quota_group,
         outputStructType=QUOTA_OUTPUT_SCHEMA,
         stateStructType=QUOTA_STATE_SCHEMA,
         outputMode="append",

@@ -10,7 +10,8 @@ the query function runs while it builds the DataFrame (schema inference on
 an uncached read, driver actions such as collect/count for literals or an
 eager localCheckpoint), ``exec_jobs`` those the execution runs. The job
 counters are read after the listener bus drains, outside the timed phases.
-Optionally dumps .explain("formatted") to plans/r12/<name>_<tag>.txt.
+With ``--plans TAG`` it also writes .explain("formatted") to
+plans/<TAG>/<name>.txt.
 
 Usage:
   python scripts/profile_query.py [--plans TAG] [--n N] name [name ...]
@@ -111,7 +112,7 @@ def main() -> None:
             flush=True,
         )
         if plans_tag:
-            out_dir = os.path.join(ROOT, "plans", os.environ.get("PLANS_DIR", "r13"))
+            out_dir = os.path.join(ROOT, "plans", plans_tag)
             os.makedirs(out_dir, exist_ok=True)
             df = registry[name](spark, SF_DIR)
             txt = df._jdf.queryExecution().explainString(
@@ -119,7 +120,7 @@ def main() -> None:
                     "formatted"
                 )
             )
-            path = os.path.join(out_dir, f"{name}_{plans_tag}.txt")
+            path = os.path.join(out_dir, f"{name}.txt")
             with open(path, "w") as f:
                 f.write(txt)
             print(f"# wrote {path}", flush=True)

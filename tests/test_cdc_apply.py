@@ -176,15 +176,12 @@ def test_maintain_agg_multi_batch_equals_recompute(spark, sf_dir):
         changes.filter(F.col("seq") >= cuts[1]),
     ]
     agg = incremental.agg_snapshot(state, "status", _cents())
-    kw = dict(
-        seq="seq", action="action", value_cols=["status", "amount"],
-        created_col="created_at",
-    )
+    kw = dict(value_cols=["status", "amount"], created_col="created_at")
     for batch in batches:
         agg = incremental.maintain_agg(
-            agg, state, batch, group_col="status", cents=_cents(), key="id", **kw
+            agg, state, batch, group_col="status", cents=_cents(), **kw
         ).localCheckpoint()
-        state = apply_changes(state, batch, key="id", **kw).localCheckpoint()
+        state = apply_changes(state, batch, **kw).localCheckpoint()
         expect = {
             (r.status, r.n_rows, r.sum_cents)
             for r in incremental.agg_snapshot(state, "status", _cents()).collect()
@@ -234,17 +231,16 @@ def test_maintain_agg_randomized_logs(spark, seed):
     state = spark.createDataFrame(state_rows, STATE_SCHEMA)
     cents = F.floor(F.col("amount") * 100 + F.lit(0.5)).cast("long")
     agg = incremental.agg_snapshot(state, "status", cents)
-    kw = dict(seq="seq", action="action", value_cols=["status", "amount"],
-              created_col="created_at")
+    kw = dict(value_cols=["status", "amount"], created_col="created_at")
     cuts = [0, 50, 100, 150]
     for lo, hi in zip(cuts, cuts[1:]):
         batch = spark.createDataFrame(
             [e for e in events if lo < e[0] <= hi], CHANGE_SCHEMA
         )
         agg = incremental.maintain_agg(
-            agg, state, batch, group_col="status", cents=cents, key="id", **kw
+            agg, state, batch, group_col="status", cents=cents, **kw
         ).localCheckpoint()
-        state = apply_changes(state, batch, key="id", **kw).localCheckpoint()
+        state = apply_changes(state, batch, **kw).localCheckpoint()
         expect = sorted(
             map(tuple, incremental.agg_snapshot(state, "status", cents).collect())
         )
@@ -261,9 +257,8 @@ def test_maintain_agg_empty_batch_is_identity(spark):
     agg = incremental.agg_snapshot(state, "status", cents)
     empty = spark.createDataFrame([], CHANGE_SCHEMA)
     out = incremental.maintain_agg(
-        agg, state, empty, group_col="status", cents=cents, key="id",
-        seq="seq", action="action", value_cols=["status", "amount"],
-        created_col="created_at",
+        agg, state, empty, group_col="status", cents=cents,
+        value_cols=["status", "amount"], created_col="created_at",
     )
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, agg.collect()))
 
@@ -298,8 +293,8 @@ def test_schema_evolution_mid_stream(spark):
         change_schema,
     )
     new_state = apply_changes(
-        evolved_state, changes, key="id", seq="seq", action="action",
-        value_cols=["status", "amount", "email"], created_col="created_at",
+        evolved_state, changes, value_cols=["status", "amount", "email"],
+        created_col="created_at",
     )
     rows = {r.id: r for r in new_state.collect()}
     assert rows[1].email == "a@x.io" and rows[1].status == "a2"
@@ -320,16 +315,13 @@ def test_scd2_current_versions_match_apply(spark, sf_dir):
     from postgres_cdc_example_spark.queries.cdc import _changes, _state
 
     changes = _changes(spark, sf_dir)
-    hist = scd2_history(
-        changes, value_cols=["status", "amount"],
-        state_keys=_state(spark, sf_dir).select("id"),
-    )
+    hist = scd2_history(changes, state_keys=_state(spark, sf_dir).select("id"))
     current = {
         r.id: (r.status, r.amount) for r in hist.filter("is_current").collect()
     }
     applied = apply_changes(
-        _state(spark, sf_dir), changes, key="id", seq="seq", action="action",
-        value_cols=["status", "amount"], created_col="created_at",
+        _state(spark, sf_dir), changes, value_cols=["status", "amount"],
+        created_col="created_at",
     )
     applied_vals = {r.id: (r.status, r.amount) for r in applied.collect()}
     assert current, "changelog must produce open versions"
@@ -402,7 +394,7 @@ if _HAS_HYPOTHESIS:
                 events.append((seq, a, k, f"{a}{seq}", float(seq), TS(4 + day)))
         changes = spark.createDataFrame(events, CHANGE_SCHEMA)
         ids = spark.createDataFrame([(k,) for k in sorted(state_keys)], "id long")
-        hist = scd2_history(changes, value_cols=["status", "amount"], state_keys=ids)
+        hist = scd2_history(changes, state_keys=ids)
         current = {
             r["id"]: (r["status"], r["amount"])
             for r in hist.filter("is_current").collect()

@@ -120,9 +120,7 @@ def test_schema_drift_flags_unknown_and_missing_but_flatten_survives(spark):
     )
     drift = {
         (r.unknown_cols, r.missing_cols): (r.n_events, r.first_seq, r.last_seq)
-        for r in schema_drift_audit(
-            decoded, "person", ["id", *PERSON_COLUMNS.keys()]
-        ).collect()
+        for r in schema_drift_audit(decoded, ["id", *PERSON_COLUMNS.keys()]).collect()
     }
     assert drift == {("email", ""): (1, 2, 2), ("", "score"): (1, 3, 3)}
 
@@ -156,7 +154,7 @@ def test_schema_drift_audit_streaming_matches_batch(spark, sf_dir, tmp_path):
         final.extend(bdf.collect())
 
     q = (
-        schema_drift_audit(decode_change_lines(stream), "person", declared)
+        schema_drift_audit(decode_change_lines(stream), declared)
         .writeStream.foreachBatch(keep_last)
         .option("checkpointLocation", ckpt)
         .outputMode("complete")
@@ -167,9 +165,7 @@ def test_schema_drift_audit_streaming_matches_batch(spark, sf_dir, tmp_path):
 
     want = sorted(
         tuple(r)
-        for r in schema_drift_audit(
-            decode_change_lines(lines), "person", declared
-        ).collect()
+        for r in schema_drift_audit(decode_change_lines(lines), declared).collect()
     )
     assert sorted(tuple(r) for r in final) == want
     assert want, "fixture must produce drift signatures"

@@ -63,7 +63,7 @@ def _drain(spark, src, store, ckpt):
         spark, src, store, ckpt, decontam_bitmap_words=None,
         quota_tokens=10**9,
     )
-    q = p.start(available_now=True)
+    q = p.start()
     q.awaitTermination()
     return p
 
@@ -180,7 +180,7 @@ def test_curation_pipeline_matches_batch_members_across_restart(
             spark, src, store, ckpt,
             decontam_bitmap_words=bitmap, quota_tokens=budget,
         )
-        q = p.start(available_now=True)
+        q = p.start()
         q.awaitTermination()
         return p
 
@@ -197,9 +197,7 @@ def test_curation_pipeline_matches_batch_members_across_restart(
     decoded = decode_change_lines(ldf)
     valid, corrupt = split_corrupt(decoded)
     clean, drifted = drift_split(valid, "documents", DOC_DECLARED)
-    bdocs = flatten_changes(
-        clean, "documents", DOC_COLUMNS, key="doc_id", key_type="long"
-    ).select(
+    bdocs = flatten_changes(clean, "documents", DOC_COLUMNS, key="doc_id").select(
         "doc_id",
         "text",
         F.size(dedup.word_tokens(F.col("text"))).cast("long").alias("n_toks"),
@@ -269,9 +267,9 @@ def test_curation_pipeline_matches_batch_members_across_restart(
         bdocs.select("doc_id", "text"), "doc_id"
     )
     # source column: re-derive from the decoded lines like the pipeline
-    ksrc = flatten_changes(
-        clean, "documents", DOC_COLUMNS, key="doc_id", key_type="long"
-    ).select("doc_id", "source")
+    ksrc = flatten_changes(clean, "documents", DOC_COLUMNS, key="doc_id").select(
+        "doc_id", "source"
+    )
     dgate = decontamination_gate(kdocs, bitmap)
     drow = dgate.agg(
         F.count(F.lit(1)).alias("n"), F.sum("n_toks").alias("t")
@@ -458,8 +456,8 @@ def test_quota_gate_ordering_sentinel_both_arms(spark, sf_dir, tmp_path):
 
 
 def test_plan_pack_budget_synced_with_batch_capstone():
-    """The streaming planning snapshot duplicates the batch capstone's
-    pack budget literal to avoid an import cycle — pin them equal."""
+    """The streaming planning snapshot and the batch capstone pack with one
+    budget — pin them equal."""
     from postgres_cdc_example_spark.queries.windows import PIPE_PACK_TOKENS
     from postgres_cdc_example_spark.streaming.curation import (
         PLAN_PACK_TOKENS,
@@ -527,7 +525,7 @@ def test_planning_snapshot_restart_equivalent_to_batch(
             spark, src, store, ckpt, decontam_bitmap_words=None,
             quota_tokens=budget,
         )
-        qq = p.start(available_now=True)
+        qq = p.start()
         qq.awaitTermination()
         return p
 

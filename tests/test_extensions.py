@@ -108,7 +108,7 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     plain = ev.join(dim, "event_type").groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum(F.col("value") * F.col("weight")), 4).alias("wv")
     )
-    salted = skew.salted_join(ev, dim, "event_type", "event_id").groupBy(
+    salted = skew.salted_join(ev, dim).groupBy(
         "event_type"
     ).agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum(F.col("value") * F.col("weight")), 4).alias("wv")
@@ -178,10 +178,10 @@ def test_hash_sample_is_partitioning_invariant(spark, sf_dir):
     from postgres_cdc_example_spark.operators import sampling
 
     docs = load_table(spark, "documents", sf_dir)
-    a = {r.doc_id for r in sampling.hash_sample(docs, "doc_id").select("doc_id").collect()}
+    a = {r.doc_id for r in sampling.hash_sample(docs).select("doc_id").collect()}
     b = {
         r.doc_id
-        for r in sampling.hash_sample(docs.repartition(7), "doc_id").select("doc_id").collect()
+        for r in sampling.hash_sample(docs.repartition(7)).select("doc_id").collect()
     }
     assert a == b and 0 < len(a) < docs.count()
 
@@ -210,7 +210,7 @@ def test_hyperplane_lsh_recall_and_consistency(spark, sf_dir):
     w = similarity.hyperplane_weights()
     assert len(w) == 8 and len(w[0]) == 64
     rows = (
-        similarity._normed(emb, "vec_id", "embedding")
+        similarity._normed(emb)
         .withColumn("bucket", similarity.hyperplane_bucket(F.col("v"), w))
         .collect()
     )
@@ -255,7 +255,7 @@ def test_multiprobe_lsh_dominates_single_probe(spark, sf_dir):
     w = similarity.hyperplane_weights()
     buckets = {
         r.vec_id: r.bucket
-        for r in similarity._normed(emb, "vec_id", "embedding")
+        for r in similarity._normed(emb)
         .withColumn("bucket", similarity.hyperplane_bucket(F.col("v"), w))
         .collect()
     }
@@ -313,7 +313,7 @@ def test_resize_payload_contracts(spark, sf_dir):
     """Resize: binary out through Arrow, sizes contracted by the scale
     factor, deterministic across runs, payload prefix preserved."""
     docs = load_table(spark, "documents", sf_dir)
-    resized = multimodal.resize_payload(multimodal.with_payload(docs), scale=0.5)
+    resized = multimodal.resize_payload(multimodal.with_payload(docs))
     rows = resized.collect()
     assert len(rows) == docs.count()
     import hashlib

@@ -130,11 +130,7 @@ def test_streaming_csv_ingest_splits_rejects_and_feeds_gates(spark, tmp_path):
         f.write("doc_id,text,lang,source\n1,ok,en,s\nBAD_ID,broken,en,s\n")
 
     stream = read_stream_table(
-        spark,
-        src,
-        "csv",
-        corrupt_schema(DOCS_DDL),
-        {"columnNameOfCorruptRecord": CORRUPT_COL},
+        spark, src, corrupt_schema(), {"columnNameOfCorruptRecord": CORRUPT_COL}
     )
     good_rows: list = []
     bad_rows: list = []
@@ -251,7 +247,7 @@ def test_read_stream_table_drops_malformed_rows(spark, tmp_path):
     os.makedirs(src)
     with open(os.path.join(src, "d0.csv"), "w") as f:
         f.write("doc_id,text,lang,source\n1,ok,en,s\nNOT_A_NUMBER,bad,en,s\n2,ok2,de,s\n")
-    stream = read_stream_table(spark, src, "csv", DOCS_DDL)
+    stream = read_stream_table(spark, src, DOCS_DDL)
     assert [f.name for f in stream.schema.fields] == ["doc_id", "text", "lang", "source"]
     got: list = []
     q = (

@@ -228,7 +228,7 @@ def test_decoded_ahash_resamples_larger_images():
 
 def test_resize_luma_area_gradient():
     big = list(range(256))  # 16×16 row-major gradient
-    small = multimodal._resize_luma_area(big, 16, 16, 8, 8)
+    small = multimodal._resize_luma_area(big, 16, 16)
     assert len(small) == 64
     # each 2×2 box average of [[2j+32i ..], ..] = 16i*2+2j+8.5 floored
     assert small[0] == (0 + 1 + 16 + 17) // 4
@@ -288,5 +288,5 @@ def test_wav_pcm16_roundtrip_property(samples, rate):
 def test_resize_constant_image_stays_constant(w, h, v):
     """Area-average resample of a constant image is the same constant at
     8x8 — no off-by-one box can leak a neighboring value that isn't there."""
-    out = multimodal._resize_luma_area([v] * (w * h), w, h, 8, 8)
+    out = multimodal._resize_luma_area([v] * (w * h), w, h)
     assert out == [v] * 64

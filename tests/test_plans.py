@@ -225,15 +225,15 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     try:
         save_bucketed(
             load_table(spark, "orders", sf_dir).select("o_orderkey", "o_totalprice"),
-            "bkt.orders_b", "o_orderkey", n_buckets=8,
+            "bkt.orders_b",
         )
         save_bucketed(
             load_table(spark, "lineitem", sf_dir)
             .select("l_orderkey", "l_extendedprice")
             .withColumnRenamed("l_orderkey", "o_orderkey"),
-            "bkt.lineitem_b", "o_orderkey", n_buckets=8,
+            "bkt.lineitem_b",
         )
-        joined = bucketed_join(spark, "bkt.orders_b", "bkt.lineitem_b", "o_orderkey")
+        joined = bucketed_join(spark, "bkt.orders_b", "bkt.lineitem_b")
         assert not has_exchange(joined), explain_str(joined)
         # and it actually runs and matches the shuffled equivalent
         li = load_table(spark, "lineitem", sf_dir)
@@ -770,7 +770,7 @@ def test_ivfpq_code_table_partition_pruning(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ivfpq_codes")
     similarity.save_ivfpq_codes(codes, path)
 
-    probe = similarity.read_ivfpq_probe(spark, path, 1)
+    probe = similarity.read_ivfpq_probe(spark, path)
     plan = explain_str(probe)
     pf = next(l for l in plan.splitlines() if "PartitionFilters" in l)
     assert "cid" in pf and "= 1" in pf, f"cid must prune at the directory: {pf}"

@@ -438,8 +438,7 @@ def test_apply_idempotence_planted_lifecycle_and_detector_fires(
 
     # detector-fires arm: re-stamp one replayed insert's created_at
     st, ch = _state(spark, str(mini)), _changes(spark, str(mini))
-    kw = dict(key="id", seq="seq", action="action",
-              value_cols=["status", "amount"], created_col="created_at")
+    kw = dict(value_cols=["status", "amount"], created_col="created_at")
     once = apply_changes(st, ch, **kw).select(
         "id", "status", "amount", "created_at"
     )

@@ -16,8 +16,7 @@ def test_write_curated_layout_and_roundtrip(spark, sf_dir, tmp_path):
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id", "text", "lang", "source"
     )
-    write_curated(docs, out, partition_by=("source",), sort_by=("doc_id",),
-                  max_records_per_file=50)
+    write_curated(docs, out, max_records_per_file=50)
     dirs = sorted(d for d in os.listdir(out) if d.startswith("source="))
     expected = sorted(
         f"source={r.source}" for r in docs.select("source").distinct().collect()
@@ -45,7 +44,7 @@ def test_write_curated_layout_and_roundtrip(spark, sf_dir, tmp_path):
 def test_files_are_sorted_within_partitions(spark, sf_dir, tmp_path):
     out = str(tmp_path / "sorted")
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "source")
-    write_curated(docs, out, partition_by=("source",), sort_by=("doc_id",))
+    write_curated(docs, out)
     import pyarrow.parquet as pq
 
     for root, _dirs, files in os.walk(out):

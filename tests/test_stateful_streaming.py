@@ -1154,7 +1154,7 @@ def test_schema_drift_stream_matches_batch_audit_across_restart(
     def drain():
         stream = spark.readStream.schema("value string").text(src)
         q = (
-            schema_drift_stream(stream, "person", declared)
+            schema_drift_stream(stream, declared)
             .writeStream.foreachBatch(lambda bdf, _b: emitted.extend(bdf.collect()))
             .option("checkpointLocation", ckpt)
             .outputMode("update")
@@ -1183,9 +1183,7 @@ def test_schema_drift_stream_matches_batch_audit_across_restart(
         )
     want = {
         (r.unknown_cols, r.missing_cols): (r.n_events, r.first_seq, r.last_seq)
-        for r in schema_drift_audit(
-            decode_change_lines(lines), "person", declared
-        ).collect()
+        for r in schema_drift_audit(decode_change_lines(lines), declared).collect()
     }
     assert final == want
     assert want, "fixture must produce drift signatures"
@@ -1196,9 +1194,7 @@ def test_schema_drift_stream_matches_batch_audit_across_restart(
     assert n_drifted == sum(n for n, _f, _l in want.values())
     assert clean.count() + n_drifted == len(vals)
     # and the clean frame really is drift-free under the same audit
-    assert (
-        schema_drift_audit(clean, "person", declared).count() == 0
-    )
+    assert schema_drift_audit(clean, declared).count() == 0
 
 
 def test_ivf_assign_stream_matches_batch_bucketing_across_restart(
@@ -1281,7 +1277,7 @@ def test_ivf_assign_stream_matches_batch_bucketing_across_restart(
 
     want_assign = {
         r.vec_id: r.cluster_id
-        for r in _normed(vecs, "vec_id", "embedding")
+        for r in _normed(vecs)
         .select("vec_id", assign_to_literal_centroids(cents))
         .collect()
     }

@@ -46,12 +46,7 @@ def test_interval_join_matches_preceding_clicks(spark, tmp_path):
     ])
 
     joined = interval_join(
-        _stream(spark, clicks_dir, "click_ts"),
-        _stream(spark, errors_dir, "error_ts"),
-        key="user_id",
-        left_ts="click_ts",
-        right_ts="error_ts",
-        max_delay="10 minutes",
+        _stream(spark, clicks_dir, "click_ts"), _stream(spark, errors_dir, "error_ts")
     )
     q = (
         joined.writeStream.format("memory")
@@ -83,12 +78,7 @@ def test_interval_join_is_stateful_across_batches(spark, tmp_path):
     write_lines(errors_dir, "e_empty.jsonl", [])
 
     joined = interval_join(
-        _stream(spark, clicks_dir, "click_ts"),
-        _stream(spark, errors_dir, "error_ts"),
-        key="user_id",
-        left_ts="click_ts",
-        right_ts="error_ts",
-        max_delay="10 minutes",
+        _stream(spark, clicks_dir, "click_ts"), _stream(spark, errors_dir, "error_ts")
     )
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")

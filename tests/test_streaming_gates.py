@@ -68,7 +68,6 @@ def test_quota_gate_stream_matches_batch_admission(spark, sf_dir, tmp_path):
     admitted sets must equal the batch cum<=budget rule, a closed source
     must stay closed across the restart, and every doc gets exactly one
     verdict."""
-    from postgres_cdc_example_spark.queries.llmdata import QUOTA_TOKENS
     from postgres_cdc_example_spark.streaming.stateful import quota_gate_stream
 
     docs = load_table(spark, "documents", sf_dir)
@@ -78,9 +77,9 @@ def test_quota_gate_stream_matches_batch_admission(spark, sf_dir, tmp_path):
     docs.filter(F.col("doc_id") <= mid).coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(docs.schema).parquet(src)
     emitted: list = []
-    _drain(quota_gate_stream(stream, QUOTA_TOKENS), ckpt, emitted)
+    _drain(quota_gate_stream(stream), ckpt, emitted)
     docs.filter(F.col("doc_id") > mid).coalesce(1).write.mode("append").parquet(src)
-    _drain(quota_gate_stream(stream, QUOTA_TOKENS), ckpt, emitted)
+    _drain(quota_gate_stream(stream), ckpt, emitted)
 
     assert len(emitted) == docs.count(), "every doc gets exactly one verdict"
     got = {(r.source, r.doc_id): r.admitted for r in emitted}
@@ -97,7 +96,6 @@ def test_quota_gate_stream_flags_out_of_order_docs(spark, sf_dir, tmp_path):
     batch arrives below the per-source high-watermark and must come back
     late=True / admitted=False, with the quota state untouched (the
     first batch's admissions are unchanged by the late arrivals)."""
-    from postgres_cdc_example_spark.queries.llmdata import QUOTA_TOKENS
     from postgres_cdc_example_spark.streaming.stateful import quota_gate_stream
 
     docs = load_table(spark, "documents", sf_dir)
@@ -107,11 +105,11 @@ def test_quota_gate_stream_flags_out_of_order_docs(spark, sf_dir, tmp_path):
     docs.filter(F.col("doc_id") > mid).coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(docs.schema).parquet(src)
     emitted: list = []
-    _drain(quota_gate_stream(stream, QUOTA_TOKENS), ckpt, emitted)
+    _drain(quota_gate_stream(stream), ckpt, emitted)
     first = {(r.source, r.doc_id): r for r in emitted}
     assert all(not r.late for r in first.values()), "in-order batch: no lates"
     docs.filter(F.col("doc_id") <= mid).coalesce(1).write.mode("append").parquet(src)
-    _drain(quota_gate_stream(stream, QUOTA_TOKENS), ckpt, emitted)
+    _drain(quota_gate_stream(stream), ckpt, emitted)
 
     late = [r for r in emitted if r.late]
     assert late, "out-of-order replay must produce flagged rows"

@@ -277,7 +277,7 @@ def test_stream_static_enrichment_join(spark, tmp_path):
     changes = flatten_person_changes(valid).withColumn(
         "parity", F.pmod(F.col("score"), F.lit(2)).cast("int")
     )
-    enriched = enrich_stream(changes, dim, "parity")
+    enriched = enrich_stream(changes, dim)
     q = (
         enriched.writeStream.format("memory")
         .queryName("enriched_sink")
@@ -330,10 +330,7 @@ def test_multi_table_stream_routes_to_separate_stores(spark, tmp_path):
         valid = valid.persist()  # shared decode: parse JSON once for all tables
         for t, changes in route_changes(valid, tables).items():
             st = stores[t].read(t)
-            new = apply_changes(
-                st, changes, key="id", seq="seq", action="action",
-                value_cols=list(tables[t]), created_col=None,
-            )
+            new = apply_changes(st, changes, value_cols=list(tables[t]), created_col=None)
             stores[t].commit({t: new.select(*st.columns)}, version=batch_id + 1)
         valid.unpersist()
 
