@@ -8,11 +8,16 @@ shuffles on ``cluster_id`` so each query only meets its own bucket. At 100 TB
 viable for small Q with the query side broadcast; IVF with √N centroids cuts
 the candidate set by ~1/√N per probe.
 
-Everything is JVM-side column arithmetic: ``zip_with`` + ``aggregate`` for
-the in-order dot product (no Python UDF, no collect). Cosine is *rounded to
-6 dp before any threshold or ranking decision* so engine-level float
-summation-order differences (~1e-15) can never flip a comparison — the
-DuckDB oracle applies the identical rounding.
+Cosines are dot products summed in element order from 0.0. Most operators
+fold them JVM-side with ``zip_with`` + ``aggregate`` (:func:`dot`). The two
+exact all-pairs shapes, :func:`embedding_near_dup_pairs` and the TwoNN pair
+join of ``queries.extensions.embedding_intrinsic_dim``, instead run
+:func:`raw_cosine_pairs`: one ``mapInArrow`` kernel that does the same IEEE
+operations in the same order over numpy chunks, against the other side
+collected once and shipped in the kernel's closure. Cosine is *rounded to 6
+dp before any threshold or ranking decision*, always by Spark's ``round``,
+so engine-level float summation-order differences (~1e-15) can never flip a
+comparison — the DuckDB oracle applies the identical rounding.
 
 The reference has no vector surface (SURVEY.md §2.8); these are the
 SURVEY.md §7.2-step-7 extension operators on the ``embeddings`` fixture.
@@ -22,6 +27,9 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -72,7 +80,13 @@ def dot(a: Column, b: Column) -> Column:
     overhead). The ~10× interpreted-vs-codegen penalty
     `operators/dedup.py:21-28` measured for minhash does not transfer: that
     shape interpreted a lambda per md5 call, this one amortizes one lambda
-    dispatch over a primitive-array walk."""
+    dispatch over a primitive-array walk.
+
+    The fold stays where each pair set is bounded by construction: a
+    10-query sample or an 8-centroid grid against the corpus, or pairs
+    inside one cluster or bucket. The all-pairs shapes, whose pair count
+    grows as N², run :func:`raw_cosine_pairs` instead; its kernel computes
+    the same values bit for bit."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
@@ -510,6 +524,152 @@ def kmeans_centroids(
     )
 
 
+NEAR_DUP_COS = 0.45  # cos_r cut of the exact near-dup pairs
+# Rounding to 6 dp is monotone and moves a value by at most 5e-7, so a raw
+# cosine this far below a cut can never round onto the kept side of it.
+ROUND_SLACK = 1e-6
+KERNEL_CELLS = 1 << 20  # pair cells per kernel step, whatever the corpus size
+
+
+def _fold_pairs(at: np.ndarray, bt: np.ndarray) -> np.ndarray:
+    """Dot products of every column of ``at`` with every column of ``bt``
+    (both dim × rows), added in element order from 0.0. Those are the IEEE
+    operations of ``aggregate(zip_with(a, b, x*y), 0.0, acc+x)``, so the
+    sums are bit-identical to :func:`dot`. No ``@``, ``einsum`` or BLAS:
+    they reorder the sum."""
+    acc = np.zeros((at.shape[1], bt.shape[1]))
+    tmp = np.empty_like(acc)
+    for ak, bk in zip(at, bt):
+        np.multiply(ak[:, None], bk, out=tmp)
+        acc += tmp
+    return acc
+
+
+def _norms(mt: np.ndarray) -> np.ndarray:
+    """:func:`norm` of each column of ``mt`` (dim × rows), in the same order."""
+    acc = np.zeros(mt.shape[1])
+    for k in mt:
+        acc += k * k
+    return np.sqrt(acc)
+
+
+def _by_length(ids: pa.Array, emb: pa.Array) -> dict:
+    """The rows that can pair, grouped by vector length:
+    ``{dim: (ids, dim × rows float64 matrix, norms)}``.
+
+    ``zip_with`` pads the shorter vector with nulls, so the fold's dot is
+    null between lengths; a null vector, a null element or a null id pairs
+    with nothing. float32 → float64 is exact, as in :func:`as_double`."""
+    held = pc.fill_null(pc.list_value_length(emb), 0).to_numpy()
+    starts = np.cumsum(held) - held
+    unpaired = pc.or_(emb.is_null(), ids.is_null()).to_numpy(zero_copy_only=False)
+    dims = np.where(unpaired, -1, held)
+    values = pc.list_flatten(emb)
+    if values.null_count:
+        holes = values.is_null().to_numpy(zero_copy_only=False)
+        dims[pc.list_parent_indices(emb).to_numpy()[holes]] = -1
+    flat = values.to_numpy(zero_copy_only=False).astype(np.float64)
+    id_np = pc.fill_null(ids, 0).to_numpy()
+    groups = {}
+    for d in np.unique(dims[dims >= 0]):
+        rows = np.flatnonzero(dims == d)
+        mt = np.ascontiguousarray(flat[starts[rows][:, None] + np.arange(d)].T)
+        groups[int(d)] = (id_np[rows], mt, _norms(mt))
+    return groups
+
+
+def collect_vectors(df: DataFrame) -> pa.Table:
+    """``(vec_id, embedding)`` of ``df`` as one local Arrow table:
+    the side every streamed row of :func:`raw_cosine_pairs` is scored
+    against. It is bounded by the limit the session already puts on a
+    broadcast side, ``spark.sql.autoBroadcastJoinThreshold``, as the
+    nested-loop join this replaces was; the collect stops one row past it."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    limit = max(conf.autoBroadcastJoinThreshold(), 0)  # bytes; -1 turns broadcasts off
+    cap = limit // (8 * (EMB_DIM + 1))
+    side = df.select("vec_id", "embedding").limit(cap + 1).toArrow()
+    held = pc.sum(pc.list_value_length(side["embedding"])).as_py() or 0
+    if side.num_rows > cap or 8 * (side.num_rows + held) > limit:
+        raise ValueError(
+            f"exact all-pairs cosine: more than {cap} vectors (or {limit}"
+            " bytes, spark.sql.autoBroadcastJoinThreshold)"
+            " to hold in one process; use the IVF path (ivf_assign + pairs"
+            " within a cluster, semantic_dedup_flags) or sign-LSH bucketing"
+            " (hyperplane_topk) at this scale"
+        )
+    return side
+
+
+def raw_cosine_pairs(streamed: DataFrame, side: pa.Table, top2: bool) -> DataFrame:
+    """Unrounded cosines ``(vec_a, vec_b, raw)`` of each ``streamed`` row
+    against the ``side`` rows, as one ``mapInArrow`` kernel.
+
+    The values are the fold's to the bit: :func:`_fold_pairs` for the dot,
+    :func:`_norms` for the norms, then ``dot / (na * nb)``. The kernel only
+    narrows the pairs to a superset of what the caller keeps after Spark's
+    ``round(raw, 6)``:
+
+    * ``top2=False``: ``vec_a < vec_b`` and raw ≥ ``NEAR_DUP_COS`` −
+      ``ROUND_SLACK`` (the near-dup cut);
+    * ``top2=True``: ``vec_a != vec_b`` and raw ≥ the row's second-largest
+      raw − ``ROUND_SLACK`` (its two nearest neighbours, ties included).
+
+    NaN sorts above every number in Spark, so a NaN cosine is always kept.
+    A zero norm product raises ``DIVIDE_BY_ZERO`` under ANSI mode, as the
+    fold's division does; otherwise that pair is null and dropped.
+
+    The streamed side keeps its partitioning, so the work spreads over its
+    tasks; each Arrow batch is scored in steps of at most ``KERNEL_CELLS``
+    pairs. The side's float64 matrix travels in the kernel's closure,
+    which PySpark broadcasts once it passes 1 MB."""
+    ansi = streamed.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
+    side_groups = _by_length(
+        side["vec_id"].combine_chunks(), side["embedding"].combine_chunks()
+    )
+    id_type = streamed.schema["vec_id"].dataType.simpleString()
+
+    def kernel(batches):
+        for batch in batches:
+            ids, emb = batch.column("vec_id"), batch.column("embedding")
+            for d, (ida, at, na) in _by_length(ids, emb).items():
+                if d not in side_groups:
+                    continue
+                idb, bt, nb = side_groups[d]
+                step = max(1, KERNEL_CELLS // len(idb))
+                for lo in range(0, len(ida), step):
+                    a = ida[lo:lo + step]
+                    pair = a[:, None] != idb if top2 else a[:, None] < idb
+                    den = na[lo:lo + step, None] * nb
+                    if ansi and np.any(pair & (den == 0)):
+                        i, j = np.argwhere(pair & (den == 0))[0]
+                        raise ZeroDivisionError(
+                            f"[DIVIDE_BY_ZERO] cosine of vec_id {a[i]} and"
+                            f" {idb[j]}: a zero norm"
+                        )
+                    pair &= den != 0
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        raw = _fold_pairs(at[:, lo:lo + step], bt) / den
+                    key = np.where(np.isnan(raw), np.inf, raw)
+                    if top2:
+                        key = np.where(pair, key, -np.inf)
+                        nth = max(key.shape[1] - 2, 0)
+                        cut = np.partition(key, nth, axis=1)[:, nth:nth + 1]
+                        keep = pair & (key >= cut - ROUND_SLACK)
+                    else:
+                        keep = pair & (key >= NEAR_DUP_COS - ROUND_SLACK)
+                    i, j = np.nonzero(keep)
+                    if len(i):
+                        yield pa.RecordBatch.from_arrays(
+                            [pa.array(a[i], ids.type), pa.array(idb[j], ids.type),
+                             pa.array(raw[i, j])],
+                            names=["vec_a", "vec_b", "raw"],
+                        )
+
+    return streamed.select("vec_id", "embedding").mapInArrow(
+        kernel, f"vec_a {id_type}, vec_b {id_type}, raw double"
+    )
+
+
 def embedding_near_dup_pairs(df: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos_r ≥ 0.45, on the
     6-dp-rounded value so the cut is engine-stable).
@@ -517,32 +677,21 @@ def embedding_near_dup_pairs(df: DataFrame) -> DataFrame:
     This is the *exact* all-pairs variant — O(N²/2) — correct at fixture
     scale and the verification step at any scale; the discovery step at
     100 TB is ``ivf_assign`` + within-cluster pairs (same plan as
-    :func:`ivf_topk`'s candidate join) or sign-LSH bucketing.
+    :func:`ivf_topk`'s candidate join) or sign-LSH bucketing. Past the
+    session's broadcast limit :func:`collect_vectors` raises and names them.
 
     The STREAMED side is explicitly repartitioned to the session's full
     parallelism: the fixture is one parquet file → one scan partition, and
-    a BroadcastNestedLoopJoin parallelizes over STREAMED-side partitions
-    only — without the repartition every one of the N²/2 interpreted
-    cosine evaluations ran in a single task (measured 32 s at sf0.1; ~1 s
-    after — caught by the r10 full-registry timing pass). The one-time
-    shuffle moves N thin rows, nothing at pair scale."""
-    base = _normed(df)
-    a = base.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
-    b = base.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
+    the kernel runs per streamed partition — without the repartition all
+    N²/2 cosines ran in a single task (measured 32 s at sf0.1 under the
+    nested-loop join this kernel replaced). The one-time shuffle moves N
+    thin rows, nothing at pair scale."""
+    side = collect_vectors(df)
+    a = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            cosine_rounded(F.col("va"), F.col("na"), F.col("vb"), F.col("nb")).alias(
-                "cos_r"
-            ),
-        )
-        .filter(F.col("cos_r") >= 0.45)
+        raw_cosine_pairs(a, side, top2=False)
+        .select("vec_a", "vec_b", F.round("raw", 6).alias("cos_r"))
+        .filter(F.col("cos_r") >= NEAR_DUP_COS)
     )
 
 

@@ -3308,7 +3308,8 @@ def _cov_gram_batches(it):
     batches, |x_micro| ≤ ~1e6 → ≤ 1e19/1000), so integer sums are exact;
     the decimal merge downstream absorbs unbounded corpus size. Measured
     7× over the exploded-struct formulation (0.34 s vs 2.37 s at sf0.1)
-    — the 'numpy genuinely wins' case functions/vector.py sanctions."""
+    — a case where numpy over whole Arrow batches beats the JVM, like
+    the all-pairs cosine kernel ``similarity.raw_cosine_pairs``."""
     import numpy as np
     import pandas as pd
 
@@ -7943,7 +7944,8 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     way its derivation intends (ID converges at thousands of anchors,
     Facco §2)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    n = similarity._normed(emb)
+    side = similarity.collect_vectors(emb)
+    nv = side.num_rows
     # count-gated ANCHOR sample (the 100 TB path IN CODE, not argued):
     # TwoNN is a corpus statistic — the MLE over a deterministic random
     # anchor subset against ALL candidates is the estimator working as
@@ -7951,45 +7953,26 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate every vector anchors (exact); above it the md5-hash rule
     # keeps ~TWONN_ANCHOR_TARGET anchors at ANY N, so cost is m*N, not
     # N^2 (measured: ungated 109x at 10x rows; gated ~linear).
-    nn = n.agg(F.count(F.lit(1)).cast("long").alias("nv"))
-    anch = (
-        n.crossJoin(F.broadcast(nn))
-        .filter(
-            (F.col("nv") <= TWONN_ANCHOR_GATE)
-            | (
-                F.expr(
-                    "CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 8),"
-                    " 16, 10) AS BIGINT)"
-                )
-                * F.col("nv")
-                <= F.lit(TWONN_ANCHOR_TARGET) * F.lit(4294967296)
+    anch = emb
+    if nv > TWONN_ANCHOR_GATE:
+        anch = emb.filter(
+            F.expr(
+                "CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 8),"
+                " 16, 10) AS BIGINT)"
             )
+            * F.lit(nv).cast("long")
+            <= F.lit(TWONN_ANCHOR_TARGET) * F.lit(4294967296)
         )
-        .drop("nv")
-    )
     # repartition the STREAMED side (the ``embedding_near_dup_pairs``
     # lesson): the fixture is one parquet file -> one scan partition, and
-    # a BNLJ parallelizes over streamed-side partitions only — without
-    # this every one of the m*N interpreted cosine evaluations runs in a
-    # single task (measured 46.6 s at sf0.1; 2.9 s after)
-    a = anch.select(
-        F.col("vec_id"), F.col("v").alias("av"), F.col("nrm").alias("an")
-    ).repartition(spark.sparkContext.defaultParallelism)
-    b = n.select(
-        F.col("vec_id").alias("nbr"), F.col("v").alias("bv"),
-        F.col("nrm").alias("bn"),
-    )
-    pc = a.join(b, F.col("nbr") != F.col("vec_id")).select(
-        "vec_id",
-        "nbr",
-        F.round(
-            F.expr(
-                "aggregate(zip_with(av, bv, (x, y) -> x * y), 0.0D,"
-                " (p, q) -> p + q)"
-            )
-            / (F.col("an") * F.col("bn")),
-            6,
-        ).alias("cos_r"),
+    # the kernel runs per streamed partition — without this every one of
+    # the m*N cosines runs in a single task (measured 46.6 s at sf0.1
+    # under the nested-loop join the kernel replaced; 2.9 s after)
+    a = anch.repartition(spark.sparkContext.defaultParallelism)
+    pc = similarity.raw_cosine_pairs(a, side, top2=True).select(
+        F.col("vec_a").alias("vec_id"),
+        F.col("vec_b").alias("nbr"),
+        F.round("raw", 6).alias("cos_r"),
     )
     top2 = pc.select(
         "vec_id",
@@ -8015,13 +7998,19 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("lnmu_micro")
     )
-    tot = n.agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))
-    na = anch.agg(F.count(F.lit(1)).cast("long").alias("n_anchors"))
-    return mu.agg(
-        F.count(F.lit(1)).cast("long").alias("n_used"),
+    # one aggregate over the mu rows and the anchor rows: no join, so no
+    # nested loop for the 1-row sides
+    rows = mu.select("lnmu_micro", F.lit(False).alias("anchor")).unionByName(
+        anch.select(
+            F.lit(None).cast("long").alias("lnmu_micro"), F.lit(True).alias("anchor")
+        )
+    )
+    return rows.agg(
+        F.count_if(~F.col("anchor")).alias("n_used"),
         F.sum("lnmu_micro").cast("long").alias("sum_lnmu_micro"),
-    ).crossJoin(F.broadcast(tot)).crossJoin(F.broadcast(na)).select(
-        "n_vectors",
+        F.count_if("anchor").alias("n_anchors"),
+    ).select(
+        F.lit(nv).cast("long").alias("n_vectors"),
         "n_anchors",
         "n_used",
         "sum_lnmu_micro",

@@ -4,16 +4,11 @@ The reference writer emits one row per second: ``name = choice(10 names) +
 "_" + counter``, ``uid = uuid4``, ``score = uniform(1,100)``, with id and
 created_at assigned server-side.
 
-Two flavors:
-
-- :func:`person_batch` — deterministic batch generator (``spark.range`` +
-  hash-derived pseudo-randomness).  Determinism is *partitioning-independent*:
-  every pseudo-random column derives from the row id via ``xxhash64``, never
-  from ``F.rand`` (whose draw depends on partition layout) — so tests and
-  oracle checks are stable under any parallelism.
-- :func:`person_stream` — streaming flavor on the rate source
-  (``rowsPerSecond`` mirrors the writer's 1 Hz ticker,
-  ``writer/main.go:52``).
+:func:`person_batch` is a deterministic batch generator (``spark.range`` +
+hash-derived pseudo-randomness).  Determinism is *partitioning-independent*:
+every pseudo-random column derives from the row id via ``xxhash64``, never
+from ``F.rand`` (whose draw depends on partition layout) — so tests and
+oracle checks are stable under any parallelism.
 """
 
 from __future__ import annotations
@@ -28,9 +23,9 @@ NAMES = (
 )
 
 
-def _person_columns(id_col: str, seed: int) -> list:
-    """Hash-derived person columns keyed on the id column."""
-    ident = F.col(id_col)
+def _person_columns(seed: int) -> list:
+    """Hash-derived person columns keyed on the ``id`` column."""
+    ident = F.col("id")
     h = F.xxhash64(ident, F.lit(seed))
     name_idx = (F.pmod(h, F.lit(len(NAMES))) + 1).cast("int")
     first_name = F.element_at(F.array(*[F.lit(n) for n in NAMES]), name_idx)
@@ -69,30 +64,10 @@ def person_batch(
     rng = spark.range(start_id, start_id + n_rows, 1, num_partitions or spark.sparkContext.defaultParallelism)
     base_ts = F.to_timestamp(F.lit("2024-01-01 00:00:00")).cast("timestamp_ntz")
     return rng.select(
-        *_person_columns("id", seed),
+        *_person_columns(seed),
         # created_at advances one second per id — the writer's 1 Hz cadence
         F.timestamp_add("SECOND", (F.col("id") - start_id).cast("int"), base_ts).alias(
             "created_at"
         ),
     )
 
-
-def person_stream(spark: SparkSession) -> DataFrame:
-    """Streaming person rows on the rate source (1 row/s default, matching
-    ``time.NewTicker(1 * time.Second)`` at ``writer/main.go:52``).
-
-    ``uid`` uses ``F.uuid()`` here (nondeterministic, like ``uuid.New()``);
-    ``created_at`` is the rate-source event timestamp (server-side default
-    ``CURRENT_TIMESTAMP``, ``writer/main.go:40``).
-    """
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", 1
-    ).load()
-    cols = _person_columns("value", 42)
-    return rate.select(
-        (F.col("value") + 1).alias("id"),
-        cols[1],  # name
-        F.uuid().alias("uid"),
-        cols[3],  # score
-        F.col("timestamp").cast("timestamp_ntz").alias("created_at"),
-    )

@@ -8,11 +8,13 @@ degenerate shape it must absorb."""
 
 from __future__ import annotations
 
+import math
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from postgres_cdc_example_spark.operators import dedup, text
+from postgres_cdc_example_spark.operators import dedup, similarity, text
 from postgres_cdc_example_spark.operators.cdc_apply import apply_changes
 from postgres_cdc_example_spark.queries import REGISTRY, _load_all
 from postgres_cdc_example_spark.schemas import PERSON_SCHEMA
@@ -785,3 +787,85 @@ def test_source_token_js_single_source_degenerate_is_zero(
     rows = q.fn(spark, str(mini)).collect()
     assert len(rows) == 1 and rows[0].source == "only_source"
     assert rows[0].js_micro == 0 and rows[0].n_tokens > 0
+
+
+EMB_SCHEMA = "vec_id long, embedding array<float>"
+V1 = [math.sin(i + 1.0) for i in range(64)]
+V2 = [x + 0.1 * math.cos(i) for i, x in enumerate(V1)]
+
+
+def _near_dup_by_fold(df):
+    """The near-dup pairs as the nested-loop join and the JVM fold compute
+    them: the reference the Arrow kernel must reproduce, rows or error."""
+    base = similarity._normed(df)
+    a = base.select(
+        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
+    )
+    b = base.select(
+        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
+    )
+    cos = similarity.cosine_rounded(F.col("va"), F.col("na"), F.col("vb"), F.col("nb"))
+    return (
+        a.join(b, F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b", cos.alias("cos_r"))
+        .filter(F.col("cos_r") >= 0.45)
+    )
+
+
+def _near_dup_pairs(spark, rows):
+    """Kernel rows, asserted equal to the fold's (doubles compared with ==)."""
+    df = spark.createDataFrame(rows, EMB_SCHEMA)
+    got = sorted(tuple(r) for r in similarity.embedding_near_dup_pairs(df).collect())
+    assert got == sorted(tuple(r) for r in _near_dup_by_fold(df).collect())
+    return got
+
+
+def test_cosine_kernel_null_vectors_make_no_pair(spark):
+    holed = list(V2)
+    holed[3] = None
+    got = _near_dup_pairs(spark, [(1, V1), (2, V2), (3, None), (4, holed)])
+    assert [(a, b) for a, b, _ in got] == [(1, 2)]
+
+
+def test_cosine_kernel_pairs_only_equal_lengths(spark):
+    """``zip_with`` pads the shorter vector with nulls, so a 32-dim row never
+    pairs with a 64-dim one, even where it is the longer one's prefix."""
+    got = _near_dup_pairs(spark, [(1, V1), (2, V1[:32]), (3, V2[:32])])
+    assert [(a, b) for a, b, _ in got] == [(2, 3)]
+
+
+def test_cosine_kernel_zero_vector_raises_like_the_fold(spark):
+    rows = [(1, [0.0] * 64), (2, V1)]
+    df = spark.createDataFrame(rows, EMB_SCHEMA)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        _near_dup_by_fold(df).collect()
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        similarity.embedding_near_dup_pairs(df).collect()
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:  # without ANSI the division is null, and the pair is dropped
+        assert _near_dup_pairs(spark, rows) == []
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_cosine_kernel_exact_duplicate_is_one(spark):
+    assert _near_dup_pairs(spark, [(1, V1), (2, V1)]) == [(1, 2, 1.0)]
+
+
+def test_cosine_kernel_empty_and_single_row_tables(spark):
+    assert _near_dup_pairs(spark, []) == []
+    assert _near_dup_pairs(spark, [(1, V1)]) == []
+
+
+def test_cosine_kernel_refuses_a_side_over_the_broadcast_limit(spark):
+    """The collected side obeys the session's broadcast limit, and the
+    error names the scale path."""
+    df = spark.createDataFrame([(1, V1), (2, V2)], EMB_SCHEMA)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1000")
+    try:
+        with pytest.raises(ValueError, match="IVF"):
+            similarity.embedding_near_dup_pairs(df)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

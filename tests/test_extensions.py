@@ -140,24 +140,29 @@ def test_frame_sample_covers_every_doc(spark, sf_dir):
     assert frames.filter(frames.frame_idx % multimodal.FRAME_STRIDE != 0).count() == 0
 
 
-def test_pandas_udf_cosine_matches_jvm(spark, sf_dir):
-    """The Arrow pandas_udf cosine and the JVM zip_with/aggregate cosine are
-    interchangeable implementations of the same math (<=1e-9)."""
-    from pyspark.sql import functions as F
-
-    from postgres_cdc_example_spark.functions.vector import cosine_pandas
-
+def test_arrow_kernel_cosine_equals_jvm_fold(spark, sf_dir):
+    """The all-pairs kernel's arithmetic (the in-order fold, the norms, one
+    division) gives the JVM fold's raw cosines bit for bit, over every
+    sf0.001 pair: rounding to 6 dp can then never differ."""
     emb = load_table(spark, "embeddings", sf_dir)
+    side = similarity.collect_vectors(emb)
+    ((ids, mt, nrm),) = similarity._by_length(
+        side["vec_id"].combine_chunks(), side["embedding"].combine_chunks()
+    ).values()
+    raw = similarity._fold_pairs(mt, mt) / (nrm[:, None] * nrm)
+    kernel = {
+        (int(a), int(b)): raw[i, j]
+        for i, a in enumerate(ids)
+        for j, b in enumerate(ids)
+        if a < b
+    }
     a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
-    pairs = a.join(b, F.col("ia") < F.col("ib")).limit(2000)
     va, vb = similarity.as_double(F.col("va")), similarity.as_double(F.col("vb"))
     jvm = similarity.dot(va, vb) / (similarity.norm(va) * similarity.norm(vb))
-    rows = pairs.select(
-        jvm.alias("jvm"), cosine_pandas("va", "vb").alias("py")
-    ).collect()
-    assert rows
-    assert all(abs(r.jvm - r.py) < 1e-9 for r in rows)
+    rows = a.join(b, F.col("ia") < F.col("ib")).select("ia", "ib", jvm.alias("raw")).collect()
+    assert len(rows) == len(kernel) > 0
+    assert all(kernel[(r.ia, r.ib)] == r.raw for r in rows)
 
 
 def test_kmeans_centroids_deterministic_and_complete(spark, sf_dir):

@@ -45,6 +45,15 @@ def test_oracle_parity_at_driver_sf(spark, name):
     compare_to_oracle(spark, DRIVER_SF_DIR, q.fn, q.oracle)
 
 
+@pytest.mark.parametrize("name", ["dedup_embedding_cosine", "embedding_intrinsic_dim"])
+def test_all_pairs_cosine_parity_at_scale(spark, sf_dir, name):
+    """The all-pairs cosine kernel at sf0.1, the only fixture with more than
+    500 vectors (2000): it chunks each Arrow batch, so only a side larger
+    than one step exercises the seams."""
+    q = REGISTRY[name]
+    compare_to_oracle(spark, os.path.join(os.path.dirname(sf_dir), "sf0.1"), q.fn, q.oracle)
+
+
 @pytest.mark.parametrize("name", _ROWS_ONLY)
 def test_rows_only_queries_run(spark, sf_dir, name):
     df = REGISTRY[name].fn(spark, sf_dir)

@@ -3,9 +3,10 @@
 Correctness tests can pass on a plan that would melt at scale; these pin the
 properties that matter on a 1000-executor cluster: predicate pushdown and
 column pruning reaching the parquet scan, broadcast joins for dimension
-sides, no row-at-a-time Python evaluation outside the two mapInPandas
-multimodal stages, and no accidental cartesian products in the pair-join
-dedup operators."""
+sides, no row-at-a-time Python evaluation outside the Arrow-batched
+stages (the multimodal ``mapInPandas`` decode, the Gram map and the
+all-pairs cosine ``mapInArrow`` kernel), and no accidental cartesian
+products in the pair-join dedup operators."""
 
 from __future__ import annotations
 
@@ -448,7 +449,6 @@ def test_doc_chunks_is_zero_shuffle_projection(spark, sf_dir):
 _BNLJ_ALLOWED = {
     # labeled all-pairs exact baselines (scale path = the bucketed variants)
     "ann_cosine_topk",
-    "dedup_embedding_cosine",
     # broadcast 10-query audit sample x corpus, non-equi (!=) condition
     "ann_ivf_topk",
     "ann_recall_audit",
@@ -556,8 +556,6 @@ _BNLJ_ALLOWED = {
     "event_session_gap_curve",  # 6-row threshold grid + 1-row totals over the gap stream
     "doc_nll_outlier_fences",  # member's 1-row (t, v) smoothing-total broadcast resurfaces
     #   as a BNLJ once the fences rollup sits above it (bounded build side)
-    "embedding_intrinsic_dim",  # labeled all-pairs exact 2-NN baseline (TwoNN is a
-    #   sampled statistic at scale); streamed side repartitioned
     "ann_probe_recall_curve",  # 10-query x 8-centroid + 4-probe grid broadcasts +
     #   the brute-truth exact side (the recall-audit class)
     "lang_source_association",  # 1-row grand-total broadcast into the bounded grid
@@ -569,6 +567,16 @@ _BNLJ_ALLOWED = {
     #   user_erasure_audit class); both folds and the diff stay id-keyed
     "pack_efficiency_audit",  # 1-row token-total/LB broadcast into three 1-row strategy rows
 }
+
+
+@pytest.mark.parametrize("name", ["dedup_embedding_cosine", "embedding_intrinsic_dim"])
+def test_all_pairs_cosine_is_one_arrow_kernel(spark, sf_dir, name):
+    """The exact all-pairs cosines run as one ``mapInArrow`` kernel against
+    the collected side: no nested-loop join and no per-row Python UDF."""
+    plan = explain_str(q.queries()[name](spark, sf_dir), mode="simple")
+    assert plan.count("MapInArrow") == 1, plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_registry_wide_no_cartesian_and_bounded_nested_loops(spark, sf_dir):
