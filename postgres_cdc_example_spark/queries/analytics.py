@@ -199,7 +199,7 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def event_time_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time window over the stream table — the batch
     analog of `groupBy(window("ts", "1 hour"))` with a watermark
-    (streaming flavor lives in streaming/pipeline.py)."""
+    (streaming flavor: streaming/stateful.py::windowed_counts)."""
     return (
         load_table(spark, "events", sf_dir)
         .groupBy(F.date_trunc("hour", "ts").cast("timestamp_ntz").alias("window_start"))

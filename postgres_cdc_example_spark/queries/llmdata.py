@@ -1732,9 +1732,16 @@ def corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle layout can never move the value. Cost: one scan, one narrow
     per-source aggregate (map-side combined) — the cheapest possible
     integrity sweep over 100 TB."""
+    return manifest_of(load_table(spark, "documents", sf_dir))
+
+
+def manifest_of(docs: DataFrame) -> DataFrame:
+    """The manifest aggregate over any (doc_id, text, source) frame, batch
+    or streaming: ``streaming/stateful.py::manifest_stream`` is this
+    builder over a stream, so Spark keeps the three per-source folds as
+    its own aggregation state."""
     from postgres_cdc_example_spark.operators import text as text_ops
 
-    docs = load_table(spark, "documents", sf_dir)
     return (
         docs.select(
             "source",
@@ -2834,6 +2841,43 @@ _HLL_LC_DUCK = "[" + ",".join(str(x) for x in _HLL_LC_FLOOR) + "]"
 _HLL_LC_SPARK = "array(" + ",".join(f"{x}L" for x in _HLL_LC_FLOOR) + ")"
 
 
+def hll_points(df: DataFrame, item, *keys: str) -> DataFrame:
+    """One HLL point ``(*keys, j, rho)`` per row of ``df``: a 60-bit md5
+    hash of the string ``item`` splits into an 8-bit register index ``j``
+    and a 52-bit tail ``w`` whose leading-zero rank is ``rho``. The rank
+    comes from ``length(bin(w))``, which never pads in either engine, so
+    no log2 or bit-twiddling can diverge. Works on batch and streaming
+    frames."""
+    h = F.conv(F.substring(F.md5(item), 1, 15), 16, 10).cast("long")
+    t = df.select(*keys, h.alias("h")).select(
+        *keys,
+        (F.col("h") % HLL_M).alias("j"),
+        F.expr(f"h div {HLL_M}").alias("w"),
+    )
+    rho = F.when(F.col("w") == 0, F.lit(HLL_RHO_MAX)).otherwise(
+        F.lit(HLL_RHO_MAX) - F.length(F.bin(F.col("w")))
+    )
+    return t.select(*keys, "j", rho.alias("rho"))
+
+
+def hll_estimate(S: str, V: str) -> str:
+    """SQL for the HLL estimate from the harmonic sum ``S`` (the exact
+    bigint sum of ``2^(53 - M_j)``) and the empty-register count ``V``.
+    The only double is the one estimator division (+, *, / are
+    IEEE-identical across engines); the small-range linear-counting branch
+    reads floor(M*ln(M/V)) from ``_HLL_LC_FLOOR``, so no engine ln()
+    reaches the estimate."""
+    raw = (
+        "(0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0"
+        f" * 9007199254740992.0 / CAST({S} AS DOUBLE)"
+    )
+    return (
+        f"CASE WHEN {raw} <= 640.0 AND {V} > 0"
+        f" THEN element_at({_HLL_LC_SPARK}, CAST({V} AS INT))"
+        f" ELSE CAST(floor({raw}) AS BIGINT) END"
+    )
+
+
 @register(
     "vocab_hll_audit",
     oracle=f"""
@@ -2886,18 +2930,12 @@ def vocab_hll_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source vocabulary size at 100 TB (exact distinct shuffles every
     token; HLL state is {HLL_M} registers per source, period). Built so
     BOTH engines compute the IDENTICAL registers relationally, not via
-    their incompatible native approx functions: a 60-bit md5 hash splits
-    into an 8-bit register index and a 52-bit tail whose leading-zero rank
-    comes from ``length(bin(w))`` (bin() never pads in either engine — no
-    log2, no bit-twiddling divergence); per-register maxima fold in one
+    their incompatible native approx functions: :func:`hll_points` gives
+    each token its register and rank; per-register maxima fold in one
     keyed aggregate; the harmonic sum runs EXACTLY as bigints via
-    ``2^(53 - M_j)`` shifts (max 256 * 2^53 = 2^61, inside int64); the
-    only double is the one estimator division (+,*,/ are IEEE-identical
-    across engines), and the small-range linear-counting branch reads its
-    floor(M*ln(M/V)) from the Python-precomputed 256-entry literal table
-    ``_HLL_LC_FLOOR`` (the _BENFORD_MICRO pattern — no engine ln() ever
-    reaches the estimate). The exact ``count(DISTINCT)`` side exists
-    BECAUSE this is the
+    ``2^(53 - M_j)`` shifts (max 256 * 2^53 = 2^61, inside int64); and
+    :func:`hll_estimate` turns it into the estimate. The exact
+    ``count(DISTINCT)`` side exists BECAUSE this is the
     audit (the number a pipeline publishes beside the estimate); at scale
     only the register table runs. err_micro is pure integer arithmetic on
     the floored estimate."""
@@ -2905,16 +2943,7 @@ def vocab_hll_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = docs.select(
         "source", F.explode(dedup.word_tokens(F.col("text"))).alias("tok")
     )
-    h = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-    t = occ.select("source", h.alias("h")).select(
-        "source",
-        (F.col("h") % HLL_M).alias("j"),
-        F.expr(f"h div {HLL_M}").alias("w"),
-    )
-    rho = F.when(F.col("w") == 0, F.lit(HLL_RHO_MAX)).otherwise(
-        F.lit(HLL_RHO_MAX) - F.length(F.bin(F.col("w")))
-    )
-    regs = t.select("source", "j", rho.alias("rho")).groupBy("source", "j").agg(
+    regs = hll_points(occ, F.col("tok"), "source").groupBy("source", "j").agg(
         F.max("rho").alias("mj")
     )
     grid = (
@@ -2931,18 +2960,7 @@ def vocab_hll_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("S"),
         F.sum(F.when(F.col("mj") == 0, 1).otherwise(0)).alias("V"),
     )
-    raw = (
-        "(0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0"
-        " * 9007199254740992.0 / CAST(S AS DOUBLE)"
-    )
-    e = s.select(
-        "source",
-        F.expr(
-            f"CASE WHEN {raw} <= 640.0 AND V > 0"
-            f" THEN element_at({_HLL_LC_SPARK}, CAST(V AS INT))"
-            f" ELSE CAST(floor({raw}) AS BIGINT) END"
-        ).alias("est"),
-    )
+    e = s.select("source", F.expr(hll_estimate("S", "V")).alias("est"))
     x = occ.groupBy("source").agg(F.countDistinct("tok").alias("nde"))
     return x.join(F.broadcast(e), "source").select(
         "source",
@@ -4250,34 +4268,23 @@ def hll_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-merge ≡ direct build (max is associative/commutative over any
     partitioning of the input — the property that lets a pipeline keep
     {HLL_M}-register hourly state and answer daily/weekly/monthly
-    distinct-user questions WITHOUT rescanning events). Estimator
-    arithmetic is shared verbatim with ``vocab_hll_audit``: exact bigint
-    shift sums, one IEEE-deterministic double division, linear-counting
-    floors from the Python-precomputed literal table. The exact
+    distinct-user questions WITHOUT rescanning events). Points and
+    estimator are shared with ``vocab_hll_audit`` and the streaming
+    ``hll_reach_stream`` (:func:`hll_points`, :func:`hll_estimate`). The exact
     count(DISTINCT) side exists because this is the audit; at scale only
     the register tables run — 24×{HLL_M} ints per day, period."""
     ev = load_table(spark, "events", sf_dir)
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    base = ev.select(
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        F.date_format("ts", "HH").alias("hour"),
-        h.alias("h"),
-    ).select(
+    base = hll_points(
+        ev.select(
+            F.date_format("ts", "yyyy-MM-dd").alias("day"),
+            F.date_format("ts", "HH").alias("hour"),
+            "user_id",
+        ),
+        F.col("user_id").cast("string"),
         "day",
         "hour",
-        (F.col("h") % HLL_M).alias("j"),
-        F.expr(f"h div {HLL_M}").alias("w"),
     )
-    rho = F.when(F.col("w") == 0, F.lit(HLL_RHO_MAX)).otherwise(
-        F.lit(HLL_RHO_MAX) - F.length(F.bin(F.col("w")))
-    )
-    hourly = (
-        base.select("day", "hour", "j", rho.alias("rho"))
-        .groupBy("day", "hour", "j")
-        .agg(F.max("rho").alias("mj"))
-    )
+    hourly = base.groupBy("day", "hour", "j").agg(F.max("rho").alias("mj"))
     daily = hourly.groupBy("day", "j").agg(F.max("mj").alias("mj"))
     grid = (
         base.select("day")
@@ -4293,18 +4300,7 @@ def hll_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("S"),
         F.sum(F.when(F.col("mj") == 0, 1).otherwise(0)).alias("V"),
     )
-    raw = (
-        "(0.7213 / (1.0 + 1.079 / 256.0)) * 65536.0"
-        " * 9007199254740992.0 / CAST(S AS DOUBLE)"
-    )
-    e = s.select(
-        "day",
-        F.expr(
-            f"CASE WHEN {raw} <= 640.0 AND V > 0"
-            f" THEN element_at({_HLL_LC_SPARK}, CAST(V AS INT))"
-            f" ELSE CAST(floor({raw}) AS BIGINT) END"
-        ).alias("est"),
-    )
+    e = s.select("day", F.expr(hll_estimate("S", "V")).alias("est"))
     nh = hourly.select("day", "hour").distinct().groupBy("day").agg(
         F.count(F.lit(1)).cast("long").alias("n_hours")
     )

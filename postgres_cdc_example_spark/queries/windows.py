@@ -138,9 +138,15 @@ def event_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's native ``session_window`` operator (merging session state
     inside the aggregation — the streaming-capable form), verified against
     the islands-derived oracle: window_end = last event + gap."""
-    ev = load_table(spark, "events", sf_dir)
+    return session_windows(load_table(spark, "events", sf_dir), SESSION_GAP)
+
+
+def session_windows(ev: DataFrame, gap: str) -> DataFrame:
+    """Per-user session windows with their event count and value total, on
+    a batch frame or a watermarked stream
+    (``streaming/stateful.py::session_window_stream``)."""
     return (
-        ev.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
+        ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 4).alias("total_value"),

@@ -139,34 +139,14 @@ def schema_drift_audit(decoded: DataFrame, declared: list[str]) -> DataFrame:
     declared schema. Pure set arithmetic on the already-decoded struct:
     zero extra scans, one map-side-combined aggregate on the (tiny) drift
     signature key."""
-    # Generate barrier: projection collapse would re-inline the from_json
-    # behind `change` into EVERY subfield reference below (seq, table,
-    # action, columns ×2) — measured 1.4 s → 5 s at sf0.1 from re-parsing
-    # the JSON per reference. The 1-element explode materializes the
-    # struct once per row (the bpe_merge_steps janino-barrier pattern).
-    decoded = decoded.select(
-        F.explode(F.array(F.struct(F.col("change")))).alias("r")
-    ).select(F.col("r.change").alias("change"))
-    names = F.expr("transform(change.columns, c -> c.name)")
-    declared_arr = F.array(*[F.lit(c) for c in declared])
     return (
-        decoded.filter(F.col("change.table") == "person")
-        .filter(F.col("change.action") != "D")
-        .select(
-            F.col("change.seq").alias("seq"),
-            F.array_join(F.array_sort(F.array_except(names, declared_arr)), ",").alias(
-                "unknown_cols"
-            ),
-            F.array_join(F.array_sort(F.array_except(declared_arr, names)), ",").alias(
-                "missing_cols"
-            ),
-        )
+        with_drift_signature(decoded.select("change"), "person", declared)
         .filter((F.col("unknown_cols") != "") | (F.col("missing_cols") != ""))
         .groupBy("unknown_cols", "missing_cols")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.min("seq").cast("long").alias("first_seq"),
-            F.max("seq").cast("long").alias("last_seq"),
+            F.min("change.seq").cast("long").alias("first_seq"),
+            F.max("change.seq").cast("long").alias("last_seq"),
         )
     )
 
@@ -180,10 +160,12 @@ def with_drift_signature(
     with STREAMING frames (the batch audit aggregates; a stream routes).
     Rows the audit exempts — other tables, D-actions (identity-only wire
     image), undecodable lines (``change`` null → ``split_corrupt``'s
-    dead-letter, not drift) — get the clean signature by definition.
-    Same Generate barrier as the audit (every ``change.*`` reference
-    would otherwise re-parse the JSON), same set arithmetic, so stream
-    and batch signatures agree symbol-for-symbol."""
+    dead-letter, not drift) — get the clean signature by definition."""
+    # Generate barrier: projection collapse would re-inline the from_json
+    # behind `change` into EVERY subfield reference below (seq, table,
+    # action, columns ×2) — measured 1.4 s → 5 s at sf0.1 from re-parsing
+    # the JSON per reference. The 1-element explode materializes the
+    # struct once per row (the bpe_merge_steps janino-barrier pattern).
     cols = [c for c in decoded.columns if c != "change"]
     decoded = decoded.select(
         F.explode(F.array(F.struct(*cols, F.col("change")))).alias("r")
@@ -215,8 +197,8 @@ def drift_split(
     for triage/backfill bounds) instead of flowing on with silently
     dropped or missing fields. Plain filters over
     :func:`with_drift_signature`, so it composes with batch and streaming
-    frames alike; the batch :func:`schema_drift_audit` and the streaming
-    ``schema_drift_stream`` aggregate the same signatures."""
+    frames alike; :func:`schema_drift_audit` aggregates the same
+    signatures."""
     sig = with_drift_signature(decoded, table, declared)
     clean_pred = (F.col("unknown_cols") == "") & (F.col("missing_cols") == "")
     clean = sig.filter(clean_pred).drop("unknown_cols", "missing_cols")

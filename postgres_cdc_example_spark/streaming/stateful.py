@@ -1,11 +1,33 @@
-"""Custom stateful streaming operators (``applyInPandasWithState``).
+"""Stateful streaming operators: the streaming twins of batch queries.
 
 The reference's only stateful construct is the target table itself (T5,
 ``replicator/main.go:195-269``) — handled by the CDC pipeline. This module
 adds the *in-engine keyed state* flavor a training-data/event pipeline
-needs: per-key session state that survives micro-batches AND restarts (state
-lives in the checkpoint's state store), plus the watermarked windowed
-aggregation builder.
+needs: per-key state that survives micro-batches AND restarts (state lives
+in the checkpoint's state store).
+
+The rule: a twin whose state is a fixed set of SQL aggregates is its batch
+builder applied to the streaming frame, and Spark incrementalizes it
+(``windowed_counts``, ``session_window_stream``, ``dedup_stream``,
+``manifest_stream``, ``schema_drift_stream``, ``hll_reach_stream``,
+``quantile_rollup_stream``). Without a watermark such a twin runs in
+``update`` mode, which emits exactly the keys a batch touched. Pandas
+state (``applyInPandasWithState``) stays only where Spark has no operator
+for the fold:
+
+- ``sessionize_stream`` and ``funnel_stream``: ordered walks over each
+  user's events;
+- ``content_dedup_stream``: a processing-time TTL per content hash;
+- ``neardup_candidates_stream``: per-bucket id lists with a saturation cap;
+- ``heavy_hitters_stream``: a space-saving summary, whose evictions depend
+  on how the stream is batched;
+- ``anomaly_stream``: hours close as later hours arrive;
+- ``quota_gate_stream``: order-dependent admission against a budget;
+- ``volume_trend_stream``: a per-day count map whose moments are
+  recomputed on every emission;
+- ``rank_sample_stream``: a bottom-k sample;
+- ``ivf_assign_stream``: its ``batch_n`` is a per-trigger count, which no
+  aggregate over the stream can emit.
 
 Semantics contract: the streaming sessionizer must agree with the batch
 ``event_sessionization`` query (queries/windows.py) — same 6 h gap, same
@@ -13,9 +35,9 @@ Semantics contract: the streaming sessionizer must agree with the batch
 session stays open in state (a stream never ends); tests therefore compare
 emitted sessions against batch sessions minus each user's last.
 
-Scale shape: state is partitioned by the grouping key across executors
-(shuffle on ``user_id``); per-batch work is Arrow-batched pandas per key
-group — no driver involvement, no collect.
+Scale shape: state is partitioned by the grouping key across executors;
+per-batch pandas work is Arrow-batched per key group — no driver
+involvement, no collect.
 """
 
 from __future__ import annotations
@@ -152,21 +174,13 @@ def session_window_stream(
     lags one extra batch; a restart applies the committed value
     immediately), both of which trail the advisor's continuous per-event
     high-watermark (pinned in tests/test_stateful_streaming.py)."""
-    return (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            F.col("w.end").cast("timestamp_ntz").alias("window_end"),
-            "n_events",
-            "total_value",
-        )
+    from postgres_cdc_example_spark.queries.windows import session_windows
+
+    return session_windows(
+        events.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
+            "ts", watermark
+        ),
+        gap,
     )
 
 
@@ -580,141 +594,41 @@ def heavy_hitters_stream(events: DataFrame) -> DataFrame:
     )
 
 
-# --- streaming corpus manifest (running per-source integrity checksum) --------
-
-MANIFEST_OUTPUT_SCHEMA = (
-    "source string, n_docs long, total_toks long, content_xor60 long"
-)
-MANIFEST_STATE_SCHEMA = "n_docs long, total_toks long, x long"
-
-
-def _manifest_group(key, pdfs, state: GroupState):
-    """Fold a batch of pre-hashed doc rows into the per-source manifest
-    state (count, token sum, XOR of 60-bit content hashes). XOR and sums
-    are commutative+associative, so any batch slicing / arrival order
-    yields the same final state — the property the stream==batch test
-    pins. Emits the UPDATED snapshot each batch (monitoring-style)."""
-    (source,) = key
-    batch = pd.concat(list(pdfs))
-    n = int(len(batch))
-    t = int(batch["n_toks"].sum()) if n else 0
-    x = 0
-    for v in batch["h60"]:
-        x ^= int(v)
-    if state.exists:
-        pn, pt, px = state.get
-        n += int(pn)
-        t += int(pt)
-        x ^= int(px)
-    state.update((n, t, x))
-    yield pd.DataFrame(
-        {
-            "source": [source],
-            "n_docs": [n],
-            "total_toks": [t],
-            "content_xor60": [x],
-        }
-    )
+# --- mergeable twins: the batch builder over the stream ------------------------
 
 
 def manifest_stream(docs: DataFrame) -> DataFrame:
-    """Streaming twin of the ``corpus_manifest`` batch query: a running
-    per-source (doc count, token mass, XOR-of-md5-prefix) integrity
-    checksum maintained at ingest. The hash and token count are computed
-    JVM-side as a per-row projection BEFORE the stateful stage (codegen,
-    not pandas), so the Arrow hop carries three narrow columns; state is
-    three longs per source — O(sources), the smallest possible stateful
-    footprint. Because the fold is an XOR/sum, the snapshot after any
-    prefix of batches equals the batch query over the rows ingested so
-    far — restart-safe by construction (state store) and
-    arrival-order-independent, which is what makes it an INTEGRITY check:
-    replaying a corpus through any batching must land on the identical
-    checksum or data was lost/duplicated en route."""
-    from postgres_cdc_example_spark.operators import text as text_ops
-    from postgres_cdc_example_spark.operators.dedup import word_tokens
+    """Streaming twin of the ``corpus_manifest`` batch query: the same
+    builder (``llmdata.manifest_of``) over the stream, so the per-source
+    (doc count, token mass, XOR of 60-bit content hashes) fold is Spark's
+    own aggregation state — three longs per source. XOR and sum are
+    commutative and associative, so the snapshot after any prefix of
+    batches equals the batch query over the rows ingested so far, under
+    any batching and across restarts: replaying a corpus through any
+    batching must land on the identical checksum, or data was lost or
+    duplicated en route. Without a watermark, run it in ``update`` mode
+    (each batch emits the sources it touched) or ``complete`` mode."""
+    from postgres_cdc_example_spark.queries.llmdata import manifest_of
 
-    prepped = docs.select(
-        "source",
-        F.size(word_tokens(F.col("text"))).cast("long").alias("n_toks"),
-        text_ops.content_hash60(F.col("doc_id"), F.col("text")).alias("h60"),
-    )
-    return prepped.groupBy("source").applyInPandasWithState(
-        _manifest_group,
-        outputStructType=MANIFEST_OUTPUT_SCHEMA,
-        stateStructType=MANIFEST_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-# --- streaming schema-drift gate (CDC wire decode at ingest) -------------------
-
-DRIFT_OUTPUT_SCHEMA = (
-    "unknown_cols string, missing_cols string, n_events long, "
-    "first_seq long, last_seq long"
-)
-DRIFT_STATE_SCHEMA = "n long, first_seq long, last_seq long"
-
-
-def _drift_group(key, pdfs, state: GroupState):
-    """Fold a batch of drifted events into the per-signature state
-    (count, min seq, max seq). Count/min/max are commutative+associative,
-    so any batch slicing or restart point lands on the same totals — the
-    stream ≡ batch property the restart test pins."""
-    unknown, missing = key
-    batch = pd.concat(list(pdfs))
-    n = int(len(batch))
-    fs = int(batch["seq"].min())
-    ls = int(batch["seq"].max())
-    if state.exists:
-        pn, pf, pl = state.get
-        n += int(pn)
-        fs = min(fs, int(pf))
-        ls = max(ls, int(pl))
-    state.update((n, fs, ls))
-    yield pd.DataFrame(
-        {
-            "unknown_cols": [unknown],
-            "missing_cols": [missing],
-            "n_events": [n],
-            "first_seq": [fs],
-            "last_seq": [ls],
-        }
-    )
+    return manifest_of(docs)
 
 
 def schema_drift_stream(lines: DataFrame, declared: list[str]) -> DataFrame:
-    """Streaming twin of ``sources.changelog.schema_drift_audit`` (table ``person``):
-    production catches schema drift AT INGEST, not in a nightly batch
-    audit. The REAL wire decode path (``decode_change_lines`` →
-    ``with_drift_signature``) runs inside the micro-batch; drifted events
-    accumulate per-signature running totals (count, first/last WAL
-    position — the operator's backfill bounds) in keyed state across
-    batches AND restarts. Pair with ``changelog.drift_split`` in the same
-    ``foreachBatch`` to route the drifted rows themselves to the
-    dead-letter frame (T7's good-rows-only contract) while this stream
-    maintains the observable totals. Scale shape: the signature is a
-    per-row JVM projection (one Generate barrier, set arithmetic in
-    codegen) and the Arrow hop carries three narrow columns of DRIFTED
-    rows only — state is O(distinct signatures), the smallest possible
-    footprint."""
+    """Streaming twin of ``sources.changelog.schema_drift_audit`` (table
+    ``person``): schema drift is caught AT INGEST, not in a nightly batch
+    audit. The real wire decode (``decode_change_lines``) runs inside the
+    micro-batch, and the per-signature totals (count, first/last WAL
+    position — the operator's backfill bounds) are Spark's aggregation
+    state across batches and restarts. Pair with ``changelog.drift_split``
+    in the same ``foreachBatch`` to route the drifted rows themselves to
+    the dead-letter frame (T7's good-rows-only contract). Run it in
+    ``update`` mode."""
     from postgres_cdc_example_spark.sources.changelog import (
         decode_change_lines,
-        with_drift_signature,
+        schema_drift_audit,
     )
 
-    sig = with_drift_signature(decode_change_lines(lines), "person", declared)
-    drifted = sig.filter(
-        (F.col("unknown_cols") != "") | (F.col("missing_cols") != "")
-    ).select(
-        "unknown_cols", "missing_cols", F.col("change.seq").alias("seq")
-    )
-    return drifted.groupBy("unknown_cols", "missing_cols").applyInPandasWithState(
-        _drift_group,
-        outputStructType=DRIFT_OUTPUT_SCHEMA,
-        stateStructType=DRIFT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return schema_drift_audit(decode_change_lines(lines), declared)
 
 
 # --- streaming event-rate anomaly (trailing-24-observed-hours z-score) --------
@@ -931,192 +845,77 @@ def quota_gate_stream(docs: DataFrame) -> DataFrame:
     )
 
 
-# --- streaming HLL reach (mergeable-sketch state per day) ----------------------
-
-HLL_STREAM_OUTPUT_SCHEMA = (
-    "day string, v_empty long, hll_estimate long"
-)
-HLL_STREAM_STATE_SCHEMA = "regs array<long>"
-
-
-def _hll_estimate_from_regs(regs: list[int]) -> tuple[int, int]:
-    """(V, estimate) from a register vector — the IDENTICAL arithmetic the
-    batch ``hll_merge_rollup`` runs JVM-side: exact bigint shift sum, one
-    IEEE double division (Python floats ARE IEEE doubles — bit-identical
-    +,*,/), linear-counting floors from the shared literal table."""
-    from postgres_cdc_example_spark.queries.llmdata import (
-        _HLL_LC_FLOOR,
-        HLL_M,
-        HLL_RHO_MAX,
-    )
-
-    S = sum(1 << (HLL_RHO_MAX - mj) for mj in regs)
-    V = sum(1 for mj in regs if mj == 0)
-    # Every constant is DERIVED from the shared llmdata parameters so a
-    # register-count change there cannot silently desync this estimator
-    # from the batch hll_merge_rollup it pins equality with. HLL_M is a
-    # power of two, so alpha*m*m*2^rho_max re-associates bit-identically
-    # to the former literal product (power-of-two multiplies are exact
-    # exponent shifts in IEEE doubles).
-    m = float(HLL_M)
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    raw = alpha * m * m * float(1 << HLL_RHO_MAX) / float(S)
-    if raw <= 2.5 * m and V > 0:
-        return V, _HLL_LC_FLOOR[V - 1]
-    import math
-
-    return V, int(math.floor(raw))
-
-
-def _hll_group(key, pdfs, state: GroupState):
-    """Fold a batch of (j, rho) rows into the day's 256-register maxima.
-    max is commutative+associative+idempotent, so any batch slicing or
-    arrival order (and even replayed duplicates) yields the same register
-    vector — the mergeable-sketch property the stream==batch test pins.
-    Emits the UPDATED day snapshot each batch (monitoring-style)."""
-    from postgres_cdc_example_spark.queries.llmdata import HLL_M
-
-    (day,) = key
-    regs = list(state.get[0]) if state.exists else [0] * HLL_M
-    batch = pd.concat(list(pdfs))
-    for j, rho in zip(batch["j"], batch["rho"]):
-        j = int(j)
-        if int(rho) > regs[j]:
-            regs[j] = int(rho)
-    state.update((regs,))
-    v, est = _hll_estimate_from_regs(regs)
-    yield pd.DataFrame(
-        {"day": [day], "v_empty": [v], "hll_estimate": [est]}
-    )
+# --- streaming HLL reach and quantile histogram (fixed-width array state) ----
 
 
 def hll_reach_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of the batch ``hll_merge_rollup``: per-day distinct
-    users tracked at ingest as a 256-register HLL — the mergeable sketch
-    AS keyed state. Hashing/register/rank computations run JVM-side as
-    codegen projections BEFORE the stateful stage (the Arrow hop carries
-    two small ints per event); state is {M} longs per day, PERIOD — the
-    bounded footprint that answers "distinct users today so far" on a
-    100 TB event stream where exact distinct would hold every user id.
-    Register max is commutative, associative and idempotent, so the
-    snapshot after any prefix of batches equals the batch query over the
-    events ingested so far, under any batching, even with replayed
-    duplicates — restart-safe by construction.
+    users tracked at ingest as a {M}-register HLL — the mergeable sketch
+    AS aggregation state. Points come from ``llmdata.hll_points`` and the
+    estimate from ``llmdata.hll_estimate``, the batch queries' own
+    builders; the registers are ONE ``groupBy("day")`` aggregate of {M}
+    ``max`` columns (built as one SQL string), so state is {M} ints per
+    day, PERIOD — the bounded footprint that answers "distinct users today
+    so far" where exact distinct would hold every user id. Register max is
+    commutative, associative and idempotent, so the snapshot after any
+    prefix of batches equals the batch query over the events ingested so
+    far, under any batching, even with replayed duplicates.
 
     Contract (pinned in tests/test_stateful_streaming.py): the final
     emitted estimate per day over a replayed corpus, across a restart,
-    equals ``hll_merge_rollup``'s hll_estimate column exactly."""
-    from postgres_cdc_example_spark.queries.llmdata import HLL_M, HLL_RHO_MAX
-
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    prepped = events.select(
-        F.date_format("ts", "yyyy-MM-dd").alias("day"), h.alias("h")
-    ).select(
-        "day",
-        (F.col("h") % HLL_M).cast("int").alias("j"),
-        F.when(F.expr(f"h div {HLL_M}") == 0, F.lit(HLL_RHO_MAX))
-        .otherwise(F.lit(HLL_RHO_MAX) - F.length(F.bin(F.expr(f"h div {HLL_M}"))))
-        .cast("int")
-        .alias("rho"),
+    equals ``hll_merge_rollup``'s hll_estimate column exactly. Run it in
+    ``update`` mode."""
+    from postgres_cdc_example_spark.queries.llmdata import (
+        HLL_M,
+        HLL_RHO_MAX,
+        hll_estimate,
+        hll_points,
     )
-    return prepped.groupBy("day").applyInPandasWithState(
-        _hll_group,
-        outputStructType=HLL_STREAM_OUTPUT_SCHEMA,
-        stateStructType=HLL_STREAM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+
+    points = hll_points(
+        events.select(F.date_format("ts", "yyyy-MM-dd").alias("day"), "user_id"),
+        F.col("user_id").cast("string"),
+        "day",
+    )
+    regs = ", ".join(
+        f"coalesce(max(CASE WHEN j = {i} THEN rho END), 0)" for i in range(HLL_M)
+    )
+    sv = points.groupBy("day").agg(F.expr(f"array({regs})").alias("regs")).select(
+        "day",
+        F.expr(
+            "aggregate(regs, 0L,"
+            f" (acc, m) -> acc + shiftleft(CAST(1 AS BIGINT), {HLL_RHO_MAX} - m))"
+        ).alias("S"),
+        F.expr("size(filter(regs, m -> m = 0))").cast("long").alias("V"),
+    )
+    return sv.select(
+        "day",
+        F.col("V").alias("v_empty"),
+        F.expr(hll_estimate("S", "V")).alias("hll_estimate"),
     )
 
 
 hll_reach_stream.__doc__ = hll_reach_stream.__doc__.format(M=256)
 
-
-# --- streaming quantile-histogram rollup (bounded-error percentiles) ---------
-
-QH_STREAM_OUTPUT_SCHEMA = (
-    "day string, n long, p50_est_milli long, p90_est_milli long, n_oob long"
-)
-QH_STREAM_STATE_SCHEMA = "counts array<long>, n_oob long"
 QH_STREAM_BUCKETS = 64  # value domain [0, 640) units at width 10; fixture max 490
-
-
-def _qh_estimates(counts: list[int]) -> tuple[int, int, int]:
-    """(n, p50_est, p90_est) from a bucket-count vector — the identical
-    rank rule the batch ``quantile_histogram_rollup`` runs JVM-side:
-    k = ceil(q·n/100) via (q·n + 99) // 100, estimate = lower edge of the
-    first bucket whose cumulative count reaches k. All integer."""
-    from postgres_cdc_example_spark.queries.windows import QHR_BUCKET_MILLI
-
-    n = sum(counts)
-    out = []
-    for q in (50, 90):
-        k = (q * n + 99) // 100
-        cum = 0
-        est = 0
-        for b, c in enumerate(counts):
-            cum += c
-            if cum >= k:
-                est = b * QHR_BUCKET_MILLI
-                break
-        out.append(est)
-    return n, out[0], out[1]
-
-
-def _qh_group(key, pdfs, state: GroupState):
-    """Fold a batch of bucket ids into the day's count vector. Addition is
-    commutative and associative, so any batch slicing or arrival order
-    yields the same vector (NOT idempotent — counters need the file
-    source's exactly-once replay);
-    emits the updated day snapshot each batch (monitoring-style).
-
-    Rows whose bucket falls OUTSIDE [0, QH_STREAM_BUCKETS) — a value below
-    0 or at/above the domain ceiling — are DEAD-LETTERED into the visible
-    ``n_oob`` counter instead of being folded in: a negative bucket would
-    silently wrap (Python negative list index) into a top bucket, and a
-    too-large one would collapse into bucket B-1, both corrupting
-    p50/p90 with no signal while the uncapped batch twin diverges. The
-    same flag-and-exclude pattern the quota/funnel gates use."""
-    (day,) = key
-    if state.exists:
-        counts, n_oob = list(state.get[0]), int(state.get[1])
-    else:
-        counts, n_oob = [0] * QH_STREAM_BUCKETS, 0
-    batch = pd.concat(list(pdfs))
-    for b in batch["bucket"]:
-        b = int(b)
-        if 0 <= b < QH_STREAM_BUCKETS:
-            counts[b] += 1
-        else:
-            n_oob += 1
-    state.update((counts, n_oob))
-    n, p50, p90 = _qh_estimates(counts)
-    yield pd.DataFrame(
-        {
-            "day": [day],
-            "n": [n],
-            "p50_est_milli": [p50],
-            "p90_est_milli": [p90],
-            "n_oob": [n_oob],
-        }
-    )
 
 
 def quantile_rollup_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of the batch ``quantile_histogram_rollup``: per-day
-    value histograms tracked at ingest as keyed state ({B} longs per day,
-    PERIOD — the bounded footprint that answers "today's p50/p90 so far"
-    on a stream where exact rank quantiles would hold every value). The
-    milli-grid and bucket id are computed JVM-side as codegen projections
-    BEFORE the stateful stage (the Arrow hop carries one long per event);
-    bucket-count ADDITION is commutative and associative, so the
+    value histograms tracked at ingest as aggregation state ({B} bucket
+    counts per day, PERIOD — the bounded footprint that answers "today's
+    p50/p90 so far" where exact rank quantiles would hold every value).
+    The counts are ONE ``groupBy("day")`` aggregate of {B} ``count_if``
+    columns; bucket-count ADDITION is commutative and associative, so the
     snapshot after any prefix of batches equals the batch query over the
     events ingested so far under any batching/order — unlike the HLL
-    gate's max it is NOT idempotent, so the counter contract leans on the
-    checkpointed source's exactly-once replay (the same deal every
-    counting stream in this repo documents). Estimates inherit the batch
-    side's by-construction bound: 0 <= exact - est < bucket width.
+    stream's max it is NOT idempotent, so the counter contract leans on
+    the checkpointed source's exactly-once replay. Estimates inherit the
+    batch side's by-construction bound: 0 <= exact - est < bucket width.
+    The rank rule is the batch one, read off the counts array: k =
+    ceil(q·n/100) via (q·n + 99) div 100, and the estimate is the lower
+    edge of the first bucket whose cumulative count reaches k (0 when
+    n = 0).
 
     Out-of-domain values (bucket outside [0, {B})) are DEAD-LETTERED into
     the emitted ``n_oob`` counter — excluded from the histogram and from
@@ -1131,14 +930,14 @@ def quantile_rollup_stream(events: DataFrame) -> DataFrame:
     ``quantile_histogram_rollup``'s (n, p50_est_milli, p90_est_milli)
     columns exactly; the mid-stream snapshot equals a Python-recomputed
     histogram over just the first half; and injected out-of-domain values
-    land in n_oob without disturbing the in-domain estimates."""
+    land in n_oob without disturbing the in-domain estimates. Run it in
+    ``update`` mode."""
     from postgres_cdc_example_spark.queries.windows import QHR_BUCKET_MILLI
 
+    B = QH_STREAM_BUCKETS
     # UNCAPPED floor-division bucket (sign-safe: `div` truncates toward
-    # zero, so negative milli gets the explicit floor correction) — the
-    # stateful stage dead-letters anything outside [0, B) into n_oob
-    # rather than capping it into a real bucket, so an out-of-domain value
-    # is a visible counter, never a silent histogram corruption.
+    # zero, so negative milli gets the explicit floor correction), so an
+    # out-of-domain value lands in n_oob, never in a real bucket.
     prepped = events.select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
         F.expr("CAST(floor(value * 1000 + 0.5) AS BIGINT)").alias("m"),
@@ -1150,12 +949,33 @@ def quantile_rollup_stream(events: DataFrame) -> DataFrame:
             "      THEN 1 ELSE 0 END)"
         ).alias("bucket"),
     )
-    return prepped.groupBy("day").applyInPandasWithState(
-        _qh_group,
-        outputStructType=QH_STREAM_OUTPUT_SCHEMA,
-        stateStructType=QH_STREAM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    counts = ", ".join(f"count_if(bucket = {b})" for b in range(B))
+    hist = prepped.groupBy("day").agg(
+        F.expr(f"array({counts})").alias("counts"),
+        F.expr(f"count_if(bucket < 0 OR bucket >= {B})").alias("n_oob"),
+    ).select(
+        "day",
+        "counts",
+        "n_oob",
+        F.expr("aggregate(counts, 0L, (acc, c) -> acc + c)").alias("n"),
+        F.expr(
+            "transform(counts,"
+            " (c, i) -> aggregate(slice(counts, 1, i + 1), 0L, (acc, x) -> acc + x))"
+        ).alias("cum"),
+    )
+    def est(q: int):
+        # the number of buckets whose cumulative count is still below k is
+        # the index of the first bucket that reaches it
+        return F.expr(
+            f"size(filter(cum, c -> c < ({q} * n + 99) div 100)) * {QHR_BUCKET_MILLI}"
+        ).cast("long")
+
+    return hist.select(
+        "day",
+        "n",
+        est(50).alias("p50_est_milli"),
+        est(90).alias("p90_est_milli"),
+        "n_oob",
     )
 
 

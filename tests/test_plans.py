@@ -1020,3 +1020,35 @@ def test_pair_scale_work_never_inherits_one_partition(spark, sf_dir):
         assert n <= max(2, par // 4), n
     assert h.repartition(par).rdd.getNumPartitions() == par
     del REGISTRY
+
+
+# sha256 of each query's normalized physical plan. The HLL point and
+# estimator builders (``llmdata.hll_points``, ``hll_estimate``) also serve
+# the streaming ``hll_reach_stream``, so these digests keep a change made
+# for the stream from moving the batch plans unnoticed. A new digest means
+# the plan itself changed, not just its expression ids.
+_HLL_PLAN_SHA256 = {
+    "hll_merge_rollup": "b7abe3b2a7db7d290354abebe5f489b75b92b708110dd39b15d6a8bdc8383681",
+    "vocab_hll_audit": "782bf64691cb633e8676668192ba77a8c0da4dbf9238d1530940997d01c5393f",
+}
+
+
+def _normalized_plan(plan: str, sf_dir: str) -> str:
+    """The plan without what varies between sessions and machines:
+    expression ids, exchange plan ids, lambda variable numbers, the
+    fixture directory and the ``Range`` split count (the core count)."""
+    import re
+
+    plan = plan.replace(sf_dir, "<sf_dir>")
+    plan = re.sub(r"#\d+", "#", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
+    plan = re.sub(r"\bx_\d+", "x_", plan)
+    return re.sub(r"splits=Some\(\d+\)", "splits=", plan)
+
+
+@pytest.mark.parametrize("name", sorted(_HLL_PLAN_SHA256))
+def test_hll_batch_plans_unchanged(spark, sf_dir, name):
+    import hashlib
+
+    plan = _normalized_plan(plan_of(spark, sf_dir, name), sf_dir)
+    assert hashlib.sha256(plan.encode()).hexdigest() == _HLL_PLAN_SHA256[name], plan

@@ -5,10 +5,16 @@ queries/windows.py)."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from postgres_cdc_example_spark.queries.windows import event_sessionization
+from postgres_cdc_example_spark.queries.llmdata import HLL_RHO_MAX
+from postgres_cdc_example_spark.queries.windows import (
+    QHR_BUCKET_MILLI,
+    event_sessionization,
+)
 from postgres_cdc_example_spark.sources.tables import load_table
 from postgres_cdc_example_spark.streaming.stateful import (
     sessionize_stream,
@@ -18,8 +24,10 @@ from postgres_cdc_example_spark.streaming.stateful import (
 SPLIT_TS = "2024-01-16 00:00:00"
 
 
-def _drain(stream_df, ckpt, sink: list) -> None:
-    """availableNow drain through foreachBatch (checkpoint-recoverable)."""
+def _drain(stream_df, ckpt, sink: list, mode: str = "append") -> None:
+    """availableNow drain through foreachBatch (checkpoint-recoverable).
+    A native aggregate without a watermark needs ``mode="update"``, which
+    emits exactly the keys a batch touched, as the pandas folds do."""
 
     def collect_batch(bdf, _bid):
         sink.extend(bdf.collect())
@@ -27,11 +35,44 @@ def _drain(stream_df, ckpt, sink: list) -> None:
     q = (
         stream_df.writeStream.foreachBatch(collect_batch)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
+        .outputMode(mode)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+
+
+def _hll_estimate_from_regs(regs: list[int]) -> tuple[int, int]:
+    """(V, estimate) of an HLL register vector, written out in Python as a
+    reference independent of the engine's estimator SQL: exact integer
+    harmonic sum, one IEEE double division (Python floats are IEEE
+    doubles), linear counting floor(m·ln(m/V)) in the small range."""
+    m = len(regs)
+    S = sum(1 << (HLL_RHO_MAX - r) for r in regs)
+    V = regs.count(0)
+    raw = (0.7213 / (1.0 + 1.079 / m)) * m * m * float(1 << HLL_RHO_MAX) / S
+    if raw <= 2.5 * m and V > 0:
+        return V, math.floor(m * math.log(m / V))
+    return V, math.floor(raw)
+
+
+def _qh_estimates(counts: list[int]) -> tuple[int, int, int]:
+    """(n, p50_est, p90_est) of a bucket-count vector, written out in
+    Python: k = ceil(q·n/100) via (q·n + 99) // 100, estimate = lower edge
+    of the first bucket whose cumulative count reaches k."""
+    n = sum(counts)
+    out = []
+    for q in (50, 90):
+        k = (q * n + 99) // 100
+        cum = 0
+        est = 0
+        for b, c in enumerate(counts):
+            cum += c
+            if cum >= k:
+                est = b * QHR_BUCKET_MILLI
+                break
+        out.append(est)
+    return n, out[0], out[1]
 
 
 def test_sessionize_stream_matches_batch_minus_open_tails(spark, sf_dir, tmp_path):
@@ -375,10 +416,10 @@ def test_manifest_stream_matches_batch_manifest(spark, sf_dir, tmp_path):
     first.coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(first.schema).parquet(src)
     emitted: list = []
-    _drain(manifest_stream(stream), ckpt, emitted)
+    _drain(manifest_stream(stream), ckpt, emitted, "update")
 
     second.coalesce(1).write.mode("append").parquet(src)
-    _drain(manifest_stream(stream), ckpt, emitted)
+    _drain(manifest_stream(stream), ckpt, emitted, "update")
 
     # last emitted snapshot per source == batch manifest over the full corpus
     final = {}
@@ -692,18 +733,15 @@ def test_hll_reach_stream_matches_batch_rollup(spark, sf_dir, tmp_path):
     import hashlib
 
     from postgres_cdc_example_spark.queries import REGISTRY
-    from postgres_cdc_example_spark.queries.llmdata import HLL_M, HLL_RHO_MAX
-    from postgres_cdc_example_spark.streaming.stateful import (
-        _hll_estimate_from_regs,
-        hll_reach_stream,
-    )
+    from postgres_cdc_example_spark.queries.llmdata import HLL_M
+    from postgres_cdc_example_spark.streaming.stateful import hll_reach_stream
 
     ev = load_table(spark, "events", sf_dir)
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
     ev.filter(F.col("ts") < SPLIT_TS).coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(ev.schema).parquet(src)
     emitted: list = []
-    _drain(hll_reach_stream(stream), ckpt, emitted)
+    _drain(hll_reach_stream(stream), ckpt, emitted, "update")
     first = {r.day: r.hll_estimate for r in emitted}
 
     def py_sketch(rows):
@@ -724,7 +762,7 @@ def test_hll_reach_stream_matches_batch_rollup(spark, sf_dir, tmp_path):
     assert first == py_sketch(half1), "prefix property must hold after batch 1"
 
     ev.filter(F.col("ts") >= SPLIT_TS).coalesce(1).write.mode("append").parquet(src)
-    _drain(hll_reach_stream(stream), ckpt, emitted)
+    _drain(hll_reach_stream(stream), ckpt, emitted, "update")
     final: dict = {}
     for r in emitted:  # later emissions overwrite: keep each day's last
         final[r.day] = r.hll_estimate
@@ -744,10 +782,8 @@ def test_quantile_rollup_stream_matches_batch(spark, sf_dir, tmp_path):
     snapshot after batch 1 must equal a Python-recomputed histogram over
     just the first half (prefix property)."""
     from postgres_cdc_example_spark.queries import REGISTRY
-    from postgres_cdc_example_spark.queries.windows import QHR_BUCKET_MILLI
     from postgres_cdc_example_spark.streaming.stateful import (
         QH_STREAM_BUCKETS,
-        _qh_estimates,
         quantile_rollup_stream,
     )
 
@@ -756,15 +792,13 @@ def test_quantile_rollup_stream_matches_batch(spark, sf_dir, tmp_path):
     ev.filter(F.col("ts") < SPLIT_TS).coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(ev.schema).parquet(src)
     emitted: list = []
-    _drain(quantile_rollup_stream(stream), ckpt, emitted)
+    _drain(quantile_rollup_stream(stream), ckpt, emitted, "update")
     assert all(r.n_oob == 0 for r in emitted), (
         "fixture values live in [0, 640) — nothing may dead-letter"
     )
     first = {r.day: (r.n, r.p50_est_milli, r.p90_est_milli) for r in emitted}
 
     def py_hist(rows):
-        import math
-
         days: dict = {}
         for day, value in rows:
             b = int(math.floor(value * 1000 + 0.5)) // QHR_BUCKET_MILLI
@@ -780,7 +814,7 @@ def test_quantile_rollup_stream_matches_batch(spark, sf_dir, tmp_path):
     assert first, "first half must emit at least one day"
 
     ev.filter(F.col("ts") >= SPLIT_TS).coalesce(1).write.mode("append").parquet(src)
-    _drain(quantile_rollup_stream(stream), ckpt, emitted)
+    _drain(quantile_rollup_stream(stream), ckpt, emitted, "update")
     assert all(r.n_oob == 0 for r in emitted)
     final: dict = {}
     for r in emitted:  # later emissions overwrite: keep each day's last
@@ -800,11 +834,9 @@ def test_quantile_rollup_stream_dead_letters_out_of_domain(spark, tmp_path):
     import datetime
 
     from postgres_cdc_example_spark.streaming.stateful import (
-        _qh_estimates,
         QH_STREAM_BUCKETS,
         quantile_rollup_stream,
     )
-    from postgres_cdc_example_spark.queries.windows import QHR_BUCKET_MILLI
 
     ts = datetime.datetime(2024, 1, 1, 12, 0, 0)
     in_domain = [5.0, 25.0, 25.0, 487.5]  # buckets 0, 2, 2, 48
@@ -815,7 +847,7 @@ def test_quantile_rollup_stream_dead_letters_out_of_domain(spark, tmp_path):
     df.coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(df.schema).parquet(src)
     emitted: list = []
-    _drain(quantile_rollup_stream(stream), ckpt, emitted)
+    _drain(quantile_rollup_stream(stream), ckpt, emitted, "update")
     (r,) = emitted
     assert r.n_oob == len(out_domain)
     counts = [0] * QH_STREAM_BUCKETS
@@ -1286,3 +1318,47 @@ def test_ivf_assign_stream_matches_batch_bucketing_across_restart(
     # drift evidence is non-trivial: some vector sits off its centroid
     assert any(r.drift_micro > 0 for r in arows)
     assert all(r.drift_micro >= 0 for r in arows)
+
+
+def test_mergeable_twins_are_native_aggregations(spark, sf_dir, tmp_path):
+    """The four stream twins whose state is a fixed set of SQL aggregates
+    are their batch builders over the stream: the analyzed plan holds no
+    pandas state operator and no Python evaluation of any kind."""
+    import os
+    import re
+
+    from postgres_cdc_example_spark.sources.changelog import PERSON_COLUMNS
+    from postgres_cdc_example_spark.streaming.stateful import (
+        hll_reach_stream,
+        manifest_stream,
+        quantile_rollup_stream,
+        schema_drift_stream,
+    )
+
+    ev = load_table(spark, "events", sf_dir)
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text", "source")
+    ev_src, docs_src, lines_src = (str(tmp_path / d) for d in ("ev", "docs", "lines"))
+    ev.limit(0).write.parquet(ev_src)
+    docs.limit(0).write.parquet(docs_src)
+    os.makedirs(lines_src)
+    evs = spark.readStream.schema(ev.schema).parquet(ev_src)
+    streams = {
+        "manifest_stream": manifest_stream(
+            spark.readStream.schema(docs.schema).parquet(docs_src)
+        ),
+        "schema_drift_stream": schema_drift_stream(
+            spark.readStream.schema("value string").text(lines_src),
+            ["id", *PERSON_COLUMNS.keys()],
+        ),
+        "hll_reach_stream": hll_reach_stream(evs),
+        "quantile_rollup_stream": quantile_rollup_stream(evs),
+    }
+    for name, df in streams.items():
+        analyzed = df._jdf.queryExecution().analyzed()
+        assert "FlatMapGroupsInPandasWithState" not in analyzed.toString(), name
+        python = {
+            c
+            for c in re.findall(r'"class":"([^"]+)"', analyzed.toJSON())
+            if re.search("Python|Pandas|Arrow", c)
+        }
+        assert not python, (name, python)
